@@ -59,7 +59,7 @@ def amplified(repl):
     amp = docs.crossJoin(F.broadcast(reps)).select(
         (F.col("doc_id") + F.col("rep") * 10_000_000).alias("doc_id"), "text"
     )
-    return amp.select("doc_id", F.expr(corpus._SPANS_ARRAY_EXPR).alias("spans"))
+    return corpus.spans_of(amp)
 
 def time_job(fn, iters=3):
     fn()  # warm-up

@@ -23,22 +23,11 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     os.environ["SPARK_GRAFT_CPUS"] = cpus
 
+    from pero_ocr_spark import corpus
     from pero_ocr_spark import queries as Q
     from pero_ocr_spark.session import get_spark
 
     spark = get_spark("pero_ocr_spark_bench", cores=int(cpus))
-
-    def _drop_extracted_cache() -> None:
-        # Spark's CacheManager substitutes any semantically-equal plan
-        # fragment with a persisted InMemoryRelation; dropping the
-        # shared extracted-spans cache makes the next extract_spans
-        # run the full uncached pipeline (the cache lazily rebuilds on
-        # its next downstream consumer, ~1-2 s charged to that query)
-        from pero_ocr_spark import corpus as _corpus
-
-        for _df in _corpus._EXTRACTED_CACHE.values():
-            _df.unpersist(blocking=True)
-        _corpus._EXTRACTED_CACHE.clear()
 
     def _headline_window() -> float:
         t0 = time.perf_counter()
@@ -52,22 +41,20 @@ def main() -> None:
         # windows: the headline query never repopulates the cache
         # (only downstream consumers calling corpus.extracted_spans
         # do), so every window in the burst runs the full pipeline
-        _drop_extracted_cache()
+        corpus.drop_extracted_cache()
         times = [_headline_window() for _ in range(n)]
         # eagerly rebuild the shared cache OUTSIDE any query timing:
         # otherwise the first consumer after the burst is charged the
         # full sf0.1 extraction rebuild (~2-10 s) on top of its own
         # work, inflating an arbitrary suite row per burst
-        from pero_ocr_spark import corpus as _corpus
-
-        _corpus.extracted_spans(spark, sf_dir).write.format("noop").mode(
+        corpus.extracted_spans(spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
         return times
 
     # warm-up: JVM + parquet footers + codegen/Arrow/shuffle init, not
-    # counted — without this the FIRST query in the loop (arbitrary
-    # after the registry reorder) absorbs ~4-5 s of session warm-up
+    # counted — without this the FIRST query in the loop (the first
+    # registered) absorbs ~4-5 s of session warm-up
     spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     Q.queries()["extract_spans"](spark, sf_dir).write.format("noop").mode(
         "overwrite"

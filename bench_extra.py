@@ -64,9 +64,7 @@ def main() -> None:
 
     def run_once(name: str) -> float:
         if args.cold:
-            for _df in corpus._EXTRACTED_CACHE.values():
-                _df.unpersist(blocking=True)
-            corpus._EXTRACTED_CACHE.clear()
+            corpus.drop_extracted_cache()
         spark.sparkContext.setJobDescription(f"bench_extra:{name}")
         t0 = time.perf_counter()
         df = reg[name](spark, sf_dir)

@@ -154,12 +154,12 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.pipeline == "extract":
         from pero_ocr_spark import corpus
+        from pero_ocr_spark.operators import shuffle_width
 
         nested = spark.read.parquet(args.input)
         if "spans" not in nested.columns:  # raw documents: derive spans
-            parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-            nested = nested.repartition(parts, "doc_id").select(
-                "doc_id", F.expr(corpus._SPANS_ARRAY_EXPR).alias("spans")
+            nested = corpus.spans_of(
+                nested.repartition(shuffle_width(spark), "doc_id")
             )
         spans = extract.extract_spans(nested)
     elif args.pipeline == "ingest":

@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pero_ocr_spark.operators import shuffle_width
+
 MULT_SQL = "CASE WHEN doc_id % 97 = 0 THEN 64 WHEN doc_id % 13 = 0 THEN 8 ELSE 1 END"
 
 # ---------------------------------------------------------------- Spark side
@@ -78,9 +80,13 @@ def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def spans_table(
-    spark: SparkSession, sf_dir: str, partitions: int | None = None
-) -> DataFrame:
+def spans_of(docs: DataFrame) -> DataFrame:
+    """A documents frame (doc_id, text, ...) → (doc_id, spans), row by
+    row with no repartition — the caller decides the partitioning."""
+    return docs.select("doc_id", F.expr(_SPANS_ARRAY_EXPR).alias("spans"))
+
+
+def spans_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical nested input table (doc_id, spans), scrambled order.
 
     Pure column expressions — whole-stage codegen, no Python. At 100 TB
@@ -96,17 +102,11 @@ def spans_table(
     pipeline has exactly ONE shuffle — of the small pre-explosion
     rows, not the exploded spans.
     """
-    if partitions is None:
-        partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     docs = load_documents(spark, sf_dir)
-    return docs.repartition(partitions, "doc_id").select(
-        "doc_id", F.expr(_SPANS_ARRAY_EXPR).alias("spans")
-    )
+    return spans_of(docs.repartition(shuffle_width(spark), "doc_id"))
 
 
-def spans_table_hinted(
-    spark: SparkSession, sf_dir: str, partitions: int | None = None
-) -> DataFrame:
+def spans_table_hinted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The EXACT input-contract shape: (doc_id: string,
     spans: array<struct<kind:string, text:string, media_ref:string,
     offset:int>>).
@@ -125,7 +125,7 @@ def spans_table_hinted(
     mapping) before the packing/sampling family. pytest pins the
     schema against the contract string.
     """
-    return spans_table(spark, sf_dir, partitions).withColumn(
+    return spans_table(spark, sf_dir).withColumn(
         "doc_id", F.col("doc_id").cast("string")
     )
 
@@ -161,6 +161,17 @@ def extracted_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _EXTRACTED_CACHE[key] = df
     return df
+
+
+def drop_extracted_cache() -> None:
+    """Unpersist and forget every cached ``extracted_spans`` frame.
+    Spark's CacheManager substitutes any semantically-equal plan
+    fragment with a persisted InMemoryRelation, so after this the next
+    ``extract_spans`` runs the full uncached pipeline (the cache
+    rebuilds lazily on its next downstream consumer)."""
+    for df in _EXTRACTED_CACHE.values():
+        df.unpersist(blocking=True)
+    _EXTRACTED_CACHE.clear()
 
 
 # --------------------------------------------------------------- DuckDB side

@@ -455,26 +455,6 @@ def snap_horizontal_baselines_batch(
     return out
 
 
-def draw_polyline(
-    img: np.ndarray, points, value: int = 128, thickness: int = 1
-) -> None:
-    """Rasterize a polyline into img in place (the numpy stand-in for
-    the reference's cv2.polylines debug renderer, core/layout.py:850):
-    per-segment dense linear sampling with a square brush."""
-    pts = np.asarray(points, dtype=np.float64)
-    h, w = img.shape[:2]
-    r = thickness // 2
-    for a, b in zip(pts[:-1], pts[1:]):
-        n = int(max(abs(b[0] - a[0]), abs(b[1] - a[1]))) + 1
-        xs = np.round(np.linspace(a[0], b[0], n)).astype(np.int64)
-        ys = np.round(np.linspace(a[1], b[1], n)).astype(np.int64)
-        for dy in range(-r, r + 1):
-            for dx in range(-r, r + 1):
-                img[
-                    np.clip(ys + dy, 0, h - 1), np.clip(xs + dx, 0, w - 1)
-                ] = value
-
-
 def detect_lines_in_region(
     img: np.ndarray,
     region: np.ndarray,

@@ -1,6 +1,6 @@
 """Operator package. Shared scan-shape and expression helpers live here."""
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -24,93 +24,106 @@ def word_gram_array(ws: Column, n: int) -> Column:
     )
 
 
-def grouped_map_in_pandas(df: DataFrame, key: str, per_group, schema):
-    """``groupBy(key).applyInPandas(per_group, schema)`` with
-    batch-level Arrow framing.
+def shuffle_width(spark: SparkSession) -> int:
+    """The session's shuffle width (``spark.sql.shuffle.partitions``) —
+    the partition count of every explicit numbered repartition in the
+    engine. A numbered repartition is exempt from AQE small-partition
+    coalescing, which would otherwise hand a tiny per-doc exchange to
+    one or two tasks and serialize the Python stage behind it."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+
+
+def grouped_batches_in_pandas(df: DataFrame, key, per_batch, schema):
+    """Per-group Arrow stage with batch-level framing: ``per_batch`` is
+    called with sorted pandas frames (0-based index) that hold only
+    WHOLE groups of ``key``, and returns one output frame per call.
 
     The grouped-map form ships every group as its OWN Arrow batch and
     IPC round-trip, so a stage over ~5000 one-document groups pays
     ~5000 tiny serializations — measured 3.7× the cost of the same
-    trivial consumer fed full batches. This helper hash-partitions on
-    the key (explicit numbered repartition — exempt from AQE
-    small-partition coalescing, which would serialize the python
-    stage), sorts within partitions so each group is contiguous,
-    ships default-size (~10k-row) batches, and re-groups in pandas,
-    carrying the tail group across batch boundaries.
-
-    Semantics match applyInPandas: ``per_group`` is called exactly
-    once per distinct key with all of that key's rows (hash
-    partitioning puts a key in one partition; the sort makes it one
-    contiguous run). Row order WITHIN a group is not guaranteed by
-    either form; group functions must not depend on it (none here do
-    — they sort internally or compute order-independent outputs).
+    trivial consumer fed full batches. Here the input is
+    hash-partitioned on the key (``shuffle_width`` partitions), sorted
+    within partitions so each group is one contiguous run, and shipped
+    in default-size (~10k-row) batches; the trailing run of each batch
+    — which may continue in the next — is carried forward. Key
+    equality is null-aware (a null key is a group of its own, as in
+    ``groupBy``), and the carry is linear: the frames of one open run
+    are appended per batch and concatenated once when the run closes,
+    even when a skewed group spans many Arrow batches.
     """
     import numpy as np
     import pandas as pd
 
     keys = list(key) if isinstance(key, (list, tuple)) else [key]
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
 
     def _eq(col: "np.ndarray", v) -> "np.ndarray":
-        # null-aware key equality: groupBy().applyInPandas treats the
-        # null key as a group of its own, so the run detection must
-        # not break a null run (NaN == NaN is False)
+        # NaN == NaN is False: a null run must not break at every row
         if pd.isna(v):
             return pd.isna(col)
         return col == v
 
+    def _whole(pieces: list) -> "pd.DataFrame":
+        if len(pieces) > 1:
+            return pd.concat(pieces, ignore_index=True)
+        frame = pieces[0]  # a frame of our own (batch or iloc slice)
+        frame.index = pd.RangeIndex(len(frame))
+        return frame
+
     def gen(batches):
-        # `parts` accumulates the frames of ONE partial trailing group
-        # (appended per batch, concatenated once when the run closes —
-        # linear even when a skewed group spans many Arrow batches)
-        parts: list = []
-
-        def close_run():
-            g = parts[0] if len(parts) == 1 else pd.concat(
-                parts, ignore_index=True
-            )
-            parts.clear()
-            return per_group(g)
-
+        parts: list = []  # frames of the ONE open trailing run
         for pdf in batches:
             if not len(pdf):
                 continue
-            outs = []
             if parts:
                 cont = np.ones(len(pdf), dtype=bool)
                 for k in keys:
                     cont &= _eq(pdf[k].to_numpy(), parts[-1][k].iloc[-1])
-                head = int(cont.cumprod().sum())
-                if head:
-                    parts.append(pdf.iloc[:head])
-                    if head == len(pdf):
-                        continue  # run still open
-                    pdf = pdf.iloc[head:]
-                outs.append(close_run())
-            # the last key's run may continue in the next batch — defer
+                if cont.all():
+                    parts.append(pdf)  # run still open
+                    continue
             run = np.ones(len(pdf), dtype=bool)
             for k in keys:
                 col = pdf[k].to_numpy()
                 run &= _eq(col, col[len(col) - 1])
             cut = len(pdf) - int(run[::-1].cumprod().sum())
-            parts.append(pdf.iloc[cut:])
-            for _, g in pdf.iloc[:cut].groupby(
-                keys, sort=False, dropna=False
-            ):
-                outs.append(per_group(g))
-            # one output Arrow batch per input batch, not per group
-            if outs:
-                yield outs[0] if len(outs) == 1 else pd.concat(
-                    outs, ignore_index=True
-                )
-        if parts and sum(len(p) for p in parts):
-            yield close_run()
+            # closed run (carried parts + this batch's head) + body
+            pieces = [p for p in (*parts, pdf.iloc[:cut]) if len(p)]
+            parts = [pdf.iloc[cut:]]
+            if pieces:
+                yield per_batch(_whole(pieces))
+        if parts:
+            yield per_batch(_whole(parts))
 
     return (
-        df.repartition(n, *keys)
+        df.repartition(shuffle_width(df.sparkSession), *keys)
         .sortWithinPartitions(*keys)
         .mapInPandas(gen, schema)
     )
+
+
+def grouped_map_in_pandas(df: DataFrame, key, per_group, schema):
+    """``groupBy(key).applyInPandas(per_group, schema)`` with
+    batch-level Arrow framing (``grouped_batches_in_pandas``).
+
+    Semantics match applyInPandas: ``per_group`` is called exactly
+    once per distinct key with all of that key's rows, as a frame with
+    a fresh ``RangeIndex``. Row order WITHIN a group is not guaranteed
+    by either form; group functions must not depend on it (none here
+    do — they sort internally or compute order-independent outputs).
+    """
+    import pandas as pd
+
+    keys = list(key) if isinstance(key, (list, tuple)) else [key]
+
+    def per_batch(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        outs = []
+        for _, g in pdf.groupby(keys, sort=False, dropna=False):
+            g.index = pd.RangeIndex(len(g))  # groupby yields new frames
+            outs.append(per_group(g))
+        # one output Arrow batch per input batch, not per group
+        return outs[0] if len(outs) == 1 else pd.concat(outs, ignore_index=True)
+
+    return grouped_batches_in_pandas(df, keys, per_batch, schema)
 
 
 def spread_scan(df: DataFrame) -> DataFrame:
@@ -124,7 +137,7 @@ def spread_scan(df: DataFrame) -> DataFrame:
     the input arrives in thousands of file splits and this is a no-op
     (no shuffle added).
     """
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    n = shuffle_width(df.sparkSession)
     if df.rdd.getNumPartitions() >= max(2, n // 2):
         return df
     return df.repartition(n)

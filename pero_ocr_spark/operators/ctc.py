@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pero_ocr_spark.functions import kernels
+from pero_ocr_spark.operators import grouped_map_in_pandas, shuffle_width
 
 # Fixed charset: lowercase + digits + blank (last, per
 # decoders.py:31-33's "blank must be last" contract).
@@ -392,8 +393,6 @@ def decode_beam_lm_carry(
             }
         )
 
-    from pero_ocr_spark.operators import grouped_map_in_pandas
-
     return grouped_map_in_pandas(
         logits_df, "doc_id", per_doc,
         schema="doc_id long, line_id string, transcription string, score double",
@@ -439,11 +438,7 @@ def _ort_frame_pass(pdf: pd.DataFrame, model_bytes: bytes) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def recognize_lines(
-    lines: DataFrame,
-    partitions: int | None = None,
-    backend: str = "synth",
-) -> DataFrame:
+def recognize_lines(lines: DataFrame, backend: str = "synth") -> DataFrame:
     """Fused recognition fast path: synthesize logits AND greedy-decode
     inside ONE mapInPandas stage — no logits checkpoint, no shuffle of
     sparse-array columns (the store-then-decode path keeps those for
@@ -466,11 +461,8 @@ def recognize_lines(
     """
     if backend not in ("synth", "onnx"):
         raise ValueError(f"unknown backend {backend!r}")
-    n = partitions or lines.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"
-    )
     packed = lines.repartitionByRange(
-        int(n), F.length("text"), "doc_id", "line_id"
+        shuffle_width(lines.sparkSession), F.length("text"), "doc_id", "line_id"
     ).sortWithinPartitions(F.length("text"))
     model_bytes = None
     if backend == "onnx":
@@ -558,17 +550,13 @@ def decode_chunked(
     """
     from pero_ocr_spark.operators.lineage import repartition_weighted
 
-    n = int(
-        lines.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    # ~50k chars of decode work per pack; packs round-robin onto n
-    # partitions, so any partition's load is within one pack of even
+    # ~50k chars of decode work per pack; packs round-robin onto the
+    # shuffle width, so any partition's load is within one pack of even
     lines = repartition_weighted(
         lines.withColumn("_w", F.length("text")),
         "_w",
         target_weight=50_000.0,
         key="doc_id",
-        num_partitions=n,
     ).drop("_w")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -601,7 +589,7 @@ def decode_chunked(
     )
 
 
-def pack_by_length(logits_df: DataFrame, partitions: int | None = None) -> DataFrame:
+def pack_by_length(logits_df: DataFrame) -> DataFrame:
     """Range-partition + sort lines by frame count so each Arrow batch
     holds similar-length lines — the table-scale analog of the
     reference's width-sorted pixel-budget batch packing
@@ -613,11 +601,8 @@ def pack_by_length(logits_df: DataFrame, partitions: int | None = None) -> DataF
     into a few partitions — measured as a 1.1x N→4N speedup instead of
     ~4x. The high-cardinality tiebreaks spread rows evenly while still
     clustering similar lengths per partition."""
-    n = partitions or logits_df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"
-    )
     return logits_df.repartitionByRange(
-        int(n), "t", "doc_id", "line_id"
+        shuffle_width(logits_df.sparkSession), "t", "doc_id", "line_id"
     ).sortWithinPartitions("t")
 
 

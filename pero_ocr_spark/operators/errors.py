@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pero_ocr_spark.functions import kernels
+from pero_ocr_spark.operators import shuffle_width
 
 
 def line_edit_stats(pairs: DataFrame) -> DataFrame:
@@ -215,8 +216,7 @@ def _spread_docs(docs: DataFrame, *cols: str) -> DataFrame:
     repartitions). The frame is at most corpus-text-sized, so this one
     narrow exchange is far cheaper than the 2·max_n·corpus gram
     explode + shuffle it replaces."""
-    n = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    return docs.select(*cols).repartition(n)
+    return docs.select(*cols).repartition(shuffle_width(docs.sparkSession))
 
 
 def corpus_bleu(

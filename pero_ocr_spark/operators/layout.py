@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pero_ocr_spark.functions import geometry as G
+from pero_ocr_spark.operators import grouped_batches_in_pandas, grouped_map_in_pandas
 
 PAGE_COL_W = 500  # two columns: x ∈ [0,490) and [500,990)
 ROW_H = 30
@@ -190,15 +191,10 @@ def merge_lines_stage(lines: DataFrame) -> DataFrame:
 
     Group mechanics: the kernel is sub-millisecond per group, so
     per-group Arrow batches (applyInPandas: one JVM↔python round trip
-    for EACH of the ~10k tiny groups) dominate wall time. Instead the
-    input is hash-repartitioned and sorted by the group key, and one
-    ``mapInPandas`` walks contiguous groups inside each big Arrow
-    batch, carrying a possibly-split trailing group into the next
-    batch — identical results, ~300x fewer Arrow round trips."""
-    n = int(lines.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    packed = lines.repartition(n, "doc_id", "region_id").sortWithinPartitions(
-        "doc_id", "region_id"
-    )
+    for EACH of the ~10k tiny groups) would dominate wall time.
+    ``grouped_batches_in_pandas`` hands ``process`` big sorted batches
+    of whole (doc, region) groups instead — ~300x fewer Arrow round
+    trips — and ``process`` walks the group boundaries itself."""
 
     def process(pdf: pd.DataFrame) -> pd.DataFrame:
         # array-in/array-out per group (``G.merge_lines_straight``),
@@ -242,27 +238,8 @@ def merge_lines_stage(lines: DataFrame) -> DataFrame:
             }
         )
 
-    def run(batches):
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                carry = None
-                continue
-            # defer the trailing group — it may continue in the next batch
-            last_doc = pdf["doc_id"].iloc[-1]
-            last_rid = pdf["region_id"].iloc[-1]
-            is_last = (pdf["doc_id"] == last_doc) & (pdf["region_id"] == last_rid)
-            carry = pdf[is_last]
-            body = pdf[~is_last]
-            if len(body):
-                yield process(body)
-        if carry is not None and len(carry):
-            yield process(carry)
-
-    return packed.mapInPandas(
-        run,
+    return grouped_batches_in_pandas(
+        lines, ["doc_id", "region_id"], process,
         schema="doc_id long, region_id string, line_idx int, x0 double, "
         "x1 double, y double, asc double, desc double",
     )
@@ -377,8 +354,6 @@ def region_reading_order(
 
     schema = "doc_id long, region_id string, reading_order long"
     if lines is None or mode == "band":
-        from pero_ocr_spark.operators import grouped_map_in_pandas
-
         return grouped_map_in_pandas(
             regions_with_bbox, "doc_id",
             lambda pdf: order_regions(pdf, 0.0), schema=schema,
@@ -422,21 +397,17 @@ def postprocess_lines(
     post-detection cleanups the reference applies before export.
     ``x_p5`` is the 5th resampled point, so num_points must be ≥ 5.
 
-    Group mechanics mirror ``merge_lines_stage``: sort by the group
-    key, walk group boundaries with a numpy change-point scan inside
-    big mapInPandas batches (carrying the split trailing group), so
-    ~20k tiny (doc, region) groups never pay a per-group Arrow round
-    trip or pandas groupby slice. Region bounds come from the group
-    itself — no join."""
+    Group mechanics mirror ``merge_lines_stage``:
+    ``grouped_batches_in_pandas`` hands ``process`` big sorted batches
+    of whole (doc, region) groups, whose boundaries it finds with a
+    numpy change-point scan, so ~20k tiny groups never pay a per-group
+    Arrow round trip or pandas groupby slice. Region bounds come from
+    the group itself — no join."""
     from pero_ocr_spark.functions import geometry as G2
 
     np_pts = int(num_points)
     if np_pts < 5:
         raise ValueError("x_p5 is the 5th resampled point; num_points must be >= 5")
-    n = int(lines.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    packed = lines.repartition(n, "doc_id", "region_id").sortWithinPartitions(
-        "doc_id", "region_id"
-    )
 
     def process(pdf: pd.DataFrame) -> pd.DataFrame:
         dcol = pdf["doc_id"].to_numpy()
@@ -487,26 +458,8 @@ def postprocess_lines(
             ],
         )
 
-    def run(batches):
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                carry = None
-                continue
-            last_doc = pdf["doc_id"].iloc[-1]
-            last_rid = pdf["region_id"].iloc[-1]
-            is_last = (pdf["doc_id"] == last_doc) & (pdf["region_id"] == last_rid)
-            carry = pdf[is_last]
-            body = pdf[~is_last]
-            if len(body):
-                yield process(body)
-        if carry is not None and len(carry):
-            yield process(carry)
-
-    return packed.mapInPandas(
-        run,
+    return grouped_batches_in_pandas(
+        lines, ["doc_id", "region_id"], process,
         schema="doc_id long, line_id string, sx0 double, sx1 double, "
         "x_p5 double, y double, n_pts long, is_dominant boolean",
     )
@@ -556,8 +509,6 @@ def retrace_regions(lines: DataFrame, concave: bool = True) -> DataFrame:
                 "y1": [round(float(poly[:, 1].max()), 4)],
             }
         )
-
-    from pero_ocr_spark.operators import grouped_map_in_pandas
 
     return grouped_map_in_pandas(
         lines, ["doc_id", "region_id"], per_region,

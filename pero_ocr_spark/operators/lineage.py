@@ -32,6 +32,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pero_ocr_spark.operators import shuffle_width
+
 LINEAGE_SCHEMA = (
     "bucket long, status string, n_docs long, n_spans long, n_chars long, "
     "elapsed_sec double, spans_per_sec double"
@@ -109,7 +111,7 @@ def run_extraction_with_lineage(
             F.col("bucket").isin([int(b) for b in todo])
         )
         spans = with_bucket(
-            extract.extract_spans(corpus_spans_for(subset.drop("bucket"))),
+            extract.extract_spans(corpus.spans_of(subset.drop("bucket"))),
             n_buckets,
         )
         # cluster rows by bucket before the partitioned write: without
@@ -162,13 +164,6 @@ def run_extraction_with_lineage(
     return spark.read.parquet(f"{out_dir}/spans")
 
 
-def corpus_spans_for(docs: DataFrame) -> DataFrame:
-    """spans_table over an arbitrary documents frame (not a path)."""
-    from pero_ocr_spark.corpus import _SPANS_ARRAY_EXPR
-
-    return docs.select("doc_id", F.expr(_SPANS_ARRAY_EXPR).alias("spans"))
-
-
 _SALT_CACHE: dict[int, list[int]] = {}
 
 
@@ -201,12 +196,11 @@ def repartition_weighted(
     weight_col: str,
     target_weight: float,
     key: str = "doc_id",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Pack rows into partitions of ~target_weight cumulative weight —
     fully distributed, no global sort, no driver action over the data:
 
-      1. hash rows into ``n`` buckets on ``key``;
+      1. hash rows into ``n`` (the shuffle width) buckets on ``key``;
       2. cumsum ``weight_col`` WITHIN each bucket (window partitioned
          by bucket — parallel, never a single-task exchange);
       3. per-bucket totals get prefix-sum offsets via a window over
@@ -226,7 +220,7 @@ def repartition_weighted(
     pixels, spans) so one 64x-skewed doc doesn't straggle a stage.
     """
     spark = df.sparkSession
-    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n = shuffle_width(spark)
     salts = _partition_salts(spark, n)
     bucketed = df.withColumn("_b", F.pmod(F.xxhash64(key), F.lit(n)).cast("long"))
     w_in = Window.partitionBy("_b").orderBy(key).rowsBetween(

@@ -1,23 +1,21 @@
-"""L8: projection-profile text-line detection over page bitmaps.
+"""L8: projection-profile text-line detection over page rasters.
 
-The first REAL image→lines path: page bitmaps are an opaque binary
-column (uint8 raster + shape metadata, the multimodal-column pattern),
-and the detector runs per region inside a cogrouped Arrow stage —
-``layout_engines/simple_baseline_engine.py:13-101`` re-expressed with
-the numpy-only kernels in ``functions/imageproc.py``.
+The first REAL image→lines path: ``layout_engines/simple_baseline_engine.py:13-101``
+re-expressed with the numpy-only kernels in ``functions/imageproc.py``,
+run per document inside ONE Arrow stage (``grouped_map_in_pandas``).
 
-In the sandbox the bitmaps are RENDERED deterministically from the
+In the sandbox the page rasters are RENDERED deterministically from the
 synthetic line geometry (solid ink bands of asc=10 rows above each
 baseline), so detection output is closed-form and SQL-checkable:
 baseline at y with the region's x extent; heights quantize to the
 stride-3 component scans at the working resolution ([12, 3] at full
 res, [12, 6] at the default downsample 2 the queries use).
 
-Scale notes: rendering and detection are both per-document Arrow
-groups — data-parallel, no shuffle beyond the groupBys; the bitmap
-column shuffles once into the cogroup. At 10^12 docs the bitmaps
-would come from the image store (S1 binaryFile scan) instead of the
-renderer; the detection stage is unchanged.
+Scale notes: every stage is a per-document Arrow group — data-parallel,
+one hash exchange on doc_id, and the raster is rendered and consumed
+inside the same group, so no bitmap ever crosses the JVM↔Python
+boundary. At 10^12 docs the rasters would come from the image store
+(S1 binaryFile scan) instead of the renderer; the kernels are unchanged.
 """
 
 from __future__ import annotations
@@ -27,20 +25,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from pero_ocr_spark.functions import imageproc
-from pero_ocr_spark.operators import grouped_map_in_pandas
+from pero_ocr_spark.operators import grouped_map_in_pandas, shuffle_width
 from pero_ocr_spark.operators.layout import PAGE_W
 
 ASC_INK = 10  # ink band rows above (and including) the baseline row
 
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Explicit hash repartition on doc_id before per-document Arrow
-    groups: a user repartition is exempt from AQE small-partition
-    coalescing, which otherwise collapses the tiny line-row exchange
-    (~20 MB) to one or two partitions and SERIALIZES the downstream
-    render/kernel python stages (the dominant cost at sf0.1)."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    return df.repartition(n, "doc_id")
 
 DETECT_DDL = (
     "doc_id long, region_id string, bx0 double, bx1 double, y double, "
@@ -59,32 +48,6 @@ def _render_lines_raster(pdf: pd.DataFrame, h: int) -> np.ndarray:
     ):
         img[max(y - ASC_INK, 0) : y + 1, x0:x1] = 0
     return img
-
-
-def render_page_bitmaps(lines: DataFrame) -> DataFrame:
-    """Deterministic page raster per document: background 255, a solid
-    0-ink band on rows [y-10, y] × cols [x0, x1) per line. One binary
-    row per page."""
-
-    def per_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-        doc_id = int(pdf["doc_id"].iloc[0])
-        # +40 bottom margin: keeps the last line's snap window
-        # (±tolerance+blur radius) inside the raster so the exact
-        # 1-D fast path applies to every line
-        h = int(pdf["y"].max()) + 40
-        img = _render_lines_raster(pdf, h)
-        return pd.DataFrame(
-            {
-                "doc_id": [doc_id],
-                "height": [h],
-                "width": [PAGE_W],
-                "img": [img.tobytes()],
-            }
-        )
-
-    return grouped_map_in_pandas(
-        lines, "doc_id", per_doc, schema="doc_id long, height int, width int, img binary"
-    )
 
 
 PARSE_DDL = (
@@ -144,268 +107,6 @@ def parse_lines_from_maps(lines: DataFrame, downsample: int = 2) -> DataFrame:
         lines, "doc_id", per_doc, schema=PARSE_DDL)
 
 
-SEGMENT_DDL = (
-    "doc_id long, region_idx long, rx0 long, ry0 long, rx1 long, ry1 long"
-)
-
-
-def segment_page_regions(
-    bitmaps: DataFrame,
-    close_gap: int = 13,
-    margin: int = 5,
-    min_pixels: int = 100,
-    downsample: int = 1,
-) -> DataFrame:
-    """L2: CV region segmentation per page bitmap
-    (simple_region_engine.py:48-137 in numpy — threshold, vertical
-    close, margin dilation, connected components). One row per
-    detected region with its inclusive pixel bbox; region_idx orders
-    regions left-to-right then top-to-bottom."""
-
-    def run(batches) -> "pd.DataFrame":
-        import pandas as _pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, h, w, buf in zip(
-                pdf["doc_id"], pdf["height"], pdf["width"], pdf["img"]
-            ):
-                img = np.frombuffer(buf, dtype=np.uint8).reshape(int(h), int(w))
-                regs = imageproc.segment_regions(
-                    img,
-                    close_gap=close_gap,
-                    margin=margin,
-                    min_pixels=min_pixels,
-                    downsample=downsample,
-                )
-                for i, r in enumerate(regs):
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "region_idx": i,
-                            "rx0": r["rx0"],
-                            "ry0": r["ry0"],
-                            "rx1": r["rx1"],
-                            "ry1": r["ry1"],
-                        }
-                    )
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "region_idx", "rx0", "ry0", "rx1", "ry1"],
-            )
-
-    return bitmaps.mapInPandas(run, schema=SEGMENT_DDL)
-
-
-def snap_lines_to_intensity(
-    bitmaps: DataFrame, lines: DataFrame, tolerance: int = 5
-) -> DataFrame:
-    """L18: snap (possibly jittered) baselines to the strongest
-    smoothed y-gradient in the page raster
-    (layout_helpers.adjust_baselines_to_intensity:393-410). Cogroup on
-    doc_id; lines need (doc_id, line_id, x0, x1, y)."""
-
-    cols = ["doc_id", "line_id", "y_snapped"]
-
-    def per_doc(bdf: pd.DataFrame, ldf: pd.DataFrame) -> pd.DataFrame:
-        if len(bdf) == 0 or len(ldf) == 0:
-            return pd.DataFrame(columns=cols)
-        img = np.frombuffer(bdf["img"].iloc[0], dtype=np.uint8).reshape(
-            int(bdf["height"].iloc[0]), int(bdf["width"].iloc[0])
-        )
-        baselines = [
-            np.array([[r.x0, r.y], [r.x1, r.y]])
-            for r in ldf.itertuples(index=False)
-        ]
-        snapped = imageproc.snap_baselines_to_intensity(
-            baselines, img, tolerance=tolerance
-        )
-        return pd.DataFrame(
-            {
-                "doc_id": ldf["doc_id"],
-                "line_id": ldf["line_id"],
-                "y_snapped": [float(b[0][1]) for b in snapped],
-            }
-        )
-
-    return (
-        _pin(bitmaps).groupBy("doc_id")
-        .cogroup(_pin(lines).groupBy("doc_id"))
-        .applyInPandas(per_doc, schema="doc_id long, line_id string, y_snapped double")
-    )
-
-
-def render_debug_overlays(
-    bitmaps: DataFrame, lines: DataFrame, value: int = 128, thickness: int = 3
-) -> DataFrame:
-    """S10: render/debug sink — page rasters with detected baselines
-    drawn over them (the reference's cv2 draw_lines visualization,
-    core/layout.py:850, in numpy). Cogroup on doc_id; write the result
-    with ``df.write.parquet`` wherever the debug output should live."""
-
-    def per_doc(bdf: pd.DataFrame, ldf: pd.DataFrame) -> pd.DataFrame:
-        if len(bdf) == 0:
-            return pd.DataFrame(
-                columns=["doc_id", "height", "width", "img", "n_drawn"]
-            )
-        img = np.frombuffer(bdf["img"].iloc[0], dtype=np.uint8).reshape(
-            int(bdf["height"].iloc[0]), int(bdf["width"].iloc[0])
-        ).copy()
-        for r in ldf.itertuples(index=False):
-            imageproc.draw_polyline(
-                img,
-                [[r.x0, r.y], [r.x1, r.y]],
-                value=value,
-                thickness=thickness,
-            )
-        return pd.DataFrame(
-            {
-                "doc_id": bdf["doc_id"].iloc[:1],
-                "height": bdf["height"].iloc[:1],
-                "width": bdf["width"].iloc[:1],
-                "img": [img.tobytes()],
-                "n_drawn": [len(ldf)],
-            }
-        )
-
-    return (
-        _pin(bitmaps).groupBy("doc_id")
-        .cogroup(_pin(lines).groupBy("doc_id"))
-        .applyInPandas(
-            per_doc,
-            schema="doc_id long, height int, width int, img binary, n_drawn long",
-        )
-    )
-
-
-def _mixed_raster_height(pdf: pd.DataFrame) -> int:
-    horiz = pdf[pdf["orientation"] == 0]
-    vert = pdf[pdf["orientation"] == 1]
-    h = 20
-    if len(horiz):
-        h = max(h, int(horiz["pos"].max()) + 20)
-    if len(vert):
-        h = max(h, int(vert["a1"].max()) + 10)
-    return h
-
-
-def _render_mixed_raster(pdf: pd.DataFrame, h: int) -> np.ndarray:
-    """Raster with BOTH orientations: orientation 0 = horizontal ink
-    band rows [pos-10, pos] × cols [a0, a1); orientation 1 = vertical
-    band rows [a0, a1) × cols [pos-10, pos]. Band starts clamp at 0
-    (no wrapped negative slices for edge-hugging lines)."""
-    img = np.full((h, PAGE_W), 255, dtype=np.uint8)
-    for r in pdf.itertuples(index=False):
-        pos, a0, a1 = int(r.pos), int(r.a0), int(r.a1)
-        if int(r.orientation) == 0:
-            img[max(pos - ASC_INK, 0) : pos + 1, a0:a1] = 0
-        else:
-            img[a0:a1, max(pos - ASC_INK, 0) : pos + 1] = 0
-    return img
-
-
-def render_mixed_bitmaps(segments: DataFrame) -> DataFrame:
-    """Page raster with BOTH text orientations: orientation 0 rows are
-    horizontal ink bands (rows pos-10..pos × cols [a0, a1)), 1 are
-    vertical bands (rows [a0, a1) × cols pos-10..pos)."""
-
-    def per_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-        doc_id = int(pdf["doc_id"].iloc[0])
-        h = _mixed_raster_height(pdf)
-        img = _render_mixed_raster(pdf, h)
-        return pd.DataFrame(
-            {
-                "doc_id": [doc_id],
-                "height": [h],
-                "width": [PAGE_W],
-                "img": [img.tobytes()],
-            }
-        )
-
-    return grouped_map_in_pandas(
-        segments, "doc_id", per_doc, schema="doc_id long, height int, width int, img binary"
-    )
-
-
-def detect_lines_multi_orientation(
-    bitmaps: DataFrame, regions: DataFrame, downsample: int = 1
-) -> DataFrame:
-    """L10: multi-orientation detect + union (page_parser.py:237-259 /
-    cnn_layout_engine.rotate_layout semantics): each region carries an
-    ``orientation``; orientation-1 regions detect on the TRANSPOSED
-    raster (the reference rotates 90° with np.rot90 — transpose =
-    rotation + mirror, equivalent for this mirror-invariant detector
-    and with a self-inverse coordinate map), and detections map back
-    into page coordinates. Baselines emit as (bx0, by0)-(bx1, by1)
-    segments so both orientations share one schema; the union is the
-    row union of the per-orientation passes."""
-
-    cols = [
-        "doc_id", "region_id", "orientation",
-        "bx0", "by0", "bx1", "by1", "height_up", "height_down",
-    ]
-
-    def per_doc(bdf: pd.DataFrame, rdf: pd.DataFrame) -> pd.DataFrame:
-        if len(bdf) == 0 or len(rdf) == 0:
-            return pd.DataFrame(columns=cols)
-        img = np.frombuffer(bdf["img"].iloc[0], dtype=np.uint8).reshape(
-            int(bdf["height"].iloc[0]), int(bdf["width"].iloc[0])
-        )
-        img_t = np.ascontiguousarray(img.T)
-        doc_id = int(bdf["doc_id"].iloc[0])
-        rows = []
-        for r in rdf.itertuples(index=False):
-            rot = int(r.orientation)
-            frame = img_t if rot else img
-            # transposed region rect = swapped axes
-            poly = (
-                np.asarray(
-                    [[r.ry0, r.rx0], [r.ry1, r.rx0], [r.ry1, r.rx1], [r.ry0, r.rx1]],
-                    dtype=np.float64,
-                )
-                if rot
-                else np.asarray(
-                    [[r.rx0, r.ry0], [r.rx1, r.ry0], [r.rx1, r.ry1], [r.rx0, r.ry1]],
-                    dtype=np.float64,
-                )
-            )
-            baselines, heights = imageproc.detect_lines_in_region(
-                frame, poly, downsample=downsample
-            )
-            for bl, ht in zip(baselines, heights):
-                if rot:  # (x_t, y_t) -> (y_t, x_t) in page coords
-                    p0 = (float(bl[0][1]), float(bl[0][0]))
-                    p1 = (float(bl[1][1]), float(bl[1][0]))
-                else:
-                    p0 = (float(bl[0][0]), float(bl[0][1]))
-                    p1 = (float(bl[1][0]), float(bl[1][1]))
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "region_id": r.region_id,
-                        "orientation": rot,
-                        "bx0": p0[0],
-                        "by0": p0[1],
-                        "bx1": p1[0],
-                        "by1": p1[1],
-                        "height_up": float(ht[0]),
-                        "height_down": float(ht[1]),
-                    }
-                )
-        return pd.DataFrame(rows, columns=cols)
-
-    return (
-        _pin(bitmaps).groupBy("doc_id")
-        .cogroup(_pin(regions).groupBy("doc_id"))
-        .applyInPandas(
-            per_doc,
-            schema="doc_id long, region_id string, orientation long, "
-            "bx0 double, by0 double, bx1 double, by1 double, "
-            "height_up double, height_down double",
-        )
-    )
-
-
 def cluster_lines_graph(lines: DataFrame, threshold: float = 0.5) -> DataFrame:
     """L6 (CNN-engine variant): separator-penalty graph clustering of
     lines into paragraph regions (``functions/lineclust.cluster_lines``,
@@ -449,55 +150,6 @@ def cluster_lines_graph(lines: DataFrame, threshold: float = 0.5) -> DataFrame:
 
     return grouped_map_in_pandas(
         lines, "doc_id", per_doc, schema="doc_id long, line_id string, cluster_y0 double, cluster_size long",
-    )
-
-
-def crop_lines(
-    bitmaps: DataFrame, lines: DataFrame, target_height: int = 32
-) -> DataFrame:
-    """R1: rectified line crops from page rasters — the real
-    numpy warp (``functions/cropper.crop_line``, the reference's
-    EngineLineCropper chain) in a cogrouped Arrow stage. Emits one row
-    per line with the crop strip (binary), its dims, and the ink
-    fraction (fraction of crop pixels darker than 128)."""
-    from pero_ocr_spark.functions import cropper
-
-    cols = ["doc_id", "line_id", "crop_h", "crop_w", "ink_frac", "crop"]
-
-    def per_doc(bdf: pd.DataFrame, ldf: pd.DataFrame) -> pd.DataFrame:
-        if len(bdf) == 0 or len(ldf) == 0:
-            return pd.DataFrame(columns=cols)
-        img = np.frombuffer(bdf["img"].iloc[0], dtype=np.uint8).reshape(
-            int(bdf["height"].iloc[0]), int(bdf["width"].iloc[0])
-        )
-        imgf = img.astype(np.float64)  # once per page, not per line
-        rows = []
-        for r in ldf.itertuples(index=False):
-            baseline = np.array([[r.x0, r.y], [r.x1, r.y]])
-            crop = cropper.crop_line(
-                imgf, baseline, (r.asc, r.desc), target_height,
-                out_dtype=np.uint8,
-            )
-            rows.append(
-                {
-                    "doc_id": int(r.doc_id),
-                    "line_id": r.line_id,
-                    "crop_h": crop.shape[0],
-                    "crop_w": crop.shape[1],
-                    "ink_frac": float((crop < 128).mean()),
-                    "crop": crop.tobytes(),
-                }
-            )
-        return pd.DataFrame(rows, columns=cols)
-
-    return (
-        _pin(bitmaps).groupBy("doc_id")
-        .cogroup(_pin(lines).groupBy("doc_id"))
-        .applyInPandas(
-            per_doc,
-            schema="doc_id long, line_id string, crop_h long, crop_w long, "
-            "ink_frac double, crop binary",
-        )
     )
 
 
@@ -552,12 +204,15 @@ def refine_lines_from_maps(lines: DataFrame, downsample: int = 2) -> DataFrame:
 # Fused render→consume stages (the parse_lines_from_maps pattern): the
 # page raster is synthesized AND consumed inside ONE per-document Arrow
 # group, so full-page bitmaps (~1.8 MB each) never cross the JVM↔Python
-# boundary at all. The two-frame cogrouped operators above remain the
-# production API — at 10^12 docs the raster comes from an S1 image-store
-# scan, not a renderer — but when the geometry and the raster derive
-# from the same table (every sandbox query), fusing removes two full
-# raster transfers per page plus the bitmap shuffle into the cogroup.
+# boundary and no bitmap table is shuffled into a second grouping. The
+# tests hold each stage to a plain-numpy reference outside Spark:
+# _render_lines_raster followed by the same imageproc/cropper kernel.
 # ---------------------------------------------------------------------------
+
+
+SEGMENT_DDL = (
+    "doc_id long, region_idx long, rx0 long, ry0 long, rx1 long, ry1 long"
+)
 
 
 def render_segment_regions(
@@ -567,9 +222,11 @@ def render_segment_regions(
     min_pixels: int = 100,
     downsample: int = 1,
 ) -> DataFrame:
-    """L2 fused: render the page raster and segment it in one per-doc
-    Arrow stage (same semantics as render_page_bitmaps →
-    segment_page_regions)."""
+    """L2: CV region segmentation (simple_region_engine.py:48-137 in
+    numpy — threshold, vertical close, margin dilation, connected
+    components) over the rendered page raster, one per-doc Arrow stage.
+    One row per detected region with its inclusive pixel bbox;
+    region_idx orders regions left-to-right then top-to-bottom."""
 
     cols = ["doc_id", "region_idx", "rx0", "ry0", "rx1", "ry1"]
 
@@ -605,11 +262,10 @@ def render_segment_regions(
 def render_detect_lines(
     lines: DataFrame, downsample: int = 1, pad: int = 15
 ) -> DataFrame:
-    """L8/L9 fused: render the page raster, derive each region's bbox
-    from its own lines (min/max x, y extent ± pad), and run the
-    projection-profile detector per region — one Arrow stage, no
-    bitmap shuffle (same output as render_page_bitmaps + the
-    lines-derived regions aggregate + detect_lines_projection)."""
+    """L8/L9: render the page raster, derive each region's bbox from
+    its own lines (min/max x, y extent ± pad), and run the
+    projection-profile detector per region — one Arrow stage, one row
+    per detected baseline in page coords with [up, down] heights."""
 
     cols = ["doc_id", "region_id", "bx0", "bx1", "y", "height_up", "height_down"]
 
@@ -648,12 +304,15 @@ def render_detect_lines(
 def render_crop_lines(
     lines: DataFrame, target_height: int = 32, with_pixels: bool = True
 ) -> DataFrame:
-    """R1 fused: render the page raster and warp every line crop in the
-    same per-doc stage. ``with_pixels=False`` skips the raster render
-    and the bilinear gather entirely (geometry-only consumers): the
-    crop SHAPE is fully determined by the rectification grid
-    (``cropper.get_crop_inputs``) — same math, same degenerate
-    fallback, no pixel ever touched."""
+    """R1: rectified line crops — render the page raster and warp every
+    line with the real numpy warp (``functions/cropper.crop_line``, the
+    reference's EngineLineCropper chain) in the same per-doc stage. One
+    row per line: the crop strip (binary), its dims, and the ink
+    fraction (crop pixels darker than 128). ``with_pixels=False``
+    skips the raster render and the bilinear gather entirely
+    (geometry-only consumers): the crop SHAPE is fully determined by
+    the rectification grid (``cropper.get_crop_inputs``) — same math,
+    same degenerate fallback, no pixel ever touched."""
     from pero_ocr_spark.functions import cropper
 
     def per_doc(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -704,8 +363,10 @@ def render_crop_lines(
 
 
 def render_snap_baselines(lines: DataFrame, tolerance: int = 5) -> DataFrame:
-    """L18 fused: render the raster from the TRUE line geometry (y) and
-    snap the JITTERED baselines (column ``y_jit``) against it — one
+    """L18: snap jittered baselines to the strongest smoothed
+    y-gradient (layout_helpers.adjust_baselines_to_intensity:393-410).
+    Renders the raster from the TRUE line geometry (y) and snaps the
+    JITTERED baselines (column ``y_jit``) against it — one
     per-doc stage, batched across the page's lines via the vectorized
     kernel (``imageproc.snap_horizontal_baselines_batch``)."""
 
@@ -731,14 +392,47 @@ def render_snap_baselines(lines: DataFrame, tolerance: int = 5) -> DataFrame:
     )
 
 
+def _mixed_raster_height(pdf: pd.DataFrame) -> int:
+    horiz = pdf[pdf["orientation"] == 0]
+    vert = pdf[pdf["orientation"] == 1]
+    h = 20
+    if len(horiz):
+        h = max(h, int(horiz["pos"].max()) + 20)
+    if len(vert):
+        h = max(h, int(vert["a1"].max()) + 10)
+    return h
+
+
+def _render_mixed_raster(pdf: pd.DataFrame, h: int) -> np.ndarray:
+    """Raster with BOTH orientations: orientation 0 = horizontal ink
+    band rows [pos-10, pos] × cols [a0, a1); orientation 1 = vertical
+    band rows [a0, a1) × cols [pos-10, pos]. Band starts clamp at 0
+    (no wrapped negative slices for edge-hugging lines)."""
+    img = np.full((h, PAGE_W), 255, dtype=np.uint8)
+    for r in pdf.itertuples(index=False):
+        pos, a0, a1 = int(r.pos), int(r.a0), int(r.a1)
+        if int(r.orientation) == 0:
+            img[max(pos - ASC_INK, 0) : pos + 1, a0:a1] = 0
+        else:
+            img[a0:a1, max(pos - ASC_INK, 0) : pos + 1] = 0
+    return img
+
+
 def render_detect_multi_orientation(
     segments: DataFrame, downsample: int = 1, pad: int = 15
 ) -> DataFrame:
-    """L10 fused: render the mixed-orientation raster and run both
-    detection passes (frame + transposed frame) in one per-doc stage.
-    Per-orientation region bboxes derive from the segments themselves
-    (extent ± pad on the cross axis), matching the table-level
-    aggregate the unfused query built."""
+    """L10: multi-orientation detect + union (page_parser.py:237-259 /
+    cnn_layout_engine.rotate_layout semantics). Segments carry an
+    ``orientation``: 0 = horizontal ink band rows [pos-10, pos] × cols
+    [a0, a1), 1 = vertical band rows [a0, a1) × cols [pos-10, pos].
+    One per-doc stage renders the mixed raster and detects each
+    orientation's region (extent ± pad on the cross axis);
+    orientation-1 detects on the TRANSPOSED raster (the reference
+    rotates 90° with np.rot90 — transpose = rotation + mirror,
+    equivalent for this mirror-invariant detector and with a
+    self-inverse coordinate map) and maps back into page coordinates.
+    Baselines emit as (bx0, by0)-(bx1, by1) segments so both
+    orientations share one schema."""
 
     cols = [
         "doc_id", "region_id", "orientation",
@@ -805,57 +499,6 @@ def render_detect_multi_orientation(
     )
 
 
-def detect_lines_projection(
-    bitmaps: DataFrame, regions: DataFrame, downsample: int = 1
-) -> DataFrame:
-    """Run the projection-profile detector per (page, region): cogroup
-    the bitmap table with the region table on doc_id and emit one row
-    per detected baseline — page coords, [up, down] heights."""
-
-    cols = ["doc_id", "region_id", "bx0", "bx1", "y", "height_up", "height_down"]
-
-    def per_doc(bdf: pd.DataFrame, rdf: pd.DataFrame) -> pd.DataFrame:
-        if len(bdf) == 0 or len(rdf) == 0:
-            return pd.DataFrame(columns=cols)
-        img = np.frombuffer(bdf["img"].iloc[0], dtype=np.uint8).reshape(
-            int(bdf["height"].iloc[0]), int(bdf["width"].iloc[0])
-        )
-        doc_id = int(bdf["doc_id"].iloc[0])
-        rows = []
-        for r in rdf.itertuples(index=False):
-            poly = np.asarray(
-                [
-                    [r.rx0, r.ry0],
-                    [r.rx1, r.ry0],
-                    [r.rx1, r.ry1],
-                    [r.rx0, r.ry1],
-                ],
-                dtype=np.float64,
-            )
-            baselines, heights = imageproc.detect_lines_in_region(
-                img, poly, downsample=downsample
-            )
-            for bl, ht in zip(baselines, heights):
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "region_id": r.region_id,
-                        "bx0": float(bl[0][0]),
-                        "bx1": float(bl[1][0]),
-                        "y": float(bl[0][1]),
-                        "height_up": float(ht[0]),
-                        "height_down": float(ht[1]),
-                    }
-                )
-        return pd.DataFrame(rows, columns=cols)
-
-    return (
-        _pin(bitmaps).groupBy("doc_id")
-        .cogroup(_pin(regions).groupBy("doc_id"))
-        .applyInPandas(per_doc, schema=DETECT_DDL)
-    )
-
-
 def adaptive_resolution_stage(docs: DataFrame) -> DataFrame:
     """L4 driver surface: run the adaptive-downsample control loop
     (``mapparse.get_maps_with_optimal_resolution``, ref
@@ -899,4 +542,6 @@ def adaptive_resolution_stage(docs: DataFrame) -> DataFrame:
                 )
             yield pd.DataFrame(rows, columns=["doc_id", "ds", "n_runs"])
 
-    return _pin(docs).mapInPandas(run, schema="doc_id long, ds double, n_runs long")
+    return docs.repartition(shuffle_width(docs.sparkSession), "doc_id").mapInPandas(
+        run, schema="doc_id long, ds double, n_runs long"
+    )

@@ -6,8 +6,8 @@ order below (cross-module helpers live in _ctes, imported first).
 """
 
 from pero_ocr_spark.queries._base import (  # noqa: F401
-    QueryFn, _CHECK_FIRST, _DRIVER_CHECKED, _EXTRACTED_CTE, _REGISTRY,
-    _ordered_names, _scratch, _t, oracle_sql, queries, register,
+    QueryFn, _EXTRACTED_CTE, _REGISTRY, _scratch, _t, oracle_sql, queries,
+    register,
 )
 
 from pero_ocr_spark.queries import _ctes, q_dedup, q_events, q_icetable, q_layout, q_recognition, q_similarity, q_sketch, q_text, q_training, q_web  # noqa: E501,F401

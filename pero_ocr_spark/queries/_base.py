@@ -81,139 +81,10 @@ _EXTRACTED_CTE = f"""
 )
 """
 
-# Queries with a green external-driver correctness row across rounds 1-5
-# (union of CORRECTNESS_r01..r05 keys = 154 names; the 50 r5 names were
-# folded in at the start of round 6 per the r5 verdict so the remaining
-# 54 never-checked queries yield first). The driver walks `queries()`
-# in dict order with a ~50-per-round cap, so the not-yet-driver-checked
-# entries yield FIRST — a green external row is worth ten self-checks.
-# Remove names from this set only if a later round's CORRECTNESS file
-# drops them.
-_DRIVER_CHECKED = frozenset({
-    "alto_roundtrip", "alto_word_roundtrip", "cer_aggregate", "cn_best_path",
-    "confidence_filter_agg", "corpus_balanced_shards",
-    "corpus_filter_pipeline", "corpus_leakage_safe_split",
-    "corpus_skew_profile", "ctc_decode_beam", "ctc_decode_chunked",
-    "ctc_decode_greedy", "ctc_decode_lm_carry", "curation_pipeline_e2e",
-    "decontam_benchmark_overlap", "decontam_span_mask", "dedup_bloom_filter",
-    "dedup_canonical_url", "dedup_duplicate_clusters", "dedup_exact",
-    "dedup_keep_best", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-    "dedup_simhash_fingerprints", "dedup_simhash_pairs",
-    "dedup_substring_spans", "error_cer_summary", "error_confusion_matrix",
-    "events_funnel", "events_gap_fill", "events_retention_cohorts",
-    "events_rolling_window", "events_sessionize", "events_stateful_totals",
-    "events_stream_dedup", "events_stream_enrich", "events_stream_join",
-    "events_window_stream", "extract_spans", "host_quality_priors",
-    "html_densitometric_classify", "html_ensemble_extract", "html_outlinks",
-    "html_template_strip", "hyp_ref_compare", "iceberg_snapshot_reads",
-    "icetable_incremental_agg", "icetable_schema_evolution",
-    "icetable_stream_ingest", "icetable_upsert_delete", "layout_assign_lines",
-    "layout_cluster_lines", "layout_detect_lines",
-    "layout_detect_multi_orientation", "layout_merge_lines",
-    "layout_parse_maps", "layout_reading_order_bands",
-    "layout_reading_order_xycut", "layout_refine_baselines",
-    "layout_segment_regions", "layout_snap_baselines",
-    "layout_textline_polygons", "line_crops", "lineage_resume",
-    "lm_perplexity_filter", "media_decode_metadata", "media_frame_sample",
-    "median_per_group", "merge_best_hypothesis", "merge_ocr_engines",
-    "ocr_pipeline_e2e", "pagexml_roundtrip", "pdf_roundtrip",
-    "quality_power_mean", "reading_order_window", "resume_anti_join",
-    "rtl_visual_form", "sample_dsir_importance", "sample_temperature",
-    "semantic_dedup", "similarity_ann_bucketed", "similarity_ann_ivf",
-    "similarity_cosine_topk", "similarity_hard_negatives",
-    "similarity_near_dup_pairs", "text_char_entropy", "text_fingerprints",
-    "text_language_id", "text_quality_score", "text_token_stats",
-    "topk_per_group", "training_bpe_subword_counts",
-    "training_chunk_documents", "vocab_bpe_train", "warc_cdx_index",
-    "warc_charset_decode", "warc_gzip_ingest", "warc_html_spans",
-    "warc_ingest", "warc_redirect_resolution", "warc_robots_filter",
-    "warc_stream_ingest", "web_anchor_text", "web_pagerank",
-    # --- round 5 driver rows (CORRECTNESS_r05) ---
-    "corpus_bucketed_join", "corpus_dataset_card", "crawl_robots_eval",
-    "crawl_sitemap_discovery", "dedup_incremental_near_dup",
-    "dedup_prefix_filter", "embedding_outlier_scores",
-    "error_bleu_corpus", "error_chrf_corpus", "events_anomaly_mad",
-    "events_asof_join", "events_cusum", "events_ewma", "events_holt",
-    "events_holt_winters", "events_range_join",
-    "events_stream_hll_users", "events_stream_left_outer",
-    "extract_spans_markdown", "html_extract_metadata",
-    "html_render_markdown", "html_table_markdown",
-    "icetable_changelog_cdc", "icetable_incremental_view",
-    "jsonl_ingest", "lm_stupid_backoff", "merge_engine_agreement",
-    "ocr_select_embed_id", "quality_calibration_bins",
-    "quality_classifier_auc", "quality_classifier_nb",
-    "similarity_ann_binary", "similarity_recall_eval",
-    "sketch_cms_heavy_hitters", "sketch_histogram_quantiles",
-    "sketch_hll_shingles", "sketch_kmv_snapshot_overlap",
-    "text_fix_mojibake", "text_readability", "text_textrank_summary",
-    "training_fim_transform", "web_bfs_depth", "web_communities_lpa",
-    "web_components", "web_hits", "web_host_graph", "web_kcore",
-    "web_random_walks", "web_triangles", "web_trustrank",
-})
-
-# Within the unchecked block, the highest-value queries go first — the
-# round-4 verdict's directive-3 list by name (sketch wave, web-graph
-# wave, events-analytics wave, eval wave, then the named singles and the
-# session-9 snapshot-table/eval additions), then everything else in
-# insertion order. 78 queries have never had a driver row (cap is ~50),
-# so this ordering decides which get one in round 5.
-_CHECK_FIRST = (
-    "html_table_markdown", "html_render_markdown",  # NEW round 5 session 3
-    "icetable_incremental_view", "training_fim_transform",  # NEW r5 session 3
-    "quality_classifier_nb", "jsonl_ingest",  # NEW round 5 session 3
-    "crawl_sitemap_discovery", "icetable_changelog_cdc",  # NEW r5 session 3
-    "text_fix_mojibake", "html_extract_metadata",  # NEW round 5 session 3
-    "embedding_outlier_scores", "text_textrank_summary",  # NEW r5 session 3
-    "crawl_robots_eval", "corpus_dataset_card",  # NEW round 5 session 3
-    "dedup_incremental_near_dup", "extract_spans_markdown",  # NEW r5 s3
-    "text_readability",  # NEW round 5 session 3
-    "corpus_bucketed_join", "lm_stupid_backoff",  # NEW round 5 session 2
-    "events_stream_left_outer", "error_chrf_corpus",  # NEW round 5 session 2
-    "ocr_select_embed_id",  # NEW in round 5 — closes the last missing row
-    "similarity_ann_binary", "events_holt_winters",  # NEW late round 5
-    "dedup_prefix_filter", "error_bleu_corpus",  # NEW late round 5
-    "sketch_hll_shingles", "sketch_cms_heavy_hitters",
-    "sketch_kmv_snapshot_overlap", "sketch_histogram_quantiles",
-    "events_stream_hll_users", "web_hits", "web_triangles", "web_components",
-    "web_communities_lpa", "web_kcore", "web_trustrank", "web_bfs_depth",
-    "web_host_graph", "web_random_walks", "events_ewma", "events_holt",
-    "events_cusum", "events_anomaly_mad", "events_asof_join",
-    "events_range_join", "quality_classifier_auc", "quality_calibration_bins",
-    "similarity_recall_eval", "merge_engine_agreement", "similarity_ann_pq",
-    "lm_kneser_ney_perplexity", "corpus_zipf_fit", "corpus_heaps_fit",
-    "corpus_drift_kl", "icetable_mor_deletes", "corpus_zorder_skipping",
-    "icetable_bloom_skipping", "icetable_wap_publish", "dedup_winnowing",
-    "layout_region_retrace", "telemetry_observe", "transcriptions_roundtrip",
-    "line_crop_sink", "dedup_common_passages", "text_repetition_stats",
-    "sample_stratified", "training_pack_sequences", "text_redact_pii",
-    "vocab_topk", "layout_postprocess", "image_folder_scan",
-    "layout_adaptive_downsample", "embedding_kmeans_assign",
-    "html_block_classify", "html_main_content", "html_interleaved_spans",
-    "corpus_shard_shuffle", "quality_classifier_filter",
-    "text_pmi_collocations", "sample_doremi_mixture", "dedup_incremental",
-    "training_render_interleaved", "media_context_pairs",
-    "corpus_train_val_split", "text_dedup_paragraphs",
-    "similarity_quantized_topk", "crawl_frontier_schedule",
-    "text_tfidf_keywords", "text_bm25_search", "crawl_snapshot_diff",
-    "corpus_rollup_stats", "sample_epoch_mixing", "dedup_cdc_chunks",
-    "media_duplicate_groups", "sample_weighted_aes",
-    "training_pack_interleaved", "text_ngram_novelty",
-    "dedup_containment_pairs", "corpus_ccnet_buckets",
-    "similarity_margin_pairs", "training_span_corruption",
-    "embedding_top_component", "search_rank_fusion",
-)
-
-def _ordered_names() -> list[str]:
-    names = list(_REGISTRY)
-    unchecked = [n for n in names if n not in _DRIVER_CHECKED]
-    first = [n for n in _CHECK_FIRST if n in unchecked]
-    return (first
-            + [n for n in unchecked if n not in _CHECK_FIRST]
-            + [n for n in names if n in _DRIVER_CHECKED])
-
 def queries() -> dict[str, QueryFn]:
-    return {k: _REGISTRY[k][0] for k in _ordered_names()}
+    """Registered queries, in registration order."""
+    return {k: fn for k, (fn, _) in _REGISTRY.items()}
 
 def oracle_sql() -> dict[str, str]:
-    return {k: _REGISTRY[k][1] for k in _ordered_names()
-            if _REGISTRY[k][1] is not None}
+    """Oracle SQL of every query that has one, in registration order."""
+    return {k: sql for k, (_, sql) in _REGISTRY.items() if sql is not None}

@@ -39,18 +39,17 @@ from __future__ import annotations
 
 import re
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from pero_ocr_spark.operators import grouped_batches_in_pandas
 
 PAGE_W, PAGE_H = 595, 842          # A4 in points
 LINES_PER_PAGE = 48
@@ -310,16 +309,13 @@ _SPAN_SCHEMA = StructType([
 ])
 
 
-def render_pdfs(extracted: DataFrame, partitions: int | None = None) -> DataFrame:
+def render_pdfs(extracted: DataFrame) -> DataFrame:
     """Extracted spans → one searchable PDF per document.
 
     (doc_id, kind, text, media_ref, ord) → (doc_id, pdf, n_pages,
-    n_bytes). Pinned repartition before the per-doc stage — same AQE
-    hazard as the XML exporters."""
-    if partitions is None:
-        n = int(extracted.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    else:
-        n = partitions
+    n_bytes). ``grouped_batches_in_pandas`` hands ``render`` whole
+    documents even when an Arrow batch boundary splits one, so each
+    PDF sees its complete span set."""
 
     def render(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
@@ -336,30 +332,9 @@ def render_pdfs(extracted: DataFrame, partitions: int | None = None) -> DataFram
             rows, columns=["doc_id", "pdf", "n_pages", "n_bytes"]
         )
 
-    def run(batches):
-        # an Arrow batch boundary can split a document's rows; carry
-        # the trailing doc into the next batch (merge_lines_stage's
-        # pattern) so each PDF sees its complete span set
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                carry = None
-                continue
-            is_last = pdf["doc_id"] == pdf["doc_id"].iloc[-1]
-            carry = pdf[is_last]
-            body = pdf[~is_last]
-            if len(body):
-                yield render(body)
-        if carry is not None and len(carry):
-            yield render(carry)
-
-    return (
-        extracted.select("doc_id", "ord", "kind", "text", "media_ref")
-        .repartition(n, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .mapInPandas(run, schema=_PDF_SCHEMA)
+    return grouped_batches_in_pandas(
+        extracted.select("doc_id", "ord", "kind", "text", "media_ref"),
+        "doc_id", render, _PDF_SCHEMA,
     )
 
 

@@ -38,6 +38,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pero_ocr_spark.operators import grouped_map_in_pandas
+
 WARC_DATE = "2026-01-01T00:00:00Z"   # deterministic capture timestamp
 _REASON = {200: "OK", 404: "Not Found", 301: "Moved Permanently"}
 
@@ -281,7 +283,6 @@ def synthesize_warc_shards(
     """(doc_id, url, status, body) → one WARC blob per shard
     (``shard = doc_id % n_shards``), records ordered by doc_id.
     ``gzip_members=True`` → the ``.warc.gz`` member-per-record form."""
-    n = int(captures.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
 
     def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("doc_id")
@@ -300,11 +301,9 @@ def synthesize_warc_shards(
             "n_bytes": [len(blob)],
         })
 
-    return (
-        captures.withColumn("shard_id", (F.col("doc_id") % n_shards).cast("long"))
-        .repartition(n, "shard_id")
-        .groupBy("shard_id")
-        .applyInPandas(per_shard, schema=_SHARD_SCHEMA)
+    return grouped_map_in_pandas(
+        captures.withColumn("shard_id", (F.col("doc_id") % n_shards).cast("long")),
+        "shard_id", per_shard, _SHARD_SCHEMA,
     )
 
 

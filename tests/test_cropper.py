@@ -75,8 +75,7 @@ class TestSparkCrops:
             "doc_id long, line_id string, x0 double, x1 double, y double, "
             "asc double, desc double",
         )
-        bitmaps = linedet.render_page_bitmaps(lines)
-        out = {r["line_id"]: r for r in linedet.crop_lines(bitmaps, lines).collect()}
+        out = {r["line_id"]: r for r in linedet.render_crop_lines(lines).collect()}
         assert set(out) == {"l0", "l1"}
         r = out["l0"]
         assert r["crop_h"] == 32

@@ -21,7 +21,7 @@ def test_synth_logits_decode_identity():
 
 def test_logits_table_and_greedy_decode(spark, sf_dir):
     logits = ctc.logits_table(spark, sf_dir, max_lines=200)
-    decoded = ctc.decode_greedy(ctc.pack_by_length(logits, partitions=4))
+    decoded = ctc.decode_greedy(ctc.pack_by_length(logits))
     rows = decoded.collect()
     assert len(rows) == 200
     for r in rows:

@@ -94,3 +94,30 @@ class TestGroupedMapInPandas:
             spark, df, ["doc_id", "region_id"], fn,
             "doc_id long, region_id string, n long, s long",
         )
+
+    def test_group_frame_has_fresh_range_index(self, spark):
+        # applyInPandas hands each group a 0-based RangeIndex; label
+        # access must work for groups that sit mid-batch, and for the
+        # carried group that spans a batch boundary
+        old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+        try:
+            rows = [(i % 40, (i % 40) * 10) for i in range(200)]
+            df = spark.createDataFrame(rows, "doc_id long, v long")
+
+            def first_v(pdf: pd.DataFrame) -> pd.DataFrame:
+                return pd.DataFrame(
+                    {
+                        "doc_id": [pdf["doc_id"].iloc[0]],
+                        "n": [len(pdf)],
+                        "s": [int(pdf.loc[0, "v"])],
+                    }
+                )
+
+            self._compare(
+                spark, df, "doc_id", first_v, "doc_id long, n long, s long"
+            )
+        finally:
+            spark.conf.set(
+                "spark.sql.execution.arrow.maxRecordsPerBatch", old
+            )

@@ -1,0 +1,93 @@
+"""Source scan: each idiom lives behind its one helper.
+
+- The shuffle width is read only through ``operators.shuffle_width``.
+  The session builders and the streaming state-partition set/restore
+  write the conf; nothing else names it.
+- ``operators/linedet.py`` has no two-frame (cogroup) or one-batch-
+  per-group (applyInPandas) stage: per-doc stages go through
+  ``grouped_map_in_pandas``.
+- ``corpus``'s private names stay private: callers use
+  ``corpus.spans_of`` and ``corpus.drop_extracted_cache``.
+"""
+
+import ast
+import re
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PROGRAM_DIRS = ("pero_ocr_spark", "jobs", "BENCH", "perfbench")
+PROGRAM_FILES = ("bench.py", "bench_extra.py", "__spark_entry__.py")
+
+# (file, enclosing function) pairs allowed to name the shuffle conf
+SHUFFLE_CONF_OWNERS = {
+    ("pero_ocr_spark/operators/__init__.py", "shuffle_width"),
+    ("pero_ocr_spark/session.py", "get_spark"),
+    ("jobs/extract_job.py", "_spark"),
+    ("pero_ocr_spark/streaming/events.py", "view_click_attribution_streaming"),
+    ("pero_ocr_spark/streaming/events.py", "view_click_left_outer_streaming"),
+}
+
+
+def _program_files():
+    for d in PROGRAM_DIRS:
+        yield from sorted((ROOT / d).rglob("*.py"))
+    for f in PROGRAM_FILES:
+        yield ROOT / f
+
+
+def _rel(path: Path) -> str:
+    return path.relative_to(ROOT).as_posix()
+
+
+def _conf_uses(path: Path):
+    """(enclosing function, line) of every "spark.sql.shuffle.partitions"
+    string constant in the file."""
+    tree = ast.parse(path.read_text(), filename=str(path))
+
+    def walk(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield from walk(child, child.name if fn is None else fn)
+            elif (
+                isinstance(child, ast.Constant)
+                and child.value == "spark.sql.shuffle.partitions"
+            ):
+                yield fn, child.lineno
+            else:
+                yield from walk(child, fn)
+
+    yield from walk(tree, None)
+
+
+def test_shuffle_width_is_read_in_one_place():
+    stray = [
+        f"{_rel(p)}:{line} ({fn or 'module level'})"
+        for p in _program_files()
+        for fn, line in _conf_uses(p)
+        if (_rel(p), fn) not in SHUFFLE_CONF_OWNERS
+    ]
+    assert not stray, (
+        "read the shuffle width through operators.shuffle_width: "
+        + ", ".join(stray)
+    )
+
+
+def test_linedet_has_no_two_frame_or_per_group_stage():
+    src = (ROOT / "pero_ocr_spark/operators/linedet.py").read_text()
+    for call in ("cogroup(", "applyInPandas("):
+        assert call not in src, f"linedet.py calls {call}"
+
+
+def test_corpus_private_names_stay_private():
+    private = re.compile(r"\b(_SPANS_ARRAY_EXPR|_EXTRACTED_CACHE)\b")
+    stray = [
+        f"{_rel(p)}:{i}"
+        for p in _program_files()
+        if _rel(p) != "pero_ocr_spark/corpus.py"
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if private.search(line)
+    ]
+    assert not stray, (
+        "use corpus.spans_of / corpus.drop_extracted_cache: "
+        + ", ".join(stray)
+    )

@@ -141,30 +141,6 @@ class TestSegmentation:
         assert [b[0][1] for b in out] == [51.0, 81.0]
 
 
-class TestDebugSink:
-    def test_draw_polyline(self):
-        img = np.full((50, 50), 255, dtype=np.uint8)
-        imageproc.draw_polyline(img, [[5, 10], [40, 10], [40, 30]], value=0, thickness=1)
-        assert (img[10, 5:41] == 0).all()
-        assert (img[10:31, 40] == 0).all()
-        assert img[20, 20] == 255
-
-    def test_render_debug_overlays(self, spark):
-        from pero_ocr_spark.operators import linedet
-
-        lines = spark.createDataFrame(
-            [(1, "l0", 10.0, 200.0, 50.0)],
-            "doc_id long, line_id string, x0 double, x1 double, y double",
-        )
-        bitmaps = linedet.render_page_bitmaps(lines)
-        (row,) = linedet.render_debug_overlays(bitmaps, lines, value=128).collect()
-        assert row["n_drawn"] == 1
-        img = np.frombuffer(row["img"], dtype=np.uint8).reshape(
-            row["height"], row["width"]
-        )
-        assert (img[50, 20:190] == 128).all()  # baseline drawn over ink
-
-
 class TestMultiOrientation:
     def test_union_of_orientations(self, spark):
         from pero_ocr_spark.operators import linedet
@@ -177,26 +153,17 @@ class TestMultiOrientation:
             ],
             "doc_id long, orientation long, a0 double, a1 double, pos double",
         )
-        bitmaps = linedet.render_mixed_bitmaps(segs)
-        regions = spark.createDataFrame(
-            [
-                (1, "h", 0, 10.0, 300.0, 35.0, 65.0),
-                (1, "v", 1, 585.0, 615.0, 10.0, 200.0),
-            ],
-            "doc_id long, region_id string, orientation long, "
-            "rx0 double, rx1 double, ry0 double, ry1 double",
-        )
         out = {
             r["orientation"]: r
-            for r in linedet.detect_lines_multi_orientation(
-                bitmaps, regions
-            ).collect()
+            for r in linedet.render_detect_multi_orientation(segs).collect()
         }
         assert set(out) == {0, 1}
         h = out[0]
+        assert h["region_id"] == "h"
         assert (h["by0"], h["by1"]) == (50.0, 50.0)
         assert (h["bx0"], h["bx1"]) == (10.0, 300.0)
         v = out[1]
+        assert v["region_id"] == "v"
         assert (v["bx0"], v["bx1"]) == (600.0, 600.0)
         assert (v["by0"], v["by1"]) == (10.0, 200.0)
         assert (v["height_up"], v["height_down"]) == (12.0, 3.0)
@@ -216,18 +183,9 @@ class TestSparkStages:
             rows, "doc_id long, region_id string, line_id string, "
             "x0 double, x1 double, y double"
         )
-        bitmaps = linedet.render_page_bitmaps(lines)
-        from pyspark.sql import functions as F
-
-        regions = lines.groupBy("doc_id", "region_id").agg(
-            F.min("x0").alias("rx0"),
-            F.max("x1").alias("rx1"),
-            (F.min("y") - 15).alias("ry0"),
-            (F.max("y") + 15).alias("ry1"),
-        )
         out = {
             (r["doc_id"], r["region_id"], r["y"]): r
-            for r in linedet.detect_lines_projection(bitmaps, regions).collect()
+            for r in linedet.render_detect_lines(lines).collect()
         }
         assert set(out) == {
             (1, "r0", 20.0),
@@ -241,9 +199,9 @@ class TestSparkStages:
 
 
 class TestFusedEqualsCogrouped:
-    """The fused render→consume stages must produce exactly what the
-    two-frame production operators (bitmaps from an image-store scan)
-    produce on the same geometry."""
+    """Each fused render→consume stage must equal rendering the page
+    raster and running the same kernel on it as two separate steps,
+    computed here in plain numpy outside Spark."""
 
     def _lines(self, spark):
         rows = []
@@ -264,6 +222,17 @@ class TestFusedEqualsCogrouped:
     def _key(self, rows):
         return sorted(tuple(r) for r in rows)
 
+    def _reference(self, lines, per_page):
+        """per_page(doc_id, page_lines, raster) -> rows, over the same
+        raster the fused stages render."""
+        from pero_ocr_spark.operators import linedet
+
+        rows = []
+        for doc_id, g in lines.toPandas().groupby("doc_id"):
+            img = linedet._render_lines_raster(g, int(g["y"].max()) + 40)
+            rows.extend(per_page(int(doc_id), g, img))
+        return self._key(rows)
+
     def test_segment(self, spark):
         from pero_ocr_spark.operators import linedet
 
@@ -271,51 +240,91 @@ class TestFusedEqualsCogrouped:
         fused = linedet.render_segment_regions(
             lines, close_gap=7, margin=3, min_pixels=25, downsample=2
         ).collect()
-        cogrouped = linedet.segment_page_regions(
-            linedet.render_page_bitmaps(lines),
-            close_gap=7, margin=3, min_pixels=25, downsample=2,
-        ).collect()
-        assert self._key(fused) == self._key(cogrouped)
+
+        def per_page(doc_id, g, img):
+            regs = imageproc.segment_regions(
+                img, close_gap=7, margin=3, min_pixels=25, downsample=2
+            )
+            return [
+                (doc_id, i, r["rx0"], r["ry0"], r["rx1"], r["ry1"])
+                for i, r in enumerate(regs)
+            ]
+
+        assert self._key(fused) == self._reference(lines, per_page)
 
     def test_detect(self, spark):
-        from pyspark.sql import functions as F
-
         from pero_ocr_spark.operators import linedet
 
         lines = self._lines(spark)
         fused = linedet.render_detect_lines(lines, downsample=2).collect()
-        regions = lines.groupBy("doc_id", "region_id").agg(
-            F.min("x0").alias("rx0"), F.max("x1").alias("rx1"),
-            (F.min("y") - 15).alias("ry0"), (F.max("y") + 15).alias("ry1"),
-        )
-        cogrouped = linedet.detect_lines_projection(
-            linedet.render_page_bitmaps(lines), regions, downsample=2
-        ).collect()
-        assert self._key(fused) == self._key(cogrouped)
+
+        def per_page(doc_id, g, img):
+            rows = []
+            for rid, r in g.groupby("region_id"):
+                rx0, rx1 = r["x0"].min(), r["x1"].max()
+                ry0, ry1 = r["y"].min() - 15, r["y"].max() + 15
+                poly = np.array(
+                    [[rx0, ry0], [rx1, ry0], [rx1, ry1], [rx0, ry1]]
+                )
+                baselines, heights = imageproc.detect_lines_in_region(
+                    img, poly, downsample=2
+                )
+                rows += [
+                    (doc_id, rid, bl[0][0], bl[1][0], bl[0][1], ht[0], ht[1])
+                    for bl, ht in zip(baselines, heights)
+                ]
+            return rows
+
+        ref = self._reference(lines, per_page)
+        assert len(ref) == 16
+        assert self._key(fused) == ref
 
     def test_crops(self, spark):
+        from pero_ocr_spark.functions import cropper
         from pero_ocr_spark.operators import linedet
 
         lines = self._lines(spark)
         fused = linedet.render_crop_lines(lines).collect()
-        cogrouped = linedet.crop_lines(
-            linedet.render_page_bitmaps(lines), lines
-        ).collect()
-        assert self._key(fused) == self._key(cogrouped)
+
+        def per_page(doc_id, g, img):
+            rows = []
+            for r in g.itertuples(index=False):
+                crop = cropper.crop_line(
+                    img.astype(np.float64),
+                    np.array([[r.x0, r.y], [r.x1, r.y]]),
+                    (r.asc, r.desc), 32, out_dtype=np.uint8,
+                )
+                rows.append((
+                    doc_id, r.line_id, *crop.shape,
+                    float((crop < 128).mean()), crop.tobytes(),
+                ))
+            return rows
+
+        assert self._key(fused) == self._reference(lines, per_page)
 
     def test_snap(self, spark):
         from pyspark.sql import functions as F
 
         from pero_ocr_spark.operators import linedet
 
-        lines = self._lines(spark)
-        jit = lines.withColumn("y_jit", F.col("y") + (F.col("ord") % 5) - 2)
-        fused = linedet.render_snap_baselines(jit).collect()
-        jittered = lines.select(
-            "doc_id", "line_id", "x0", "x1",
-            (F.col("y") + (F.col("ord") % 5) - 2).alias("y"),
+        lines = self._lines(spark).withColumn(
+            "y_jit", F.col("y") + (F.col("ord") % 5) - 2
         )
-        cogrouped = linedet.snap_lines_to_intensity(
-            linedet.render_page_bitmaps(lines), jittered
-        ).collect()
-        assert self._key(fused) == self._key(cogrouped)
+        fused = linedet.render_snap_baselines(lines).collect()
+
+        # the general per-baseline kernel, against which the fused
+        # stage's batched horizontal kernel must agree
+        def per_page(doc_id, g, img):
+            snapped = imageproc.snap_baselines_to_intensity(
+                [
+                    np.array([[r.x0, r.y_jit], [r.x1, r.y_jit]])
+                    for r in g.itertuples(index=False)
+                ],
+                img,
+            )
+            return [
+                (doc_id, lid, float(b[0][1]))
+                for lid, b in zip(g["line_id"], snapped)
+            ]
+
+        assert self._key(fused) == self._reference(lines, per_page)

@@ -129,7 +129,7 @@ class TestSparkStages:
         df = spark.createDataFrame(
             rows, "doc_id long, ord long, kind string, text string, media_ref string"
         )
-        pdfs = P.render_pdfs(df, partitions=4)
+        pdfs = P.render_pdfs(df)
         out = P.parse_pdf_spans(pdfs).toPandas()
         out = out.sort_values(["doc_id", "ord"]).reset_index(drop=True)
         want = pd.DataFrame(
@@ -148,7 +148,7 @@ class TestSparkStages:
                 rows,
                 "doc_id long, ord long, kind string, text string, media_ref string",
             )
-            pdfs = P.render_pdfs(df, partitions=1).toPandas()
+            pdfs = P.render_pdfs(df).toPandas()
             assert len(pdfs) == 1
             assert int(pdfs["n_pages"].iloc[0]) == 100 // P.LINES_PER_PAGE + 1
             parsed = P.parse_pdf(bytes(pdfs["pdf"].iloc[0]))
