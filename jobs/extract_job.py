@@ -54,6 +54,7 @@ import json
 import sys
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -194,13 +195,17 @@ def main(argv: list[str] | None = None) -> int:
     # from a crashed run are rewritten below, not skipped
     manifest = f"{args.output}/_shards_done"
     try:
-        done = [
-            r.shard
-            for r in spark.read.parquet(manifest)
-            .select("shard").distinct().collect()
-        ]
-    except Exception:  # first run: no manifest yet
+        manifest_df = spark.read.parquet(manifest)
+    except AnalysisException as e:
+        # only a missing manifest means "first run"; an unreadable one
+        # must not silently rewrite every shard
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         done = []
+    else:
+        done = [
+            r.shard for r in manifest_df.select("shard").distinct().collect()
+        ]
     if done:
         sharded = sharded.filter(~F.col("shard").isin(done))
     observed, obs = telemetry.observe_extraction(sharded)

@@ -19,4 +19,10 @@ Design rules (see SURVEY.md):
     stable ``(key, idx)`` orderings.
 """
 
+from pero_ocr_spark import _pyworker
+
 __version__ = "0.1.0"
+
+# Every pickled UDF references engine modules, so this runs once in
+# each Python worker before its first task's rows.
+_pyworker.install()

@@ -1011,8 +1011,9 @@ def duplicated_passage_spans(
 def _cdc_doc_kernel(
     text: str, k: int, mask: int, pows: "np.ndarray"
 ) -> tuple["np.ndarray", "np.ndarray"]:
-    """numpy twin of the Catalyst CDC chunker row expression
-    (:func:`_cdc_stream_catalyst`) — same boundary rule (cut after
+    """numpy twin of the Catalyst CDC chunker row expression (kept
+    as ``_cdc_stream_catalyst`` in tests/test_dedup.py, which
+    fuzz-pins the two equal) — same boundary rule (cut after
     every 1-based position ``i`` in ``[k, n)`` whose k-char window
     polynomial hash ≡ 0 mod ``mask``), same per-chunk polynomial hash
     (fold (a·31 + codepoint) mod p). Vectorized: window hashes are one
@@ -1068,8 +1069,8 @@ def _cdc_stream(docs: DataFrame, k: int, mask: int) -> DataFrame:
     vectorized Arrow kernel (:func:`_cdc_doc_kernel`): the per-window
     interpreted Catalyst hash fold (O(n·k) lambda steps per document)
     was the dominant cost of ``dedup_cdc_chunks``; the original
-    expression formulation is kept as the fuzz-pinned semantics twin
-    (:func:`_cdc_stream_catalyst`)."""
+    expression formulation lives on in tests/test_dedup.py as the
+    fuzz-pinned semantics twin."""
     import pandas as pd
 
     from pero_ocr_spark.operators import spread_scan
@@ -1077,17 +1078,19 @@ def _cdc_stream(docs: DataFrame, k: int, mask: int) -> DataFrame:
     id_type = docs.schema["doc_id"].dataType.simpleString()
 
     def gen(batches):
-        pows = [1]
-        pows_np = np.array(pows, dtype=np.int64)
+        pows = np.ones(1, dtype=np.int64)  # 31^e mod p, e = 0..len-1
         for pdf in batches:
             need = max((len(t) for t in pdf["text"] if t), default=0) + 1
-            if need > len(pows):
-                while len(pows) < need:
-                    pows.append(pows[-1] * 31 % HASH_P)
-                pows_np = np.array(pows, dtype=np.int64)
+            while len(pows) < need:
+                # 31^(L+e) = 31^e · 31^L: each step at least doubles the
+                # table; both factors < 2^31, so the product fits int64
+                step = pows[-1] * 31 % HASH_P
+                pows = np.concatenate(
+                    (pows, pows[: need - len(pows)] * step % HASH_P)
+                )
             ids, lens, hashes = [], [], []
             for did, text in zip(pdf["doc_id"], pdf["text"]):
-                clen, chash = _cdc_doc_kernel(text, k, mask, pows_np)
+                clen, chash = _cdc_doc_kernel(text, k, mask, pows)
                 ids.extend([did] * len(clen))
                 lens.append(clen)
                 hashes.append(chash)
@@ -1111,49 +1114,6 @@ def _cdc_stream(docs: DataFrame, k: int, mask: int) -> DataFrame:
     )
 
 
-def _cdc_stream_catalyst(docs: DataFrame, k: int, mask: int) -> DataFrame:
-    """The original all-Catalyst CDC chunk stream — retained as the
-    semantics reference the kernel is fuzz-tested against (and the
-    shape the DuckDB oracle replicates). The rolling-hash fold runs in
-    the SCAN stage, so a single-file local input is spread first
-    (no-op on a real multi-split corpus scan)."""
-    from pero_ocr_spark.operators import spread_scan
-
-    docs = spread_scan(docs)
-    d = docs.select(
-        "doc_id", "text", F.split(F.col("text"), "").alias("cs")
-    )
-    n = F.length("text")
-
-    def win_hash(i):
-        return F.aggregate(
-            F.slice(F.col("cs"), i - (k - 1), k),
-            F.lit(0).cast("long"),
-            lambda a, c: F.pmod(a * 31 + F.ascii(c), F.lit(HASH_P)),
-        )
-
-    cuts = F.when(
-        n >= k,
-        F.filter(
-            F.sequence(F.lit(k), n),
-            lambda i: (F.pmod(win_hash(i), F.lit(mask)) == 0) & (i < n),
-        ),
-    ).otherwise(F.array().cast("array<int>"))
-    bounds = F.concat(F.array(F.lit(0)), cuts, F.array(n))
-    chunks = F.zip_with(
-        F.slice(bounds, 1, F.size(bounds) - 1),
-        F.slice(bounds, 2, F.size(bounds) - 1),
-        lambda lo, hi: F.concat_ws("", F.slice(F.col("cs"), lo + 1, hi - lo)),
-    )
-    return d.select(
-        "doc_id", F.explode(chunks).alias("chunk")
-    ).select(
-        "doc_id",
-        F.length("chunk").cast("long").alias("clen"),
-        _portable_word_hash(F.col("chunk")).alias("chash"),
-    )
-
-
 def cdc_chunk_dedup(
     docs: DataFrame, k: int = 8, mask: int = 32
 ) -> DataFrame:
@@ -1173,8 +1133,8 @@ def cdc_chunk_dedup(
 
     Plan shape: chunking + hashing are fully IN-ROW — one vectorized
     per-document Arrow stage (:func:`_cdc_doc_kernel`; the interpreted
-    Catalyst fold it replaced is retained as the fuzz-pinned twin
-    :func:`_cdc_stream_catalyst`); then exactly two fixed-width
+    Catalyst fold it replaced is the fuzz-pinned twin in
+    tests/test_dedup.py); then exactly two fixed-width
     shuffles, (chash) for the cross-doc flag and (doc_id) for the
     re-agg, both map-side combinable. Chunk texts never shuffle — only
     64-bit hashes and lengths. The rolling-hash kernel runs in the
@@ -1265,34 +1225,9 @@ def containment_pairs(
 # Winnowing fingerprints (Schleimer, Wilkerson, Aiken — SIGMOD 2003)
 # ---------------------------------------------------------------------------
 
-def _word_gram_hashes(text, k: int):
-    """Array of polynomial hashes of the word k-grams of ``text``, in
-    position order — h(s) = fold(a*31 + ord(c)) mod 2^31-1 over the
-    gram's characters, the module's portable hash (bit-identical in
-    ANSI SQL for the oracle). Word grams, not char grams: winnowing
-    selects window MINIMA, so a low-entropy gram pool (char k-grams of
-    a repetitive corpus) collapses onto the few smallest hash values
-    and every document fingerprints alike; word k-grams keep the pool
-    ~vocabulary^k. Built entirely in-row: one split, one sequence over
-    start positions."""
-    ws = F.split(text, " ")
-    n_grams = F.greatest(F.size(ws) - k + 1, F.lit(0))
-    gram = lambda i: F.array_join(F.slice(ws, i, k), " ")  # noqa: E731
-    return F.when(n_grams == 0, F.array().cast("array<bigint>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n_grams),
-            lambda i: F.aggregate(
-                F.split(gram(i), ""),
-                F.lit(0).cast("bigint"),
-                lambda a, c: (a * 31 + F.ascii(c)) % HASH_P,
-            ),
-        )
-    )
-
-
 def _winnow_doc_kernel(text: str, k: int, w: int):
-    """numpy twin of the Catalyst winnowing row expression
-    (:func:`_doc_fingerprints_catalyst`) — same word k-gram polynomial
+    """numpy twin of the Catalyst winnowing row expression (kept
+    as ``_doc_fingerprints_catalyst`` in tests/test_dedup.py) — same word k-gram polynomial
     hashes (fold (a·31 + codepoint) mod p over the gram's characters,
     grams taken as exact substrings of the text since a split-on-space
     rejoin reconstructs it), same window minima with rightmost
@@ -1349,8 +1284,8 @@ def _doc_fingerprints(docs: DataFrame, k: int, w: int) -> DataFrame:
     (:func:`_winnow_doc_kernel`): the per-character interpreted hash
     fold was the dominant cost of every winnowing consumer (guide
     §4.2 — hand whole batches to vectorized native code). The original
-    Catalyst formulation is kept below as the fuzz-pinned semantics
-    twin."""
+    Catalyst formulation is kept in tests/test_dedup.py as the
+    fuzz-pinned semantics twin."""
     import pandas as pd
 
     from pero_ocr_spark.operators import spread_scan
@@ -1382,54 +1317,6 @@ def _doc_fingerprints(docs: DataFrame, k: int, w: int) -> DataFrame:
 
     return spread_scan(docs.select("doc_id", "text")).mapInPandas(
         gen, schema=f"doc_id {id_type}, fps array<bigint>"
-    )
-
-
-def _doc_fingerprints_catalyst(docs: DataFrame, k: int, w: int) -> DataFrame:
-    """The original all-Catalyst winnowing selection — retained as the
-    semantics reference the kernel is fuzz-tested against (and the
-    shape the DuckDB oracle replicates)."""
-    hs = F.col("__hs")
-    n_win = F.greatest(F.size(hs) - w + 1, F.lit(1))
-    # per-window minima hoisted into a BOUND column: referencing the
-    # min expression inline inside the per-probe lambda re-evaluates
-    # the O(w) slice-min for every probe (O(w²) interpreted work per
-    # window — the lambda re-inlining trap documented on
-    # char_bigrams); bound here, each probe is an O(1) element_at
-    wmin = F.transform(
-        F.sequence(F.lit(0), n_win - 1),
-        lambda j: F.array_min(F.slice(hs, j + 1, w)),
-    )
-    # rightmost position (0-based, window-relative) achieving the
-    # window minimum; windows past the tail truncate naturally
-    sel = F.transform(
-        F.sequence(F.lit(0), F.size(F.col("__wmin")) - 1),
-        lambda j: F.element_at(
-            hs,
-            j
-            + F.array_max(
-                F.filter(
-                    F.sequence(F.lit(0), F.lit(w - 1)),
-                    # try_: windows past the tail probe out of bounds
-                    # (ANSI element_at throws); NULL != min drops them
-                    lambda p: F.try_element_at(hs, j + p + 1)
-                    == F.element_at(F.col("__wmin"), j + 1),
-                )
-            )
-            + 1,
-        ),
-    )
-    from pero_ocr_spark.operators import spread_scan
-
-    # the gram hashing + window minima are the expensive in-row part
-    # (per-character interpreted fold); spread a starved single-split
-    # local scan BEFORE them or the whole corpus hashes on one core
-    return (
-        spread_scan(docs)
-        .select("doc_id", _word_gram_hashes(F.col("text"), k).alias("__hs"))
-        .filter(F.size("__hs") > 0)
-        .select("doc_id", hs, wmin.alias("__wmin"))
-        .select("doc_id", F.array_distinct(sel).alias("fps"))
     )
 
 

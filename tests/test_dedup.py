@@ -2,9 +2,10 @@
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pero_ocr_spark.operators import dedup
+from pero_ocr_spark.operators import dedup, spread_scan
 
 DOCS = [
     (1, "spark joins hash tables quickly under adaptive execution today"),
@@ -345,10 +346,126 @@ def test_incremental_near_dup_stable_id_recrawl(spark):
     assert out["best_jaccard"] == 1.0  # union-verify would report 0.333
 
 
+# The all-Catalyst formulations the vectorized dedup kernels replaced,
+# kept here as their fuzz-pinned semantics twins.
+
+
+def _cdc_stream_catalyst(docs: DataFrame, k: int, mask: int) -> DataFrame:
+    """The original all-Catalyst CDC chunk stream — the semantics
+    reference dedup._cdc_doc_kernel is fuzz-tested against (and the
+    shape the DuckDB oracle replicates). The rolling-hash fold runs in
+    the SCAN stage, so a single-file local input is spread first
+    (no-op on a real multi-split corpus scan)."""
+    docs = spread_scan(docs)
+    d = docs.select(
+        "doc_id", "text", F.split(F.col("text"), "").alias("cs")
+    )
+    n = F.length("text")
+
+    def win_hash(i):
+        return F.aggregate(
+            F.slice(F.col("cs"), i - (k - 1), k),
+            F.lit(0).cast("long"),
+            lambda a, c: F.pmod(a * 31 + F.ascii(c), F.lit(dedup.HASH_P)),
+        )
+
+    cuts = F.when(
+        n >= k,
+        F.filter(
+            F.sequence(F.lit(k), n),
+            lambda i: (F.pmod(win_hash(i), F.lit(mask)) == 0) & (i < n),
+        ),
+    ).otherwise(F.array().cast("array<int>"))
+    bounds = F.concat(F.array(F.lit(0)), cuts, F.array(n))
+    chunks = F.zip_with(
+        F.slice(bounds, 1, F.size(bounds) - 1),
+        F.slice(bounds, 2, F.size(bounds) - 1),
+        lambda lo, hi: F.concat_ws("", F.slice(F.col("cs"), lo + 1, hi - lo)),
+    )
+    return d.select(
+        "doc_id", F.explode(chunks).alias("chunk")
+    ).select(
+        "doc_id",
+        F.length("chunk").cast("long").alias("clen"),
+        dedup._portable_word_hash(F.col("chunk")).alias("chash"),
+    )
+
+
+def _word_gram_hashes(text, k: int):
+    """Array of polynomial hashes of the word k-grams of ``text``, in
+    position order — h(s) = fold(a*31 + ord(c)) mod 2^31-1 over the
+    gram's characters, dedup's portable hash (bit-identical in
+    ANSI SQL for the oracle). Word grams, not char grams: winnowing
+    selects window MINIMA, so a low-entropy gram pool (char k-grams of
+    a repetitive corpus) collapses onto the few smallest hash values
+    and every document fingerprints alike; word k-grams keep the pool
+    ~vocabulary^k. Built entirely in-row: one split, one sequence over
+    start positions."""
+    ws = F.split(text, " ")
+    n_grams = F.greatest(F.size(ws) - k + 1, F.lit(0))
+    gram = lambda i: F.array_join(F.slice(ws, i, k), " ")  # noqa: E731
+    return F.when(n_grams == 0, F.array().cast("array<bigint>")).otherwise(
+        F.transform(
+            F.sequence(F.lit(1), n_grams),
+            lambda i: F.aggregate(
+                F.split(gram(i), ""),
+                F.lit(0).cast("bigint"),
+                lambda a, c: (a * 31 + F.ascii(c)) % dedup.HASH_P,
+            ),
+        )
+    )
+
+
+def _doc_fingerprints_catalyst(docs: DataFrame, k: int, w: int) -> DataFrame:
+    """The original all-Catalyst winnowing selection — the semantics
+    reference dedup._winnow_doc_kernel is fuzz-tested against (and the
+    shape the DuckDB oracle replicates)."""
+    hs = F.col("__hs")
+    n_win = F.greatest(F.size(hs) - w + 1, F.lit(1))
+    # per-window minima hoisted into a BOUND column: referencing the
+    # min expression inline inside the per-probe lambda re-evaluates
+    # the O(w) slice-min for every probe (O(w²) interpreted work per
+    # window — the lambda re-inlining trap documented on
+    # char_bigrams); bound here, each probe is an O(1) element_at
+    wmin = F.transform(
+        F.sequence(F.lit(0), n_win - 1),
+        lambda j: F.array_min(F.slice(hs, j + 1, w)),
+    )
+    # rightmost position (0-based, window-relative) achieving the
+    # window minimum; windows past the tail truncate naturally
+    sel = F.transform(
+        F.sequence(F.lit(0), F.size(F.col("__wmin")) - 1),
+        lambda j: F.element_at(
+            hs,
+            j
+            + F.array_max(
+                F.filter(
+                    F.sequence(F.lit(0), F.lit(w - 1)),
+                    # try_: windows past the tail probe out of bounds
+                    # (ANSI element_at throws); NULL != min drops them
+                    lambda p: F.try_element_at(hs, j + p + 1)
+                    == F.element_at(F.col("__wmin"), j + 1),
+                )
+            )
+            + 1,
+        ),
+    )
+    # the gram hashing + window minima are the expensive in-row part
+    # (per-character interpreted fold); spread a starved single-split
+    # local scan BEFORE them or the whole corpus hashes on one core
+    return (
+        spread_scan(docs)
+        .select("doc_id", _word_gram_hashes(F.col("text"), k).alias("__hs"))
+        .filter(F.size("__hs") > 0)
+        .select("doc_id", hs, wmin.alias("__wmin"))
+        .select("doc_id", F.array_distinct(sel).alias("fps"))
+    )
+
+
 class TestWinnowKernelEquivalence:
     """r6 guard: the vectorized winnowing fingerprint kernel must stay
     row-for-row equal to the original Catalyst selection it replaced
-    (kept as dedup._doc_fingerprints_catalyst)."""
+    (kept above as _doc_fingerprints_catalyst)."""
 
     def test_kernel_matches_catalyst_on_fuzz_docs(self, spark):
         import random
@@ -369,7 +486,7 @@ class TestWinnowKernelEquivalence:
             }
             old = {
                 r["doc_id"]: list(r["fps"])
-                for r in dedup._doc_fingerprints_catalyst(docs, k, w).collect()
+                for r in _doc_fingerprints_catalyst(docs, k, w).collect()
             }
             assert new == old
 
@@ -377,7 +494,7 @@ class TestWinnowKernelEquivalence:
 class TestCdcKernelEquivalence:
     """r6 guard: the vectorized CDC chunk kernel must stay
     row-for-row equal to the original Catalyst chunk stream it
-    replaced (kept as dedup._cdc_stream_catalyst)."""
+    replaced (kept above as _cdc_stream_catalyst)."""
 
     def test_kernel_matches_catalyst_on_fuzz_docs(self, spark):
         import random
@@ -399,6 +516,29 @@ class TestCdcKernelEquivalence:
                 map(tuple, dedup._cdc_stream(docs, k, mask).collect())
             )
             old = sorted(
-                map(tuple, dedup._cdc_stream_catalyst(docs, k, mask).collect())
+                map(tuple, _cdc_stream_catalyst(docs, k, mask).collect())
             )
             assert new == old
+
+    def test_kernel_matches_catalyst_on_one_very_long_doc(self, spark):
+        import random
+
+        # one batch holds a short doc and a ~50k-char one, so the 31^e
+        # power table grows by many doublings in one step; the "a" run
+        # never cuts (its window hash is 4 mod 32), so one ~30k-char
+        # chunk weights its codepoints by the table's high powers
+        random.seed(7)
+        alphabet = "abcdefgh XYZ.,é世\U0001F600"
+
+        def noise(n):
+            return "".join(random.choice(alphabet) for _ in range(n))
+
+        rows = [
+            (1, "short doc"),
+            (2, noise(10_000) + "a" * 30_000 + noise(10_000)),
+        ]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        new = sorted(map(tuple, dedup._cdc_stream(docs, 8, 32).collect()))
+        old = sorted(map(tuple, _cdc_stream_catalyst(docs, 8, 32).collect()))
+        assert max(clen for _, clen, _ in new) > 30_000
+        assert new == old

@@ -103,6 +103,28 @@ def test_resume_rewrites_unmanifested_partial_shards(spark, sf_dir, tmp_path, ca
     assert spark.read.parquet(str(out)).count() == n
 
 
+def test_corrupt_manifest_raises_instead_of_rewriting(spark, sf_dir, tmp_path, capsys):
+    """Only a MISSING manifest means "first run": an unreadable one
+    must fail the job, not rewrite every committed shard."""
+    import pytest
+    from py4j.protocol import Py4JJavaError
+
+    mod = _job()
+    out = tmp_path / "spans"
+    args = ["--pipeline", "extract", "--input", f"{sf_dir}/documents.parquet",
+            "--output", str(out), "--shards", "4"]
+    assert mod.main(args) == 0
+    capsys.readouterr()
+    shard_files = {p: p.stat().st_mtime_ns for p in out.glob("shard=*/*.parquet")}
+    assert shard_files
+    for f in (out / "_shards_done").glob("*.parquet"):
+        f.write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError):  # the failed footer-read job
+        mod.main(args)
+    assert not capsys.readouterr().out.strip()
+    assert {p: p.stat().st_mtime_ns for p in out.glob("shard=*/*.parquet")} == shard_files
+
+
 def test_warc_job_parses_archive_shards_to_spans(spark, sf_dir, tmp_path, capsys):
     # web path end-to-end via spark-submit entry: raw documents are
     # wrapped into WARC shards, parsed length-framed, and the 200
