@@ -3,6 +3,10 @@
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# 2^31 - 1, a Mersenne prime: the modulus of the portable hashes and
+# LCG residues, small enough that DuckDB's BIGINT arithmetic matches
+HASH_P = 2_147_483_647
+
 
 def word_gram_array(ws: Column, n: int) -> Column:
     """Word n-gram array over an ALREADY-HOISTED words column.
@@ -21,6 +25,18 @@ def word_gram_array(ws: Column, n: int) -> Column:
         lambda i: F.concat_ws(
             " ", *[F.element_at(ws, i + j + 1) for j in range(n)]
         ),
+    )
+
+
+def poly_hash(col: Column) -> Column:
+    """Polynomial hash of a string's ascii codes, ``h = h*31 + c`` mod
+    2^31-1 — portable integer arithmetic that DuckDB reproduces
+    exactly (``list_reduce``), so the simhash, Bloom and text-statistic
+    oracles can recompute every hash bit-for-bit."""
+    return F.aggregate(
+        F.split(col, ""),
+        F.lit(0).cast("long"),
+        lambda acc, c: F.pmod(acc * 31 + F.ascii(c), F.lit(HASH_P)),
     )
 
 

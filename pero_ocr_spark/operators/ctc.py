@@ -115,7 +115,7 @@ def _synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def logits_from_lines(lines: DataFrame) -> DataFrame:
-    """(doc_id, line_id, text) → sparse logits table (schemas.LOGITS)."""
+    """(doc_id, line_id, text) → sparse logits table (``LOGITS_DDL``)."""
     return lines.mapInPandas(_synth_batches, schema=LOGITS_DDL)
 
 

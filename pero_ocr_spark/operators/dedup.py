@@ -35,7 +35,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-HASH_P = 2_147_483_647  # 2^31 - 1, Mersenne prime for permutation hashing
+from pero_ocr_spark.operators import HASH_P, poly_hash
+
 N_PERM = 64
 N_BANDS = 32  # rows per band = N_PERM // N_BANDS = 2
 
@@ -451,18 +452,6 @@ def _clusters_label_propagation(pairs: DataFrame, max_iter: int) -> DataFrame:
 
 # --------------------------------------------------------------- simhash
 
-def _portable_word_hash(col):
-    """Polynomial hash over ascii codes, mod 2^31-1 — identical
-    arithmetic is expressible in DuckDB (list_reduce), keeping the
-    simhash oracle exact."""
-    chars = F.split(col, "")
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, c: F.pmod(acc * 31 + F.ascii(c), F.lit(HASH_P)),
-    )
-
-
 def simhash_fingerprints(docs: DataFrame, n: int = 3, bits: int = 32) -> DataFrame:
     """(doc_id, simhash) — 32-bit simhash over word-n-gram shingles.
 
@@ -470,7 +459,7 @@ def simhash_fingerprints(docs: DataFrame, n: int = 3, bits: int = 32) -> DataFra
     groupBy(doc_id) (no bit-explode); bit b of the portable shingle
     hash contributes +1/−1 to sum_b; fingerprint bit = sign.
     """
-    sh = shingles(docs, n).withColumn("h", _portable_word_hash(F.col("shingle")))
+    sh = shingles(docs, n).withColumn("h", poly_hash(F.col("shingle")))
     aggs = [
         F.sum(
             F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(
@@ -833,9 +822,7 @@ def bloom_build(snapshot: DataFrame, m: int = BLOOM_M) -> bytes:
     """
     import numpy as np
 
-    from pero_ocr_spark.operators import textstats
-
-    h = textstats._poly_hash(F.col("text"))
+    h = poly_hash(F.col("text"))
     pos_rows = (
         snapshot.select(F.explode(F.array(*_bloom_positions(h, m))).alias("p"))
         .distinct()
@@ -867,12 +854,10 @@ def bloom_dedup(
     import numpy as np
     import pandas as pd
 
-    from pero_ocr_spark.operators import textstats
-
     filt = np.frombuffer(bloom_build(snapshot, m), dtype=np.uint8)
     bc = new_docs.sparkSession.sparkContext.broadcast(filt)
 
-    h = textstats._poly_hash(F.col("text"))
+    h = poly_hash(F.col("text"))
     keyed = new_docs.select(
         "doc_id", F.array(*_bloom_positions(h, m)).alias("pos")
     )

@@ -104,8 +104,9 @@ def assign_reading_order(flat: DataFrame) -> DataFrame:
 def extract_spans(doc_spans: DataFrame) -> DataFrame:
     """Full extraction: nested docs → ordered clean span sequences.
 
-    Output schema = schemas.OUT_SPAN; the per-document sequence
-    (kind, text, media_ref, ord) is the oracle-equality unit.
+    Output columns: doc_id, kind, text, media_ref, ord. The
+    per-document sequence (kind, text, media_ref, ord) is the
+    oracle-equality unit.
     """
     flat = explode_spans(doc_spans)
     flat = classify_spans(flat)

@@ -185,6 +185,18 @@ def textline_polygons(lines: DataFrame) -> DataFrame:
     )
 
 
+def _group_bounds(dcol: np.ndarray, rcol: np.ndarray):
+    """(start, end) row slices of each (doc_id, region_id) run in a
+    batch sorted on those keys — a numpy change-point scan, so the
+    per-group stages slice flat arrays instead of paying a pandas
+    groupby frame per tiny group."""
+    change = np.empty(len(dcol), dtype=bool)
+    change[0] = True
+    change[1:] = (dcol[1:] != dcol[:-1]) | (rcol[1:] != rcol[:-1])
+    starts = np.flatnonzero(change)
+    return zip(starts, np.append(starts[1:], len(dcol)))
+
+
 def merge_lines_stage(lines: DataFrame) -> DataFrame:
     """L11: merge horizontally adjacent baselines per (doc, region) —
     union-find closure per group.
@@ -209,14 +221,9 @@ def merge_lines_stage(lines: DataFrame) -> DataFrame:
         ay = pdf["y"].to_numpy()
         aasc = pdf["asc"].to_numpy()
         adesc = pdf["desc"].to_numpy()
-        change = np.empty(len(dcol), dtype=bool)
-        change[0] = True
-        change[1:] = (dcol[1:] != dcol[:-1]) | (rcol[1:] != rcol[:-1])
-        starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], len(dcol))
         docs, rids, idxs = [], [], []
         outs: list[tuple[np.ndarray, ...]] = []
-        for s, e in zip(starts, ends):
+        for s, e in _group_bounds(dcol, rcol):
             m = G.merge_lines_straight(
                 ax0[s:e], ax1[s:e], ay[s:e], aasc[s:e], adesc[s:e]
             )
@@ -418,13 +425,8 @@ def postprocess_lines(
         ay = pdf["y"].to_numpy()
         aasc = pdf["asc"].to_numpy()
         adesc = pdf["desc"].to_numpy()
-        change = np.empty(len(dcol), dtype=bool)
-        change[0] = True
-        change[1:] = (dcol[1:] != dcol[:-1]) | (rcol[1:] != rcol[:-1])
-        starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], len(dcol))
         rows = []
-        for s, e in zip(starts, ends):
+        for s, e in _group_bounds(dcol, rcol):
             rx0 = float(ax0[s:e].min())
             rx1 = float(ax1[s:e].max())
             baselines = [

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -58,10 +59,14 @@ def completed_buckets(spark: SparkSession, out_dir: str) -> DataFrame:
         return spark.createDataFrame([], "bucket long")
     try:
         m = spark.read.parquet(f"{out_dir}/_lineage")
-    except Exception:
+    except AnalysisException as e:
         # dir exists but holds no committed parquet (a kill mid-append
         # leaves only _temporary/): treat as no manifest — resume
-        # restarts from scratch rather than failing forever
+        # restarts from scratch rather than failing forever. Anything
+        # else (a corrupt part file) raises: read as "no manifest" it
+        # would re-append every done bucket's spans.
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
         return spark.createDataFrame([], "bucket long")
     return m.filter(F.col("status") == "done").select("bucket").distinct()
 
@@ -134,7 +139,10 @@ def run_extraction_with_lineage(
                 )
                 .collect()
             )
-        except Exception:  # zero rows written overall → no readable files
+        except AnalysisException as e:
+            # zero rows written overall → no parquet files to infer from
+            if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+                raise
             stats = []
         by_bucket = {int(r["bucket"]): r for r in stats}
         # every TODO bucket gets a manifest row — a bucket whose docs

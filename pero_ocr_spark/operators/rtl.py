@@ -1,18 +1,11 @@
-"""Logical↔visual reordering for RTL script segments (R18 analog).
+"""Arabic logical→visual form for RTL text lines (R18).
 
 The reference ships a table-driven Arabic reshaper + reorderer
 (``core/arabic_helper.py``, applied at ALTO export
-``core/layout.py:459-461``). This engine implements the general
-operator shape — a vectorized string transform that detects RTL runs
-and reverses them for visual order (and back) — with script detection
-by Unicode block. Ligature shaping tables are data, not architecture;
-they'd plug into the same pandas UDF.
-
-Logical→visual: within each line, every maximal run of RTL-block
-characters (Arabic U+0600–U+06FF, Hebrew U+0590–U+05FF) is reversed in
-place; LTR runs and spacing are untouched. The transform is an
-involution on text without direction-neutral edge cases, so
-visual(visual(x)) == x holds for the test corpus.
+``core/layout.py:459-461``). Here it is one vectorized string
+transform over a text column: the shaping and reordering tables live
+in ``functions/arabic.py``, and this module applies them per Arrow
+batch.
 """
 
 from __future__ import annotations
@@ -21,45 +14,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-
-
-def _is_rtl(ch: str) -> bool:
-    return "֐" <= ch <= "ۿ" or "ݐ" <= ch <= "ݿ"
-
-
-def reorder_line(text: str) -> str:
-    out: list[str] = []
-    run: list[str] = []
-    for ch in text:
-        if _is_rtl(ch):
-            run.append(ch)
-        else:
-            if run:
-                out.extend(reversed(run))
-                run = []
-            out.append(ch)
-    if run:
-        out.extend(reversed(run))
-    return "".join(out)
-
-
-def is_mostly_rtl(text: str, threshold: float = 0.5) -> bool:
-    letters = [c for c in text if c.isalpha()]
-    if not letters:
-        return False
-    return sum(_is_rtl(c) for c in letters) / len(letters) >= threshold
-
-
-def reorder_rtl(df: DataFrame, col: str = "text") -> DataFrame:
-    """Vectorized logical→visual reorder of a text column."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[col] = pdf[col].map(reorder_line)
-            yield pdf
-
-    return df.mapInPandas(run, schema=df.schema)
 
 
 def arabic_visual_form(df: DataFrame, col: str = "text") -> DataFrame:

@@ -21,8 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-HASH_P = 2_147_483_647  # 2^31 - 1; LCG modulus for the portable residue
+from pero_ocr_spark.operators import HASH_P, poly_hash
 
 
 def _residue(mod: int) -> F.Column:
@@ -272,8 +271,6 @@ def sample_dsir(
     corpus-wide shuffle is the final per-doc mean (map-side combined).
     Nothing corpus-sized is ever collected or broadcast.
     """
-    from pero_ocr_spark.operators.textstats import _poly_hash
-
     stream = (
         docs.select(
             "doc_id",
@@ -284,7 +281,7 @@ def sample_dsir(
         .select(
             "doc_id",
             "source",
-            F.pmod(_poly_hash(F.col("word")), F.lit(n_buckets)).alias("b"),
+            F.pmod(poly_hash(F.col("word")), F.lit(n_buckets)).alias("b"),
         )
     )
     targ = (

@@ -11,19 +11,6 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-def observe_spans(df: DataFrame, name: str = "spans") -> tuple[DataFrame, Observation]:
-    """Attach span-level counters (rows, docs, text chars) to a span
-    frame; read ``obs.get`` after the next action."""
-    obs = Observation(name)
-    out = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_spans"),
-        F.approx_count_distinct("doc_id").alias("n_docs"),
-        F.sum(F.length("text")).alias("n_chars"),
-    )
-    return out, obs
-
-
 def observe_extraction(
     df: DataFrame, name: str = "extraction"
 ) -> tuple[DataFrame, Observation]:

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-HASH_P = 2_147_483_647
+from pero_ocr_spark.operators import poly_hash
 
 # function-word list for the n-gram/stopword language heuristic
 EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
@@ -87,15 +87,6 @@ def quality_score(docs: DataFrame) -> DataFrame:
     )
 
 
-def _poly_hash(col: Column) -> Column:
-    chars = F.split(col, "")
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, c: F.pmod(acc * 31 + F.ascii(c), F.lit(HASH_P)),
-    )
-
-
 def fingerprints(docs: DataFrame, n: int = 3) -> DataFrame:
     """Document fingerprints: full-text polynomial hash plus the min
     word-n-gram hash (a 1-perm minhash — robust to local edits).
@@ -106,10 +97,10 @@ def fingerprints(docs: DataFrame, n: int = 3) -> DataFrame:
     d = docs.select(
         "doc_id", "text", _words().alias("ws")
     ).filter(F.size("ws") >= n)
-    gram_hashes = F.transform(word_gram_array(F.col("ws"), n), _poly_hash)
+    gram_hashes = F.transform(word_gram_array(F.col("ws"), n), poly_hash)
     return d.select(
         "doc_id",
-        _poly_hash(F.col("text")).alias("fp_text"),
+        poly_hash(F.col("text")).alias("fp_text"),
         F.array_min(gram_hashes).alias("fp_min_shingle"),
     )
 
@@ -329,7 +320,7 @@ def _bucket_weight(word: Column) -> Column:
     hash folded into a bucket, the bucket Knuth-multiplied into a
     pseudo-random rational. Stands in for trained coefficients (absent
     from the container); portable integer arithmetic end to end."""
-    bucket = F.pmod(_poly_hash(word), F.lit(N_HASH_BUCKETS))
+    bucket = F.pmod(poly_hash(word), F.lit(N_HASH_BUCKETS))
     return (
         F.pmod(bucket * 2_654_435_761, F.lit(9_973)).cast("double") / 9_973.0
         - 0.5

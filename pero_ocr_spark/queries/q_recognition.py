@@ -901,12 +901,12 @@ FROM extracted WHERE kind = 'text'
 """,
 )
 def q_transcriptions_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pero_ocr_spark.sources import pagexml
+    from pero_ocr_spark.sources import transcriptions
 
     extracted = corpus.extracted_spans(spark, sf_dir)
     path = _scratch("transcriptions") + "/txt"
-    pagexml.write_transcriptions(extracted, path)
-    back = pagexml.read_transcriptions(spark, path)
+    transcriptions.write_transcriptions(extracted, path)
+    back = transcriptions.read_transcriptions(spark, path)
     key = r"^(\d+)-l(\d+)$"
     return back.select(
         F.regexp_extract("line_key", key, 1).cast("long").alias("doc_id"),

@@ -3,11 +3,11 @@
 The north rule targets an Iceberg output table at 10^12-document
 scale: atomic commits, snapshot isolation, time travel, incremental
 (changelog) reads, and scan planning from file-level statistics
-instead of directory listings. The Iceberg runtime jars are not on
-this sandbox's classpath (``sources/iceberg.py`` probes and falls
-back), so this module implements the table-format *semantics* from
-scratch over plain parquet + JSON metadata, following the published
-Iceberg spec ideas (spec v2, apache/iceberg docs) — no Iceberg code:
+instead of directory listings. The engine does not depend on the
+Iceberg runtime jars, so this module implements the table-format
+*semantics* from scratch over plain parquet + JSON metadata, following
+the published Iceberg spec ideas (spec v2, apache/iceberg docs) — no
+Iceberg code:
 
   <root>/data/<commit-uuid>/part-*.parquet     immutable data files
   <root>/deletes/<commit-uuid>/part-*.parquet  position-delete files (MOR)
@@ -233,18 +233,15 @@ class IceTable:
         ``_metadata.file_path``, made distinct — so at most
         files × cols × m positions (manifest-scale, never row-scale)
         reach the driver, which packs bitsets."""
-        from pero_ocr_spark.operators.dedup import (
-            BLOOM_SEEDS,
-            HASH_P,
-        )
-        from pero_ocr_spark.operators.textstats import _poly_hash
+        from pero_ocr_spark.operators import HASH_P, poly_hash
+        from pero_ocr_spark.operators.dedup import BLOOM_SEEDS
 
         scan = spark.read.parquet(*part_files)
         parts = []
         for col in self.bloom_cols:
             if col not in scan.columns:
                 continue
-            h = _poly_hash(F.col(col).cast("string"))
+            h = poly_hash(F.col(col).cast("string"))
             pos = F.array(
                 *[
                     F.pmod(

@@ -43,15 +43,3 @@ def write_line_crops(
 def read_line_crops(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(out_dir)
 
-
-def fake_crops(extracted: DataFrame) -> DataFrame:
-    """Deterministic stand-in crops: the rectified line strip a real
-    LineCropper (core/crop_engine.py) would emit, as bytes derived from
-    the text (no cv2 in this environment; plumbing is real)."""
-    return extracted.filter(F.col("kind") == "text").select(
-        "doc_id",
-        F.concat(F.lit("l"), F.col("ord").cast("string")).alias("line_id"),
-        F.encode(F.col("text"), "utf-8").alias("crop"),
-        (F.length("text") * 8).cast("long").alias("width"),
-        F.lit(14).cast("long").alias("height"),
-    )

@@ -1,7 +1,7 @@
-"""Real PcGts PAGE-XML import/export (S2/S5) and ALTO layout import (S3).
+"""Real PcGts PAGE-XML import/export (S2/S5) and ALTO layout import/
+export (S3/S6).
 
-Unlike ``sources/pagexml.py`` (the minimal span dialect), this module
-speaks the reference's actual interchange formats:
+This module speaks the reference's actual interchange formats:
 
   * PcGts 2019-07-15 export with region Coords, ReadingOrder,
     per-line Baseline / Coords polygons / ``heights_v2`` custom attr /
@@ -13,7 +13,8 @@ speaks the reference's actual interchange formats:
   * ALTO layout import: TextBlock rects, TextLine HPOS/VPOS/WIDTH/
     HEIGHT/BASELINE geometry, word ``String`` joins
     (``core/layout.py:602-651``) — plus a matching deterministic
-    exporter so the pair round-trips.
+    exporter with force-aligned per-word boxes and confidences
+    (``core/layout.py:400-597``) so the pair round-trips.
 
 All four are Arrow-batched per-document kernels (mapInPandas /
 applyInPandas on doc_id): one XML string per page row in/out, no
@@ -27,6 +28,7 @@ from __future__ import annotations
 
 import xml.etree.ElementTree as ET
 from collections.abc import Iterator
+from functools import lru_cache
 from xml.sax.saxutils import escape, quoteattr
 
 import numpy as np
@@ -34,7 +36,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from pero_ocr_spark.functions import geometry as G
+from pero_ocr_spark.functions import kernels
 from pero_ocr_spark.functions import page_utils as U
+from pero_ocr_spark.operators.ctc import CHARSET, synth_line_logits
 
 CREATED = "2026-01-01T00:00:00+00:00"  # injected, deterministic
 PAGE_NS = "http://schema.primaresearch.org/PAGE/gts/pagecontent/2019-07-15"
@@ -281,7 +285,59 @@ def import_pcgts(xml_df: DataFrame) -> DataFrame:
     return xml_df.mapInPandas(run, schema=LINES_DDL)
 
 
-# ----------------------------------------------------------- ALTO (S3)
+# -------------------------------------------------------- ALTO (S3/S6)
+
+PX_PER_FRAME = 8
+BLANK = len(CHARSET) - 1
+
+
+@lru_cache(maxsize=65536)
+def word_boxes(text: str) -> list[dict]:
+    """Force-align a line transcription to its logits and emit one
+    (content, hpos, width, confidence) box per word.
+
+    Memoized per executor process (``lru_cache``): corpus line
+    texts follow a skewed word distribution, so across a long-lived
+    python worker most calls are repeats — alignment runs once per
+    DISTINCT transcription. Callers must treat the returned list as
+    read-only."""
+    if not text.strip():
+        return []
+    dense = synth_line_logits(text)
+    seq = [CHARSET.index(c) for c in text if c in CHARSET[:-1]]
+    if not seq:
+        return []
+    alignment = kernels.force_align(dense, seq, BLANK)
+    # frame index of each aligned char occurrence (first frame of run)
+    char_frames: list[int] = []
+    prev = None
+    for f, s in enumerate(alignment):
+        if s != BLANK and (prev != s or (char_frames and f > 0 and alignment[f - 1] == BLANK)):
+            char_frames.append(f)
+        prev = s
+    confs = kernels.letter_confidences(dense, np.asarray(alignment), BLANK)
+    # split the aligned chars back into words (charset has no space, so
+    # words were concatenated in charset order)
+    boxes = []
+    ci = 0
+    for word in text.split(" "):
+        chars = [c for c in word if c in CHARSET[:-1]]
+        if not chars:
+            continue
+        f0 = char_frames[ci]
+        f1 = char_frames[ci + len(chars) - 1]
+        wconf = float(np.exp(np.mean(confs[ci : ci + len(chars)])))
+        boxes.append(
+            {
+                "content": word,
+                "hpos": f0 * PX_PER_FRAME,
+                "width": (f1 - f0 + 1) * PX_PER_FRAME,
+                "confidence": round(wconf, 4),
+            }
+        )
+        ci += len(chars)
+    return boxes
+
 
 def export_alto_layout(lines: DataFrame) -> DataFrame:
     """THE ALTO exporter (S6): PrintSpace with TextBlock rects and
@@ -293,7 +349,6 @@ def export_alto_layout(lines: DataFrame) -> DataFrame:
     layout contract matches the reference's ALTO import
     (core/layout.py:602-651), so export → ``import_alto`` /
     ``import_alto_words`` round-trips line AND word fields."""
-    from pero_ocr_spark.sources.alto import word_boxes
 
     def per_doc(pdf: pd.DataFrame) -> pd.DataFrame:
         doc_id = int(pdf["doc_id"].iloc[0])

@@ -5,15 +5,14 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from pero_ocr_spark import corpus
 from pero_ocr_spark.functions import geometry as G
-from pero_ocr_spark.operators import extract
-from pero_ocr_spark.sources import alto
+from pero_ocr_spark.operators import layout
+from pero_ocr_spark.sources import pcgts
 
 
 class TestWordBoxes:
     def test_single_word(self):
-        boxes = alto.word_boxes("spark")
+        boxes = pcgts.word_boxes("spark")
         assert len(boxes) == 1
         assert boxes[0]["content"] == "spark"
         assert boxes[0]["hpos"] == 0
@@ -21,26 +20,24 @@ class TestWordBoxes:
         assert 0.9 < boxes[0]["confidence"] <= 1.0
 
     def test_two_words_non_overlapping(self):
-        boxes = alto.word_boxes("ab cd")
+        boxes = pcgts.word_boxes("ab cd")
         assert [b["content"] for b in boxes] == ["ab", "cd"]
         assert boxes[1]["hpos"] >= boxes[0]["hpos"] + boxes[0]["width"]
 
     def test_empty(self):
-        assert alto.word_boxes("") == []
-        assert alto.word_boxes("   ") == []
+        assert pcgts.word_boxes("") == []
+        assert pcgts.word_boxes("   ") == []
 
 
 def test_export_alto(spark, sf_dir):
-    spans = extract.extract_spans(corpus.spans_table(spark, sf_dir)).filter(
-        F.col("doc_id") < 5
-    )
-    out = {r["doc_id"]: r["xml"] for r in alto.export_alto(spans).collect()}
+    lines = layout.lines_with_geometry(spark, sf_dir).filter(F.col("doc_id") < 5)
+    out = {r["doc_id"]: r["xml"] for r in pcgts.export_alto_layout(lines).collect()}
     assert len(out) == 5
     x = out[1]
     assert x.startswith('<?xml version="1.0"')
     assert "<String CONTENT=" in x and 'WC="' in x
     # deterministic
-    out2 = {r["doc_id"]: r["xml"] for r in alto.export_alto(spans).collect()}
+    out2 = {r["doc_id"]: r["xml"] for r in pcgts.export_alto_layout(lines).collect()}
     assert out == out2
 
 

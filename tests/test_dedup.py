@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pero_ocr_spark.operators import dedup, spread_scan
+from pero_ocr_spark.operators import dedup, poly_hash, spread_scan
 
 DOCS = [
     (1, "spark joins hash tables quickly under adaptive execution today"),
@@ -387,7 +387,7 @@ def _cdc_stream_catalyst(docs: DataFrame, k: int, mask: int) -> DataFrame:
     ).select(
         "doc_id",
         F.length("chunk").cast("long").alias("clen"),
-        dedup._portable_word_hash(F.col("chunk")).alias("chash"),
+        poly_hash(F.col("chunk")).alias("chash"),
     )
 
 

@@ -1,4 +1,4 @@
-"""Iceberg-gated sink fallback and spark-submit packaging."""
+"""spark-submit packaging."""
 
 from __future__ import annotations
 
@@ -7,23 +7,6 @@ import sys
 import tempfile
 import zipfile
 from pathlib import Path
-
-from pero_ocr_spark import corpus
-from pero_ocr_spark.operators import extract
-from pero_ocr_spark.sources import iceberg
-
-
-def test_iceberg_gate_and_parquet_fallback(spark, sf_dir):
-    assert iceberg.iceberg_available(spark) is False  # no jars in sandbox
-    spans = extract.extract_spans(corpus.spans_table(spark, sf_dir)).filter(
-        "doc_id < 20"
-    )
-    with tempfile.TemporaryDirectory() as d:
-        fmt = iceberg.write_spans_table(spans, f"{d}/spans", n_buckets=4)
-        assert fmt == "parquet"
-        back = iceberg.read_spans_table(spark, f"{d}/spans")
-        assert back.count() == spans.count()
-        assert back.select("bucket").distinct().count() <= 4
 
 
 def test_submit_zip_builds_and_imports():

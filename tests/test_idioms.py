@@ -8,6 +8,9 @@
   ``grouped_map_in_pandas``.
 - ``corpus``'s private names stay private: callers use
   ``corpus.spans_of`` and ``corpus.drop_extracted_cache``.
+- Every engine module is reachable by imports from the program's entry
+  points (the driver contract, the benches, the jobs): a module that
+  only tests import is a second implementation to delete.
 """
 
 import ast
@@ -90,4 +93,57 @@ def test_corpus_private_names_stay_private():
     assert not stray, (
         "use corpus.spans_of / corpus.drop_extracted_cache: "
         + ", ".join(stray)
+    )
+
+
+# Modules that only tests may import, and why.
+TEST_ONLY_MODULES = {
+    # the single-process golden engine the oracle tests compare against
+    "pero_ocr_spark.oracle",
+}
+
+
+def _module_name(path: Path) -> str:
+    parts = list(path.relative_to(ROOT).with_suffix("").parts)
+    if parts[-1] == "__init__":
+        parts.pop()
+    return ".".join(parts)
+
+
+def _imported_names(path: Path):
+    """Dotted names of everything ``path`` imports, at any depth (the
+    engine imports lazily inside functions). ``from m import x`` yields
+    both ``m`` and ``m.x``: x may be a submodule."""
+    pkg = _module_name(path).split(".")
+    if path.name != "__init__.py":
+        pkg = pkg[:-1]
+    for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+        if isinstance(node, ast.Import):
+            yield from (a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = pkg[: len(pkg) - node.level + 1] if node.level else []
+            mod = ".".join(base + ([node.module] if node.module else []))
+            yield mod
+            yield from (f"{mod}.{a.name}" for a in node.names)
+
+
+def test_every_engine_module_is_reachable_from_program_code():
+    engine = {
+        _module_name(p): p for p in sorted((ROOT / "pero_ocr_spark").rglob("*.py"))
+    }
+    todo = [p for p in _program_files() if _module_name(p) not in engine]
+    reached: set[str] = set()
+    while todo:
+        for name in _imported_names(todo.pop()):
+            parts = name.split(".")
+            # importing a.b.c runs a and a.b too
+            for i in range(1, len(parts) + 1):
+                mod = ".".join(parts[:i])
+                if mod in engine and mod not in reached:
+                    reached.add(mod)
+                    todo.append(engine[mod])
+    unreached = sorted(set(engine) - reached - TEST_ONLY_MODULES)
+    assert not unreached, (
+        "engine modules no entry point imports (delete them, or use them): "
+        + ", ".join(unreached)
     )

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 import pandas as pd
@@ -18,9 +19,13 @@ def out_dir():
         yield d
 
 
-def _full_reference(spark, sf_dir) -> pd.DataFrame:
-    out = extract.extract_spans(corpus.spans_table(spark, sf_dir)).toPandas()
+def _ordered(spans) -> pd.DataFrame:
+    out = spans.select("doc_id", "kind", "text", "media_ref", "ord").toPandas()
     return out.sort_values(["doc_id", "ord"]).reset_index(drop=True)
+
+
+def _full_reference(spark, sf_dir) -> pd.DataFrame:
+    return _ordered(extract.extract_spans(corpus.spans_table(spark, sf_dir)))
 
 
 def test_crash_then_resume_produces_exact_full_output(spark, sf_dir, out_dir):
@@ -38,14 +43,9 @@ def test_crash_then_resume_produces_exact_full_output(spark, sf_dir, out_dir):
     manifest2 = spark.read.parquet(f"{out_dir}/_lineage")
     assert manifest2.count() == 8
 
-    got = (
-        result.select("doc_id", "kind", "text", "media_ref", "ord")
-        .toPandas()
-        .sort_values(["doc_id", "ord"])
-        .reset_index(drop=True)
+    pd.testing.assert_frame_equal(
+        _ordered(result), _full_reference(spark, sf_dir), check_dtype=False
     )
-    want = _full_reference(spark, sf_dir)
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
 def test_rerun_after_completion_is_noop(spark, sf_dir, out_dir):
@@ -95,3 +95,30 @@ def test_zero_span_bucket_is_marked_done(spark, out_dir, tmp_path):
     # second run: nothing pending, manifest unchanged
     lineage.run_extraction_with_lineage(spark, sf, out_dir, n_buckets=4)
     assert spark.read.parquet(f"{out_dir}/_lineage").count() == 4
+
+
+def test_corrupt_manifest_raises_instead_of_rerunning(spark, sf_dir, out_dir):
+    """Only a manifest with nothing committed means "start over": an
+    unreadable part must fail the run, not re-append every bucket."""
+    from py4j.protocol import Py4JJavaError
+
+    lineage.run_extraction_with_lineage(spark, sf_dir, out_dir, n_buckets=4)
+    n = spark.read.parquet(f"{out_dir}/spans").count()
+    parts = [f for f in os.listdir(f"{out_dir}/_lineage") if f.endswith(".parquet")]
+    assert parts
+    for f in parts:
+        with open(f"{out_dir}/_lineage/{f}", "wb") as fh:
+            fh.write(b"not a parquet file")
+    with pytest.raises(Py4JJavaError):  # the failed footer-read job
+        lineage.run_extraction_with_lineage(spark, sf_dir, out_dir, n_buckets=4)
+    assert spark.read.parquet(f"{out_dir}/spans").count() == n
+
+
+def test_uncommitted_manifest_resumes_from_scratch(spark, sf_dir, out_dir):
+    # a kill mid-append leaves _lineage/ holding only _temporary/
+    os.makedirs(f"{out_dir}/_lineage/_temporary/0")
+    result = lineage.run_extraction_with_lineage(spark, sf_dir, out_dir, n_buckets=4)
+    assert spark.read.parquet(f"{out_dir}/_lineage").count() == 4
+    pd.testing.assert_frame_equal(
+        _ordered(result), _full_reference(spark, sf_dir), check_dtype=False
+    )

@@ -87,15 +87,20 @@ class TestPcgtsImport:
         assert r["baseline"] == [[10.0, 235.0], [300.0, 235.0]]
 
     def test_export_import_roundtrip(self, spark, ref_lines):
+        # plus one line whose text needs XML escaping
+        lines = {lid: r.asDict() for lid, r in ref_lines.items()}
+        lines["r1-esc"] = {**lines["r1-l1"], "line_id": "r1-esc", "idx": 9,
+                           "transcription": "a < b & c"}
         src = spark.createDataFrame(
-            list(ref_lines.values()), schema=pcgts.LINES_DDL
+            list(lines.values()), schema=pcgts.LINES_DDL
         )
         xml = pcgts.export_pcgts(src)
         back = {
             r["line_id"]: r for r in pcgts.import_pcgts(xml).collect()
         }
-        assert set(back) == set(ref_lines)
-        for lid, r in ref_lines.items():
+        assert set(back) == set(lines)
+        assert back["r1-esc"]["transcription"] == "a < b & c"
+        for lid, r in lines.items():
             b = back[lid]
             assert b["transcription"] == r["transcription"]
             assert b["baseline"] == r["baseline"]

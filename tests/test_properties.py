@@ -10,7 +10,6 @@ from hypothesis import strategies as st
 
 from pero_ocr_spark.functions import geometry as G
 from pero_ocr_spark.functions import kernels
-from pero_ocr_spark.operators import rtl
 from pero_ocr_spark.operators.ctc import CHARSET, synth_line_logits
 
 TEXT = st.text(alphabet="abcdefghijklmnopqrstuvwxyz0123456789", max_size=24)
@@ -102,13 +101,6 @@ def test_merge_lines_idempotent(raw):
     b2, h2 = G.merge_lines(b1, h1)
     assert len(b1) == len(b2)
     assert h1 == h2
-
-
-@settings(max_examples=150, deadline=None)
-@given(st.text(max_size=40))
-def test_rtl_reorder_involution(s):
-    assert rtl.reorder_line(rtl.reorder_line(s)) == s
-    assert sorted(rtl.reorder_line(s)) == sorted(s)
 
 
 @settings(max_examples=80, deadline=None)

@@ -1,4 +1,5 @@
-"""Telemetry observe metrics, RTL reorder, binary image scan/sink."""
+"""Telemetry observe metrics, binary image scan and line-crop sink.
+(Arabic visual form is tested in test_arabic_lm.py.)"""
 
 from __future__ import annotations
 
@@ -8,19 +9,8 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from pero_ocr_spark import corpus
-from pero_ocr_spark.operators import ctc, extract, rtl, telemetry
+from pero_ocr_spark.operators import ctc, layout, linedet, telemetry
 from pero_ocr_spark.sources import images
-
-
-def test_observe_spans_metrics(spark, sf_dir):
-    spans = extract.extract_spans(corpus.spans_table(spark, sf_dir))
-    observed, obs = telemetry.observe_spans(spans)
-    n = observed.count()
-    got = obs.get
-    assert got["n_spans"] == n
-    assert got["n_docs"] > 0
-    assert got["n_chars"] > 0
 
 
 def test_observe_decode_metrics(spark, sf_dir):
@@ -31,33 +21,6 @@ def test_observe_decode_metrics(spark, sf_dir):
     assert got["n_lines"] == 100
     assert got["avg_confidence"] == pytest.approx(1.0, abs=1e-3)
     assert got["n_low_confidence"] == 0
-
-
-class TestRtl:
-    def test_pure_ltr_unchanged(self):
-        assert rtl.reorder_line("hello world") == "hello world"
-
-    def test_rtl_run_reversed(self):
-        assert rtl.reorder_line("אבג") == "גבא"
-
-    def test_mixed_runs(self):
-        s = "ab אב cd"
-        assert rtl.reorder_line(s) == "ab בא cd"
-
-    def test_involution(self):
-        s = "xالسyאבz"
-        assert rtl.reorder_line(rtl.reorder_line(s)) == s
-
-    def test_is_mostly_rtl(self):
-        assert rtl.is_mostly_rtl("السلام")
-        assert not rtl.is_mostly_rtl("hello")
-
-    def test_spark_stage(self, spark):
-        df = spark.createDataFrame(
-            [(1, "ab אבג")], ["doc_id", "text"]
-        )
-        out = rtl.reorder_rtl(df).collect()[0]
-        assert out["text"] == "ab גבא"
 
 
 def test_binary_scan_and_crop_sink(spark, sf_dir):
@@ -73,10 +36,8 @@ def test_binary_scan_and_crop_sink(spark, sf_dir):
         assert bytes(rows["doc-3"]["payload"])[:3] == b"IMG"
 
         # S8: crop sink round trip
-        spans = extract.extract_spans(
-            corpus.spans_table(spark, sf_dir)
-        ).filter(F.col("doc_id") < 10)
-        crops = images.fake_crops(spans)
+        lines = layout.lines_table(spark, sf_dir).filter(F.col("doc_id") < 10)
+        crops = linedet.render_crop_lines(lines)
         out = os.path.join(d, "crops")
         images.write_line_crops(crops, out, n_buckets=4)
         back = images.read_line_crops(spark, out)
