@@ -75,6 +75,17 @@ def _spark(app: str) -> SparkSession:
     )
 
 
+_COUNTERS = ("n_spans", "n_text", "n_media", "n_chars", "max_ord")
+
+
+def _counters(obs) -> dict:
+    """The write's extraction counters. A write of zero rows still
+    reports (Spark 4.1, probed with every pending shard empty: obs.get
+    returns n_spans 0 and does not raise), but its sums and max are
+    null; those read as 0."""
+    return {k: v or 0 for k, v in obs.get.items()}
+
+
 def _run_icetable(spark, args, sharded, t0) -> int:
     """Span emission into the snapshot table (the production analog of
     the north rule's Iceberg output): one APPEND commit per run, with
@@ -93,8 +104,6 @@ def _run_icetable(spark, args, sharded, t0) -> int:
     for snap in table.history():
         done.update(int(s) for s in snap["properties"].get("shards", []))
     todo = sorted(set(range(args.shards)) - done)
-    zeros = {k: 0 for k in
-             ("n_spans", "n_text", "n_media", "n_chars", "max_ord")}
     if todo:
         batch = sharded.filter(F.col("shard").isin([int(s) for s in todo]))
         # one task (→ one data file) per pending shard; the commit
@@ -107,13 +116,10 @@ def _run_icetable(spark, args, sharded, t0) -> int:
             "append",
             properties={"pipeline": args.pipeline, "shards": todo},
         )
-        try:
-            m = dict(obs.get)
-        except Exception:  # zero-task write: empty residue classes only
-            m = dict(zeros)
+        m = _counters(obs)
     else:
         version = table.current_version()
-        m = dict(zeros)
+        m = dict.fromkeys(_COUNTERS, 0)
     wall = time.perf_counter() - t0
     m.update(
         pipeline=args.pipeline,
@@ -122,7 +128,7 @@ def _run_icetable(spark, args, sharded, t0) -> int:
         table_version=version,
         shards=args.shards,
         wall_sec=round(wall, 2),
-        spans_per_sec=round((m["n_spans"] or 0) / wall, 1),
+        spans_per_sec=round(m["n_spans"] / wall, 1),
         resumed_shards_skipped=len(done),
     )
     print(json.dumps(m))
@@ -231,7 +237,7 @@ def main(argv: list[str] | None = None) -> int:
         ).coalesce(1).write.mode("append").parquet(manifest)
     wall = time.perf_counter() - t0
     if todo:
-        m = dict(obs.get)
+        m = _counters(obs)
     else:
         # fully resumed: every shard already carried a manifest row, so
         # the (empty) write may run ZERO tasks — e.g. when the input
@@ -239,14 +245,13 @@ def main(argv: list[str] | None = None) -> int:
         # batches all prune — and an Observation with no completed task
         # never produces its metrics row (obs.get raises). Nothing was
         # written; the metrics are zeros by definition.
-        m = {k: 0 for k in
-             ("n_spans", "n_text", "n_media", "n_chars", "max_ord")}
+        m = dict.fromkeys(_COUNTERS, 0)
     m.update(
         pipeline=args.pipeline,
         output=args.output,
         shards=args.shards,
         wall_sec=round(wall, 2),
-        spans_per_sec=round((m["n_spans"] or 0) / wall, 1),
+        spans_per_sec=round(m["n_spans"] / wall, 1),
         resumed_shards_skipped=len(done),
     )
     print(json.dumps(m))

@@ -30,8 +30,9 @@ Derivation, given a document's ``text`` and ``doc_id``:
            media_ref = 'img://<doc_id>/<i>' for media else ''
            offset    = i          (source reading-order position)
 
-The nested Spark array is stored SCRAMBLED (sorted by the reversed
-zero-padded offset string) so that the engine's reading-order stage
+The nested Spark array is stored SCRAMBLED (ascending by the
+multiplicative-hash key ``(offset * 2654435761) mod 2^32``, a bijection
+on offsets) so that the engine's reading-order stage
 (the analog of reading-order reconstruction, ``core/layout.py:653-654``
 + ``TextLine.index`` ordering ``layout.py:287-294``) has real work to
 do; the oracle orders by ``offset`` directly.
@@ -48,30 +49,40 @@ MULT_SQL = "CASE WHEN doc_id % 97 = 0 THEN 64 WHEN doc_id % 13 = 0 THEN 8 ELSE 1
 
 # ---------------------------------------------------------------- Spark side
 
-_SPANS_ARRAY_EXPR = f"""
-array_sort(
+# The words are bound once, in their own select, so the lambdas below
+# index a column instead of re-splitting the text per element.
+_WORDS_EXPR = f"split(trim(repeat(concat(text, ' '), {MULT_SQL})), ' ')"
+
+# Scrambled order: ascending (offset * 2654435761) mod 2^32, a bijection
+# on offsets (the factor is odd), so no two spans tie. ONE primitive
+# sort_array orders the keys packed above their offsets (key * 2^31 +
+# offset < 2^63: no ANSI overflow); each struct is then built once, in
+# that order. An array_sort comparator would run interpreted on every
+# comparison. Masks stand in for the mods (the values are non-negative)
+# because % is nullable; with the coalesce (ws[i] is always in range)
+# every field keeps its nullability.
+_SPANS_ARRAY_EXPR = """
+transform(
   transform(
-    split(trim(repeat(concat(text, ' '), {MULT_SQL})), ' '),
-    (w, i) -> named_struct(
-      'kind',
-      CASE WHEN i % 11 = 5 THEN 'media'
-           WHEN i % 7 = 3 THEN 'boilerplate'
-           ELSE 'text' END,
-      'text',
-      CASE WHEN i % 11 = 5 THEN ''
-           WHEN i % 7 <> 3 AND i % 19 = 11 THEN ''
-           ELSE w END,
-      'media_ref',
-      CASE WHEN i % 11 = 5
-           THEN concat('img://', cast(doc_id AS string), '/', cast(i AS string))
-           ELSE '' END,
-      'offset', i
-    )
+    sort_array(transform(ws, (w, i) ->
+      ((i * 2654435761) & 4294967295) * 2147483648 + i)),
+    v -> cast(v & 2147483647 AS int)
   ),
-  (a, b) -> CASE
-    WHEN (a.offset * 2654435761) % 4294967296 < (b.offset * 2654435761) % 4294967296 THEN -1
-    WHEN (a.offset * 2654435761) % 4294967296 > (b.offset * 2654435761) % 4294967296 THEN 1
-    ELSE 0 END
+  i -> named_struct(
+    'kind',
+    CASE WHEN i % 11 = 5 THEN 'media'
+         WHEN i % 7 = 3 THEN 'boilerplate'
+         ELSE 'text' END,
+    'text',
+    CASE WHEN i % 11 = 5 THEN ''
+         WHEN i % 7 <> 3 AND i % 19 = 11 THEN ''
+         ELSE coalesce(ws[i], '') END,
+    'media_ref',
+    CASE WHEN i % 11 = 5
+         THEN concat('img://', cast(doc_id AS string), '/', cast(i AS string))
+         ELSE '' END,
+    'offset', i
+  )
 )
 """
 
@@ -83,13 +94,16 @@ def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def spans_of(docs: DataFrame) -> DataFrame:
     """A documents frame (doc_id, text, ...) → (doc_id, spans), row by
     row with no repartition — the caller decides the partitioning."""
-    return docs.select("doc_id", F.expr(_SPANS_ARRAY_EXPR).alias("spans"))
+    words = docs.select("doc_id", F.expr(_WORDS_EXPR).alias("ws"))
+    return words.select("doc_id", F.expr(_SPANS_ARRAY_EXPR).alias("spans"))
 
 
 def spans_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical nested input table (doc_id, spans), scrambled order.
 
-    Pure column expressions — whole-stage codegen, no Python. At 100 TB
+    Pure column expressions, no Python; the higher-order functions of
+    the span synthesis run interpreted (``CodegenFallback``), so the
+    scramble is one primitive ``sort_array`` of packed keys. At 100 TB
     this would be an Iceberg table scan instead; the builder exists so
     the sandbox corpus is derived deterministically from the driver's
     parquet.

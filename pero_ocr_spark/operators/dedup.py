@@ -1435,7 +1435,7 @@ def prefix_filter_pairs(
     per_doc = (
         sh.join(df_tab, "shingle")
         .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "shingle"))).alias("toks"))
+        .agg(F.sort_array(F.collect_list(F.struct("df", "shingle"))).alias("toks"))
     )
     nsz = F.size("toks")
     min_overlap = F.floor(

@@ -133,7 +133,7 @@ def render_training_text(spans: DataFrame, media_token: str = "<|image|>") -> Da
     return spans.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
-                F.array_sort(
+                F.sort_array(
                     F.collect_list(F.struct(F.col("ord"), piece.alias("piece")))
                 ),
                 lambda s: s["piece"],

@@ -292,7 +292,7 @@ def extract_main_content(
     return cls.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
-                F.array_sort(F.collect_list(kept)), lambda s: s["text"]
+                F.sort_array(F.collect_list(kept)), lambda s: s["text"]
             ),
             " ",
         ).alias("main_text"),
@@ -786,7 +786,7 @@ def tables_to_markdown(cells: DataFrame) -> DataFrame:
     # table, and `cells` is a bound aggregation output, not an inline
     # array builder, so HOF lambdas don't re-evaluate it per element.
     per_table = cells.groupBy("doc_id", "table_id").agg(
-        F.array_sort(
+        F.sort_array(
             F.collect_list(
                 F.struct("row_id", "col_id", F.col("is_header").alias("h"),
                          esc.alias("t"))

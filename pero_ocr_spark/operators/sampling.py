@@ -622,7 +622,7 @@ def span_corruption(docs: DataFrame, mask_pct: int = 15) -> DataFrame:
         .alias("tp"),
     )
     g = t.groupBy("doc_id").agg(
-        F.array_sort(
+        F.sort_array(
             F.collect_list(F.struct("pos", "ip", "tp"))
         ).alias("arr"),
         F.max("span_idx").cast("long").alias("n_spans"),

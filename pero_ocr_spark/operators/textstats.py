@@ -110,7 +110,7 @@ def fingerprints(docs: DataFrame, n: int = 3) -> DataFrame:
 # words array aliased `ws`
 _TOP2_BEST_SQL = """
 aggregate(
-  array_sort(zip_with(slice(ws, 1, size(ws) - 1),
+  sort_array(zip_with(slice(ws, 1, size(ws) - 1),
                       slice(ws, 2, size(ws) - 1),
                       (a, b) -> concat(a, ' ', b))),
   named_struct('prev', '', 'run', CAST(0 AS BIGINT),
@@ -340,8 +340,9 @@ def quality_classifier_scores(
     coefficients is a broadcast map lookup with the identical plan.
 
     Scale shape: ZERO shuffles — the whole classifier is one in-row
-    ``aggregate`` over the split words array (hash → weight → sum)
-    inside whole-stage codegen; nothing explodes, nothing joins. A
+    ``aggregate`` over the split words array (hash → weight → sum),
+    evaluated interpreted like every higher-order function; nothing
+    explodes, nothing joins. A
     10^12-doc scoring pass is a pure narrow map over the scan."""
     words = _words()
     logit = F.aggregate(
@@ -366,7 +367,7 @@ def chunk_documents(
     chunks share ``overlap`` tokens, the final chunk may be short.
 
     Scale shape: the chunk list is built IN-ROW (one ``transform``
-    over the split words array inside codegen) and exploded — a
+    over the split words array, evaluated interpreted) and exploded — a
     narrow ~(n/stride)× row amplification with no shuffle anywhere;
     column pruning keeps only (doc_id, text) in the scan.
     ``explode_outer`` + filter rather than plain ``explode``, so
@@ -564,10 +565,12 @@ def char_entropy(docs: DataFrame, threshold: float = 3.0) -> DataFrame:
     Computed IN-ROW with zero shuffles: the char array is sorted and a
     single ``aggregate`` fold walks its runs — a (prev, run, acc)
     accumulator whose finish step closes the last run. O(n log n) per
-    row inside whole-stage codegen; a 10^12-doc scoring pass is a pure
+    row: a native ``sort_array`` of the chars, then the fold, which like
+    every higher-order function runs interpreted (``CodegenFallback``),
+    outside whole-stage codegen; a 10^12-doc scoring pass is a pure
     narrow map over the scan."""
     d = docs.select(
-        "doc_id", F.array_sort(F.split(F.col("text"), "")).alias("cs")
+        "doc_id", F.sort_array(F.split(F.col("text"), "")).alias("cs")
     )
     n = F.size("cs").cast("double")
     term = lambda run: F.when(  # noqa: E731 — local closure, not a def

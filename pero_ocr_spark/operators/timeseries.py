@@ -427,7 +427,7 @@ def ewma_level(events: DataFrame, alpha: float = 0.3) -> DataFrame:
         events.groupBy("user_id")
         .agg(
             F.transform(
-                F.array_sort(
+                F.sort_array(
                     F.collect_list(F.struct("ts", "event_id", "value"))
                 ),
                 lambda s: s["value"],
@@ -468,7 +468,7 @@ def holt_linear(
     """
     arr = events.groupBy("user_id").agg(
         F.transform(
-            F.array_sort(F.collect_list(F.struct("ts", "event_id", "value"))),
+            F.sort_array(F.collect_list(F.struct("ts", "event_id", "value"))),
             lambda s: s["value"],
         ).alias("vs")
     )
@@ -526,7 +526,7 @@ def cusum_alarms(
     """
     arr = events.groupBy("user_id").agg(
         F.transform(
-            F.array_sort(F.collect_list(F.struct("ts", "event_id", "value"))),
+            F.sort_array(F.collect_list(F.struct("ts", "event_id", "value"))),
             lambda s: s["value"],
         ).alias("vs")
     )
@@ -639,7 +639,7 @@ def holt_winters(
     arr = (
         hourly.groupBy("event_type")
         .agg(
-            F.array_sort(F.collect_list(F.struct("hb", "tick"))).alias("obs")
+            F.sort_array(F.collect_list(F.struct("hb", "tick"))).alias("obs")
         )
         .select(
             "event_type",

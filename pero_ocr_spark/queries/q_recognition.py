@@ -516,7 +516,7 @@ def q_error_bleu_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans = corpus.extracted_spans(spark, sf_dir).filter(F.col("kind") == "text")
     docs = spans.groupBy("doc_id").agg(
         F.transform(
-            F.array_sort(
+            F.sort_array(
                 F.collect_list(
                     F.when(
                         F.col("ord") % 13 != 6,
@@ -535,7 +535,7 @@ def q_error_bleu_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda s: s["w"],
         ).alias("hyp_toks"),
         F.transform(
-            F.array_sort(
+            F.sort_array(
                 F.collect_list(F.struct(F.col("ord"), F.col("text").alias("w")))
             ),
             lambda s: s["w"],
@@ -1462,7 +1462,7 @@ def q_error_chrf_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spans.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
-                F.array_sort(
+                F.sort_array(
                     F.collect_list(
                         F.when(
                             F.col("ord") % 13 != 6,
@@ -1484,7 +1484,7 @@ def q_error_chrf_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("hyp_str"),
         F.array_join(
             F.transform(
-                F.array_sort(
+                F.sort_array(
                     F.collect_list(F.struct(F.col("ord"), F.col("text").alias("w")))
                 ),
                 lambda s: s["w"],

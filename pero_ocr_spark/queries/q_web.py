@@ -1635,7 +1635,7 @@ def q_extract_spans_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("ord").alias("bo"),
             F.array_join(
                 F.transform(
-                    F.array_sort(F.collect_list(F.struct("ord", "text"))),
+                    F.sort_array(F.collect_list(F.struct("ord", "text"))),
                     lambda s: s["text"],
                 ),
                 " ",
@@ -1653,7 +1653,7 @@ def q_extract_spans_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_blocks"),
         F.array_join(
             F.transform(
-                F.array_sort(F.collect_list(F.struct("bo", "blk"))),
+                F.sort_array(F.collect_list(F.struct("bo", "blk"))),
                 lambda s: s["blk"],
             ),
             "\n\n",

@@ -513,7 +513,7 @@ def synth_sitemaps(docs: DataFrame) -> DataFrame:
             F.lit('<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'),
             F.array_join(
                 F.transform(
-                    F.array_sort(F.collect_list("s")), lambda s: s["e"]
+                    F.sort_array(F.collect_list("s")), lambda s: s["e"]
                 ),
                 "",
             ),

@@ -213,3 +213,71 @@ def test_icetable_sink_resume_is_commit_atomic(spark, sf_dir, tmp_path, capsys):
     assert m2["resumed_shards_skipped"] == 4
     assert m2["n_spans"] == 0 and m2["table_version"] == 2
     assert table.read(spark).count() == total
+
+
+def _few_docs(spark, sf_dir, tmp_path):
+    """Three documents: at most three of the job's shards hold rows."""
+    path = tmp_path / "few" / "documents.parquet"
+    spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
+        "doc_id < 3"
+    ).write.parquet(str(path))
+    return str(path)
+
+
+def test_icetable_empty_pending_shards_report_zeros(
+    spark, sf_dir, tmp_path, capsys
+):
+    """The shards left to run hold no rows: the run commits them and
+    reports zero counters, not nulls."""
+    from pero_ocr_spark import corpus
+    from pero_ocr_spark.operators import extract, sampling, shuffle_width
+    from pero_ocr_spark.sources.icetable import IceTable
+
+    inp = _few_docs(spark, sf_dir, tmp_path)
+    spans = extract.extract_spans(
+        corpus.spans_of(
+            spark.read.parquet(inp).repartition(shuffle_width(spark), "doc_id")
+        )
+    ).withColumn("shard", sampling._residue(64).cast("int"))
+    full = sorted(r.shard for r in spans.select("shard").distinct().collect())
+    assert 0 < len(full) <= 3
+    out = tmp_path / "ice"
+    IceTable(str(out)).commit(
+        spans, properties={"pipeline": "extract", "shards": full}
+    )
+
+    rc = _job().main(
+        ["--pipeline", "extract", "--input", inp, "--output", str(out),
+         "--shards", "64", "--sink", "icetable"]
+    )
+    assert rc == 0
+    m = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert m["resumed_shards_skipped"] == len(full) and m["table_version"] == 2
+    counters = ("n_spans", "n_text", "n_media", "n_chars", "max_ord")
+    assert [m[k] for k in counters] == [0] * len(counters)
+    snap = IceTable(str(out)).history()[-1]
+    assert snap["properties"]["shards"] == sorted(set(range(64)) - set(full))
+
+
+def test_icetable_counter_errors_propagate(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A failure reading the write's counters is not mistaken for an
+    empty write."""
+    import pytest
+    from pero_ocr_spark.operators import telemetry
+
+    class _Broken:
+        @property
+        def get(self):
+            raise RuntimeError("counters lost")
+
+    monkeypatch.setattr(
+        telemetry, "observe_extraction", lambda df: (df, _Broken())
+    )
+    with pytest.raises(RuntimeError, match="counters lost"):
+        _job().main(
+            ["--pipeline", "extract", "--input",
+             _few_docs(spark, sf_dir, tmp_path), "--output",
+             str(tmp_path / "ice"), "--shards", "4", "--sink", "icetable"]
+        )

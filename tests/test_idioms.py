@@ -11,10 +11,17 @@
 - Every engine module is reachable by imports from the program's entry
   points (the driver contract, the benches, the jobs): a module that
   only tests import is a second implementation to delete.
+- Arrays are sorted with ``sort_array``, a native sort, not
+  ``array_sort``, whose comparator (the default one too) is a lambda
+  evaluated interpreted on every comparison. The two differ only in
+  where null elements go, so ``array_sort`` stays only where the
+  elements may be null.
 """
 
 import ast
+import io
 import re
+import tokenize
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -146,4 +153,55 @@ def test_every_engine_module_is_reachable_from_program_code():
     assert not unreached, (
         "engine modules no entry point imports (delete them, or use them): "
         + ", ".join(unreached)
+    )
+
+
+# (file, enclosing function): (array_sort calls it keeps, reason).
+# Elements that may be null sort last under array_sort, first under
+# sort_array.
+ARRAY_SORT_OWNERS = {
+    ("pero_ocr_spark/operators/timeseries.py", "cusum_alarms"): (
+        2,
+        "the median and MAD sorts run over per-user event values, which "
+        "may be null; the median's element_at indices assume nulls last",
+    ),
+}
+
+
+def _array_sort_uses(path: Path):
+    """(enclosing top-level function, line) of every array_sort call in
+    the file's code and SQL strings; comments don't count."""
+    src = path.read_text()
+    fns = [
+        (node.lineno, node.end_lineno, node.name)
+        for node in ast.parse(src, filename=str(path)).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+    # Python 3.12+ splits f-strings into FSTRING_* tokens
+    strings = {tokenize.STRING, getattr(tokenize, "FSTRING_MIDDLE", tokenize.STRING)}
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        hit = (tok.type == tokenize.NAME and tok.string == "array_sort") or (
+            tok.type in strings and "array_sort(" in tok.string
+        )
+        if hit:
+            line = tok.start[0]
+            fn = next((n for a, b, n in fns if a <= line <= b), None)
+            yield fn, line
+
+
+def test_arrays_are_sorted_natively():
+    uses: dict[tuple[str, str | None], list[int]] = {}
+    for p in _program_files():
+        for fn, line in _array_sort_uses(p):
+            uses.setdefault((_rel(p), fn), []).append(line)
+    # an allowlisted function that drops its array_sort fails too
+    wrong = [
+        f"{path}:{uses.get((path, fn), [])} ({fn or 'module level'})"
+        for path, fn in sorted(set(uses) | set(ARRAY_SORT_OWNERS), key=str)
+        if len(uses.get((path, fn), []))
+        != ARRAY_SORT_OWNERS.get((path, fn), (0,))[0]
+    ]
+    assert not wrong, (
+        "sort arrays whose elements cannot be null with sort_array, and "
+        "keep ARRAY_SORT_OWNERS exact: " + ", ".join(wrong)
     )
