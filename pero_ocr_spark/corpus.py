@@ -120,30 +120,6 @@ def spans_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spans_of(docs.repartition(shuffle_width(spark), "doc_id"))
 
 
-def spans_table_hinted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The EXACT input-contract shape: (doc_id: string,
-    spans: array<struct<kind:string, text:string, media_ref:string,
-    offset:int>>).
-
-    The engine's internal queries keep the numeric doc_id the
-    deterministic synthesis (and every DuckDB oracle) shares; a real
-    deployment's string document ids enter through this zero-cost cast
-    at the front door. Extraction, dedup, and similarity key on doc_id
-    by equality/hash only and are type-agnostic; operators that do
-    ARITHMETIC or ORDERING on doc_id (pack_sequences' ``doc_id %
-    n_buckets``, sampling's LCG residue, the packing windows' orderBy)
-    require the numeric table — a string doc_id would route ``%``
-    through a lossy double cast and make the ordering lexicographic.
-    Use this adapter for the key-equality family; normalize string ids
-    to dense longs (e.g. ``xxhash64``/``monotonically_increasing_id``
-    mapping) before the packing/sampling family. pytest pins the
-    schema against the contract string.
-    """
-    return spans_table(spark, sf_dir).withColumn(
-        "doc_id", F.col("doc_id").cast("string")
-    )
-
-
 # Session-scoped cache of the extraction pipeline's output. Three
 # dozen registered queries consume the extracted spans (or tables
 # derived from them) as their INPUT; at 100 TB that input is a

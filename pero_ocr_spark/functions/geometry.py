@@ -339,21 +339,9 @@ def _signed_area(poly: np.ndarray) -> float:
     )
 
 
-def polygon_area(poly: np.ndarray) -> float:
-    if len(poly) < 3:
-        return 0.0
-    return abs(_signed_area(np.asarray(poly, dtype=np.float64)))
-
-
 def bbox(poly: np.ndarray) -> tuple[float, float, float, float]:
     p = np.asarray(poly, dtype=np.float64)
     return float(p[:, 0].min()), float(p[:, 1].min()), float(p[:, 0].max()), float(p[:, 1].max())
-
-
-def bbox_overlaps(b1, b2) -> bool:
-    return not (
-        b1[2] <= b2[0] or b2[2] <= b1[0] or b1[3] <= b2[1] or b2[3] <= b1[1]
-    )
 
 
 def stretch_baseline(
@@ -653,7 +641,12 @@ def alpha_shape(points: np.ndarray, alpha: float) -> np.ndarray:
         return convex_hull(pts)
     try:
         tris = delaunay(pts)
-    except Exception:
+    except FloatingPointError:
+        # Degenerate clouds (collinear, cocircular, NaN/inf, near-dup)
+        # raise nothing under numpy's default error state: collinear
+        # ones come back with no triangles (handled below). With
+        # floating-point errors set to raise, coordinates past ~1e77
+        # overflow the circumcircle determinant here.
         return convex_hull(pts)
     if len(tris) == 0:
         return convex_hull(pts)

@@ -391,19 +391,6 @@ def best_cn_path(cn: list[dict]) -> str:
     return "".join(s for s in syms if s is not None)
 
 
-def cn_paths(cn: list[dict]) -> list[tuple[str, float]]:
-    """All paths through the sausage with their probabilities, sorted
-    by probability desc (then text, deterministic)."""
-    paths = [("", 1.0)]
-    for pos in cn:
-        paths = [
-            (text + (sym if sym is not None else ""), p * w)
-            for text, p in paths
-            for sym, w in pos.items()
-        ]
-    return sorted(paths, key=lambda x: (-x[1], x[0]))
-
-
 # ------------------------------------------- chunked decoding merge (R4)
 
 def chunk_sequence(length: int, max_len: int, overlap: int | None = None) -> list[tuple[int, int]]:
@@ -508,29 +495,6 @@ def merge_chunk_transcriptions(parts: list[str]) -> str:
 
 
 # -------------------------------------------------- narrow label (R17)
-
-def narrow_label(
-    label: np.ndarray, logits: np.ndarray, blank: int
-) -> np.ndarray:
-    """Collapse each run of repeated non-blank symbols to the single
-    frame with the highest logit for that symbol; other frames become
-    blank (ocr_engine/postprocess.py:12-41 semantics)."""
-    label = np.asarray(label).copy()
-    n = len(label)
-    i = 0
-    while i < n:
-        j = i
-        while j < n and label[j] == label[i]:
-            j += 1
-        if label[i] != blank and j - i > 1:
-            run = np.arange(i, j)
-            keep = run[np.argmax(logits[run, label[i]])]
-            sym = label[i]
-            label[run] = blank
-            label[keep] = sym
-        i = j
-    return label
-
 
 # ----------------------------------------------------- edit distance
 

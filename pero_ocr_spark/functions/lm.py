@@ -16,7 +16,6 @@ transitions stay finite.
 
 from __future__ import annotations
 
-import json
 import math
 
 import numpy as np
@@ -43,16 +42,6 @@ def train_char_bigrams(docs: DataFrame, col: str = "text") -> dict[str, int]:
         .collect()
     )
     return {r["g"]: int(r["n"]) for r in rows}
-
-
-def save_lm(counts: dict[str, int], path: str) -> None:
-    with open(path, "w", encoding="utf-8") as f:
-        json.dump(counts, f, ensure_ascii=False)
-
-
-def load_lm(path: str) -> dict[str, int]:
-    with open(path, encoding="utf-8") as f:
-        return json.load(f)
 
 
 class FileNGramLM:

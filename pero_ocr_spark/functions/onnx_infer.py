@@ -193,15 +193,6 @@ def numpy_forward(x: np.ndarray, weights: dict[str, np.ndarray] | None = None) -
 _SESSIONS: dict[str, object] = {}
 
 
-def ort_available() -> bool:
-    try:
-        import onnxruntime  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def _session(model_bytes: bytes):
     """One InferenceSession per (worker process, model digest) — the
     cached-session pattern: construction is the expensive part, batches
@@ -260,6 +251,3 @@ def infer_batched(df, vec_col: str = "embedding", backend: str = "ort"):
 
     return df.mapInPandas(run, schema=out_schema)
 
-
-def model_digest() -> str:
-    return hashlib.sha256(toy_model_bytes()).hexdigest()

@@ -10,7 +10,6 @@ from __future__ import annotations
 import json
 import math
 import re
-from os.path import isabs, join
 
 import numpy as np
 
@@ -49,24 +48,6 @@ def points_array_to_string(arr) -> str:
     return " ".join("%d,%d" % (p[0], p[1]) for p in r.tolist())
 
 
-def export_id(eid: str, validate_change_id: bool) -> str:
-    """XML-NCName-safe id prefix (core/layout.py:37-38)."""
-    return "id_" + eid if validate_change_id else eid
-
-
-def compose_path(file_path: str, reference_path: str | None) -> str:
-    """Resolve relative paths against a base dir (utils.py:21-24)."""
-    if reference_path and not isabs(file_path):
-        return join(reference_path, file_path)
-    return file_path
-
-
-def filter_list(items_list: list, indices_to_remove) -> list:
-    """Remove list items by index (layout_helpers.py:295-302)."""
-    drop = set(indices_to_remove)
-    return [x for i, x in enumerate(items_list) if i not in drop]
-
-
 def get_rotation(lines) -> float:
     """Mean baseline tilt in degrees over the longest half of the
     lines (layout_helpers.py:345-374): per line, angle of the
@@ -86,27 +67,6 @@ def get_rotation(lines) -> float:
     if not infos:
         return 0.0
     return sum(r for _, r in infos) / len(infos)
-
-
-def rotate_coords(coords, rotation: float, center) -> np.ndarray:
-    """Rotate points around center by `rotation` degrees
-    (layout_helpers.py:377-390). The reference calls
-    cv2.getRotationMatrix2D(center, angle, 1); that matrix is
-    [[cos, sin, (1-cos)·cx - sin·cy], [-sin, cos, sin·cx + (1-cos)·cy]]
-    (positive angle = counter-clockwise in image coords, y down) —
-    reproduced here in plain numpy."""
-    a = math.radians(rotation)
-    cos, sin = math.cos(a), math.sin(a)
-    cx, cy = float(center[0]), float(center[1])
-    m = np.array(
-        [
-            [cos, sin, (1 - cos) * cx - sin * cy],
-            [-sin, cos, sin * cx + (1 - cos) * cy],
-        ]
-    )
-    pts = np.asarray(coords, dtype=np.float64)
-    ones = np.ones((pts.shape[0], 1))
-    return np.hstack([pts, ones]) @ m.T
 
 
 def parse_heights_custom(custom_str: str) -> list[float] | None:
@@ -199,7 +159,10 @@ def guess_line_heights_from_polygon(baseline, polygon, n: int = 10) -> list[floa
             downs.append(h[1])
         if ups:
             return [float(np.mean(ups)), float(np.mean(downs))]
-    except Exception:
+    except IndexError:
+        # an empty baseline has no segment to probe (``bl[seg]`` with
+        # seg = -1 on a 0-row array); single-point, vertical and
+        # outside-polygon baselines return None per point instead
         pass
     # guess_height_simple (core/layout.py:188-190)
     height = float(poly[:, 1].max() - poly[:, 1].min())

@@ -49,6 +49,30 @@ def shuffle_width(spark: SparkSession) -> int:
     return int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
 
+def materialize(df: DataFrame) -> DataFrame:
+    """The engine's one way to cut lineage and reuse an intermediate
+    frame: a lazy ``localCheckpoint``. The first action that reads the
+    frame stores its partitions on the executors, and every later
+    consumer reads those blocks instead of re-running the plan, so an
+    iterative loop's plan does not deepen round over round.
+
+    Lazy, not eager: under AQE a lazy checkpoint still runs its
+    shuffle-map stages while the plan is built, and an eager one adds a
+    result job on top for nothing (SCALE.md has the job counts).
+    Checkpoint, not ``persist``: the context cleaner frees checkpoint
+    blocks once the frame is unreachable, while a persisted frame stays
+    in the CacheManager until someone unpersists it, and piles up
+    across a 208-query bench sweep. A caller that needs the frame's
+    size reads it with ``count()``, which materializes it too.
+
+    ``corpus.extracted_spans`` is the one frame not materialized here:
+    it is a ``MEMORY_AND_DISK`` cache shared across queries of one
+    session, freed by ``corpus.drop_extracted_cache``, not a checkpoint
+    inside one query.
+    """
+    return df.localCheckpoint(eager=False)
+
+
 def grouped_batches_in_pandas(df: DataFrame, key, per_batch, schema):
     """Per-group Arrow stage with batch-level framing: ``per_batch`` is
     called with sorted pandas frames (0-based index) that hold only

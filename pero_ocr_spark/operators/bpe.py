@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pero_ocr_spark.operators import materialize
+
 MERGES_SCHEMA = (
     "merge_rank INT, left_sym STRING, right_sym STRING, "
     "merged STRING, pair_count BIGINT"
@@ -81,9 +83,9 @@ def train_bpe(
     application table (broadcastable: vocabulary-sized).
     """
     spark = docs.sparkSession
-    # loop-invariant base table persisted; the per-iteration encodings
-    # are a (cheap) literal-replace chain layered on top of it
-    vocab = word_vocabulary(docs).localCheckpoint(eager=False)
+    # loop-invariant base table materialized; the per-iteration
+    # encodings are a (cheap) literal-replace chain layered on top of it
+    vocab = materialize(word_vocabulary(docs))
     rows: list[tuple] = []
     for rank in range(1, n_merges + 1):
         syms = _symbols(F.col("enc"))

@@ -605,7 +605,3 @@ def pack_by_length(logits_df: DataFrame) -> DataFrame:
         shuffle_width(logits_df.sparkSession), "t", "doc_id", "line_id"
     ).sortWithinPartitions("t")
 
-
-def filter_confident_lines(decoded: DataFrame, threshold: float) -> DataFrame:
-    """R13: Catalyst-visible confidence predicate (page_parser.py:510-513)."""
-    return decoded.filter(F.col("confidence") > threshold)

@@ -35,7 +35,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pero_ocr_spark.operators import HASH_P, poly_hash
+from pero_ocr_spark.operators import HASH_P, materialize, poly_hash
 
 N_PERM = 64
 N_BANDS = 32  # rows per band = N_PERM // N_BANDS = 2
@@ -69,7 +69,7 @@ def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
 
 def doc_shingle_arrays(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, shs array<string>) — each document's DISTINCT word
-    n-gram set as one bounded row, lazily localCheckpointed.
+    n-gram set as one bounded row, materialized.
 
     The shared substrate of the pair pipelines: every one of them
     consumes the shingle stream in 2-4 plan subtrees (signature pass +
@@ -89,10 +89,12 @@ def doc_shingle_arrays(docs: DataFrame, n: int = 3) -> DataFrame:
         .select("doc_id", F.split(F.col("text"), " ").alias("ws"))
         .filter(F.size("ws") >= n)
     )
-    return d.select(
-        "doc_id",
-        F.array_distinct(word_gram_array(F.col("ws"), n)).alias("shs"),
-    ).localCheckpoint(eager=False)
+    return materialize(
+        d.select(
+            "doc_id",
+            F.array_distinct(word_gram_array(F.col("ws"), n)).alias("shs"),
+        )
+    )
 
 
 def _explode_shingles(arr: DataFrame) -> DataFrame:
@@ -312,9 +314,7 @@ def minhash_lsh_pairs(
     arr = doc_shingle_arrays(docs, n)
     # the signature frame feeds BOTH self-join sides of the band join;
     # one bounded row per doc — materialize it once like the substrate
-    sig = minhash_signatures(_explode_shingles(arr), n_perm).localCheckpoint(
-        eager=False
-    )
+    sig = materialize(minhash_signatures(_explode_shingles(arr), n_perm))
     buckets = _band_buckets(sig, n_perm, n_bands)
     if max_bucket is not None:
         buckets = _cap_buckets(buckets, max_bucket)
@@ -329,51 +329,51 @@ def minhash_lsh_pairs(
     return _verify_pairs(arr, cands).filter(F.col("jaccard") >= threshold)
 
 
-def duplicate_clusters(
-    pairs: DataFrame,
-    max_iter: int = 50,
-    driver_edge_cap: int = 4_000_000,
-) -> DataFrame:
+# Largest pair count closed on the driver; above it the pair graph is
+# closed by the distributed connected-components. ~16 bytes/pair, so
+# the collect stays under ~64 MB.
+DRIVER_EDGE_CAP = 4_000_000
+
+
+def duplicate_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components over the near-dup pair graph → canonical
     cluster ids (the dedup end-step: every document maps to the
     minimum doc_id of its duplicate component).
 
     Two regimes, picked by a measured pair count (the pair frame is
-    persisted first, so the expensive upstream — shingling / minhash /
-    LSH verify — runs exactly once either way):
+    materialized by that count, so the expensive upstream — shingling
+    / minhash / LSH verify — runs exactly once either way):
 
-    * ``n_pairs <= driver_edge_cap`` — ONE driver union-find pass over
-      the collected edge list. The collect is bounded by the cap
-      (~16 bytes/pair → ≤64 MB at the default), never corpus-sized:
-      dup PAIRS post-LSH-verify are a tiny fraction of documents at
-      any healthy threshold, and the cap is checked, not assumed.
-      This replaces ~4 Spark jobs per propagation round with zero.
-    * above the cap — iterative min-label propagation in plain
-      DataFrame ops (the GraphFrames-free formulation): each round
-      every node takes the min of its own and its neighbors' labels;
-      converges in O(component diameter) rounds. Each round is one
-      shuffle; the loop stops early at fixpoint. Labels are
-      localCheckpoint-ed so the plan doesn't deepen; on a
-      fault-tolerant cluster use ``setCheckpointDir`` +
-      ``.checkpoint()`` instead.
+    * ``n_pairs <= DRIVER_EDGE_CAP`` — ONE driver union-find pass over
+      the collected edge list. The collect is bounded by the cap, never
+      corpus-sized: dup PAIRS post-LSH-verify are a tiny fraction of
+      documents at any healthy threshold, and the cap is checked, not
+      assumed. No Spark job beyond the count and the collect.
+    * above the cap — ``linkgraph.connected_components``
+      (large-star / small-star, O(log n) rounds, so a long chain of
+      pairwise near-dups does not cost a round per link).
 
     Both paths return identical rows: every node appearing in a pair,
     labeled with the minimum id of its component.
     """
-    pairs = pairs.select("doc_a", "doc_b").persist()
-    try:
-        n_pairs = pairs.count()
-        if n_pairs <= driver_edge_cap:
-            return _clusters_driver_union_find(pairs)
-        return _clusters_label_propagation(pairs, max_iter)
-    finally:
-        pairs.unpersist()
+    from pero_ocr_spark.operators.linkgraph import connected_components
+
+    pairs = materialize(pairs.select("doc_a", "doc_b"))
+    if pairs.count() <= DRIVER_EDGE_CAP:
+        return _clusters_driver_union_find(pairs)
+    nodes = pairs.select(
+        F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
+    ).distinct()
+    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    return connected_components(nodes, edges).withColumnRenamed(
+        "component", "cluster_id"
+    )
 
 
 def _clusters_driver_union_find(pairs: DataFrame) -> DataFrame:
     """Small-graph CC path: path-compressed union-find on the driver,
     root = minimum member (union always hangs the larger root under
-    the smaller), matching the propagation fixpoint exactly."""
+    the smaller), the same labeling as ``connected_components``."""
     from pyspark.sql import types as T
 
     parent: dict = {}
@@ -403,51 +403,6 @@ def _clusters_driver_union_find(pairs: DataFrame) -> DataFrame:
     )
     rows = [(n, find(n)) for n in parent]
     return pairs.sparkSession.createDataFrame(rows, out_schema)
-
-
-def _clusters_label_propagation(pairs: DataFrame, max_iter: int) -> DataFrame:
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    ).persist()
-    labels = (
-        edges.select(F.col("src").alias("doc_id")).distinct()
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        stepped = (
-            labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left")
-            .select(
-                "doc_id",
-                F.col("label").alias("old_label"),
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = stepped.filter(F.col("label") != F.col("old_label")).count()
-        labels = stepped.select("doc_id", "label")
-        if changed == 0:
-            break
-    else:
-        # propagation needs O(component diameter) rounds; returning
-        # unconverged labels would SILENTLY split a component — fail
-        # loudly instead (raise max_iter for pathological chain graphs)
-        edges.unpersist()
-        raise RuntimeError(
-            f"duplicate_clusters did not converge in {max_iter} rounds "
-            "(component diameter exceeds max_iter)"
-        )
-    edges.unpersist()
-    return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 
 # --------------------------------------------------------------- simhash
@@ -753,8 +708,8 @@ def keep_best_per_cluster(
     arbitrary min-id canonical — retention policy for curation, where
     the duplicate worth keeping is the cleanest copy.
 
-    Scale shape: reuses :func:`duplicate_clusters` (iterative CC with
-    persisted edges); the winner per cluster is one ``max_by``
+    Scale shape: reuses :func:`duplicate_clusters` (driver union-find,
+    or distributed connected components above its cap); the winner per cluster is one ``max_by``
     aggregation on a (quality, -doc_id) struct — map-side combinable,
     no sort. Singleton docs (no pair) keep themselves.
     """
@@ -1356,7 +1311,7 @@ def winnowing_pairs(
     # not reuse identical exchanges, so materialize the bounded
     # one-row-per-doc fingerprint arrays once (measured 16.5 s -> the
     # selection runs once instead of three times at sf0.1)
-    doc_fps = _doc_fingerprints(docs, k, w).localCheckpoint(eager=False)
+    doc_fps = materialize(_doc_fingerprints(docs, k, w))
     fps = doc_fps.select("doc_id", F.explode("fps").alias("fp"))
     df_counts = fps.groupBy("fp").agg(
         F.countDistinct("doc_id").alias("__df")

@@ -332,7 +332,8 @@ def region_reading_order(
     algorithm (``geometry.smart_sort_order``: transitive >10%-overlap
     clustering with alternating axes, decouple fallback, and the
     dominant-baseline-tilt pre-rotation of ref
-    smart_sorter.py:279-303). applyInPandas per doc.
+    smart_sorter.py:279-303), in one per-doc Arrow stage
+    (``grouped_map_in_pandas``).
 
     ``lines`` (mode="xycut"/"smart" only): optional line frame with
     (doc_id, region_id) plus baseline chord endpoints — either
@@ -340,10 +341,11 @@ def region_reading_order(
     ``lines_table`` produces; when given, each document's tilt is
     estimated from the baselines of its most-lines region
     (``geometry.smart_baseline_rotation``) and the regions are
-    derotated before ordering — cogrouped on doc_id so rotation and
-    ordering happen in ONE Arrow stage, no second shuffle beyond the
-    cogroup's own. Without it rotation is 0 (the reference's behavior
-    when the dominant region has no tilted baselines)."""
+    derotated before ordering. Regions and line chords are tagged and
+    unioned into ONE frame, so rotation and ordering happen in one
+    per-doc Arrow stage behind one shuffle. Without it rotation is 0
+    (the reference's behavior when the dominant region has no tilted
+    baselines)."""
 
     def order_regions(pdf: pd.DataFrame, rotation: float) -> pd.DataFrame:
         # group row order is partition-dependent; fix it before ordering
@@ -372,7 +374,9 @@ def region_reading_order(
         else ("x0", "y", "x1", "y")
     )
 
-    def per_doc(regions_pdf: pd.DataFrame, lines_pdf: pd.DataFrame):
+    def per_doc(pdf: pd.DataFrame) -> pd.DataFrame:
+        is_line = pdf["_line"].to_numpy()
+        lines_pdf = pdf[is_line]
         rotation = 0.0
         if len(lines_pdf):
             # the reference estimates tilt from the region with the
@@ -385,12 +389,17 @@ def region_reading_order(
             rotation = G.smart_baseline_rotation(
                 [row.reshape(2, 2) for row in ends]
             )
-        return order_regions(regions_pdf, rotation)
+        return order_regions(pdf[~is_line], rotation)
 
-    keep = ["doc_id", "region_id", *dict.fromkeys(chords)]
-    return regions_with_bbox.groupBy("doc_id").cogroup(
-        lines.select(*keep).groupBy("doc_id")
-    ).applyInPandas(lambda r, l: per_doc(r, l), schema=schema)
+    region_cols = ["doc_id", "region_id", "rx0", "ry0", "rx1", "ry1"]
+    tagged = regions_with_bbox.select(*region_cols, F.lit(False).alias("_line"))
+    chord_rows = lines.select(
+        "doc_id", "region_id", *dict.fromkeys(chords), F.lit(True).alias("_line")
+    )
+    return grouped_map_in_pandas(
+        tagged.unionByName(chord_rows, allowMissingColumns=True),
+        "doc_id", per_doc, schema=schema,
+    )
 
 
 def postprocess_lines(

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pero_ocr_spark.operators import materialize
+
 DAMPING = 0.85
 
 
@@ -123,7 +125,7 @@ def pagerank(
     edges = synth_edges(docs, n_docs)
     outdeg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     # loop-invariant: each edge carries its source's out-degree
-    weighted = edges.join(outdeg, "src").localCheckpoint(eager=False)
+    weighted = materialize(edges.join(outdeg, "src"))
 
     teleport = (1.0 - damping) / n_docs
     ranks = nodes.select("doc_id", F.lit(1.0 / n_docs).alias("rank"))
@@ -287,14 +289,14 @@ def hits(docs: DataFrame, n_docs: int, iterations: int = 3) -> DataFrame:
     is consumed TWICE per step (its own max + the opposite update), so
     an unchecked plan doubles the recomputed subtree per reuse —
     2^(2k) blowup (measured 19.7 s vs ~3 s at sf0.01). Each raw vector
-    is therefore ``localCheckpoint``-ed (lazily) and the SAME job that
+    therefore goes through ``materialize`` and the SAME job that
     materializes it reduces the max, which rides back out as a literal
     — the k-means loop's bounded-lineage/driver-scalar discipline; at
     cluster scale these are corpus-sized checkpoints, the standard
     cost of iterated graph algorithms.
     """
     nodes = docs.select("doc_id")
-    edges = synth_edges(docs, n_docs).localCheckpoint(eager=False)
+    edges = materialize(synth_edges(docs, n_docs))
     hub = nodes.select("doc_id", F.lit(1.0).alias("hub"))
     auth = None
     for _ in range(iterations):
@@ -305,10 +307,9 @@ def hits(docs: DataFrame, n_docs: int, iterations: int = 3) -> DataFrame:
             .groupBy(F.col("dst").alias("doc_id"))
             .agg(F.sum("hub").alias("a"))
         )
-        a = (
+        a = materialize(
             nodes.join(a_raw, "doc_id", "left")
             .select("doc_id", F.coalesce(F.col("a"), F.lit(0.0)).alias("a"))
-            .localCheckpoint(eager=False)
         )
         # ONE job materializes the lazy checkpoint AND reduces the max;
         # the scalar rides to the executors as a literal (the k-means
@@ -322,10 +323,9 @@ def hits(docs: DataFrame, n_docs: int, iterations: int = 3) -> DataFrame:
             .groupBy(F.col("src").alias("doc_id"))
             .agg(F.sum("auth").alias("h"))
         )
-        h = (
+        h = materialize(
             nodes.join(h_raw, "doc_id", "left")
             .select("doc_id", F.coalesce(F.col("h"), F.lit(0.0)).alias("h"))
-            .localCheckpoint(eager=False)
         )
         hmax = h.agg(F.max("h")).collect()[0][0]
         hub = h.select("doc_id", (F.col("h") / F.lit(hmax)).alias("hub"))
@@ -428,19 +428,20 @@ def connected_components(
     endpoint) + a distinct; nothing broadcasts (the edge list is
     corpus-sized at 10^12 docs). Per-round driver state is ONE
     fingerprint row — (edge count, XOR of xxhash64(u, v)) — reduced by
-    the same job that materializes the round's lazy ``localCheckpoint``
-    (the HITS/k-means bounded-lineage discipline; on a fault-tolerant
-    cluster swap in ``setCheckpointDir`` + eager ``checkpoint``).
+    the same job that fills the round's ``materialize`` (the
+    HITS/k-means bounded-lineage discipline; recoverable checkpoints
+    on a fault-tolerant cluster are a change to that one helper).
     Fixpoint is detected by fingerprint equality: the star forest is a
     true fixpoint of both steps, so the fingerprint stabilizes exactly
     when the edge set does.
 
     Takes an explicit ``edges (src, dst)`` frame — the general closure
     primitive: the link graph here, a near-dup pair list in the dedup
-    end-step (where it replaces ``dedup.duplicate_clusters``'s
-    diameter-bound propagation for pathological chain components).
+    end-step (``dedup.duplicate_clusters`` above its driver cap).
     Returns every node of ``nodes (doc_id)`` labeled with its
-    component's minimum id (isolated nodes label themselves).
+    component's minimum id (isolated nodes label themselves). Raises
+    ``RuntimeError`` when the edge set has not reached its fixpoint
+    within ``max_iterations`` rounds: the labeling would be wrong.
     """
     e = (
         edges.select(
@@ -470,7 +471,7 @@ def connected_components(
         # smaller, so min(closed neighborhood) = min(v); u re-attaches
         # too (u > m always, no self-loop possible)
         mn = large.groupBy("u").agg(F.min("v").alias("m"))
-        e = (
+        e = materialize(
             large.join(mn, "u")
             .filter(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
@@ -478,7 +479,6 @@ def connected_components(
                 mn.select(F.col("u").alias("u"), F.col("m").alias("v"))
             )
             .distinct()
-            .localCheckpoint(eager=False)
         )
         # overflow-free set fingerprint: count + XOR of 64-bit row
         # hashes (sum() trips ANSI-mode ARITHMETIC_OVERFLOW at scale)
@@ -490,6 +490,11 @@ def connected_components(
         if fp == prev_fp:
             break
         prev_fp = fp
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in max_iterations="
+            f"{max_iterations} rounds"
+        )
     parents = e.groupBy(F.col("u").alias("doc_id")).agg(
         F.min("v").alias("component")
     )
@@ -520,13 +525,12 @@ def label_propagation(
     needed at k=3; nothing broadcasts.
     """
     edges = synth_edges(docs, n_docs)
-    und = (
+    und = materialize(
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .unionByName(
             edges.select(F.col("dst").alias("a"), F.col("src").alias("b"))
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     labels = docs.select("doc_id", F.col("doc_id").alias("community"))
     for _ in range(iterations):
@@ -568,8 +572,8 @@ def kcore_membership(
     filter → semi-join the edge list on BOTH endpoints. The edge set
     shrinks monotonically, so fixpoint detection is an exact edge
     COUNT comparison (equal count ⇒ identical set — nothing is ever
-    added), one scalar per round reduced by the job that materializes
-    the round's lazy ``localCheckpoint``. Converges in at most
+    added), one scalar per round reduced by the job that fills the
+    round's ``materialize``. Converges in at most
     max-coreness·diameter rounds; real web graphs take a handful.
 
     Returns every document with its final membership flag and its
@@ -587,11 +591,10 @@ def kcore_membership(
     for _ in range(max_rounds):
         deg = e.groupBy("a").agg(F.count("*").alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("a")
-        e = (
+        e = materialize(
             e.join(keep, "a")
             .join(keep.select(F.col("a").alias("b")), "b")
             .select("a", "b")
-            .localCheckpoint(eager=False)
         )
         n = e.count()
         if n == prev_n:
@@ -635,7 +638,7 @@ def trustrank(
     n_seeds = (n_docs + seed_mod - 1) // seed_mod
     edges = synth_edges(docs, n_docs)
     outdeg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    weighted = edges.join(outdeg, "src").localCheckpoint(eager=False)
+    weighted = materialize(edges.join(outdeg, "src"))
 
     teleport = F.when(is_seed, F.lit((1.0 - damping) / n_seeds)).otherwise(
         F.lit(0.0)
@@ -683,21 +686,20 @@ def bfs_depth(
     total work is O(edges touched), not O(rounds × edges).
 
     Per round: one hash shuffle (frontier ⋈ edges) + a distinct + a
-    left join back onto the distance vector; the round's lazy
-    ``localCheckpoint`` bounds lineage and its materializing job also
+    left join back onto the distance vector; the round's
+    ``materialize`` bounds lineage and its materializing job also
     reduces the ONE driver scalar (settled count) that detects the
     fixpoint — monotone growth makes an exact count comparison a true
     set-equality test. ``max_hops`` caps the rounds; beyond-cap nodes
     report depth −1 (unreachable), mirrored by the oracle's hop-bound
     closure.
     """
-    und = (
+    und = materialize(
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .unionByName(
             edges.select(F.col("dst").alias("a"), F.col("src").alias("b"))
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     dist = nodes.select("doc_id").join(
         seeds.select("doc_id", F.lit(0).alias("depth")), "doc_id", "left"
@@ -713,12 +715,11 @@ def bfs_depth(
             .distinct()
             .select("doc_id", F.lit(r).alias("nd"))
         )
-        dist = (
+        dist = materialize(
             dist.join(reached, "doc_id", "left")
             .select(
                 "doc_id", F.coalesce("depth", "nd").alias("depth")
             )
-            .localCheckpoint(eager=False)
         )
         settled = dist.agg(F.count("depth")).collect()[0][0]
         if settled == prev_settled:

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pero_ocr_spark.operators import materialize
+
 N_PLANES = 8
 
 
@@ -329,9 +331,9 @@ def kmeans_assign(
     # persist the parsed doubles: the loop scans them ~3x per iteration
     # (argmin, means join, init collect) and the interpreted array cast
     # dominates re-reads (classic k-means "cache the points")
-    base = _spread(
-        emb.select(id_col, _to_double(F.col("embedding")).alias("e"))
-    ).localCheckpoint(eager=False)
+    base = materialize(
+        _spread(emb.select(id_col, _to_double(F.col("embedding")).alias("e")))
+    )
     # round init centroids ENGINE-side: SQL round is half-away-from-zero
     # in both Spark and DuckDB, while Python's round is half-even — a
     # float32 multiple of 1/128 lands exactly on a 5e-7 boundary and
@@ -637,9 +639,9 @@ def top_component(
     # the frame is scanned iterations+2 times (dim probe, one agg per
     # power step, final projection) — persist the parsed doubles once
     # so the parquet read + array cast don't repeat per iteration
-    base = _spread(
-        emb.select(id_col, _to_double(F.col("embedding")).alias("d"))
-    ).localCheckpoint(eager=False)
+    base = materialize(
+        _spread(emb.select(id_col, _to_double(F.col("embedding")).alias("d")))
+    )
     n_dims = len(base.select("d").first()["d"])
     v = [1.0] * n_dims
     for _ in range(iterations):
@@ -839,9 +841,9 @@ def pq_topk(
     """
     # base feeds three consumers (the dim probe, the query collect, the
     # subspace explode) — checkpoint so the array cast parses once
-    base = _spread(
-        emb.select(id_col, _to_double(F.col("embedding")).alias("e"))
-    ).localCheckpoint(eager=False)
+    base = materialize(
+        _spread(emb.select(id_col, _to_double(F.col("embedding")).alias("e")))
+    )
     dims = len(base.select("e").first()["e"])
     if dims % m:
         raise ValueError(f"dims {dims} not divisible by m {m}")
@@ -854,7 +856,7 @@ def pq_topk(
     }
     # one row per (vector, subspace) with the slice — every Lloyd
     # step scans this, so persist the parsed/sliced form once
-    subs = (
+    subs = materialize(
         base.select(
             id_col,
             F.explode(
@@ -868,7 +870,6 @@ def pq_topk(
             ).alias("s"),
         )
         .select(id_col, F.col("s.j").alias("j"), F.col("s.e").alias("e"))
-        .localCheckpoint(eager=False)
     )
 
     assign, cents = _lloyd_multi(subs, ksub, iters, id_col)
@@ -1066,9 +1067,7 @@ def kmeans_outlier_scores(
     # the final-assignment subtree (crossJoin + min_by argmin over the
     # corpus) is consumed TWICE — the per-cell moment aggregate and the
     # score join — and finalized plans do not share it; materialize once
-    assign = kmeans_assign(emb, k=k, iters=iters, with_dist=True).localCheckpoint(
-        eager=False
-    )
+    assign = materialize(kmeans_assign(emb, k=k, iters=iters, with_dist=True))
     d6 = F.col("dist").cast("decimal(18,6)")
     stats = assign.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n"),

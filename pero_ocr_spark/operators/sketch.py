@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pero_ocr_spark.operators import materialize
+
 # 2^10 registers: relative std error 1.04/sqrt(m) ~= 3.3%. The
 # small-range (linear-counting) branch engages below 2.5*m = 2560
 # distinct — at sf0.01 the per-source shingle counts (~1.2-1.5k) take
@@ -145,10 +147,10 @@ def hll_shingle_cardinality(docs: DataFrame, n: int = 5) -> DataFrame:
         "source", F.explode(word_gram_array(F.col("ws"), n)).alias("shingle")
     )
     # one pass over the corpus: the distinct (source, shingle) frame
-    # feeds registers AND both exact baselines — localCheckpoint stops
+    # feeds registers AND both exact baselines — materializing stops
     # the scan + gram fold + explode re-running per consumer (the
     # naive four-consumer plan measured 19s vs ~6s at sf0.1)
-    uniq = sh.distinct().localCheckpoint()
+    uniq = materialize(sh.distinct())
     regs = hll_registers(uniq, "shingle", "source")
     ests = hll_estimate(regs).unionByName(
         hll_estimate(merge_registers(regs))
@@ -275,9 +277,9 @@ def cms_heavy_hitters(docs: DataFrame, n: int = 3, k: int = 10) -> DataFrame:
         .select(F.split(F.col("text"), " ").alias("ws"))
         .filter(F.size("ws") >= n)
     )
-    sh = d.select(
-        F.explode(word_gram_array(F.col("ws"), n)).alias("shingle")
-    ).localCheckpoint()
+    sh = materialize(
+        d.select(F.explode(word_gram_array(F.col("ws"), n)).alias("shingle"))
+    )
     counters = cms_counters(sh, "shingle")
     top = (
         sh.groupBy("shingle")
@@ -355,9 +357,7 @@ def kmv_union_jaccard(
     jaccard = fraction of union-sketch values present in BOTH input
     sketches (each membership test is a k-row join).
     """
-    u = (
-        a.unionByName(b).distinct().orderBy("v").limit(k)
-    ).localCheckpoint()
+    u = materialize(a.unionByName(b).distinct().orderBy("v").limit(k))
     est_union = kmv_estimate(u, k).select(
         F.col("est_distinct").alias("est_union")
     )
@@ -381,8 +381,8 @@ def kmv_snapshot_overlap(
     (they ARE the corpus-sized distinct + join the sketch avoids; at
     10^12 URLs only the two k-row sketches would ever meet).
     """
-    a = kmv_sketch(old_urls, "url", k).localCheckpoint()
-    b = kmv_sketch(new_urls, "url", k).localCheckpoint()
+    a = materialize(kmv_sketch(old_urls, "url", k))
+    b = materialize(kmv_sketch(new_urls, "url", k))
     est = kmv_union_jaccard(a, b, k)
     ou = old_urls.select("url").distinct()
     nu = new_urls.select("url").distinct()
@@ -436,9 +436,7 @@ def histogram_quantiles(
     from pyspark.sql import Window
 
     v = F.col(value_col).cast("double")
-    base = df.select(
-        F.col(scope_col).alias("scope"), v.alias("v")
-    ).localCheckpoint()
+    base = materialize(df.select(F.col(scope_col).alias("scope"), v.alias("v")))
     hist = (
         base.select("scope", F.floor(F.col("v") / width).alias("b"))
         .groupBy("scope", "b")

@@ -29,15 +29,3 @@ def observe_extraction(
     )
     return out, obs
 
-
-def observe_decode(df: DataFrame, name: str = "decode") -> tuple[DataFrame, Observation]:
-    """Decode-stage counters: lines, mean confidence, low-confidence
-    count (the 'lines examined / decoded' summary analog)."""
-    obs = Observation(name)
-    out = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_lines"),
-        F.avg("confidence").alias("avg_confidence"),
-        F.sum((F.col("confidence") < 0.5).cast("long")).alias("n_low_confidence"),
-    )
-    return out, obs

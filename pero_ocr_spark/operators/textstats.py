@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pero_ocr_spark.operators import poly_hash
+from pero_ocr_spark.operators import materialize, poly_hash
 
 # function-word list for the n-gram/stopword language heuristic
 EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
@@ -695,15 +695,14 @@ def corpus_drift(
     """
     cn = docs.groupBy(group_col).agg(F.count("*").alias("n_cur"))
     sn = snapshot.groupBy(group_col).agg(F.count("*").alias("n_snap"))
-    j = (
+    j = materialize(
         cn.join(sn, group_col, "full_outer")
         .select(
             group_col,
             F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
             F.coalesce("n_snap", F.lit(0)).alias("n_snap"),
         )
-        .localCheckpoint()  # tiny; stops both count aggs re-running per consumer
-    )
+    )  # tiny; stops both count aggs re-running per consumer
     tot = j.agg(
         F.sum("n_cur").alias("nc"),
         F.sum("n_snap").alias("ns"),
@@ -845,11 +844,11 @@ def kneser_ney_perplexity(
     # the pair table feeds FOUR consumers (stream join + three derived
     # aggregates); without materialization each one re-runs the corpus
     # bigram explode + groupBy (measured: 10 scans, 0 reused
-    # exchanges). A lazy localCheckpoint pins it after the first job —
-    # it is the realized pair vocabulary, far smaller than the corpus.
-    pair = g.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).alias("n12")
-    ).localCheckpoint(eager=False)
+    # exchanges). Materializing pins it after the first job — it is
+    # the realized pair vocabulary, far smaller than the corpus.
+    pair = materialize(
+        g.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n12"))
+    )
     ctx = pair.groupBy("w1").agg(
         F.sum("n12").alias("c1"),
         F.count(F.lit(1)).alias("n1_fwd"),  # N1+(w1 ·)
@@ -1052,7 +1051,7 @@ def stupid_backoff_scores(docs: DataFrame, alpha: float = 0.4) -> DataFrame:
     Scale shape: the trigram count table is corpus-vocabulary sized
     and hash-joins the held-out trigram stream on its natural key
     (never broadcast); the bigram table is materialized once
-    (localCheckpoint) and feeds BOTH the context join (w1,w2) and the
+    (``materialize``) and feeds BOTH the context join (w1,w2) and the
     backoff join (w2,w3); the unigram table and the 1-row totals
     broadcast. Float parity with the serial oracle: exact integer
     counts flow through one identically-parenthesized double CASE,
@@ -1061,20 +1060,18 @@ def stupid_backoff_scores(docs: DataFrame, alpha: float = 0.4) -> DataFrame:
     """
     train = docs.filter(F.col("doc_id") % 2 == 0)
     held = docs.filter(F.col("doc_id") % 2 == 1)
-    uni = (
+    uni = materialize(
         train.select(F.explode(F.split(F.col("text"), " ")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n1"))
-        .localCheckpoint(eager=False)
     )
     totals = uni.agg(
         F.sum("n1").alias("n_tokens"), F.count(F.lit(1)).alias("vsize")
     )
-    big = (
+    big = materialize(
         word_bigrams(train)
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("n2"))
-        .localCheckpoint(eager=False)
     )
     tri = word_trigrams(train).groupBy("w1", "w2", "w3").agg(
         F.count(F.lit(1)).alias("n3")
@@ -1172,16 +1169,13 @@ def nb_quality_classifier(docs: DataFrame, labels: DataFrame) -> DataFrame:
     tr = tok.join(lab_tr, "doc_id")
     # the vocab count table feeds TWO consumers (the class-scalar
     # collect here and the scoring join below) — pin it so the corpus
-    # token explode + label join materializes once. localCheckpoint
-    # (not persist): checkpoint blocks are released by the context
-    # cleaner when the frame goes out of scope, whereas a persist
-    # registered in the CacheManager outlives the query and
-    # accumulates across bench sweeps (208 queries/run) until LRU
-    # eviction pressure — the r5 ADVICE leak
-    cnt = tr.groupBy("t").agg(
-        F.sum(F.col("label").cast("long")).alias("cp"),
-        F.sum((~F.col("label")).cast("long")).alias("cn"),
-    ).localCheckpoint(eager=False)
+    # token explode + label join materializes once
+    cnt = materialize(
+        tr.groupBy("t").agg(
+            F.sum(F.col("label").cast("long")).alias("cp"),
+            F.sum((~F.col("label")).cast("long")).alias("cn"),
+        )
+    )
     np_, nn_, v_ = cnt.agg(
         F.sum("cp"), F.sum("cn"), F.count(F.lit(1))
     ).first()

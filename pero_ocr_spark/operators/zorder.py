@@ -69,15 +69,6 @@ def zorder_sql(x_expr: str, y_expr: str, bits: int = 8) -> str:
     return "(" + " | ".join(terms) + ")"
 
 
-def zorder_py(x: int, y: int, bits: int = 8) -> int:
-    """Serial replica for tests."""
-    z = 0
-    for i in range(bits):
-        z |= ((x >> i) & 1) << (2 * i)
-        z |= ((y >> i) & 1) << (2 * i + 1)
-    return z
-
-
 def skipping_report(
     df: DataFrame,
     x: Column,

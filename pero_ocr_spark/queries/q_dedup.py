@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pero_ocr_spark import corpus
-from pero_ocr_spark.operators import extract
+from pero_ocr_spark.operators import extract, materialize
 from pero_ocr_spark.queries._base import (  # noqa: F401
     QueryFn, _EXTRACTED_CTE, _REGISTRY, _scratch, _t, register,
 )
@@ -254,18 +254,17 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pero_ocr_spark.operators import dedup, similarity
 
     emb = _t(spark, sf_dir, "embeddings")
-    # localCheckpoint: the assignment subtree (crossJoin + min_by over
-    # the corpus) fans out into both pair sides, the CC iteration, and
-    # the final join — materialize it once
-    assign = similarity.kmeans_assign(emb, k=8, iters=3).localCheckpoint()
+    # the assignment subtree (crossJoin + min_by over the corpus) fans
+    # out into both pair sides, the CC iteration, and the final join —
+    # materialize it once
+    assign = materialize(similarity.kmeans_assign(emb, k=8, iters=3))
     # the norm+join frame feeds BOTH self-join sides — finalized plans
     # do not share the subtree, so without a checkpoint the embedding
     # parse + norm + join run once per side
-    v = (
+    v = materialize(
         similarity.with_norm(emb)
         .join(assign, "vec_id")
         .select("vec_id", "cell", "embedding", "nrm")
-        .localCheckpoint(eager=False)
     )
     a = v.select(
         "cell",

@@ -1294,7 +1294,7 @@ def q_web_bfs_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frontier-parallel BFS: min hop distance from the seed set over
     # the sparse chain+bridge graph, capped at 16 hops (-1 beyond);
     # settled nodes never re-enter the join; fixpoint = settled-count
-    # scalar reduced with each round's lazy localCheckpoint. Oracle =
+    # scalar reduced with each round's materialize. Oracle =
     # hop-bounded recursive-CTE closure (tractable: components are
     # small at oracle SF; the Spark side never materializes paths).
     from pero_ocr_spark.operators import linkgraph

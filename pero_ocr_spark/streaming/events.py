@@ -39,24 +39,6 @@ def _stream_dir(sf_dir: str) -> str:
     return d
 
 
-def window_counts_batch(events: DataFrame, minutes: int = 5) -> DataFrame:
-    return (
-        events.groupBy(
-            F.window("ts", f"{minutes} minutes").alias("w"), "event_type"
-        )
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
 def window_counts_streaming(
     spark: SparkSession, sf_dir: str, minutes: int = 5, watermark: str = "10 minutes"
 ) -> DataFrame:
@@ -175,39 +157,6 @@ def running_user_totals_streaming(
     # final state per user is the last row emitted — with a single
     # input file there is exactly one
     return spark.table(name)
-
-
-def sessionize_streaming(
-    spark: SparkSession, sf_dir: str, gap_minutes: int = 30
-) -> DataFrame:
-    """session_window-based streaming sessionization (same gap
-    semantics, watermark-bounded state)."""
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .parquet(_stream_dir(sf_dir))
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
-    )
-    agg = stream.groupBy(
-        F.session_window("ts", f"{gap_minutes} minutes").alias("sw"), "user_id"
-    ).agg(F.count("*").cast("long").alias("n_events"))
-    name = f"sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
-        F.col("sw.start").alias("session_start"),
-        F.col("sw.end").alias("session_end"),
-        "user_id",
-        "n_events",
-    )
 
 
 def dedup_events_streaming(

@@ -6,11 +6,12 @@ stream — but every micro-batch is a BOUNDED DataFrame, and a document
 never spans micro-batches (a page file arrives whole). So the
 streaming form is ``foreachBatch``: each micro-batch runs the exact
 batch pipeline (same code path, zero forked logic) and appends
-shard-partitioned parquet. Exactly-once comes from the checkpoint
-PLUS an idempotent write: output is partitioned by (batch_id, shard)
-and written with dynamic partition overwrite, so a batch replayed
-after a mid-write crash overwrites its own partitions instead of
-appending duplicates.
+its spans to a sink. Exactly-once comes from the checkpoint PLUS an
+idempotent write: the WARC ingest partitions its parquet output by
+(batch_id, shard) and writes it with dynamic partition overwrite, so
+a batch replayed after a mid-write crash overwrites its own
+partitions instead of appending duplicates; the snapshot-table ingest
+skips a batch id the table's commit log already holds.
 
 Scale shape: identical to the batch plan per micro-batch (narrow DOM
 parse, one doc_id exchange), state bounded by micro-batch size; the
@@ -25,44 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 PAGES_SCHEMA = "doc_id long, html string"
-
-
-def stream_ingest_pages(
-    spark: SparkSession,
-    pages_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    n_shards: int = 16,
-):
-    """Start an available-now streaming query: parquet page files in
-    ``pages_dir`` → interleaved spans appended under ``out_dir``
-    partitioned by shard. Returns the StreamingQuery (caller awaits
-    termination)."""
-    from pero_ocr_spark.operators import html, sampling
-
-    pages = spark.readStream.schema(PAGES_SCHEMA).parquet(pages_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spans = html.html_to_spans(batch_df).withColumn(
-            "shard", sampling._residue(n_shards).cast("int")
-        )
-        # idempotent per-batch write: a replay of batch N after a
-        # mid-write crash overwrites ONLY partitions batch_id=N/*
-        # (dynamic mode), never duplicating committed batches
-        (
-            spans.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "shard")
-            .parquet(out_dir)
-        )
-
-    return (
-        pages.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 WARC_SCHEMA = "shard_id long, warc binary"

@@ -125,30 +125,3 @@ class TestConfusionNetworks:
         assert kernels.best_cn_path(cn) == "abc"
         for pos in cn:
             assert sum(pos.values()) == pytest.approx(1.0)
-
-    def test_paths_enumeration(self):
-        cn = [{"a": 0.6, "x": 0.4}, {"b": 1.0}]
-        paths = kernels.cn_paths(cn)
-        assert paths[0] == ("ab", pytest.approx(0.6))
-        assert paths[1] == ("xb", pytest.approx(0.4))
-
-
-class TestNarrowLabel:
-    def test_collapses_run_to_best_frame(self):
-        label = np.array([0, 0, 0, B])
-        logits = np.asarray(
-            [[0.1, 0, 0, 0], [0.9, 0, 0, 0], [0.2, 0, 0, 0], [0, 0, 0, 1]]
-        )
-        out = kernels.narrow_label(label, logits, B)
-        np.testing.assert_array_equal(out, [B, 0, B, B])
-
-    def test_keeps_single_frames(self):
-        label = np.array([0, B, 1])
-        logits = np.zeros((3, 4))
-        out = kernels.narrow_label(label, logits, B)
-        np.testing.assert_array_equal(out, [0, B, 1])
-
-    def test_blank_runs_untouched(self):
-        label = np.array([B, B, 0])
-        out = kernels.narrow_label(label, np.zeros((3, 4)), B)
-        np.testing.assert_array_equal(out, [B, B, 0])

@@ -3,9 +3,15 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from pero_ocr_spark.functions import geometry as G
+
+
+def _area(poly) -> float:
+    """Unsigned shoelace area (0 for fewer than three vertices)."""
+    return abs(G._signed_area(np.asarray(poly, dtype=np.float64)))
 from pero_ocr_spark.operators import layout
 from pero_ocr_spark.sources import pcgts
 
@@ -51,7 +57,7 @@ class TestConvexHull:
     def test_collinear(self):
         pts = np.array([[0, 0], [1, 1], [2, 2]])
         hull = G.convex_hull(pts)
-        assert len(hull) <= 2 or G.polygon_area(hull) == 0
+        assert len(hull) <= 2 or _area(hull) == 0
 
     def test_retrace_region_covers_lines(self):
         l1 = G.baseline_to_textline(np.array([[0.0, 20.0], [50.0, 20.0]]), 10, 4)
@@ -60,7 +66,7 @@ class TestConvexHull:
         x0, y0, x1, y1 = G.bbox(region)
         assert abs(x0) < 1e-9 and x1 == 60.0
         assert y0 == 10.0 and y1 == 54.0
-        assert G.polygon_area(region) > 0
+        assert _area(region) > 0
 
 
 class TestAlphaShape:
@@ -93,7 +99,7 @@ class TestAlphaShape:
             for v in p:
                 assert G.point_in_polygon(v[0], v[1], poly)
         # area strictly between the union floor and the hull
-        assert G.polygon_area(poly) < G.polygon_area(hull)
+        assert _area(poly) < _area(hull)
 
     def test_small_cloud_falls_back_to_hull(self):
         pts = np.array([[0.0, 0.0], [10.0, 0.0], [5.0, 8.0]])
@@ -105,7 +111,29 @@ class TestAlphaShape:
         pts = np.concatenate(lines)
         # alpha smaller than any circumradius -> no kept triangles -> hull
         poly = G.alpha_shape(pts, alpha=0.5)
-        assert G.polygon_area(poly) == G.polygon_area(G.convex_hull(pts))
+        assert _area(poly) == _area(G.convex_hull(pts))
+
+    def test_only_degenerate_triangulation_falls_back(self, monkeypatch):
+        # collinear: no triangles; huge coordinates under raising
+        # floating-point errors: the determinant overflows. Both give
+        # the hull.
+        line = np.array([[0.0, 0.0], [1.0, 1.0], [2.0, 2.0], [3.0, 3.0], [4.0, 4.0]])
+        assert np.array_equal(G.alpha_shape(line, 5.0), G.convex_hull(line))
+        huge = np.array(
+            [[0.0, 0.0], [1.0, 0.0], [0.0, 1.0], [1.0, 1.0], [0.5, 0.4]]
+        ) * 1e100
+        with np.errstate(all="raise"):
+            hull = G.alpha_shape(huge, 5.0)
+        assert np.array_equal(hull, G.convex_hull(np.unique(huge, axis=0)))
+
+        # any other error in the triangulation is a bug, not a fallback
+        def broken(points):
+            raise TypeError("unrelated")
+
+        monkeypatch.setattr(G, "delaunay", broken)
+        square = np.array([[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [0.0, 4.0], [2.0, 1.0]])
+        with pytest.raises(TypeError, match="unrelated"):
+            G.alpha_shape(square, 5.0)
 
     def test_delaunay_covers_cloud(self):
         rng = np.random.default_rng(3)
@@ -118,4 +146,4 @@ class TestAlphaShape:
             (t[:, 1, 0] - t[:, 0, 0]) * (t[:, 2, 1] - t[:, 0, 1])
             - (t[:, 1, 1] - t[:, 0, 1]) * (t[:, 2, 0] - t[:, 0, 0])
         ).sum() / 2
-        assert abs(area - G.polygon_area(G.convex_hull(pts))) < 1e-6
+        assert abs(area - _area(G.convex_hull(pts))) < 1e-6

@@ -21,10 +21,10 @@ def test_duplicate_clusters_transitive(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_duplicate_clusters_paths_agree(spark):
-    # the size gate must be invisible: the distributed propagation
-    # path (forced via driver_edge_cap=0) and the driver union-find
-    # path produce identical labelings
+def test_duplicate_clusters_paths_agree(spark, monkeypatch):
+    # the size gate must be invisible: the distributed connected-
+    # components path (forced via DRIVER_EDGE_CAP=0) and the driver
+    # union-find path produce identical labelings
     import random
 
     rng = random.Random(7)
@@ -35,11 +35,10 @@ def test_duplicate_clusters_paths_agree(spark):
         r["doc_id"]: r["cluster_id"]
         for r in dedup.duplicate_clusters(pairs).collect()
     }
+    monkeypatch.setattr(dedup, "DRIVER_EDGE_CAP", 0)
     dist = {
         r["doc_id"]: r["cluster_id"]
-        for r in dedup.duplicate_clusters(
-            pairs, driver_edge_cap=0
-        ).collect()
+        for r in dedup.duplicate_clusters(pairs).collect()
     }
     assert fast == dist and fast
 
@@ -50,7 +49,7 @@ def test_duplicate_clusters_long_chain_converges(spark):
     )
     got = {
         r["doc_id"]: r["cluster_id"]
-        for r in dedup.duplicate_clusters(pairs, max_iter=10).collect()
+        for r in dedup.duplicate_clusters(pairs).collect()
     }
     assert set(got.values()) == {0}
     assert len(got) == 9

@@ -53,15 +53,6 @@ def test_beam_decode_matches_greedy_on_clean_logits(spark, sf_dir):
         assert greedy[(r["doc_id"], r["line_id"])] == r["transcription"]
 
 
-def test_filter_confident_lines(spark, sf_dir):
-    logits = ctc.logits_table(spark, sf_dir, max_lines=50)
-    decoded = ctc.decode_greedy(logits)
-    kept = ctc.filter_confident_lines(decoded, 0.5)
-    assert kept.count() == 50  # synthetic logits are all confident
-    none = ctc.filter_confident_lines(decoded, 1.1)
-    assert none.count() == 0
-
-
 def test_sparse_table_round_trip(spark, sf_dir):
     row = ctc.logits_table(spark, sf_dir, max_lines=1).collect()[0]
     dense = kernels.sparse_to_dense(

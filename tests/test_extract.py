@@ -58,11 +58,10 @@ def test_no_boilerplate_no_empty_text(spark, sf_dir):
     assert med["media_ref"].str.startswith("img://").all()
 
 
-def test_spans_table_hinted_matches_input_contract(spark, sf_dir):
+def test_spans_table_matches_input_contract(spark, sf_dir):
     from pero_ocr_spark import corpus
 
-    df = corpus.spans_table_hinted(spark, sf_dir)
-    assert df.schema["doc_id"].dataType.simpleString() == "string"
+    df = corpus.spans_table(spark, sf_dir)
     spans_t = df.schema["spans"].dataType.simpleString()
     assert spans_t == (
         "array<struct<kind:string,text:string,"

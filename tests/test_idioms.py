@@ -3,14 +3,19 @@
 - The shuffle width is read only through ``operators.shuffle_width``.
   The session builders and the streaming state-partition set/restore
   write the conf; nothing else names it.
-- ``operators/linedet.py`` has no two-frame (cogroup) or one-batch-
-  per-group (applyInPandas) stage: per-doc stages go through
-  ``grouped_map_in_pandas``.
+- No engine module has a two-frame (cogroup) or one-batch-per-group
+  (applyInPandas) stage: per-doc stages go through
+  ``grouped_map_in_pandas``. The stateful streaming operator is the
+  one exception.
+- A frame is checkpointed or cached only through
+  ``operators.materialize``; the session's extracted-spans cache is
+  the one exception.
 - ``corpus``'s private names stay private: callers use
   ``corpus.spans_of`` and ``corpus.drop_extracted_cache``.
 - Every engine module is reachable by imports from the program's entry
   points (the driver contract, the benches, the jobs): a module that
-  only tests import is a second implementation to delete.
+  only tests import is a second implementation to delete. The same
+  holds for each top-level function and class of the engine.
 - Arrays are sorted with ``sort_array``, a native sort, not
   ``array_sort``, whose comparator (the default one too) is a lambda
   evaluated interpreted on every comparison. The two differ only in
@@ -82,10 +87,81 @@ def test_shuffle_width_is_read_in_one_place():
     )
 
 
-def test_linedet_has_no_two_frame_or_per_group_stage():
-    src = (ROOT / "pero_ocr_spark/operators/linedet.py").read_text()
-    for call in ("cogroup(", "applyInPandas("):
-        assert call not in src, f"linedet.py calls {call}"
+# (file, method): the only per-group or two-frame stages allowed
+PER_GROUP_OWNERS = {
+    # streaming state has no batch form: the state store keys by group
+    ("pero_ocr_spark/streaming/events.py", "applyInPandasWithState"),
+}
+
+
+def _engine_files():
+    for d in ("pero_ocr_spark", "jobs"):
+        yield from sorted((ROOT / d).rglob("*.py"))
+
+
+def _method_calls(path: Path, names):
+    """(enclosing top-level function, method name, line) of every
+    ``x.<name>(...)`` call in the file."""
+    for top in ast.parse(path.read_text(), filename=str(path)).body:
+        fn = top.name if isinstance(top, ast.FunctionDef) else None
+        for node in ast.walk(top):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in names
+            ):
+                yield fn, node.func.attr, node.lineno
+
+
+def test_no_two_frame_or_per_group_stage():
+    names = {"cogroup", "applyInPandas", "applyInPandasWithState"}
+    stray = [
+        f"{_rel(p)}:{line} ({name})"
+        for p in _engine_files()
+        for _, name, line in _method_calls(p, names)
+        if (_rel(p), name) not in PER_GROUP_OWNERS
+    ]
+    assert not stray, (
+        "run per-doc stages through operators.grouped_map_in_pandas: "
+        + ", ".join(stray)
+    )
+
+
+# (file, enclosing function, method): (calls it keeps, reason).
+# Everything else goes through operators.materialize.
+MATERIALIZE_OWNERS = {
+    ("pero_ocr_spark/operators/__init__.py", "materialize", "localCheckpoint"): (
+        1,
+        "the helper itself",
+    ),
+    ("pero_ocr_spark/corpus.py", "extracted_spans", "persist"): (
+        1,
+        "a MEMORY_AND_DISK cache shared by the queries of one session, "
+        "not a checkpoint inside one query",
+    ),
+    ("pero_ocr_spark/corpus.py", "drop_extracted_cache", "unpersist"): (
+        1,
+        "frees that cache",
+    ),
+}
+
+
+def test_frames_materialize_through_one_helper():
+    names = {"localCheckpoint", "checkpoint", "persist", "cache", "unpersist"}
+    uses: dict[tuple, list[int]] = {}
+    for p in _engine_files():
+        for fn, name, line in _method_calls(p, names):
+            uses.setdefault((_rel(p), fn, name), []).append(line)
+    wrong = [
+        f"{path}:{uses.get(key, [])} ({fn or 'module level'}: {name})"
+        for key in sorted(set(uses) | set(MATERIALIZE_OWNERS), key=str)
+        for path, fn, name in [key]
+        if len(uses.get(key, [])) != MATERIALIZE_OWNERS.get(key, (0,))[0]
+    ]
+    assert not wrong, (
+        "materialize frames with operators.materialize, and keep "
+        "MATERIALIZE_OWNERS exact: " + ", ".join(wrong)
+    )
 
 
 def test_corpus_private_names_stay_private():
@@ -153,6 +229,45 @@ def test_every_engine_module_is_reachable_from_program_code():
     assert not unreached, (
         "engine modules no entry point imports (delete them, or use them): "
         + ", ".join(unreached)
+    )
+
+
+def test_every_engine_function_is_named_by_program_code():
+    """Each top-level function and class of the engine is named by
+    program code outside its own definition (a call, an import, a
+    reference in a docstring). Registered ``q_*`` queries are reached
+    through the registry, and the oracle through the tests."""
+    lines = {_rel(p): p.read_text().splitlines() for p in _program_files()}
+    defs = []
+    for rel, src in lines.items():
+        if not rel.startswith("pero_ocr_spark/") or (
+            _module_name(ROOT / rel) in TEST_ONLY_MODULES
+        ):
+            continue
+        for node in ast.parse("\n".join(src), filename=rel).body:
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                continue
+            if rel.startswith("pero_ocr_spark/queries/") and node.name.startswith(
+                "q_"
+            ):
+                continue
+            first = min([node.lineno] + [d.lineno for d in node.decorator_list])
+            defs.append((rel, node.name, first, node.end_lineno))
+    unnamed = []
+    for rel, name, first, last in defs:
+        word = re.compile(rf"\b{re.escape(name)}\b")
+        if not any(
+            word.search(line)
+            for other, src in lines.items()
+            for i, line in enumerate(src, 1)
+            if not (other == rel and first <= i <= last)
+        ):
+            unnamed.append(f"{rel}:{first} {name}")
+    assert not unnamed, (
+        "engine functions only tests name (move them into the tests, or "
+        "delete them): " + ", ".join(unnamed)
     )
 
 

@@ -206,6 +206,17 @@ class TestConnectedComponents:
         got = L.connected_components(docs, edges, max_iterations=8).toPandas()
         assert set(got["component"]) == {0}
 
+    def test_unconverged_labeling_raises(self, spark):
+        # 3 rounds cannot close a 40-node chain; returning the partial
+        # labeling would silently split the component
+        n = 40
+        docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "src long, dst long"
+        )
+        with pytest.raises(RuntimeError, match="max_iterations=3"):
+            L.connected_components(docs, edges, max_iterations=3)
+
 
 @pytest.mark.usefixtures("spark")
 class TestLabelPropagation:

@@ -145,15 +145,7 @@ class TestPageUtils:
         assert U.element_schema("{http://x/y}Page") == "{http://x/y}"
         assert U.element_schema("Page") == ""
 
-    def test_export_id_and_compose_path(self):
-        assert U.export_id("p1", True) == "id_p1"
-        assert U.export_id("p1", False) == "p1"
-        assert U.compose_path("a/b.xml", "/base") == "/base/a/b.xml"
-        assert U.compose_path("/abs.xml", "/base") == "/abs.xml"
-        assert U.compose_path("rel.xml", None) == "rel.xml"
 
-    def test_filter_list(self):
-        assert U.filter_list(["a", "b", "c", "d"], [1, 3]) == ["a", "c"]
 
     def test_parse_heights_custom_forms(self):
         assert U.parse_heights_custom("heights_v2:[10.0,4.0]") == [10.0, 4.0]
@@ -175,21 +167,7 @@ class TestPageUtils:
         ]
         assert U.get_rotation(lines) == pytest.approx(45.0)
 
-    def test_rotate_coords_90(self):
-        # cv2 convention: positive angle rotates counter-clockwise with
-        # y pointing down, so (1,0) around origin by 90° -> (0,-1)
-        out = U.rotate_coords(np.array([[1.0, 0.0]]), 90.0, (0.0, 0.0))
-        assert out[0][0] == pytest.approx(0.0, abs=1e-9)
-        assert out[0][1] == pytest.approx(-1.0, abs=1e-9)
-        # rotation around the point itself is identity
-        out = U.rotate_coords(np.array([[3.0, 4.0]]), 37.0, (3.0, 4.0))
-        assert np.allclose(out, [[3.0, 4.0]])
 
-    def test_rotate_then_unrotate(self):
-        pts = np.array([[10.0, 5.0], [20.0, 7.0], [0.0, 0.0]])
-        rot = U.rotate_coords(pts, 30.0, (5.0, 5.0))
-        back = U.rotate_coords(rot, -30.0, (5.0, 5.0))
-        assert np.allclose(back, pts, atol=1e-9)
 
     def test_guess_line_heights_mid_baseline(self):
         # baseline centered in a 0..20 polygon -> 10 up, 10 down
@@ -198,6 +176,16 @@ class TestPageUtils:
         up, down = U.guess_line_heights_from_polygon(bl, poly, n=4)
         assert up == pytest.approx(10.0)
         assert down == pytest.approx(10.0)
+
+    def test_guess_line_heights_falls_back_only_on_empty_baseline(self):
+        poly = np.array([[0.0, 0.0], [100.0, 0.0], [100.0, 20.0], [0.0, 20.0]])
+        # no baseline points to probe: the polygon-extent guess
+        empty = np.zeros((0, 2))
+        assert U.guess_line_heights_from_polygon(empty, poly) == [16.0, 4.0]
+        # a malformed argument is an error, not a missing height
+        bl = np.array([[0.0, 10.0], [100.0, 10.0]])
+        with pytest.raises(TypeError):
+            U.guess_line_heights_from_polygon(bl, poly, n="4")
 
     def test_guess_height_at_point(self):
         bl = np.array([[0.0, 30.0], [100.0, 30.0]])

@@ -4,7 +4,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from pero_ocr_spark.functions import arabic, kernels, page_utils
+from pero_ocr_spark.functions import arabic, kernels
 
 TEXT = st.text(alphabet="ab cd", max_size=25)
 
@@ -43,31 +43,6 @@ class TestLevDistProperties:
     @given(st.text(max_size=15), st.text(max_size=15))
     def test_vectorized_matches_reference_dp(self, a, b):
         assert kernels._lev_dist_np(a, b) == kernels.edit_stats(a, b)[0]
-
-
-class TestRotateProperties:
-    @settings(max_examples=60, deadline=None)
-    @given(
-        st.lists(
-            st.tuples(
-                st.floats(-100, 100, allow_nan=False),
-                st.floats(-100, 100, allow_nan=False),
-            ),
-            min_size=1,
-            max_size=6,
-        ),
-        st.floats(-180, 180, allow_nan=False),
-        st.tuples(st.floats(-50, 50), st.floats(-50, 50)),
-    )
-    def test_rotation_inverse_and_isometry(self, pts, angle, center):
-        arr = np.asarray(pts, dtype=np.float64)
-        rot = page_utils.rotate_coords(arr, angle, center)
-        back = page_utils.rotate_coords(rot, -angle, center)
-        assert np.allclose(back, arr, atol=1e-6)
-        # distances to the center are preserved
-        d0 = np.hypot(arr[:, 0] - center[0], arr[:, 1] - center[1])
-        d1 = np.hypot(rot[:, 0] - center[0], rot[:, 1] - center[1])
-        assert np.allclose(d0, d1, atol=1e-6)
 
 
 ARABIC_WORDS = st.lists(

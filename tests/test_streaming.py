@@ -1,7 +1,6 @@
 """Streaming semantics: the actual streaming windowed agg equals the
-batch windowed agg; session_window streaming equals batch gap
-sessionization on counts; LM-carry decode equals per-line decode on
-clean logits while actually threading state."""
+batch windowed agg; LM-carry decode equals per-line decode on clean
+logits while actually threading state."""
 
 from __future__ import annotations
 
@@ -17,36 +16,31 @@ def _norm(df: pd.DataFrame) -> pd.DataFrame:
     return df[cols].sort_values(cols).reset_index(drop=True).astype(str)
 
 
+def _window_counts_batch(events, minutes: int):
+    """The batch form of ``ev.window_counts_streaming``."""
+    return (
+        events.groupBy(
+            F.window("ts", f"{minutes} minutes").alias("w"), "event_type"
+        )
+        .agg(
+            F.count("*").cast("long").alias("n_events"),
+            F.round(F.sum("value"), 4).alias("total_value"),
+        )
+        .select(
+            F.col("w.start").alias("window_start"),
+            "event_type",
+            "n_events",
+            "total_value",
+        )
+    )
+
+
 def test_streaming_equals_batch_window_agg(spark, sf_dir):
-    batch = ev.window_counts_batch(
+    batch = _window_counts_batch(
         spark.read.parquet(f"{sf_dir}/events.parquet"), minutes=5
     ).toPandas()
     stream = ev.window_counts_streaming(spark, sf_dir, minutes=5).toPandas()
     pd.testing.assert_frame_equal(_norm(batch), _norm(stream))
-
-
-def test_streaming_sessionize_matches_batch_counts(spark, sf_dir):
-    batch = ev.sessionize(
-        spark.read.parquet(f"{sf_dir}/events.parquet"), gap_minutes=30
-    )
-    stream = ev.sessionize_streaming(spark, sf_dir, gap_minutes=30)
-    b = (
-        batch.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_sessions"),
-            F.sum("n_events").alias("n_events"),
-        )
-        .toPandas()
-    )
-    s = (
-        stream.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_sessions"),
-            F.sum("n_events").alias("n_events"),
-        )
-        .toPandas()
-    )
-    pd.testing.assert_frame_equal(_norm(b), _norm(s))
 
 
 def test_lm_carry_decode(spark, sf_dir):

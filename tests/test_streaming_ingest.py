@@ -14,30 +14,6 @@ def _write_pages(spark, sf_dir, path):
     return docs
 
 
-def test_stream_ingest_matches_batch(spark, sf_dir, tmp_path):
-    pages_dir = str(tmp_path / "pages")
-    out_dir = str(tmp_path / "spans")
-    ckpt = str(tmp_path / "ckpt")
-    docs = _write_pages(spark, sf_dir, pages_dir)
-
-    q = ingest.stream_ingest_pages(spark, pages_dir, out_dir, ckpt)
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out_dir)
-    want = H.html_to_spans(spark.read.parquet(pages_dir))
-    key = ["doc_id", "ord", "kind", "text", "media_ref"]
-    assert sorted(map(tuple, got.select(*key).collect())) == sorted(
-        map(tuple, want.select(*key).collect())
-    )
-    assert got.select("shard").distinct().count() > 1
-
-    # restart with the same checkpoint: no files pending, nothing appended
-    n_before = got.count()
-    q2 = ingest.stream_ingest_pages(spark, pages_dir, out_dir, ckpt)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out_dir).count() == n_before
-
-
 def test_stream_ingest_warc_matches_batch(spark, sf_dir, tmp_path):
     from pero_ocr_spark.sources import warc as W
 

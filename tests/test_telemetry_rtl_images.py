@@ -1,4 +1,4 @@
-"""Telemetry observe metrics, binary image scan and line-crop sink.
+"""Binary image scan and line-crop sink.
 (Arabic visual form is tested in test_arabic_lm.py.)"""
 
 from __future__ import annotations
@@ -6,21 +6,10 @@ from __future__ import annotations
 import os
 import tempfile
 
-import pytest
 from pyspark.sql import functions as F
 
-from pero_ocr_spark.operators import ctc, layout, linedet, telemetry
+from pero_ocr_spark.operators import layout, linedet
 from pero_ocr_spark.sources import images
-
-
-def test_observe_decode_metrics(spark, sf_dir):
-    logits = ctc.logits_table(spark, sf_dir, max_lines=100)
-    decoded, obs = telemetry.observe_decode(ctc.decode_greedy(logits))
-    decoded.write.format("noop").mode("overwrite").save()
-    got = obs.get
-    assert got["n_lines"] == 100
-    assert got["avg_confidence"] == pytest.approx(1.0, abs=1e-3)
-    assert got["n_low_confidence"] == 0
 
 
 def test_binary_scan_and_crop_sink(spark, sf_dir):
