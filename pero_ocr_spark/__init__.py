@@ -7,9 +7,10 @@ tables ``(doc_id, spans: array<struct<kind, text, media_ref, offset>>)``.
 
 Design rules (see SURVEY.md):
   * DataFrame / Spark SQL first; Catalyst plans everything relational.
-  * Heavy per-page kernels are vectorized numpy inside
-    ``mapInPandas`` / ``applyInPandas`` Arrow batches — never
-    per-row Python UDFs.
+  * Python stages run on Arrow batches — never per-row Python UDFs:
+    per-row parsers through ``operators.flat_map_in_pandas``, per-doc
+    kernels through ``operators.grouped_map_in_pandas``, and only
+    batch-vectorized kernels call ``mapInPandas`` themselves.
   * Every stage is a pure function ``stage(df) -> df`` with a fixed
     schema contract (the analog of pero-ocr's uniform
     ``process_page(img, layout) -> layout`` stage signature,

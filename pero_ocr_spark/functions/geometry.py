@@ -3,25 +3,26 @@
 Own implementations of the reference's layout-helper semantics, with
 the nondeterminism designed out:
 
-  * baseline → textline polygon via normals
-    (``layout_engines/layout_helpers.py:95-123`` semantics)
   * baseline resampling by polynomial fit
     (``layout_helpers.py:275-292``)
-  * mergeable-line detection + union-find closure — the fixpoint the
-    reference reaches by looping ``merge_lines``
-    (``layout_helpers.py:194-258`` + ``page_parser.py:261-274``),
-    with the random sort tiebreak (``:251-253``) replaced by (y, x)
-  * polygon clipping (Sutherland–Hodgman) + point-in-polygon — the
-    shapely-free replacement for exact line↔region intersection
-    (``layout_helpers.py:312-342``)
+  * mergeable-line detection + union-find closure over straight
+    baselines — the fixpoint the reference reaches by looping
+    ``merge_lines`` (``layout_helpers.py:194-258`` +
+    ``page_parser.py:261-274``), with the random sort tiebreak
+    (``:251-253``) replaced by (y, x)
+  * vectorized point-in-polygon, convex/alpha-shape hulls and polygon
+    repair — the shapely-free replacements for the reference's
+    region geometry
   * 1-D band clustering == DBSCAN(eps, min_samples=1) on a line — the
     NaiveRegionSorter's reading order (``naive_sorter.py:60-84``)
   * SmartRegionSorter reading order, faithful semantics
     (``smart_sorter.py:177-303``): transitive >10%-overlap coupling
     with alternating axes, the decouple fallback for interlocked
-    regions, and the dominant-baseline-tilt pre-rotation — plus the
-    simpler gap-based recursive XY-cut (``xy_cut_order``) kept as the
-    cheap clean-layout variant
+    regions, and the dominant-baseline-tilt pre-rotation
+
+The scalar general-case kernels these replace (multi-point
+``merge_lines``, ``point_in_polygon``, the gap-based XY-cut) live in
+``tests/_geometry_ref.py`` as the references the tests check against.
 """
 
 from __future__ import annotations
@@ -30,26 +31,6 @@ import numpy as np
 
 
 # ------------------------------------------------ textline polygon (L14)
-
-def baseline_to_textline(baseline: np.ndarray, asc: float, desc: float) -> np.ndarray:
-    """Textline polygon from a baseline polyline and asc/desc heights:
-    offset each baseline point along the local normal, up by asc and
-    down by desc; polygon = up-edge then reversed down-edge."""
-    asc, desc = max(1.0, asc), max(1.0, desc)
-    b = np.asarray(baseline, dtype=np.float64)
-    dx = np.diff(b[:, 0])
-    dy = np.diff(b[:, 1])
-    dx = np.concatenate([dx, dx[-1:]])
-    dy = np.concatenate([dy, dy[-1:]])
-    alpha = np.pi / 2 + np.arctan2(dy, dx)
-    up = b.copy()
-    up[:, 0] -= np.cos(alpha) * asc
-    up[:, 1] -= np.sin(alpha) * asc
-    down = b.copy()
-    down[:, 0] += np.cos(alpha) * desc
-    down[:, 1] += np.sin(alpha) * desc
-    return np.concatenate([up, down[::-1]], axis=0)
-
 
 # -------------------------------------------------- resampling (L15)
 
@@ -73,103 +54,6 @@ def resample_baseline(baseline: np.ndarray, num_points: int = 10) -> np.ndarray:
 
 # ------------------------------------------------- merge lines (L11)
 
-def mergeable(b1, h1, b2, h2) -> bool:
-    """Reference merge predicate (layout_helpers.py:207-224 semantics):
-    vertical overlap of the two line bands > 0.7 × the smaller line
-    height, no x-range containment, and x-gap < 2 × the smaller line
-    height."""
-    b1 = np.asarray(b1, dtype=np.float64)
-    b2 = np.asarray(b2, dtype=np.float64)
-    y1, y2 = b1[:, 1].mean(), b2[:, 1].mean()
-    min1, max1 = b1[:, 0].min(), b1[:, 0].max()
-    min2, max2 = b2[:, 0].min(), b2[:, 0].max()
-    contained = (min1 > min2 and max1 < max2) or (min2 > min1 and max2 < max1)
-    gap = max(min1 - max2, min2 - max1)
-    h_overlap = min(y1 + h1[1], y2 + h2[1]) - max(y1 - h1[0], y2 - h2[0])
-    min_height = min(h1[0] + h1[1], h2[0] + h2[1])
-    return (
-        h_overlap > 0.7 * min_height and not contained and gap < 2 * min_height
-    )
-
-
-def merge_lines(
-    baselines: list[np.ndarray], heights: list[tuple[float, float]]
-) -> tuple[list[np.ndarray], list[tuple[float, float]]]:
-    """Union-find closure of the merge predicate (the fixpoint of the
-    reference's iterated merge), deterministic output order by
-    (first-point y, x)."""
-    n = len(baselines)
-    parent = list(range(n))
-
-    def find(i):
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
-
-    # vectorized candidate matrix (the analog of the reference's bbox
-    # candidate prune, layout_helpers.py:50-58): evaluate the merge
-    # predicate on numpy arrays for ALL pairs at once instead of a
-    # Python double loop — O(n²) memory on per-region n, which is
-    # bounded (a region holds at most a few thousand lines)
-    bs = [np.asarray(b, dtype=np.float64) for b in baselines]
-    ymean = np.array([b[:, 1].mean() for b in bs])
-    xmin = np.array([b[:, 0].min() for b in bs])
-    xmax = np.array([b[:, 0].max() for b in bs])
-    hsum = np.array([h[0] + h[1] for h in heights])
-    asc = np.array([h[0] for h in heights])
-    desc = np.array([h[1] for h in heights])
-
-    min_h = np.minimum.outer(hsum, hsum)
-    # h_overlap = min(y1+d1, y2+d2) - max(y1-a1, y2-a2)
-    lo = np.maximum.outer(ymean - asc, ymean - asc)
-    hi = np.minimum.outer(ymean + desc, ymean + desc)
-    h_overlap = hi - lo
-    contained = np.logical_or(
-        np.logical_and(
-            np.greater.outer(xmin, xmin), np.less.outer(xmax, xmax)
-        ),
-        np.logical_and(
-            np.greater.outer(xmin, xmin).T, np.less.outer(xmax, xmax).T
-        ),
-    )
-    gap = np.maximum(
-        np.subtract.outer(xmin, xmax), np.subtract.outer(xmin, xmax).T
-    )
-    ok = (h_overlap > 0.7 * min_h) & ~contained & (gap < 2 * min_h)
-    ii, jj = np.nonzero(np.triu(ok, k=1))
-    for i, j in zip(ii.tolist(), jj.tolist()):
-        ri, rj = find(i), find(j)
-        if ri != rj:
-            parent[max(ri, rj)] = min(ri, rj)
-
-    groups: dict[int, list[int]] = {}
-    for i in range(n):
-        groups.setdefault(find(i), []).append(i)
-
-    out_b, out_h = [], []
-    for members in groups.values():
-        if len(members) == 1:
-            out_b.append(np.asarray(baselines[members[0]], dtype=np.float64))
-            out_h.append(tuple(heights[members[0]]))
-        else:
-            pts = np.concatenate(
-                [np.asarray(baselines[m], dtype=np.float64) for m in members]
-            )
-            pts = pts[np.argsort(pts[:, 0], kind="stable")]
-            out_b.append(resample_baseline(pts))
-            out_h.append(
-                (
-                    max(heights[m][0] for m in members),
-                    max(heights[m][1] for m in members),
-                )
-            )
-    order = sorted(
-        range(len(out_b)), key=lambda i: (out_b[i][0, 1], out_b[i][0, 0])
-    )
-    return [out_b[i] for i in order], [out_h[i] for i in order]
-
-
 def merge_lines_straight(
     x0: np.ndarray,
     x1: np.ndarray,
@@ -177,8 +61,8 @@ def merge_lines_straight(
     asc: np.ndarray,
     desc: np.ndarray,
 ) -> tuple[np.ndarray, ...]:
-    """Array-based ``merge_lines`` for straight 2-point horizontal
-    baselines ([[x0, y], [x1, y]]): identical components, values and
+    """Array-based ``merge_lines`` (tests/_geometry_ref.py) for
+    straight 2-point horizontal baselines ([[x0, y], [x1, y]]): identical components, values and
     output order, but the per-line Python object churn (one np.array
     per baseline + list-of-tuples heights) is replaced by five flat
     input arrays and five flat output arrays — the shape Arrow hands a
@@ -296,52 +180,11 @@ def merge_lines_straight(
 
 # ---------------------------------------------- polygon ops (J1 exact)
 
-def clip_polygon(subject: np.ndarray, clip: np.ndarray) -> np.ndarray:
-    """Sutherland–Hodgman: clip subject polygon by a CONVEX clip
-    polygon (counter-clockwise or clockwise consistent). Returns the
-    clipped polygon (possibly empty)."""
-    def inside(p, a, b):
-        return (b[0] - a[0]) * (p[1] - a[1]) - (b[1] - a[1]) * (p[0] - a[0]) >= 0
-
-    def intersect(p1, p2, a, b):
-        d1 = np.asarray(p2) - np.asarray(p1)
-        d2 = np.asarray(b) - np.asarray(a)
-        denom = d1[0] * d2[1] - d1[1] * d2[0]
-        if denom == 0:
-            return np.asarray(p2, dtype=np.float64)
-        t = ((a[0] - p1[0]) * d2[1] - (a[1] - p1[1]) * d2[0]) / denom
-        return np.asarray(p1, dtype=np.float64) + t * d1
-
-    clip = np.asarray(clip, dtype=np.float64)
-    if _signed_area(clip) < 0:
-        clip = clip[::-1]
-    out = [np.asarray(p, dtype=np.float64) for p in subject]
-    for a, b in zip(clip, np.roll(clip, -1, axis=0)):
-        if not out:
-            break
-        inp, out = out, []
-        prev = inp[-1]
-        for cur in inp:
-            if inside(cur, a, b):
-                if not inside(prev, a, b):
-                    out.append(intersect(prev, cur, a, b))
-                out.append(cur)
-            elif inside(prev, a, b):
-                out.append(intersect(prev, cur, a, b))
-            prev = cur
-    return np.asarray(out, dtype=np.float64).reshape(-1, 2)
-
-
 def _signed_area(poly: np.ndarray) -> float:
     x, y = poly[:, 0], poly[:, 1]
     return 0.5 * float(
         np.sum(x * np.roll(y, -1) - np.roll(x, -1) * y)
     )
-
-
-def bbox(poly: np.ndarray) -> tuple[float, float, float, float]:
-    p = np.asarray(poly, dtype=np.float64)
-    return float(p[:, 0].min()), float(p[:, 1].min()), float(p[:, 0].max()), float(p[:, 1].max())
 
 
 def stretch_baseline(
@@ -496,39 +339,11 @@ def check_polygon(poly: np.ndarray) -> np.ndarray:
     return convex_hull(pts)
 
 
-def point_in_polygon(
-    x: float, y: float, poly: np.ndarray, eps: float = 1e-9
-) -> bool:
-    """Ray-cast point-in-polygon with an on-boundary tolerance: points
-    within eps (linear distance) of an edge count as inside (textline
-    vertices sit EXACTLY on the alpha-shape boundary)."""
-    poly = np.asarray(poly, dtype=np.float64)
-    n = len(poly)
-    eps2 = eps * eps  # comparisons are in squared distance
-    inside = False
-    for i in range(n):
-        x0, y0 = poly[i]
-        x1, y1 = poly[(i + 1) % n]
-        # on-segment check
-        dx, dy = x1 - x0, y1 - y0
-        L2 = dx * dx + dy * dy
-        if L2 > 0:
-            t = max(0.0, min(1.0, ((x - x0) * dx + (y - y0) * dy) / L2))
-            if (x - (x0 + t * dx)) ** 2 + (y - (y0 + t * dy)) ** 2 <= eps2:
-                return True
-        elif (x - x0) ** 2 + (y - y0) ** 2 <= eps2:
-            return True
-        if (y0 > y) != (y1 > y):
-            xi = x0 + (y - y0) * dx / dy
-            if x < xi:
-                inside = not inside
-    return inside
-
-
 def points_in_polygon(
     points: np.ndarray, poly: np.ndarray, eps: float = 1e-9
 ) -> np.ndarray:
-    """Vectorized ``point_in_polygon`` over an (m, 2) point array:
+    """Vectorized ``point_in_polygon`` (tests/_geometry_ref.py) over an
+    (m, 2) point array:
     same arithmetic (on-segment tolerance + ray-cast parity) computed
     as one m x n numpy pass instead of a Python loop per point. The
     alpha-shape coverage check in ``retrace_region`` calls this once
@@ -747,47 +562,6 @@ def band_sort_order(ys: np.ndarray, eps: float) -> list[int]:
     return sorted(range(len(ys)), key=lambda i: (labels[i], ys[i], i))
 
 
-def xy_cut_order(bboxes: list[tuple[float, float, float, float]]) -> list[int]:
-    """Recursive XY-cut: split the region set on clean vertical gaps
-    (left-to-right), then horizontal gaps (top-to-bottom), recursing;
-    groups that can't be split are ordered by (y, x). Deterministic."""
-
-    def split(indices: list[int], vertical: bool) -> list[list[int]]:
-        if len(indices) <= 1:
-            return [indices]
-        lo, hi = (0, 2) if vertical else (1, 3)
-        order = sorted(indices, key=lambda i: bboxes[i][lo])
-        groups, cur = [], [order[0]]
-        reach = bboxes[order[0]][hi]
-        for i in order[1:]:
-            if bboxes[i][lo] >= reach:
-                groups.append(cur)
-                cur = [i]
-            else:
-                cur.append(i)
-            reach = max(reach, bboxes[i][hi])
-        groups.append(cur)
-        return groups
-
-    def recurse(indices: list[int], vertical: bool, depth: int) -> list[int]:
-        if len(indices) <= 1:
-            return indices
-        groups = split(indices, vertical)
-        if len(groups) == 1:
-            if depth > 0:
-                return sorted(
-                    indices, key=lambda i: (bboxes[i][1], bboxes[i][0], i)
-                )
-            return recurse(indices, not vertical, depth + 1)
-        out = []
-        for g in groups:
-            out.extend(recurse(g, not vertical, 0))
-        return out
-
-    # start with horizontal bands (top-to-bottom), then columns
-    return recurse(list(range(len(bboxes))), vertical=False, depth=0)
-
-
 # ------------------------------------------ SmartRegionSorter (O4)
 
 def rotate_points(pts: np.ndarray, deg: float) -> np.ndarray:
@@ -808,9 +582,9 @@ def smart_baseline_rotation(baselines: list[np.ndarray]) -> float:
     chord_length))`` of the first->last chord — note the reference
     applies ``sin`` (not ``asin``) to the ratio, an approximation
     valid for small tilts that we replicate for parity — then the
-    mean over the longest half of the lines. Differs from
-    ``page_utils.get_rotation`` (the layout_helpers variant), which
-    uses ``atan2``; the sorter must use its own."""
+    mean over the longest half of the lines. Differs from the
+    layout_helpers variant, which uses ``atan2``; the sorter must use
+    its own."""
     import math
 
     infos = []
@@ -836,8 +610,7 @@ def smart_sort_order(
     polygons: list[np.ndarray] | None = None,
 ) -> list[int]:
     """SmartRegionSorter reading order (ref smart_sorter.py:177-303),
-    faithful semantics — NOT the gap-based XY-cut of
-    :func:`xy_cut_order`:
+    faithful semantics — NOT a gap-based XY-cut:
 
       * regions are pre-rotated by ``-rotation`` degrees around the
         origin (the reference derotates the whole layout by the

@@ -30,18 +30,6 @@ BLANK = "<BLANK>"
 LOG_ZERO = -np.inf
 
 
-# ---------------------------------------------------------------- softmax
-
-def log_softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
-    m = np.max(x, axis=axis, keepdims=True)
-    s = x - m
-    return s - np.log(np.sum(np.exp(s), axis=axis, keepdims=True))
-
-
-def softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
-    return np.exp(log_softmax(x, axis=axis))
-
-
 def logprobs_deviation(log_probs: np.ndarray) -> float:
     return float(np.max(np.abs(np.sum(np.exp(log_probs), axis=1) - 1.0)))
 

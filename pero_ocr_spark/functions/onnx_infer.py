@@ -9,22 +9,17 @@ container, so those stages synthesize their maps; THIS module executes
 the same cached-session mapInPandas pattern against a real serialized
 model so the weights-backed path is exercised, not just simulated:
 
-* ``toy_model_bytes()`` — a CHECKED-IN 2-layer MLP (64 -> 16 relu -> 4)
-  serialized as a valid ONNX ModelProto. The protobuf wire format is
-  emitted by hand (varint + length-delimited fields) so the model file
-  needs no onnx dependency to build and is byte-deterministic.
-* ``numpy_forward()`` — the same net executed with numpy; the oracle
-  twin for the ort session (and the portable backend in containers
-  without onnxruntime).
-* ``infer_batched()`` — the Spark stage: one Arrow batch in, rows'
-  float vectors stacked into a [N, 64] tensor, one session call, logits
-  out. Session construction happens ONCE per python worker process per
-  model digest (module-level cache) — the pattern the reference's
-  per-worker model instances require.
-
-With ``backend="ort"`` the stage needs onnxruntime and raises
-``NotImplementedError`` naming it when absent; ``backend="numpy"`` runs
-the twin through the IDENTICAL batching/caching path.
+* ``mlp_model_bytes()`` — a 2-layer MLP (X @ W1 + B1 |> Relu |> @ W2 +
+  B2) serialized as a valid ONNX ModelProto. The protobuf wire format
+  is emitted by hand (varint + length-delimited fields) so the model
+  file needs no onnx dependency to build and is byte-deterministic;
+  ``ctc_passthrough_model_bytes()`` sizes it as the CTC frame-logit
+  passthrough net.
+* ``session_forward()`` — one batched forward through an ONNX Runtime
+  session built ONCE per python worker process per model digest
+  (module-level cache) — the pattern the reference's per-worker model
+  instances require. It needs onnxruntime and raises
+  ``NotImplementedError`` naming it when absent.
 """
 
 from __future__ import annotations
@@ -32,9 +27,6 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
-
-IN_DIM, HID_DIM, OUT_DIM = 64, 16, 4
 
 # ------------------------------------------------------------------
 # protobuf wire-format emitters (proto3): enough for an ONNX ModelProto
@@ -102,20 +94,8 @@ def _node(op: str, inputs: list[str], outputs: list[str], name: str) -> bytes:
 
 
 # ------------------------------------------------------------------
-# the checked-in toy net
+# MLP models
 # ------------------------------------------------------------------
-
-
-def toy_weights() -> dict[str, np.ndarray]:
-    """Deterministic weights (seeded, float32) — shared by the ONNX
-    initializers and the numpy twin, so the two backends must agree."""
-    rng = np.random.default_rng(20260817)
-    return {
-        "W1": rng.standard_normal((IN_DIM, HID_DIM)).astype(np.float32) * 0.2,
-        "B1": rng.standard_normal(HID_DIM).astype(np.float32) * 0.1,
-        "W2": rng.standard_normal((HID_DIM, OUT_DIM)).astype(np.float32) * 0.2,
-        "B2": rng.standard_normal(OUT_DIM).astype(np.float32) * 0.1,
-    }
 
 
 def mlp_model_bytes(w: dict[str, np.ndarray], name: str = "toy_mlp") -> bytes:
@@ -147,11 +127,6 @@ def mlp_model_bytes(w: dict[str, np.ndarray], name: str = "toy_mlp") -> bytes:
     )
 
 
-def toy_model_bytes() -> bytes:
-    """The checked-in 64 -> 16 relu -> 4 probe net."""
-    return mlp_model_bytes(toy_weights())
-
-
 def ctc_passthrough_weights(c: int, shift: float = 100.0) -> dict[str, np.ndarray]:
     """An MLP whose forward pass is the identity on logits in
     (-shift, inf): W1 = I, B1 = +shift (lifts every logit above the
@@ -175,15 +150,6 @@ def ctc_passthrough_model_bytes(c: int) -> bytes:
     crop/batch -> cached session -> logits -> decode dataflow
     (ref pytorch_ocr_engine.py:37-74)."""
     return mlp_model_bytes(ctc_passthrough_weights(c), name="ctc_passthrough")
-
-
-def numpy_forward(x: np.ndarray, weights: dict[str, np.ndarray] | None = None) -> np.ndarray:
-    """The twin executor: float32 math in the same op order as the
-    graph, so ort output matches to float32 tolerance."""
-    w = weights or toy_weights()
-    x = np.asarray(x, dtype=np.float32)
-    h = np.maximum(x @ w["W1"] + w["B1"], np.float32(0))
-    return h @ w["W2"] + w["B2"]
 
 
 # ------------------------------------------------------------------
@@ -220,34 +186,4 @@ def session_forward(model_bytes: bytes, x: np.ndarray) -> np.ndarray:
     Raises NotImplementedError naming onnxruntime when it is absent."""
     x = np.ascontiguousarray(x, dtype=np.float32)
     return _session(model_bytes).run(["Y"], {"X": x})[0]
-
-
-def infer_batched(df, vec_col: str = "embedding", backend: str = "ort"):
-    """Spark stage: score each row's float vector with the toy net.
-
-    mapInPandas — each Arrow batch becomes ONE [N, 64] float32 tensor
-    and ONE session call (no per-row Python), mirroring the reference's
-    padded-batch inference loop (pytorch_ocr_engine.py:50-63). Output:
-    input columns + ``logits array<float>`` + ``pred int``.
-    """
-    model = toy_model_bytes()
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    out_schema = f"{fields}, logits array<float>, pred int"
-
-    def run(batches):
-        w = toy_weights()  # tiny; rebuilt per worker, not per batch
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.vstack([np.asarray(v, dtype=np.float32) for v in pdf[vec_col]])
-            if backend == "ort":
-                y = _session(model).run(["Y"], {"X": x})[0]
-            else:
-                y = numpy_forward(x, w)
-            out = pdf.copy()
-            out["logits"] = [row.tolist() for row in y]
-            out["pred"] = np.argmax(y, axis=1).astype(np.int32)
-            yield out
-
-    return df.mapInPandas(run, schema=out_schema)
 

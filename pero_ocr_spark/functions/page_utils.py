@@ -8,7 +8,6 @@ stages), never as row-at-a-time Spark UDFs.
 from __future__ import annotations
 
 import json
-import math
 import re
 
 import numpy as np
@@ -46,27 +45,6 @@ def points_array_to_string(arr) -> str:
         a = np.array([np.asarray(q, dtype=np.float64) for q in a])
     r = np.round(a.astype(np.float64, copy=False)).astype(np.int64)
     return " ".join("%d,%d" % (p[0], p[1]) for p in r.tolist())
-
-
-def get_rotation(lines) -> float:
-    """Mean baseline tilt in degrees over the longest half of the
-    lines (layout_helpers.py:345-374): per line, angle of the
-    first->last chord; keep the longest len(lines)//2 entries; mean."""
-    infos = []
-    for line in lines:
-        p0 = np.asarray(line[0], dtype=np.float64)
-        p1 = np.asarray(line[-1], dtype=np.float64)
-        if p1[1] != p0[1]:
-            rot = math.degrees(np.arctan2(p1[1] - p0[1], p1[0] - p0[0]))
-            length = float(np.hypot(p1[0] - p0[0], p1[1] - p0[1]))
-            infos.append((length, rot))
-        else:
-            infos.append((0.0, 0.0))
-    infos.sort(key=lambda x: x[0], reverse=True)
-    infos = infos[: int(len(infos) / 2)]
-    if not infos:
-        return 0.0
-    return sum(r for _, r in infos) / len(infos)
 
 
 def parse_heights_custom(custom_str: str) -> list[float] | None:

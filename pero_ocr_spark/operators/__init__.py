@@ -166,6 +166,35 @@ def grouped_map_in_pandas(df: DataFrame, key, per_group, schema):
     return grouped_batches_in_pandas(df, keys, per_batch, schema)
 
 
+def flat_map_in_pandas(df: DataFrame, per_row, schema):
+    """Per-row Arrow stage: ``per_row(*values)`` is called with each
+    input row's values, in ``df``'s column order, and returns an
+    iterable of output tuples in ``schema`` field order — zero, one or
+    many rows per input row.
+
+    The batch boundary is framed here once: each input Arrow batch
+    yields ONE output frame, built with ``DataFrame.from_records``, so
+    a batch in which no row yields output is a frame of object columns,
+    which Arrow converts to every Spark type (an empty dict-of-lists
+    frame is float64, which Arrow refuses to convert to
+    ``array<bigint>``). Output rows follow input row order.
+    """
+    import pandas as pd
+    from pyspark.sql.types import StructType
+
+    names = (
+        schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    ).names
+
+    def gen(batches):
+        for pdf in batches:
+            cols = [pdf[c] for c in pdf.columns]
+            rows = [out for vals in zip(*cols) for out in per_row(*vals)]
+            yield pd.DataFrame.from_records(rows, columns=names)
+
+    return df.mapInPandas(gen, schema)
+
+
 def spread_scan(df: DataFrame) -> DataFrame:
     """Scan-parallelism guard for heavy in-row stages.
 

@@ -40,9 +40,7 @@ from __future__ import annotations
 
 import codecs
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -52,6 +50,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from pero_ocr_spark.operators import flat_map_in_pandas
 
 # Non-ascii probe appended by the synthesis twin: forces utf-16 to
 # differ from utf-8, and latin-1/cp1252 bytes to be invalid utf-8.
@@ -108,29 +108,21 @@ def encode_bodies(docs: DataFrame) -> DataFrame:
     encoded per its deterministic branch with ``PROBE_SUFFIX``
     appended (and a meta tag prepended for the meta rung)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, decls, bodies = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                codec, declared = _branch(doc_id)
-                payload = str(text) + PROBE_SUFFIX
-                if codec == "cp1252":
-                    payload = '<meta charset="windows-1252">' + payload
-                body = payload.encode(codec)
-                if codec == "utf-16-le":
-                    body = codecs.BOM_UTF16_LE + body
-                elif codec == "utf-16-be":
-                    body = codecs.BOM_UTF16_BE + body
-                ids.append(doc_id)
-                decls.append(declared)
-                bodies.append(body)
-            yield pd.DataFrame(
-                {"doc_id": ids, "declared": decls, "body": bodies}
-            )
+    def per_row(doc_id, text):
+        doc_id = int(doc_id)
+        codec, declared = _branch(doc_id)
+        payload = str(text) + PROBE_SUFFIX
+        if codec == "cp1252":
+            payload = '<meta charset="windows-1252">' + payload
+        body = payload.encode(codec)
+        if codec == "utf-16-le":
+            body = codecs.BOM_UTF16_LE + body
+        elif codec == "utf-16-be":
+            body = codecs.BOM_UTF16_BE + body
+        return [(doc_id, declared, body)]
 
-    return docs.select("doc_id", "text").mapInPandas(
-        gen, schema=_ENCODED_SCHEMA
+    return flat_map_in_pandas(
+        docs.select("doc_id", "text"), per_row, _ENCODED_SCHEMA
     )
 
 
@@ -160,24 +152,11 @@ def detect_and_decode(encoded: DataFrame) -> DataFrame:
     """(doc_id, declared, body) → (doc_id, charset, charset_source,
     text) via the four-rung ladder. Narrow map, no shuffle."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, charsets, sources, texts = [], [], [], []
-            for doc_id, declared, body in zip(
-                pdf["doc_id"], pdf["declared"], pdf["body"]
-            ):
-                codec, source, text = _detect(str(declared), bytes(body))
-                ids.append(int(doc_id))
-                charsets.append(codec)
-                sources.append(source)
-                texts.append(text)
-            yield pd.DataFrame({
-                "doc_id": ids, "charset": charsets,
-                "charset_source": sources, "text": texts,
-            })
+    def per_row(doc_id, declared, body):
+        return [(int(doc_id), *_detect(str(declared), bytes(body)))]
 
-    return encoded.select("doc_id", "declared", "body").mapInPandas(
-        gen, schema=_DECODED_SCHEMA
+    return flat_map_in_pandas(
+        encoded.select("doc_id", "declared", "body"), per_row, _DECODED_SCHEMA
     )
 
 

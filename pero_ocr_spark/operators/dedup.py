@@ -1216,54 +1216,8 @@ def _winnow_doc_kernel(text: str, k: int, w: int):
 
 def _doc_fingerprints(docs: DataFrame, k: int, w: int) -> DataFrame:
     """(doc_id, fps array) — the per-doc distinct winnowing
-    fingerprint ARRAY; see :func:`winnow_fingerprints` for semantics.
-    Kept un-exploded so callers with several consumers can materialize
-    ONE bounded row per document.
-
-    The selection runs in the vectorized Arrow kernel
-    (:func:`_winnow_doc_kernel`): the per-character interpreted hash
-    fold was the dominant cost of every winnowing consumer (guide
-    §4.2 — hand whole batches to vectorized native code). The original
-    Catalyst formulation is kept in tests/test_dedup.py as the
-    fuzz-pinned semantics twin."""
-    import pandas as pd
-
-    from pero_ocr_spark.operators import spread_scan
-
-    id_type = docs.schema["doc_id"].dataType.simpleString()
-
-    def gen(batches):
-        for pdf in batches:
-            ids, fps = [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None:
-                    continue
-                out = _winnow_doc_kernel(text, k, w)
-                if out is None:
-                    continue
-                ids.append(did)
-                fps.append(out.tolist())
-            # explicit object dtype: an EMPTY batch (tiny input spread
-            # over more partitions than docs) would otherwise build
-            # float64 columns, which Arrow refuses to cast to
-            # list<bigint> (NumPyConverter); object columns convert on
-            # every shape, empty included
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="object"),
-                    "fps": pd.Series(fps, dtype="object"),
-                }
-            )
-
-    return spread_scan(docs.select("doc_id", "text")).mapInPandas(
-        gen, schema=f"doc_id {id_type}, fps array<bigint>"
-    )
-
-
-def winnow_fingerprints(
-    docs: DataFrame, k: int = 3, w: int = 4
-) -> DataFrame:
-    """(doc_id, fp) — distinct winnowing fingerprints per document.
+    fingerprint ARRAY. Kept un-exploded so callers with several
+    consumers can materialize ONE bounded row per document.
 
     Robust winnowing: hash every word k-gram, slide a window of ``w``
     consecutive hashes, and in each window select the MINIMUM hash,
@@ -1272,17 +1226,27 @@ def winnow_fingerprints(
     keeping the selected set stable under edits elsewhere — the MOSS
     document-fingerprinting scheme, at word granularity). Guarantee:
     any shared passage of ≥ k + w − 1 words between two documents
-    yields at least one shared fingerprint.
+    yields at least one shared fingerprint. The identical list
+    arithmetic runs in the DuckDB oracle.
 
-    Scale shape: selection is ENTIRELY in-row — gram hashing, window
-    minima, and rightmost-tie argmin are nested array expressions in
-    whole-stage codegen, bounded by document length; the only shuffle
-    is the final explode feeding downstream grouping. No UDF, no
-    Python, and the identical list arithmetic runs in the DuckDB
-    oracle.
-    """
-    return _doc_fingerprints(docs, k, w).select(
-        "doc_id", F.explode("fps").alias("fp")
+    The selection runs in the vectorized Arrow kernel
+    (:func:`_winnow_doc_kernel`): the per-character interpreted hash
+    fold was the dominant cost of every winnowing consumer (guide
+    §4.2 — hand whole batches to vectorized native code). The original
+    Catalyst formulation is kept in tests/test_dedup.py as the
+    fuzz-pinned semantics twin."""
+    from pero_ocr_spark.operators import flat_map_in_pandas, spread_scan
+
+    id_type = docs.schema["doc_id"].dataType.simpleString()
+
+    def per_row(did, text):
+        out = None if text is None else _winnow_doc_kernel(text, k, w)
+        return () if out is None else [(did, out.tolist())]
+
+    return flat_map_in_pandas(
+        spread_scan(docs.select("doc_id", "text")),
+        per_row,
+        f"doc_id {id_type}, fps array<bigint>",
     )
 
 

@@ -14,39 +14,26 @@ line confidences — a pure expression: pow(avg(pow(c, p)), 1/p).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pero_ocr_spark.functions import kernels
-from pero_ocr_spark.operators import shuffle_width
+from pero_ocr_spark.operators import flat_map_in_pandas, shuffle_width
 
 
 def line_edit_stats(pairs: DataFrame) -> DataFrame:
     """Per-line (ref, hyp) → edit stats. Input needs columns
     doc_id, line_id, ref, hyp."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            stats = [kernels.edit_stats(r, h) for r, h in zip(pdf["ref"], pdf["hyp"])]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "line_id": pdf["line_id"],
-                    "dist": [s[0] for s in stats],
-                    "subs": [s[1] for s in stats],
-                    "ins": [s[2] for s in stats],
-                    "dels": [s[3] for s in stats],
-                    "ref_len": pdf["ref"].str.len(),
-                }
-            )
+    def per_row(doc_id, line_id, ref, hyp):
+        ref_len = None if ref is None else len(ref)
+        return [(doc_id, line_id, *kernels.edit_stats(ref, hyp), ref_len)]
 
-    return pairs.mapInPandas(
-        run,
-        schema="doc_id long, line_id string, dist long, subs long, ins long, "
+    return flat_map_in_pandas(
+        pairs.select("doc_id", "line_id", "ref", "hyp"),
+        per_row,
+        "doc_id long, line_id string, dist long, subs long, ins long, "
         "dels long, ref_len long",
     )
 
@@ -68,16 +55,13 @@ def confusion_matrix(pairs: DataFrame) -> DataFrame:
     matrix of error_summary.py:117-129, as a relational aggregate).
     Gaps are encoded as '∅'."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, hyps = [], []
-            for r, h in zip(pdf["ref"], pdf["hyp"]):
-                for rc, hc in kernels.align_strings(r, h):
-                    refs.append(rc if rc is not None else "∅")
-                    hyps.append(hc if hc is not None else "∅")
-            yield pd.DataFrame({"ref_char": refs, "hyp_char": hyps})
+    def per_row(ref, hyp):
+        for rc, hc in kernels.align_strings(ref, hyp):
+            yield ("∅" if rc is None else rc), ("∅" if hc is None else hc)
 
-    exploded = pairs.mapInPandas(run, schema="ref_char string, hyp_char string")
+    exploded = flat_map_in_pandas(
+        pairs.select("ref", "hyp"), per_row, "ref_char string, hyp_char string"
+    )
     return exploded.groupBy("ref_char", "hyp_char").agg(
         F.count("*").cast("long").alias("n")
     )
@@ -263,26 +247,19 @@ def corpus_bleu(
     out_schema = f"doc_id {id_type}, hyp_len long, ref_len long, " + ", ".join(
         f"clip{k} long" for k in ks
     )
-    clip_cols = [f"clip{k}" for k in ks]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, ht, rt in zip(pdf["doc_id"], pdf[hyp_col], pdf[ref_col]):
-                hn = None if ht is None else len(ht)
-                rn = None if rt is None else len(rt)
-                clips = _token_gram_clips(
-                    [] if ht is None else list(ht),
-                    [] if rt is None else list(rt),
-                    max_n,
-                )
-                rows.append((did, hn, rn, *clips))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "hyp_len", "ref_len", *clip_cols]
-            )
+    def per_row(did, ht, rt):
+        hn = None if ht is None else len(ht)
+        rn = None if rt is None else len(rt)
+        clips = _token_gram_clips(
+            [] if ht is None else list(ht),
+            [] if rt is None else list(rt),
+            max_n,
+        )
+        return [(did, hn, rn, *clips)]
 
-    joined = _spread_docs(docs, "doc_id", hyp_col, ref_col).mapInPandas(
-        gen, schema=out_schema
+    joined = flat_map_in_pandas(
+        _spread_docs(docs, "doc_id", hyp_col, ref_col), per_row, out_schema
     )
 
     hl = F.col("hyp_len").cast("double")
@@ -373,22 +350,14 @@ def corpus_chrf(
     out_schema = f"doc_id {id_type}, hyp_len long, ref_len long, " + ", ".join(
         f"clip{k} long" for k in ks
     )
-    clip_cols = [f"clip{k}" for k in ks]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, h, r in zip(pdf["doc_id"], pdf[hyp_col], pdf[ref_col]):
-                hn = None if h is None else len(h)
-                rn = None if r is None else len(r)
-                clips = _char_gram_clips(h or "", r or "", max_n)
-                rows.append((did, hn, rn, *clips))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "hyp_len", "ref_len", *clip_cols]
-            )
+    def per_row(did, h, r):
+        hn = None if h is None else len(h)
+        rn = None if r is None else len(r)
+        return [(did, hn, rn, *_char_gram_clips(h or "", r or "", max_n))]
 
-    joined = _spread_docs(docs, "doc_id", hyp_col, ref_col).mapInPandas(
-        gen, schema=out_schema
+    joined = flat_map_in_pandas(
+        _spread_docs(docs, "doc_id", hyp_col, ref_col), per_row, out_schema
     )
 
     def avg_terms(len_col):

@@ -37,12 +37,12 @@ heuristics (jusText: Pomikálek 2011, Boilerpipe: Kohlschütter 2010).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from html.parser import HTMLParser
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from pero_ocr_spark.operators import flat_map_in_pandas, spread_scan
 
 # Block-level elements: opening or closing one terminates the current
 # text block (jusText's paragraph segmentation rule). Inline elements
@@ -149,9 +149,7 @@ class _BlockParser(HTMLParser):
         return self.blocks
 
 
-def parse_html_blocks(
-    df: DataFrame, html_col: str = "html", carry: tuple[str, ...] = ()
-) -> DataFrame:
+def parse_html_blocks(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, html) → one row per DOM text block with features.
 
     Narrow ``mapInPandas`` stage: column pruning pushes to the scan
@@ -162,37 +160,19 @@ def parse_html_blocks(
     is spread first so the Python DOM walk parallelizes (no-op on a
     multi-split corpus scan — the stage stays shuffle-free at scale).
     """
-    from pero_ocr_spark.operators import spread_scan
-
-    pruned = spread_scan(df.select("doc_id", *carry, html_col))
+    pruned = spread_scan(df.select("doc_id", *carry, "html"))
     schema = BLOCK_SCHEMA + "".join(f", {c} string" for c in carry)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "block_id": [], "tag": [], "text": [],
-                "n_words": [], "n_link_words": [],
-                **{c: [] for c in carry},
-            }
-            for row in zip(pdf["doc_id"], pdf[html_col],
-                           *(pdf[c] for c in carry)):
-                doc_id, html, extras = row[0], row[1], row[2:]
-                if html is None:
-                    continue  # a null page yields no blocks, not a crash
-                parser = _BlockParser()
-                parser.feed(html)
-                for i, (tag, nw, lw, text) in enumerate(parser.finish()):
-                    out["doc_id"].append(doc_id)
-                    out["block_id"].append(i)
-                    out["tag"].append(tag)
-                    out["text"].append(text)
-                    out["n_words"].append(nw)
-                    out["n_link_words"].append(lw)
-                    for c, v in zip(carry, extras):
-                        out[c].append(v)
-            yield pd.DataFrame(out)
+    def per_row(doc_id, *rest):
+        *extras, html = rest
+        if html is None:
+            return  # a null page yields no blocks, not a crash
+        parser = _BlockParser()
+        parser.feed(html)
+        for i, (tag, nw, lw, text) in enumerate(parser.finish()):
+            yield doc_id, i, tag, text, nw, lw, *extras
 
-    return pruned.mapInPandas(gen, schema=schema)
+    return flat_map_in_pandas(pruned, per_row, schema)
 
 
 def classify_blocks(
@@ -274,9 +254,7 @@ def classify_blocks_densitometric(blocks: DataFrame) -> DataFrame:
     ).drop("_ld", "_pw", "_nw", "_pld")
 
 
-def extract_main_content(
-    pages: DataFrame, html_col: str = "html"
-) -> DataFrame:
+def extract_main_content(pages: DataFrame) -> DataFrame:
     """(doc_id, html) → (doc_id, main_text, n_kept, n_blocks).
 
     End-to-end boilerplate strip: parse → classify → keep good blocks
@@ -285,7 +263,7 @@ def extract_main_content(
     boilerplate yield main_text = '' (kept, so the output is a total
     function of the input — filtering is the caller's policy).
     """
-    cls = classify_blocks(parse_html_blocks(pages, html_col))
+    cls = classify_blocks(parse_html_blocks(pages))
     kept = F.when(
         F.col("cls") == "good", F.struct("block_id", "text")
     )  # null for dropped blocks → collect_list skips them
@@ -358,7 +336,7 @@ def synthesize_html(docs: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     return docs.select("doc_id", *keep, html.alias("html"))
 
 
-def html_to_spans(pages: DataFrame, html_col: str = "html") -> DataFrame:
+def html_to_spans(pages: DataFrame) -> DataFrame:
     """(doc_id, html) → interleaved span sequence
     (doc_id, ord, kind, text, media_ref) — the engine's native
     document model (kind='text' content blocks, kind='media' image
@@ -372,7 +350,7 @@ def html_to_spans(pages: DataFrame, html_col: str = "html") -> DataFrame:
     surroundings. Same single doc_id shuffle as the classifier; the
     final row_number reuses the window partitioning.
     """
-    cls = classify_blocks(parse_html_blocks(pages, html_col))
+    cls = classify_blocks(parse_html_blocks(pages))
     good = cls.filter(F.col("cls") == "good")
     w = Window.partitionBy("doc_id").orderBy("block_id")
     is_media = F.col("tag") == "img"
@@ -388,41 +366,26 @@ def html_to_spans(pages: DataFrame, html_col: str = "html") -> DataFrame:
 LINK_SCHEMA = "doc_id long, link_id int, href string, anchor string"
 
 
-def parse_html_outlinks(
-    df: DataFrame, html_col: str = "html", carry: tuple[str, ...] = ()
-) -> DataFrame:
+def parse_html_outlinks(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, html) → one row per ``<a href>`` in document order,
     with the link's anchor text. Same narrow mapInPandas shape as
     :func:`parse_html_blocks` (one parser walk; no shuffle); feeds the
     link-graph operators (PageRank, anchor-text harvest) from real
     markup instead of a synthetic edge rule."""
-    pruned = df.select("doc_id", *carry, html_col)
+    pruned = df.select("doc_id", *carry, "html")
     schema = LINK_SCHEMA + "".join(f", {c} string" for c in carry)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "link_id": [], "href": [], "anchor": [],
-                **{c: [] for c in carry},
-            }
-            for row in zip(pdf["doc_id"], pdf[html_col],
-                           *(pdf[c] for c in carry)):
-                doc_id, html, extras = row[0], row[1], row[2:]
-                if html is None:
-                    continue  # a null page yields no blocks, not a crash
-                parser = _BlockParser()
-                parser.feed(html)
-                parser.finish()
-                for i, (href, anchor) in enumerate(parser.links):
-                    out["doc_id"].append(doc_id)
-                    out["link_id"].append(i)
-                    out["href"].append(href)
-                    out["anchor"].append(anchor)
-                    for c, v in zip(carry, extras):
-                        out[c].append(v)
-            yield pd.DataFrame(out)
+    def per_row(doc_id, *rest):
+        *extras, html = rest
+        if html is None:
+            return  # a null page yields no links, not a crash
+        parser = _BlockParser()
+        parser.feed(html)
+        parser.finish()
+        for i, (href, anchor) in enumerate(parser.links):
+            yield doc_id, i, href, anchor, *extras
 
-    return pruned.mapInPandas(gen, schema=schema)
+    return flat_map_in_pandas(pruned, per_row, schema)
 
 
 def resolve_href(href: Column, host: Column, base: Column) -> Column:
@@ -493,7 +456,6 @@ def template_blocks(
 
 def strip_template_blocks(
     pages: DataFrame,
-    html_col: str = "html",
     host_col: str = "host",
     df_ratio: float = TEMPLATE_DF_RATIO,
     min_docs: int = TEMPLATE_MIN_DOCS,
@@ -510,7 +472,7 @@ def strip_template_blocks(
     chrome (cookie banners, related-story widgets) that per-page
     heuristics keep, while leaving short unique content untouched.
     """
-    blocks = parse_html_blocks(pages, html_col, carry=(host_col,))
+    blocks = parse_html_blocks(pages, carry=(host_col,))
     tpl = template_blocks(blocks, host_col, df_ratio, min_docs)
     fp = F.xxhash64(F.col("tag"), F.col("text"))
     kept = (
@@ -532,7 +494,6 @@ def strip_template_blocks(
 
 def ensemble_extract(
     pages: DataFrame,
-    html_col: str = "html",
     host_col: str = "host",
     df_ratio: float = TEMPLATE_DF_RATIO,
     min_docs: int = TEMPLATE_MIN_DOCS,
@@ -552,7 +513,7 @@ def ensemble_extract(
     template table is site-bounded and broadcast. Output is the
     ordered span model (doc_id, ord, kind, text, media_ref).
     """
-    blocks = parse_html_blocks(pages, html_col, carry=(host_col,)).withColumnRenamed(
+    blocks = parse_html_blocks(pages, carry=(host_col,)).withColumnRenamed(
         host_col, "host"
     )
     jt = classify_blocks(blocks).withColumnRenamed("cls", "cls_jt")
@@ -726,7 +687,7 @@ class _TableParser(HTMLParser):
         return [(i, rows) for i, (_, rows) in enumerate(self.tables)]
 
 
-def parse_html_tables(df: DataFrame, html_col: str = "html") -> DataFrame:
+def parse_html_tables(df: DataFrame) -> DataFrame:
     """(doc_id, html) → one row per table GRID position.
 
     Same narrow ``mapInPandas`` shape as :func:`parse_html_blocks`:
@@ -735,33 +696,19 @@ def parse_html_tables(df: DataFrame, html_col: str = "html") -> DataFrame:
     (rowspan/colspan already expanded), so every downstream consumer
     is pure Catalyst.
     """
-    from pero_ocr_spark.operators import spread_scan
+    pruned = spread_scan(df.select("doc_id", "html"))
 
-    pruned = spread_scan(df.select("doc_id", html_col))
+    def per_row(doc_id, html):
+        if html is None:
+            return  # null page -> no tables, not a crash
+        parser = _TableParser()
+        parser.feed(html)
+        for tid, rows in parser.finish():
+            for ri, row in enumerate(rows):
+                for ci, (hdr, text) in enumerate(row):
+                    yield doc_id, tid, ri, ci, hdr, text
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "table_id": [], "row_id": [], "col_id": [],
-                "is_header": [], "text": [],
-            }
-            for doc_id, html in zip(pdf["doc_id"], pdf[html_col]):
-                if html is None:
-                    continue  # null page -> no tables, not a crash
-                parser = _TableParser()
-                parser.feed(html)
-                for tid, rows in parser.finish():
-                    for ri, row in enumerate(rows):
-                        for ci, (hdr, text) in enumerate(row):
-                            out["doc_id"].append(doc_id)
-                            out["table_id"].append(tid)
-                            out["row_id"].append(ri)
-                            out["col_id"].append(ci)
-                            out["is_header"].append(hdr)
-                            out["text"].append(text)
-            yield pd.DataFrame(out)
-
-    return pruned.mapInPandas(gen, schema=TABLE_SCHEMA)
+    return flat_map_in_pandas(pruned, per_row, TABLE_SCHEMA)
 
 
 def tables_to_markdown(cells: DataFrame) -> DataFrame:
@@ -858,18 +805,10 @@ def tables_to_markdown(cells: DataFrame) -> DataFrame:
     )
 
 
-def synthesize_html_tables(docs: DataFrame) -> DataFrame:
-    """documents(doc_id, text) → (doc_id, html) with one data table.
-
-    Deterministic substrate for the table extractor: a header row
-    (``name value note``) plus ``len(words)//6`` data rows of three
-    2-word cells, wrapped in the standard page shell so the parser
-    must skip non-table furniture. Pure column expressions → the
-    markdown output has a closed-form SQL oracle.
-    """
-    words = F.split(F.col("text"), " ")
+def _data_table(words: Column) -> Column:
+    """The synthetic ``<table>``: a ``name value note`` header row plus
+    ``len(words)//6`` data rows of three 2-word cells."""
     nd = F.floor(F.size(words) / 6).cast("int")
-    idx = F.sequence(F.lit(0), nd - 1)
 
     def cell(r, c):
         return F.concat(
@@ -884,12 +823,27 @@ def synthesize_html_tables(docs: DataFrame) -> DataFrame:
             cell(r, F.lit(2)), F.lit("</tr>"),
         )
 
+    rows = F.array_join(F.transform(F.sequence(F.lit(0), nd - 1), row), "")
+    return F.concat(
+        F.lit("<table><tr><th>name</th><th>value</th><th>note</th></tr>"),
+        F.when(nd > 0, rows).otherwise(F.lit("")),
+        F.lit("</table>"),
+    )
+
+
+def synthesize_html_tables(docs: DataFrame) -> DataFrame:
+    """documents(doc_id, text) → (doc_id, html) with one data table.
+
+    Deterministic substrate for the table extractor: a header row
+    (``name value note``) plus ``len(words)//6`` data rows of three
+    2-word cells, wrapped in the standard page shell so the parser
+    must skip non-table furniture. Pure column expressions → the
+    markdown output has a closed-form SQL oracle.
+    """
     html = F.concat(
         F.lit(_HEAD),
         F.lit(_NAV),
-        F.lit("<table><tr><th>name</th><th>value</th><th>note</th></tr>"),
-        F.when(nd > 0, F.array_join(F.transform(idx, row), "")).otherwise(F.lit("")),
-        F.lit("</table>"),
+        _data_table(F.split(F.col("text"), " ")),
         F.lit(_FOOTER),
         F.lit(_TAIL),
     )
@@ -1121,32 +1075,23 @@ def _grid_to_gfm(rows: list[list[tuple[bool, str]]]) -> str:
     return "\n".join(out)
 
 
-def html_to_markdown(
-    df: DataFrame, html_col: str = "html", drop_furniture: bool = True
-) -> DataFrame:
+def html_to_markdown(df: DataFrame, drop_furniture: bool = True) -> DataFrame:
     """(doc_id, html) → (doc_id, markdown): render each page to the
     LLM-ingest document format in ONE narrow ``mapInPandas`` pass —
     no shuffle anywhere, column pruning pushes to the scan, output is
     one row per input row (the raw HTML never leaves the stage and
     the markdown is strictly smaller). The embarrassingly-parallel
     shape survives any corpus size unchanged."""
-    from pero_ocr_spark.operators import spread_scan
+    pruned = spread_scan(df.select("doc_id", "html"))
 
-    pruned = spread_scan(df.select("doc_id", html_col))
+    def per_row(doc_id, html):
+        if html is None:
+            return [(doc_id, "")]  # total function: null page -> empty doc
+        parser = _MarkdownParser(drop_furniture=drop_furniture)
+        parser.feed(html)
+        return [(doc_id, parser.finish())]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            md = []
-            for html in pdf[html_col]:
-                if html is None:
-                    md.append("")  # total function: null page -> empty doc
-                    continue
-                parser = _MarkdownParser(drop_furniture=drop_furniture)
-                parser.feed(html)
-                md.append(parser.finish())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "markdown": md})
-
-    return pruned.mapInPandas(gen, schema="doc_id long, markdown string")
+    return flat_map_in_pandas(pruned, per_row, "doc_id long, markdown string")
 
 
 def synthesize_html_rich(docs: DataFrame) -> DataFrame:
@@ -1159,8 +1104,6 @@ def synthesize_html_rich(docs: DataFrame) -> DataFrame:
     words = F.split(F.col("text"), " ")
     n = F.size(words)
     idx = F.sequence(F.lit(0), F.floor((n - 1) / PARA_WORDS).cast("int"))
-    nd = F.floor(n / 6).cast("int")
-    tidx = F.sequence(F.lit(0), nd - 1)
 
     def para(i):
         chunk = F.slice(words, i * PARA_WORDS + 1, PARA_WORDS)
@@ -1186,19 +1129,6 @@ def synthesize_html_rich(docs: DataFrame) -> DataFrame:
         )
         return F.when(i % 2 == F.lit(1), F.concat(body, img)).otherwise(body)
 
-    def cell(r, c):
-        return F.concat(
-            F.lit("<td>"),
-            F.array_join(F.slice(words, r * 6 + c * 2 + 1, 2), " "),
-            F.lit("</td>"),
-        )
-
-    def trow(r):
-        return F.concat(
-            F.lit("<tr>"), cell(r, F.lit(0)), cell(r, F.lit(1)),
-            cell(r, F.lit(2)), F.lit("</tr>"),
-        )
-
     html = F.concat(
         F.lit(_HEAD),
         F.lit(_NAV),
@@ -1210,11 +1140,7 @@ def synthesize_html_rich(docs: DataFrame) -> DataFrame:
         F.lit("</li><li>"), F.coalesce(F.element_at(words, 2), F.lit("")),
         F.lit("</li><li>"), F.coalesce(F.element_at(words, 3), F.lit("")),
         F.lit("</li></ul>"),
-        F.lit("<table><tr><th>name</th><th>value</th><th>note</th></tr>"),
-        F.when(nd > 0, F.array_join(F.transform(tidx, trow), "")).otherwise(
-            F.lit("")
-        ),
-        F.lit("</table>"),
+        _data_table(words),
         F.lit(_ASIDE),
         F.lit(_FOOTER),
         F.lit(_TAIL),
@@ -1300,37 +1226,24 @@ class _MetaParser(HTMLParser):
             self._ld_parts.append(data)
 
 
-def extract_page_metadata(df: DataFrame, html_col: str = "html") -> DataFrame:
+def extract_page_metadata(df: DataFrame) -> DataFrame:
     """(doc_id, html) → typed page metadata: OpenGraph title/type, the
     article publish date (og `article:published_time` falling back to
     `date`), and the raw JSON-LD payload for downstream Catalyst
     ``from_json`` (schema-pinned, like every JSON parse in the
     engine). One narrow mapInPandas pass, one output row per page —
     no shuffle, no amplification."""
-    from pero_ocr_spark.operators import spread_scan
+    pruned = spread_scan(df.select("doc_id", "html"))
 
-    pruned = spread_scan(df.select("doc_id", html_col))
+    def per_row(doc_id, html):
+        p = _MetaParser()
+        if html is not None:
+            p.feed(html)  # null page -> all-null metadata row
+        date = p.meta.get("article:published_time") or p.meta.get("date")
+        return [(doc_id, p.meta.get("og:title"), p.meta.get("og:type"),
+                 date, p.ld_json)]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "og_title": [], "og_type": [],
-                "article_date": [], "ld_json": [],
-            }
-            for doc_id, html in zip(pdf["doc_id"], pdf[html_col]):
-                p = _MetaParser()
-                if html is not None:
-                    p.feed(html)  # null page -> all-null metadata row
-                out["doc_id"].append(doc_id)
-                out["og_title"].append(p.meta.get("og:title"))
-                out["og_type"].append(p.meta.get("og:type"))
-                out["article_date"].append(
-                    p.meta.get("article:published_time") or p.meta.get("date")
-                )
-                out["ld_json"].append(p.ld_json)
-            yield pd.DataFrame(out)
-
-    return pruned.mapInPandas(gen, schema=META_SCHEMA)
+    return flat_map_in_pandas(pruned, per_row, META_SCHEMA)
 
 
 def synthesize_html_meta(docs: DataFrame) -> DataFrame:

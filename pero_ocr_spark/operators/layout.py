@@ -172,9 +172,7 @@ def textline_polygons(lines: DataFrame) -> DataFrame:
     """L14: baseline → textline polygon extent. For a straight 2-point
     baseline the polygon is exactly the rect (x0, y-asc) … (x1,
     y+desc), so this is a PURE column expression — whole-stage
-    codegen, no Python. The general multi-point kernel
-    (``geometry.baseline_to_textline``, per-vertex normals) remains
-    for curved baselines and is what the map-parsing path uses."""
+    codegen, no Python."""
     return lines.select(
         "doc_id",
         "line_id",
@@ -301,9 +299,7 @@ def assign_lines_to_regions(lines: DataFrame, regions: DataFrame) -> DataFrame:
     # exact geometry: for a straight baseline's rect textline against
     # a rect region, the Sutherland–Hodgman clip reduces to interval
     # intersection — a PURE column predicate + projection, so the whole
-    # join stays in whole-stage codegen with no Python stage. The
-    # general polygon kernel (``geometry.clip_polygon``) remains for
-    # non-rect regions (e.g. hulls from the map-parsing path).
+    # join stays in whole-stage codegen with no Python stage.
     cx0 = F.greatest(F.col("x0"), F.col("rx0"))
     cx1 = F.least(F.col("x1"), F.col("rx1"))
     cy0 = F.greatest(F.col("y") - F.col("asc"), F.col("ry0"))

@@ -25,7 +25,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from pero_ocr_spark.functions import imageproc
-from pero_ocr_spark.operators import grouped_map_in_pandas, shuffle_width
+from pero_ocr_spark.operators import (
+    flat_map_in_pandas,
+    grouped_map_in_pandas,
+    shuffle_width,
+)
 from pero_ocr_spark.operators.layout import PAGE_W
 
 ASC_INK = 10  # ink band rows above (and including) the baseline row
@@ -512,36 +516,30 @@ def adaptive_resolution_stage(docs: DataFrame) -> DataFrame:
     passes ran."""
     from pero_ocr_spark.functions import mapparse
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                h = float(r.line_h)
-                npx = 64 if bool(r.sparse) else 400  # vs threshold 100
-                calls = 0
+    def per_row(doc_id, line_h, sparse, ds0):
+        h = float(line_h)
+        npx = 64 if bool(sparse) else 400  # vs threshold 100
+        calls = 0
 
-                def map_fn(ds, h=h, npx=npx):
-                    nonlocal calls
-                    calls += 1
-                    m = np.zeros((24, 24, 5), dtype=np.float64)
-                    # .flat writes through the channel view regardless
-                    # of strides (reshape(-1) may silently copy)
-                    m[:, :, 2].flat[:npx] = 1.0
-                    m[:, :, 0] = h / ds
-                    return m
+        def map_fn(ds):
+            nonlocal calls
+            calls += 1
+            m = np.zeros((24, 24, 5), dtype=np.float64)
+            # .flat writes through the channel view regardless
+            # of strides (reshape(-1) may silently copy)
+            m[:, :, 2].flat[:npx] = 1.0
+            m[:, :, 0] = h / ds
+            return m
 
-                _, ds = mapparse.get_maps_with_optimal_resolution(
-                    map_fn, (1000, 1000), downsample=float(r.ds0)
-                )
-                rows.append(
-                    {
-                        "doc_id": int(r.doc_id),
-                        "ds": round(float(ds), 6),
-                        "n_runs": calls,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "ds", "n_runs"])
+        _, ds = mapparse.get_maps_with_optimal_resolution(
+            map_fn, (1000, 1000), downsample=float(ds0)
+        )
+        return [(int(doc_id), round(float(ds), 6), calls)]
 
-    return docs.repartition(shuffle_width(docs.sparkSession), "doc_id").mapInPandas(
-        run, schema="doc_id long, ds double, n_runs long"
+    return flat_map_in_pandas(
+        docs.select("doc_id", "line_h", "sparse", "ds0").repartition(
+            shuffle_width(docs.sparkSession), "doc_id"
+        ),
+        per_row,
+        "doc_id long, ds double, n_runs long",
     )

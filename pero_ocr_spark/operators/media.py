@@ -1,28 +1,23 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Media payloads are opaque ``binary`` columns with typed metadata; the
-decode / feature-extract kernels run as Arrow-batched ``mapInPandas``
-stages with a per-executor lazily-initialized decoder session — the
-same cached-session pattern as model inference (reference analog:
-per-process model load in ``ocr_engine/line_ocr_engine.py:57-77``).
+decode / feature-extract kernels run as Arrow-batched per-row stages
+(``operators.flat_map_in_pandas``).
 
 The actual image/audio codecs are NOT in this container, so the decode
-step is STUBBED: ``decode_media(..., real=True)`` raises
-NotImplementedError where cv2/PIL/ffmpeg would be called, and the
-default path produces a deterministic fake decode (dimensions/frames
-derived arithmetically from the media position) — the Spark-side
-plumbing (schema, partitioning, UDF signature, Arrow batch shape) is
-real and oracle-tested.
+step is STUBBED: it produces a deterministic fake decode
+(dimensions/frames derived arithmetically from the media position) —
+the Spark-side plumbing (schema, partitioning, UDF signature, Arrow
+batch shape) is real and oracle-tested.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pero_ocr_spark.operators import flat_map_in_pandas
 
 MEDIA_META_SCHEMA = (
     "doc_id long, media_ref string, fmt string, width long, height long, "
@@ -52,34 +47,16 @@ def _fake_decode(ref: str) -> tuple[str, int, int, int]:
     return fmt, width, height, n_frames
 
 
-def decode_media(media: DataFrame, real: bool = False) -> DataFrame:
-    """Decode stage: payload binary → typed metadata (+ pixels in the
-    real path). Arrow-batched; one decoder session per executor."""
+def decode_media(media: DataFrame) -> DataFrame:
+    """Decode stage: payload binary → typed metadata. Arrow-batched."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-executor lazy session init would happen here (e.g. a
-        # cv2/ffmpeg context); the stub needs none.
-        if real:
-            raise NotImplementedError(
-                "real media decoding requires cv2/PIL/ffmpeg, not present "
-                "in this environment; plumbing is exercised via the "
-                "deterministic fake path"
-            )
-        for pdf in batches:
-            meta = [_fake_decode(r) for r in pdf["media_ref"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_ref": pdf["media_ref"],
-                    "fmt": [m[0] for m in meta],
-                    "width": [m[1] for m in meta],
-                    "height": [m[2] for m in meta],
-                    "n_frames": [m[3] for m in meta],
-                    "n_bytes": pdf["payload"].map(len),
-                }
-            )
+    def per_row(doc_id, ref, payload):
+        return [(doc_id, ref, *_fake_decode(ref), len(payload))]
 
-    return media.mapInPandas(run, schema=MEDIA_META_SCHEMA)
+    return flat_map_in_pandas(
+        media.select("doc_id", "media_ref", "payload"), per_row,
+        MEDIA_META_SCHEMA,
+    )
 
 
 def media_features(decoded: DataFrame, dim: int = 8) -> DataFrame:
@@ -87,23 +64,14 @@ def media_features(decoded: DataFrame, dim: int = 8) -> DataFrame:
     media item (hash-seeded), emitted as array<float> — the schema and
     batch shape a real CLIP/audio encoder would produce."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for ref in pdf["media_ref"]:
-                seed = sum(ord(c) for c in ref) % 997
-                vec = np.cos(np.arange(dim, dtype=np.float64) + seed)
-                feats.append(vec.astype(np.float32))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_ref": pdf["media_ref"],
-                    "feature": feats,
-                }
-            )
+    def per_row(doc_id, ref):
+        seed = sum(ord(c) for c in ref) % 997
+        vec = np.cos(np.arange(dim, dtype=np.float64) + seed)
+        return [(doc_id, ref, vec.astype(np.float32))]
 
-    return decoded.mapInPandas(
-        run, schema="doc_id long, media_ref string, feature array<float>"
+    return flat_map_in_pandas(
+        decoded.select("doc_id", "media_ref"), per_row,
+        "doc_id long, media_ref string, feature array<float>",
     )
 
 

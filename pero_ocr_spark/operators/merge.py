@@ -66,34 +66,21 @@ def confusion_network_stage(
     array is one map-side collect_list if the hypotheses arrive as
     rows). Emits the best path through each sausage plus its size
     (positions / total arcs)."""
-    import pandas as pd
-
     from pero_ocr_spark.functions import kernels
+    from pero_ocr_spark.operators import flat_map_in_pandas
 
-    def run(batches):
-        for pdf in batches:
-            best, npos, narcs = [], [], []
-            for hl in pdf["hyps"]:
-                cn = kernels.confusion_network(
-                    [(h["text"], float(h["vis"]), float(h["lm"])) for h in hl],
-                    visual_weight=visual_weight,
-                    lm_weight=lm_weight,
-                )
-                best.append(kernels.best_cn_path(cn))
-                npos.append(len(cn))
-                narcs.append(sum(len(p) for p in cn))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "ord": pdf["ord"],
-                    "best_path": best,
-                    "n_positions": npos,
-                    "n_arcs": narcs,
-                }
-            )
+    def per_row(doc_id, ord_, hl):
+        cn = kernels.confusion_network(
+            [(h["text"], float(h["vis"]), float(h["lm"])) for h in hl],
+            visual_weight=visual_weight,
+            lm_weight=lm_weight,
+        )
+        n_arcs = sum(len(p) for p in cn)
+        return [(doc_id, ord_, kernels.best_cn_path(cn), len(cn), n_arcs)]
 
-    return hyps_df.mapInPandas(
-        run,
-        schema="doc_id long, ord long, best_path string, "
+    return flat_map_in_pandas(
+        hyps_df.select("doc_id", "ord", "hyps"),
+        per_row,
+        "doc_id long, ord long, best_path string, "
         "n_positions long, n_arcs long",
     )

@@ -27,7 +27,6 @@ Timestamps are injected constants so exports are byte-deterministic
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
 from functools import lru_cache
 from xml.sax.saxutils import escape, quoteattr
 
@@ -38,6 +37,7 @@ from pyspark.sql import DataFrame
 from pero_ocr_spark.functions import geometry as G
 from pero_ocr_spark.functions import kernels
 from pero_ocr_spark.functions import page_utils as U
+from pero_ocr_spark.operators import flat_map_in_pandas
 from pero_ocr_spark.operators.ctc import CHARSET, synth_line_logits
 
 CREATED = "2026-01-01T00:00:00+00:00"  # injected, deterministic
@@ -52,29 +52,6 @@ LINES_DDL = (
     "height_up double, height_down double, "
     "transcription string, confidence double"
 )
-
-_EMPTY = {
-    "doc_id": "int64",
-    "page_id": "object",
-    "page_h": "int64",
-    "page_w": "int64",
-    "region_id": "object",
-    "region_type": "object",
-    "region_order": "int64",
-    "line_id": "object",
-    "idx": "int64",
-    "baseline": "object",
-    "polygon": "object",
-    "height_up": "float64",
-    "height_down": "float64",
-    "transcription": "object",
-    "confidence": "float64",
-}
-
-
-def _empty_lines_pdf() -> pd.DataFrame:
-    return pd.DataFrame({c: pd.Series(dtype=t) for c, t in _EMPTY.items()})
-
 
 def _pts(p) -> np.ndarray:
     """Arrow array<array<double>> cells arrive as object-dtype arrays
@@ -193,7 +170,8 @@ def export_pcgts(lines: DataFrame, creator: str = "pero-ocr-spark") -> DataFrame
 
 # ------------------------------------------------------------- import
 
-def _parse_pcgts(doc_id: int, xml: str) -> list[dict]:
+def _parse_pcgts(doc_id: int, xml: str):
+    """One PcGts document → its lines, as LINES_DDL tuples."""
     root = ET.fromstring(xml)
     ns = U.element_schema(root.tag)
     page = root.find(f"{ns}Page")
@@ -208,7 +186,6 @@ def _parse_pcgts(doc_id: int, xml: str) -> list[dict]:
             for ref in og.iter(f"{ns}RegionRefIndexed"):
                 order[ref.get("regionRef")] = int(ref.get("index"))
 
-    rows = []
     for region in root.iter(f"{ns}TextRegion"):
         rid = region.get("id")
         rtype = region.get("type", "")
@@ -247,26 +224,13 @@ def _parse_pcgts(doc_id: int, xml: str) -> list[dict]:
                 text = (uni.text if uni is not None else "") or ""
                 c = te.get("conf")
                 conf = float(c) if c is not None else None
-            rows.append(
-                {
-                    "doc_id": doc_id,
-                    "page_id": page_id,
-                    "page_h": page_h,
-                    "page_w": page_w,
-                    "region_id": rid,
-                    "region_type": rtype,
-                    "region_order": order.get(rid, -1),
-                    "line_id": line.get("id"),
-                    "idx": idx,
-                    "baseline": baseline.astype(float).tolist(),
-                    "polygon": polygon.astype(float).tolist(),
-                    "height_up": float(heights[0]),
-                    "height_down": float(heights[1]),
-                    "transcription": text,
-                    "confidence": conf,
-                }
+            yield (
+                doc_id, page_id, page_h, page_w, rid, rtype,
+                order.get(rid, -1), line.get("id"), idx,
+                baseline.astype(float).tolist(),
+                polygon.astype(float).tolist(),
+                float(heights[0]), float(heights[1]), text, conf,
             )
-    return rows
 
 
 def import_pcgts(xml_df: DataFrame) -> DataFrame:
@@ -275,14 +239,10 @@ def import_pcgts(xml_df: DataFrame) -> DataFrame:
     heights regexes, missing-heights polygon guessing, and skipping
     baseline-less lines."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for doc_id, xml in zip(pdf["doc_id"], pdf["xml"]):
-                rows.extend(_parse_pcgts(int(doc_id), xml))
-            yield pd.DataFrame(rows) if rows else _empty_lines_pdf()
+    def per_row(doc_id, xml):
+        return _parse_pcgts(int(doc_id), xml)
 
-    return xml_df.mapInPandas(run, schema=LINES_DDL)
+    return flat_map_in_pandas(xml_df.select("doc_id", "xml"), per_row, LINES_DDL)
 
 
 # -------------------------------------------------------- ALTO (S3/S6)
@@ -413,64 +373,33 @@ def import_alto(xml_df: DataFrame) -> DataFrame:
     line ids or reading order; idx = document order of TextLines,
     line_id = '' and region_order = block document order."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for doc_id, xml in zip(pdf["doc_id"], pdf["xml"]):
-                root = ET.fromstring(xml)
-                ns = U.element_schema(root.tag)
-                page = root.find(f"{ns}Layout/{ns}Page")
-                page_id = page.get("ID", "xml")[3:]
-                page_h = int(page.get("HEIGHT", 0))
-                page_w = int(page.get("WIDTH", 0))
-                ps = page.find(f"{ns}PrintSpace")
-                for ri, block in enumerate(ps.iter(f"{ns}TextBlock")):
-                    rid = block.get("ID")
-                    for li, line in enumerate(block.iter(f"{ns}TextLine")):
-                        hpos = int(line.get("HPOS"))
-                        vpos = int(line.get("VPOS"))
-                        width = int(line.get("WIDTH"))
-                        height = int(line.get("HEIGHT"))
-                        base_y = int(line.get("BASELINE"))
-                        words = [
-                            s.get("CONTENT")
-                            for s in line.iter(f"{ns}String")
-                        ]
-                        rows.append(
-                            {
-                                "doc_id": int(doc_id),
-                                "page_id": page_id,
-                                "page_h": page_h,
-                                "page_w": page_w,
-                                "region_id": rid,
-                                "region_type": "",
-                                "region_order": ri,
-                                "line_id": "",
-                                "idx": li,
-                                "baseline": [
-                                    [float(hpos), float(base_y)],
-                                    [float(hpos + width), float(base_y)],
-                                ],
-                                "polygon": [
-                                    [float(hpos), float(vpos)],
-                                    [float(hpos + width), float(vpos)],
-                                    [
-                                        float(hpos + width),
-                                        float(vpos + height),
-                                    ],
-                                    [float(hpos), float(vpos + height)],
-                                ],
-                                "height_up": float(
-                                    height + vpos - base_y
-                                ),
-                                "height_down": float(base_y - vpos),
-                                "transcription": " ".join(words),
-                                "confidence": None,
-                            }
-                        )
-            yield pd.DataFrame(rows) if rows else _empty_lines_pdf()
+    def per_row(doc_id, xml):
+        root = ET.fromstring(xml)
+        ns = U.element_schema(root.tag)
+        page = root.find(f"{ns}Layout/{ns}Page")
+        page_id = page.get("ID", "xml")[3:]
+        page_h = int(page.get("HEIGHT", 0))
+        page_w = int(page.get("WIDTH", 0))
+        ps = page.find(f"{ns}PrintSpace")
+        for ri, block in enumerate(ps.iter(f"{ns}TextBlock")):
+            rid = block.get("ID")
+            for li, line in enumerate(block.iter(f"{ns}TextLine")):
+                hpos, vpos, width, height, base_y = (
+                    int(line.get(a))
+                    for a in ("HPOS", "VPOS", "WIDTH", "HEIGHT", "BASELINE")
+                )
+                x0, x1, y0, y1, by = map(
+                    float, (hpos, hpos + width, vpos, vpos + height, base_y)
+                )
+                words = [s.get("CONTENT") for s in line.iter(f"{ns}String")]
+                yield (
+                    int(doc_id), page_id, page_h, page_w, rid, "", ri, "", li,
+                    [[x0, by], [x1, by]],
+                    [[x0, y0], [x1, y0], [x1, y1], [x0, y1]],
+                    y1 - by, by - y0, " ".join(words), None,
+                )
 
-    return xml_df.mapInPandas(run, schema=LINES_DDL)
+    return flat_map_in_pandas(xml_df.select("doc_id", "xml"), per_row, LINES_DDL)
 
 
 WORDS_DDL = (
@@ -486,44 +415,20 @@ def import_alto_words(xml_df: DataFrame) -> DataFrame:
     ``import_alto`` (which joins CONTENTs into line transcriptions).
     The reference reads the same attributes when logits/transcription
     need word re-anchoring (core/layout.py:602-651 String handling)."""
-    import xml.etree.ElementTree as _ET
+    def per_row(doc_id, xml):
+        root = ET.fromstring(xml)
+        ns = U.element_schema(root.tag)
+        ps = root.find(f"{ns}Layout/{ns}Page/{ns}PrintSpace")
+        for ri, block in enumerate(ps.iter(f"{ns}TextBlock")):
+            rid = block.get("ID")
+            for li, line in enumerate(block.iter(f"{ns}TextLine")):
+                for wi, s in enumerate(line.iter(f"{ns}String")):
+                    wc = s.get("WC")
+                    yield (
+                        int(doc_id), rid, ri, li, wi, s.get("CONTENT"),
+                        int(s.get("HPOS")), int(s.get("VPOS")),
+                        int(s.get("WIDTH")), int(s.get("HEIGHT")),
+                        float(wc) if wc is not None else None,
+                    )
 
-    cols = [
-        "doc_id", "region_id", "region_order", "idx",
-        "word_idx", "content", "hpos", "vpos", "width", "height", "wc",
-    ]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for doc_id, xml in zip(pdf["doc_id"], pdf["xml"]):
-                root = _ET.fromstring(xml)
-                ns = U.element_schema(root.tag)
-                ps = root.find(f"{ns}Layout/{ns}Page/{ns}PrintSpace")
-                for ri, block in enumerate(ps.iter(f"{ns}TextBlock")):
-                    rid = block.get("ID")
-                    for li, line in enumerate(block.iter(f"{ns}TextLine")):
-                        for wi, s in enumerate(line.iter(f"{ns}String")):
-                            wc = s.get("WC")
-                            rows.append(
-                                {
-                                    "doc_id": int(doc_id),
-                                    "region_id": rid,
-                                    "region_order": ri,
-                                    "idx": li,
-                                    "word_idx": wi,
-                                    "content": s.get("CONTENT"),
-                                    "hpos": int(s.get("HPOS")),
-                                    "vpos": int(s.get("VPOS")),
-                                    "width": int(s.get("WIDTH")),
-                                    "height": int(s.get("HEIGHT")),
-                                    "wc": float(wc) if wc is not None else None,
-                                }
-                            )
-            yield (
-                pd.DataFrame(rows)
-                if rows
-                else pd.DataFrame({c: [] for c in cols})
-            )
-
-    return xml_df.mapInPandas(run, schema=WORDS_DDL)
+    return flat_map_in_pandas(xml_df.select("doc_id", "xml"), per_row, WORDS_DDL)

@@ -49,7 +49,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pero_ocr_spark.operators import grouped_batches_in_pandas
+from pero_ocr_spark.operators import flat_map_in_pandas, grouped_batches_in_pandas
 
 PAGE_W, PAGE_H = 595, 842          # A4 in points
 LINES_PER_PAGE = 48
@@ -342,19 +342,12 @@ def parse_pdf_spans(pdfs: DataFrame) -> DataFrame:
     """Searchable PDFs → interleaved span sequence. Stateless
     ``mapInPandas``; reading order reconstructed from geometry."""
 
-    def emit(pdf_iter):
-        for pdf in pdf_iter:
-            out = {k: [] for k in
-                   ("doc_id", "ord", "kind", "text", "media_ref")}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["pdf"]):
-                for o, (pg, y, x, kind, payload) in enumerate(
-                    parse_pdf(bytes(blob))
-                ):
-                    out["doc_id"].append(int(doc_id))
-                    out["ord"].append(o)
-                    out["kind"].append(kind)
-                    out["text"].append("" if kind == "media" else payload)
-                    out["media_ref"].append(payload if kind == "media" else "")
-            yield pd.DataFrame(out)
+    def per_row(doc_id, blob):
+        for o, (pg, y, x, kind, payload) in enumerate(parse_pdf(bytes(blob))):
+            media = kind == "media"
+            yield (int(doc_id), o, kind, "" if media else payload,
+                   payload if media else "")
 
-    return pdfs.mapInPandas(emit, schema=_SPAN_SCHEMA)
+    return flat_map_in_pandas(
+        pdfs.select("doc_id", "pdf"), per_row, _SPAN_SCHEMA
+    )

@@ -38,7 +38,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pero_ocr_spark.operators import grouped_map_in_pandas
+from pero_ocr_spark.operators import flat_map_in_pandas, grouped_map_in_pandas
 
 WARC_DATE = "2026-01-01T00:00:00Z"   # deterministic capture timestamp
 _REASON = {200: "OK", 404: "Not Found", 301: "Moved Permanently"}
@@ -310,26 +310,13 @@ def synthesize_warc_shards(
 def parse_warc_records(shards: DataFrame) -> DataFrame:
     """(shard_id, warc) → one row per archived HTTP response."""
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("shard_id", "rec_index", "doc_id", "url", "status",
-                     "content_type", "location", "body")}
-            for sid, blob in zip(pdf["shard_id"], pdf["warc"]):
-                for idx, doc_id, url, status, ctype, loc, body in parse_warc_shard(
-                    bytes(blob)
-                ):
-                    rows["shard_id"].append(int(sid))
-                    rows["rec_index"].append(idx)
-                    rows["doc_id"].append(doc_id)
-                    rows["url"].append(url)
-                    rows["status"].append(status)
-                    rows["content_type"].append(ctype)
-                    rows["location"].append(loc)
-                    rows["body"].append(body)
-            yield pd.DataFrame(rows)
+    def per_row(sid, blob):
+        for rec in parse_warc_shard(bytes(blob)):
+            yield int(sid), *rec
 
-    return shards.select("shard_id", "warc").mapInPandas(gen, schema=_REC_SCHEMA)
+    return flat_map_in_pandas(
+        shards.select("shard_id", "warc"), per_row, _REC_SCHEMA
+    )
 
 
 _CDX_SCHEMA = StructType([
@@ -351,27 +338,16 @@ def cdx_index(shards: DataFrame) -> DataFrame:
     property a downstream range-fetch reader depends on. Stateless
     ``mapInPandas``; scales with shard count like the record parse."""
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("shard_id", "rec_index", "doc_id", "url", "status",
-                     "rec_offset", "rec_length", "verified")}
-            for sid, blob in zip(pdf["shard_id"], pdf["warc"]):
-                buf = bytes(blob)
-                for idx, doc_id, url, status, off, length in index_warc_shard(buf):
-                    sliced = parse_warc_shard(buf[off : off + length])
-                    ok = len(sliced) == 1 and sliced[0][1] == doc_id
-                    rows["shard_id"].append(int(sid))
-                    rows["rec_index"].append(idx)
-                    rows["doc_id"].append(doc_id)
-                    rows["url"].append(url)
-                    rows["status"].append(status)
-                    rows["rec_offset"].append(off)
-                    rows["rec_length"].append(length)
-                    rows["verified"].append(int(ok))
-            yield pd.DataFrame(rows)
+    def per_row(sid, blob):
+        buf = bytes(blob)
+        for idx, doc_id, url, status, off, length in index_warc_shard(buf):
+            sliced = parse_warc_shard(buf[off : off + length])
+            ok = len(sliced) == 1 and sliced[0][1] == doc_id
+            yield int(sid), idx, doc_id, url, status, off, length, int(ok)
 
-    return shards.select("shard_id", "warc").mapInPandas(gen, schema=_CDX_SCHEMA)
+    return flat_map_in_pandas(
+        shards.select("shard_id", "warc"), per_row, _CDX_SCHEMA
+    )
 
 
 def resolve_redirects(recs: DataFrame, max_hops: int = 4) -> DataFrame:
@@ -536,45 +512,37 @@ def parse_sitemaps(sitemaps: DataFrame) -> DataFrame:
     contributes ONE (host, null-url) quarantine marker row (observable
     loss, filtered by verdicts), and a junk ``<priority>`` nulls out —
     fetched input degrades, it never kills the job."""
-    from collections.abc import Iterator
     from xml.etree import ElementTree
 
     NS = "{http://www.sitemaps.org/schemas/sitemap/0.9}"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "host": [], "url": [], "lastmod": [], "priority": [],
-            }
-            for host_val, xml in zip(pdf["host"], pdf["xml"]):
-                try:
-                    root = ElementTree.fromstring(xml)
-                except ElementTree.ParseError:
-                    # degrade observably: a (host, null-url) marker row
-                    # records that this shard was torn — downstream
-                    # verdicts filter null urls, monitors count them
-                    out["host"].append(host_val)
-                    out["url"].append(None)
-                    out["lastmod"].append(None)
-                    out["priority"].append(None)
-                    continue
-                for u in root.iter(f"{NS}url"):
-                    loc = u.find(f"{NS}loc")
-                    lastmod = u.find(f"{NS}lastmod")
-                    prio = u.find(f"{NS}priority")
-                    try:
-                        pv = float(prio.text) if prio is not None else None
-                    except (TypeError, ValueError):
-                        pv = None  # '<priority>high</priority>' -> null
-                    out["host"].append(host_val)
-                    out["url"].append(loc.text if loc is not None else None)
-                    out["lastmod"].append(
-                        lastmod.text if lastmod is not None else None
-                    )
-                    out["priority"].append(pv)
-            yield pd.DataFrame(out)
+    def per_row(host_val, xml):
+        try:
+            root = ElementTree.fromstring(xml)
+        except ElementTree.ParseError:
+            # degrade observably: a (host, null-url) marker row
+            # records that this shard was torn — downstream
+            # verdicts filter null urls, monitors count them
+            yield host_val, None, None, None
+            return
+        for u in root.iter(f"{NS}url"):
+            loc = u.find(f"{NS}loc")
+            lastmod = u.find(f"{NS}lastmod")
+            prio = u.find(f"{NS}priority")
+            try:
+                pv = float(prio.text) if prio is not None else None
+            except (TypeError, ValueError):
+                pv = None  # '<priority>high</priority>' -> null
+            yield (
+                host_val,
+                loc.text if loc is not None else None,
+                lastmod.text if lastmod is not None else None,
+                pv,
+            )
 
-    return sitemaps.select("host", "xml").mapInPandas(gen, schema=_SITEMAP_SCHEMA)
+    return flat_map_in_pandas(
+        sitemaps.select("host", "xml"), per_row, _SITEMAP_SCHEMA
+    )
 
 
 def sitemap_recrawl_verdicts(
@@ -647,7 +615,6 @@ def parse_robots_txt(robots: DataFrame) -> DataFrame:
     (Crawl-delay, Sitemap) skipped; empty patterns emit no rule. One
     narrow mapInPandas pass over the host-bounded robots table."""
     import re as _re
-    from collections.abc import Iterator
 
     def pattern_re(p: str) -> str:
         anchored = p.endswith("$")
@@ -658,42 +625,31 @@ def parse_robots_txt(robots: DataFrame) -> DataFrame:
             + ("$" if anchored else "")
         )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "host": [], "agent": [], "is_allow": [], "pattern": [],
-                "pattern_re": [], "plen": [],
-            }
-            for host_val, body in zip(pdf["host"], pdf["body"]):
-                agents: list[str] = []
-                in_group_rules = False
-                for raw in (body or "").splitlines():
-                    line = raw.split("#", 1)[0].strip()
-                    if not line or ":" not in line:
-                        continue
-                    key, _, val = line.partition(":")
-                    key, val = key.strip().lower(), val.strip()
-                    if key == "user-agent":
-                        if in_group_rules:
-                            agents = []
-                            in_group_rules = False
-                        agents.append(val.lower())
-                    elif key in ("allow", "disallow"):
-                        in_group_rules = True
-                        if not val:
-                            continue  # empty pattern matches nothing
-                        for a in agents:
-                            out["host"].append(host_val)
-                            out["agent"].append(a)
-                            out["is_allow"].append(key == "allow")
-                            out["pattern"].append(val)
-                            out["pattern_re"].append(pattern_re(val))
-                            out["plen"].append(len(val))
-                    # anything else (crawl-delay, sitemap, ...) skipped
-            yield pd.DataFrame(out)
+    def per_row(host_val, body):
+        agents: list[str] = []
+        in_group_rules = False
+        for raw in (body or "").splitlines():
+            line = raw.split("#", 1)[0].strip()
+            if not line or ":" not in line:
+                continue
+            key, _, val = line.partition(":")
+            key, val = key.strip().lower(), val.strip()
+            if key == "user-agent":
+                if in_group_rules:
+                    agents = []
+                    in_group_rules = False
+                agents.append(val.lower())
+            elif key in ("allow", "disallow"):
+                in_group_rules = True
+                if not val:
+                    continue  # empty pattern matches nothing
+                for a in agents:
+                    yield (host_val, a, key == "allow", val,
+                           pattern_re(val), len(val))
+            # anything else (crawl-delay, sitemap, ...) skipped
 
-    return robots.select("host", "body").mapInPandas(
-        gen, schema=_ROBOTS_RULE_SCHEMA
+    return flat_map_in_pandas(
+        robots.select("host", "body"), per_row, _ROBOTS_RULE_SCHEMA
     )
 
 

@@ -341,37 +341,36 @@ def enriched_tier_totals_streaming(
     return spark.table(name)
 
 
-def view_click_attribution_streaming(
-    spark: SparkSession,
-    sf_dir: str,
-    max_lag_hours: int = 6,
-    watermark: str = "12 hours",
-    state_partitions: int | None = 8,
-) -> DataFrame:
-    """Stream-stream interval join with watermarks — the attribution
-    pattern: every click joined to the same user's views from the
-    preceding ``max_lag_hours``.
+# The view→click stream-stream interval join: a click attributes to
+# the same user's views of the preceding MAX_LAG_HOURS, each side
+# carries a WATERMARK delay, and the join state is partitioned
+# STATE_PARTITIONS ways (see _view_click_pairs).
+MAX_LAG_HOURS = 6
+WATERMARK = "12 hours"
+STATE_PARTITIONS = 8
+
+
+def _view_click_pairs(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Run the view→click stream-stream interval join (``how`` is
+    ``"inner"`` or ``"leftOuter"``) to an append-mode memory sink and
+    return the sink's table.
 
     Both sides are independent streams with their own watermark; the
     time-range predicate (click in [view, view + lag]) lets Spark
     BOUND the join state — a view older than watermark + lag can never
     match a future click and is evicted, so state is O(events per lag
-    window), not O(stream). The joined pairs land in an append-mode
-    sink; the per-user rollup (pairs + mean lag) runs batch on the
-    sink, keeping the streaming stage single-stateful.
+    window), not O(stream).
 
-    ``state_partitions`` pins the stream's shuffle-partition count for
-    the lifetime of the query (stream-stream join state is partitioned
-    once, at query start). Each state partition carries a state-store
-    instance whose per-micro-batch setup/commit is pure overhead when
-    the partition holds little state — at bench scale 32 stores cost
-    more than the join itself (26s → single digits at 8). On a real
-    cluster size it to executors × cores like any shuffle; ``None``
-    keeps the session setting. Join SEMANTICS are unaffected — the
-    predicate, watermarks, and eviction bound do not depend on the
-    partition count.
-
-    Output: (user_id, n_pairs, avg_lag_min).
+    The stream's shuffle-partition count is pinned to
+    ``STATE_PARTITIONS`` for the lifetime of the query and restored
+    after (stream-stream join state is partitioned once, at query
+    start). Each state partition carries a state-store instance whose
+    per-micro-batch setup/commit is pure overhead when the partition
+    holds little state — at bench scale 32 stores cost more than the
+    join itself (26s → single digits at 8). On a real cluster size it
+    to executors × cores like any shuffle. Join SEMANTICS are
+    unaffected — the predicate, watermarks, and eviction bound do not
+    depend on the partition count.
     """
     def side(event_type: str, alias_ts: str) -> DataFrame:
         return (
@@ -381,7 +380,7 @@ def view_click_attribution_streaming(
             .select(
                 "user_id", F.col("ts").cast("timestamp").alias(alias_ts)
             )
-            .withWatermark(alias_ts, watermark)
+            .withWatermark(alias_ts, WATERMARK)
         )
 
     views = side("view", "view_ts")
@@ -391,14 +390,13 @@ def view_click_attribution_streaming(
         F.expr(
             f"""user_id = c_user
                 AND click_ts >= view_ts
-                AND click_ts <= view_ts + INTERVAL {max_lag_hours} HOURS"""
+                AND click_ts <= view_ts + INTERVAL {MAX_LAG_HOURS} HOURS"""
         ),
-        "inner",
+        how,
     )
-    name = f"attr_{uuid.uuid4().hex[:8]}"
+    name = f"view_click_{uuid.uuid4().hex[:8]}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     try:
         q = (
             pairs.writeStream.outputMode("append")
@@ -412,13 +410,28 @@ def view_click_attribution_streaming(
             q.stop()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return spark.table(name)
+
+
+def view_click_attribution_streaming(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Stream-stream interval join with watermarks — the attribution
+    pattern: every click joined to the same user's views from the
+    preceding ``MAX_LAG_HOURS`` (:func:`_view_click_pairs`). The
+    joined pairs land in an append-mode sink; the per-user rollup
+    (pairs + mean lag) runs batch on the sink, keeping the streaming
+    stage single-stateful.
+
+    Output: (user_id, n_pairs, avg_lag_min).
+    """
+    pairs = _view_click_pairs(spark, sf_dir, "inner")
     # lag in whole seconds is an exact integer — summing it keeps the
     # mean order-independent (a double avg differs in final ulps
     # between Spark's partial-agg tree and a sequential oracle)
     lag_sec = F.col("click_ts").cast("long") - F.col("view_ts").cast("long")
     return (
-        spark.table(name)
-        .groupBy("user_id")
+        pairs.groupBy("user_id")
         .agg(
             F.count("*").cast("long").alias("n_pairs"),
             F.sum(lag_sec).alias("lag_s"),
@@ -434,12 +447,7 @@ def view_click_attribution_streaming(
 
 
 def view_click_left_outer_streaming(
-    spark: SparkSession,
-    sf_dir: str,
-    max_lag_hours: int = 6,
-    watermark: str = "12 hours",
-    state_partitions: int | None = 8,
-    safety_margin: str = "1 hour",
+    spark: SparkSession, sf_dir: str, safety_margin: str = "1 hour"
 ) -> DataFrame:
     """Stream-stream LEFT OUTER interval join with watermarks — the
     semantics :func:`view_click_attribution_streaming` cannot show:
@@ -471,45 +479,7 @@ def view_click_left_outer_streaming(
     Output: (user_id, n_views, n_matched, n_orphans) per user over
     the reportable window.
     """
-    def side(event_type: str, alias_ts: str) -> DataFrame:
-        return (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .parquet(_stream_dir(sf_dir))
-            .where(F.col("event_type") == event_type)
-            .select(
-                "user_id", F.col("ts").cast("timestamp").alias(alias_ts)
-            )
-            .withWatermark(alias_ts, watermark)
-        )
-
-    views = side("view", "view_ts")
-    clicks = side("click", "click_ts").withColumnRenamed("user_id", "c_user")
-    pairs = views.join(
-        clicks,
-        F.expr(
-            f"""user_id = c_user
-                AND click_ts >= view_ts
-                AND click_ts <= view_ts + INTERVAL {max_lag_hours} HOURS"""
-        ),
-        "leftOuter",
-    )
-    name = f"louter_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            pairs.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    pairs = _view_click_pairs(spark, sf_dir, "leftOuter")
     # the deterministic reporting cutoff, from the BATCH data (same
     # arithmetic the oracle runs): global watermark = min of the two
     # sides' (max ts - delay); subtract lag + margin
@@ -523,20 +493,19 @@ def view_click_left_outer_streaming(
         .agg(
             F.min(
                 F.col("mx")
-                - F.expr(f"INTERVAL {watermark}")
+                - F.expr(f"INTERVAL {WATERMARK}")
             ).alias("gwm")
         )
         .select(
             (
                 F.col("gwm")
-                - F.expr(f"INTERVAL {max_lag_hours} HOURS")
+                - F.expr(f"INTERVAL {MAX_LAG_HOURS} HOURS")
                 - F.expr(f"INTERVAL {safety_margin}")
             ).alias("cutoff")
         )
     )
     return (
-        spark.table(name)
-        .crossJoin(F.broadcast(wm))
+        pairs.crossJoin(F.broadcast(wm))
         .where(F.col("view_ts") <= F.col("cutoff"))
         .groupBy("user_id")
         .agg(

@@ -6,7 +6,14 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from _geometry_ref import baseline_to_textline, point_in_polygon
+
 from pero_ocr_spark.functions import geometry as G
+
+
+def bbox(poly: np.ndarray) -> tuple[float, float, float, float]:
+    p = np.asarray(poly, dtype=np.float64)
+    return float(p[:, 0].min()), float(p[:, 1].min()), float(p[:, 0].max()), float(p[:, 1].max())
 
 
 def _area(poly) -> float:
@@ -60,10 +67,10 @@ class TestConvexHull:
         assert len(hull) <= 2 or _area(hull) == 0
 
     def test_retrace_region_covers_lines(self):
-        l1 = G.baseline_to_textline(np.array([[0.0, 20.0], [50.0, 20.0]]), 10, 4)
-        l2 = G.baseline_to_textline(np.array([[5.0, 50.0], [60.0, 50.0]]), 10, 4)
+        l1 = baseline_to_textline(np.array([[0.0, 20.0], [50.0, 20.0]]), 10, 4)
+        l2 = baseline_to_textline(np.array([[5.0, 50.0], [60.0, 50.0]]), 10, 4)
         region = G.retrace_region([l1, l2])
-        x0, y0, x1, y1 = G.bbox(region)
+        x0, y0, x1, y1 = bbox(region)
         assert abs(x0) < 1e-9 and x1 == 60.0
         assert y0 == 10.0 and y1 == 54.0
         assert _area(region) > 0
@@ -92,12 +99,12 @@ class TestAlphaShape:
         hull = G.retrace_region(lines)
         # the notch (upper right, far from any line) is inside the hull
         # but outside the alpha shape
-        assert G.point_in_polygon(100.0, 90.0, hull)
-        assert not G.point_in_polygon(100.0, 90.0, poly)
+        assert point_in_polygon(100.0, 90.0, hull)
+        assert not point_in_polygon(100.0, 90.0, poly)
         # every textline vertex is covered
         for p in lines:
             for v in p:
-                assert G.point_in_polygon(v[0], v[1], poly)
+                assert point_in_polygon(v[0], v[1], poly)
         # area strictly between the union floor and the hull
         assert _area(poly) < _area(hull)
 

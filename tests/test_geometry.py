@@ -7,7 +7,50 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from _geometry_ref import (
+    baseline_to_textline,
+    merge_lines,
+    point_in_polygon,
+    xy_cut_order,
+)
+
 from pero_ocr_spark.functions import geometry as G
+
+
+def clip_polygon(subject: np.ndarray, clip: np.ndarray) -> np.ndarray:
+    """Sutherland–Hodgman: clip subject polygon by a CONVEX clip
+    polygon (counter-clockwise or clockwise consistent). Returns the
+    clipped polygon (possibly empty)."""
+    def inside(p, a, b):
+        return (b[0] - a[0]) * (p[1] - a[1]) - (b[1] - a[1]) * (p[0] - a[0]) >= 0
+
+    def intersect(p1, p2, a, b):
+        d1 = np.asarray(p2) - np.asarray(p1)
+        d2 = np.asarray(b) - np.asarray(a)
+        denom = d1[0] * d2[1] - d1[1] * d2[0]
+        if denom == 0:
+            return np.asarray(p2, dtype=np.float64)
+        t = ((a[0] - p1[0]) * d2[1] - (a[1] - p1[1]) * d2[0]) / denom
+        return np.asarray(p1, dtype=np.float64) + t * d1
+
+    clip = np.asarray(clip, dtype=np.float64)
+    if G._signed_area(clip) < 0:
+        clip = clip[::-1]
+    out = [np.asarray(p, dtype=np.float64) for p in subject]
+    for a, b in zip(clip, np.roll(clip, -1, axis=0)):
+        if not out:
+            break
+        inp, out = out, []
+        prev = inp[-1]
+        for cur in inp:
+            if inside(cur, a, b):
+                if not inside(prev, a, b):
+                    out.append(intersect(prev, cur, a, b))
+                out.append(cur)
+            elif inside(prev, a, b):
+                out.append(intersect(prev, cur, a, b))
+            prev = cur
+    return np.asarray(out, dtype=np.float64).reshape(-1, 2)
 
 
 def _area(poly) -> float:
@@ -18,7 +61,7 @@ def _area(poly) -> float:
 class TestTextlinePolygon:
     def test_horizontal_baseline(self):
         b = np.array([[0.0, 100.0], [50.0, 100.0]])
-        poly = G.baseline_to_textline(b, asc=10, desc=4)
+        poly = baseline_to_textline(b, asc=10, desc=4)
         # up edge then reversed down edge
         np.testing.assert_allclose(
             poly,
@@ -28,13 +71,13 @@ class TestTextlinePolygon:
 
     def test_diagonal_baseline_normals(self):
         b = np.array([[0.0, 0.0], [10.0, 10.0]])
-        poly = G.baseline_to_textline(b, asc=np.sqrt(2), desc=np.sqrt(2))
+        poly = baseline_to_textline(b, asc=np.sqrt(2), desc=np.sqrt(2))
         np.testing.assert_allclose(poly[0], [1, -1], atol=1e-9)
         np.testing.assert_allclose(poly[-1], [-1, 1], atol=1e-9)
 
     def test_min_height_clamp(self):
         b = np.array([[0.0, 0.0], [10.0, 0.0]])
-        poly = G.baseline_to_textline(b, asc=0.1, desc=0.0)
+        poly = baseline_to_textline(b, asc=0.1, desc=0.0)
         assert poly[0][1] == -1.0  # clamped to 1
         assert poly[-1][1] == 1.0
 
@@ -63,7 +106,7 @@ class TestMergeLines:
     def test_adjacent_halves_merge(self):
         b1 = np.array([[0.0, 100.0], [40.0, 100.0]])
         b2 = np.array([[50.0, 100.0], [90.0, 100.0]])
-        merged_b, merged_h = G.merge_lines([b1, b2], [(10, 4), (10, 4)])
+        merged_b, merged_h = merge_lines([b1, b2], [(10, 4), (10, 4)])
         assert len(merged_b) == 1
         assert merged_h[0] == (10, 4)
         assert merged_b[0][0, 0] == pytest.approx(0.0)
@@ -72,27 +115,27 @@ class TestMergeLines:
     def test_stacked_lines_do_not_merge(self):
         b1 = np.array([[0.0, 100.0], [40.0, 100.0]])
         b2 = np.array([[0.0, 140.0], [40.0, 140.0]])
-        merged_b, _ = G.merge_lines([b1, b2], [(10, 4), (10, 4)])
+        merged_b, _ = merge_lines([b1, b2], [(10, 4), (10, 4)])
         assert len(merged_b) == 2
 
     def test_contained_lines_do_not_merge(self):
         outer = np.array([[0.0, 100.0], [100.0, 100.0]])
         inner = np.array([[30.0, 100.0], [60.0, 100.0]])
-        merged_b, _ = G.merge_lines([outer, inner], [(10, 4), (10, 4)])
+        merged_b, _ = merge_lines([outer, inner], [(10, 4), (10, 4)])
         assert len(merged_b) == 2
 
     def test_transitive_chain_merges_once(self):
         bs = [
             np.array([[x, 100.0], [x + 20.0, 100.0]]) for x in (0.0, 25.0, 50.0)
         ]
-        merged_b, _ = G.merge_lines(bs, [(10, 4)] * 3)
+        merged_b, _ = merge_lines(bs, [(10, 4)] * 3)
         assert len(merged_b) == 1
 
     def test_deterministic_order_same_y(self):
         b1 = np.array([[200.0, 100.0], [240.0, 100.0]])
         b2 = np.array([[0.0, 100.0], [40.0, 100.0]])
         for _ in range(3):
-            merged_b, _ = G.merge_lines([b1, b2], [(2, 1), (2, 1)])
+            merged_b, _ = merge_lines([b1, b2], [(2, 1), (2, 1)])
             assert merged_b[0][0, 0] == 0.0  # x tiebreak, never random
 
 
@@ -101,18 +144,18 @@ class TestPolygonOps:
 
     def test_clip_inside(self):
         tri = np.array([[2.0, 2.0], [4.0, 2.0], [3.0, 4.0]])
-        out = G.clip_polygon(tri, self.SQUARE)
+        out = clip_polygon(tri, self.SQUARE)
         assert _area(out) == pytest.approx(_area(tri))
 
     def test_clip_crossing(self):
         rect = np.array([[5.0, 2.0], [15.0, 2.0], [15.0, 4.0], [5.0, 4.0]])
-        out = G.clip_polygon(rect, self.SQUARE)
+        out = clip_polygon(rect, self.SQUARE)
         assert _area(out) == pytest.approx(10.0)  # half survives
         assert out[:, 0].max() == pytest.approx(10.0)
 
     def test_clip_disjoint_empty(self):
         rect = np.array([[20.0, 20.0], [30.0, 20.0], [30.0, 30.0], [20.0, 30.0]])
-        out = G.clip_polygon(rect, self.SQUARE)
+        out = clip_polygon(rect, self.SQUARE)
         assert _area(out) == 0.0
 
 class TestReadingOrder:
@@ -129,7 +172,7 @@ class TestReadingOrder:
     def test_xy_cut_side_by_side(self):
         # smart_sorter.py:387-391 fixture: two columns, read left then right
         boxes = [(20, 20, 100, 120), (120, 20, 220, 120)]
-        assert G.xy_cut_order(boxes) == [0, 1]
+        assert xy_cut_order(boxes) == [0, 1]
 
     def test_xy_cut_grid_row_major(self):
         boxes = [
@@ -137,13 +180,13 @@ class TestReadingOrder:
             (0, 20, 10, 30), (20, 20, 30, 30),
         ]
         # two horizontal bands, each split into two columns
-        assert G.xy_cut_order(boxes) == [0, 1, 2, 3]
+        assert xy_cut_order(boxes) == [0, 1, 2, 3]
 
     def test_xy_cut_interlocked_fallback(self):
         # L-shaped interlock (smart_sorter.py:390-391): no clean cut →
         # deterministic (y, x) fallback
         boxes = [(50, 50, 200, 200), (120, 50, 300, 200)]
-        assert G.xy_cut_order(boxes) == [0, 1]
+        assert xy_cut_order(boxes) == [0, 1]
 
     def test_xy_cut_column_layout(self):
         # one full-width header then two columns below
@@ -151,7 +194,7 @@ class TestReadingOrder:
             (0, 0, 100, 10),
             (0, 20, 45, 100), (55, 20, 100, 100),
         ]
-        assert G.xy_cut_order(boxes) == [0, 1, 2]
+        assert xy_cut_order(boxes) == [0, 1, 2]
 
 
 class TestSmartSortOrder:
@@ -225,7 +268,7 @@ class TestSmartSortOrder:
         rot = G.smart_baseline_rotation(baselines)
         assert abs(rot - (-14.85)) < 0.2  # sin-variant ~= -15 for small angles
         # the old gap-cut on raw tilted bboxes reads column-major
-        assert G.xy_cut_order(tilted) == [0, 2, 1, 3]
+        assert xy_cut_order(tilted) == [0, 2, 1, 3]
         # the faithful sorter derotates the true polygons (the bbox of
         # a tilted rect is inflated — derotating IT would over-couple)
         # and reads row-major
@@ -317,7 +360,7 @@ class TestPointsInPolygonVectorized:
             )
             vec = G.points_in_polygon(pts, poly)
             sca = np.array(
-                [G.point_in_polygon(float(x), float(y), poly) for x, y in pts]
+                [point_in_polygon(float(x), float(y), poly) for x, y in pts]
             )
             assert (vec == sca).all()
 
@@ -329,7 +372,7 @@ class TestPointsInPolygonVectorized:
         pts = np.array([[0, 0], [5, 5], [11, 5], [1e-10, 1e-10]])
         vec = G.points_in_polygon(pts, poly)
         sca = np.array(
-            [G.point_in_polygon(float(x), float(y), poly) for x, y in pts]
+            [point_in_polygon(float(x), float(y), poly) for x, y in pts]
         )
         assert (vec == sca).all()
 

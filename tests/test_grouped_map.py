@@ -1,13 +1,15 @@
 """r6 guard: operators.grouped_map_in_pandas must stay semantically
 equal to the groupBy(key).applyInPandas form it replaces — including
 null group keys, groups spanning Arrow batch boundaries, and
-composite keys."""
+composite keys. Also pins operators.flat_map_in_pandas: zero, one or
+many output rows per input row, in input order, with empty batches
+and nulls converting to every column type."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
-from pero_ocr_spark.operators import grouped_map_in_pandas
+from pero_ocr_spark.operators import flat_map_in_pandas, grouped_map_in_pandas
 
 
 def _make_summarize():
@@ -121,3 +123,72 @@ class TestGroupedMapInPandas:
             spark.conf.set(
                 "spark.sql.execution.arrow.maxRecordsPerBatch", old
             )
+
+
+class TestFlatMapInPandas:
+    def test_zero_one_many_rows_in_input_order(self, spark):
+        old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "5")
+        try:
+            # row k yields k % 3 == 0 -> none, 1 -> one, 2 -> four rows
+            rows = [(k, (0, 1, 4)[k % 3]) for k in range(60)]
+            df = spark.createDataFrame(rows, "k long, n long").coalesce(1)
+
+            def per_row(k, n):
+                return [(k, i, f"{k}.{i}") for i in range(n)]
+
+            got = [
+                tuple(r)
+                for r in flat_map_in_pandas(
+                    df, per_row, "k long, i int, tag string"
+                ).collect()
+            ]
+            assert got == [
+                (k, i, f"{k}.{i}") for k, n in rows for i in range(n)
+            ]
+        finally:
+            spark.conf.set(
+                "spark.sql.execution.arrow.maxRecordsPerBatch", old
+            )
+
+    def test_batch_without_output_converts_nested_types(self, spark):
+        # every row of every batch yields nothing, and a batch where
+        # only some rows do: the empty output frames must still
+        # convert to array<bigint> and struct columns
+        schema = "k long, xs array<bigint>, st struct<a: bigint, b: string>"
+        df = spark.range(40).repartition(8).selectExpr("id AS k")
+
+        def none(k):
+            return ()
+
+        assert flat_map_in_pandas(df, none, schema).collect() == []
+
+        def some(k):
+            if k % 10 == 0:
+                yield k, [k, k + 1], {"a": k, "b": str(k)}
+
+        got = sorted(
+            (r.k, list(r.xs), (r.st.a, r.st.b))
+            for r in flat_map_in_pandas(df, some, schema).collect()
+        )
+        assert got == [(k, [k, k + 1], (k, str(k))) for k in (0, 10, 20, 30)]
+
+    def test_nulls_pass_through(self, spark):
+        df = spark.createDataFrame(
+            [(1, "ab"), (2, None), (None, "c")], "k long, s string"
+        ).coalesce(1)
+
+        def per_row(k, s):
+            # pandas hands a null in a long column over as NaN
+            k = None if pd.isna(k) else k
+            return [(k, s, None if s is None else len(s), None)]
+
+        got = [
+            tuple(r)
+            for r in flat_map_in_pandas(
+                df, per_row, "k long, s string, n long, x double"
+            ).collect()
+        ]
+        assert got == [
+            (1, "ab", 2, None), (2, None, None, None), (None, "c", 1, None)
+        ]

@@ -7,6 +7,9 @@
   (applyInPandas) stage: per-doc stages go through
   ``grouped_map_in_pandas``. The stateful streaming operator is the
   one exception.
+- Per-row Python stages go through ``operators.flat_map_in_pandas``:
+  ``mapInPandas`` is called directly only by the two Arrow helpers and
+  by the stages that work on a whole batch at once.
 - A frame is checkpointed or cached only through
   ``operators.materialize``; the session's extracted-spans cache is
   the one exception.
@@ -15,7 +18,9 @@
 - Every engine module is reachable by imports from the program's entry
   points (the driver contract, the benches, the jobs): a module that
   only tests import is a second implementation to delete. The same
-  holds for each top-level function and class of the engine.
+  holds for each top-level function and class of the engine, which
+  program code must name in code (a call, an attribute, an import),
+  not only in a docstring or comment.
 - Arrays are sorted with ``sort_array``, a native sort, not
   ``array_sort``, whose comparator (the default one too) is a lambda
   evaluated interpreted on every comparison. The two differ only in
@@ -38,8 +43,7 @@ SHUFFLE_CONF_OWNERS = {
     ("pero_ocr_spark/operators/__init__.py", "shuffle_width"),
     ("pero_ocr_spark/session.py", "get_spark"),
     ("jobs/extract_job.py", "_spark"),
-    ("pero_ocr_spark/streaming/events.py", "view_click_attribution_streaming"),
-    ("pero_ocr_spark/streaming/events.py", "view_click_left_outer_streaming"),
+    ("pero_ocr_spark/streaming/events.py", "_view_click_pairs"),
 }
 
 
@@ -124,6 +128,71 @@ def test_no_two_frame_or_per_group_stage():
     assert not stray, (
         "run per-doc stages through operators.grouped_map_in_pandas: "
         + ", ".join(stray)
+    )
+
+
+# (file, enclosing function): (mapInPandas calls it keeps, reason).
+# Every per-row stage goes through operators.flat_map_in_pandas.
+ARROW_MAP_OWNERS = {
+    ("pero_ocr_spark/operators/__init__.py", "grouped_batches_in_pandas"): (
+        1,
+        "the per-group helper itself",
+    ),
+    ("pero_ocr_spark/operators/__init__.py", "flat_map_in_pandas"): (
+        1,
+        "the per-row helper itself",
+    ),
+    ("pero_ocr_spark/operators/ctc.py", "logits_from_lines"): (
+        1,
+        "runs _synth_batches, the generator recognize_lines also runs "
+        "ahead of its batched decode",
+    ),
+    ("pero_ocr_spark/operators/ctc.py", "decode_greedy"): (
+        1,
+        "batch-vectorized kernel: one padded tensor per batch",
+    ),
+    ("pero_ocr_spark/operators/ctc.py", "decode_beam"): (
+        1,
+        "CTC decoder, kept in the batch framing the other decoders share",
+    ),
+    ("pero_ocr_spark/operators/ctc.py", "recognize_lines"): (
+        1,
+        "batch-vectorized kernel: frame pass and greedy decode per batch",
+    ),
+    ("pero_ocr_spark/operators/ctc.py", "decode_chunked"): (
+        1,
+        "batch-vectorized kernel: one greedy decode over all the "
+        "batch's chunks",
+    ),
+    ("pero_ocr_spark/operators/dedup.py", "bloom_dedup"): (
+        1,
+        "batch-vectorized kernel: numpy bit test over the batch",
+    ),
+    ("pero_ocr_spark/operators/dedup.py", "_cdc_stream"): (
+        1,
+        "batch-vectorized kernel: numpy chunk arrays per batch",
+    ),
+    ("pero_ocr_spark/operators/rtl.py", "arabic_visual_form"): (
+        1,
+        "a column map that keeps the input schema and index",
+    ),
+}
+
+
+def test_arrow_maps_go_through_the_helpers():
+    uses: dict[tuple, list[int]] = {}
+    for p in _engine_files():
+        for fn, _, line in _method_calls(p, {"mapInPandas"}):
+            uses.setdefault((_rel(p), fn), []).append(line)
+    wrong = [
+        f"{path}:{uses.get(key, [])} ({fn or 'module level'})"
+        for key in sorted(set(uses) | set(ARROW_MAP_OWNERS), key=str)
+        for path, fn in [key]
+        if len(uses.get(key, [])) != ARROW_MAP_OWNERS.get(key, (0,))[0]
+    ]
+    assert not wrong, (
+        "run per-row Python stages through operators.flat_map_in_pandas, "
+        "and keep ARROW_MAP_OWNERS exact: " + ", ".join(wrong)
     )
 
 
@@ -232,19 +301,39 @@ def test_every_engine_module_is_reachable_from_program_code():
     )
 
 
+def _code_names(tree: ast.AST):
+    """(name, line) of every name, attribute and imported name in the
+    tree's code; docstrings and comments don't count."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            yield node.id, node.lineno
+        elif isinstance(node, ast.Attribute):
+            yield node.attr, node.lineno
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            for a in node.names:
+                yield a.name.rsplit(".", 1)[-1], node.lineno
+
+
 def test_every_engine_function_is_named_by_program_code():
-    """Each top-level function and class of the engine is named by
-    program code outside its own definition (a call, an import, a
-    reference in a docstring). Registered ``q_*`` queries are reached
+    """Each top-level function and class of the engine is named in
+    the code of the program outside its own definition (a call, an
+    attribute, an import). Registered ``q_*`` queries are reached
     through the registry, and the oracle through the tests."""
-    lines = {_rel(p): p.read_text().splitlines() for p in _program_files()}
-    defs = []
-    for rel, src in lines.items():
+    trees = {
+        _rel(p): ast.parse(p.read_text(), filename=str(p))
+        for p in _program_files()
+    }
+    names: dict[str, list[tuple[str, int]]] = {}
+    for rel, tree in trees.items():
+        for name, line in _code_names(tree):
+            names.setdefault(name, []).append((rel, line))
+    unnamed = []
+    for rel, tree in trees.items():
         if not rel.startswith("pero_ocr_spark/") or (
             _module_name(ROOT / rel) in TEST_ONLY_MODULES
         ):
             continue
-        for node in ast.parse("\n".join(src), filename=rel).body:
+        for node in tree.body:
             if not isinstance(
                 node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ):
@@ -254,17 +343,11 @@ def test_every_engine_function_is_named_by_program_code():
             ):
                 continue
             first = min([node.lineno] + [d.lineno for d in node.decorator_list])
-            defs.append((rel, node.name, first, node.end_lineno))
-    unnamed = []
-    for rel, name, first, last in defs:
-        word = re.compile(rf"\b{re.escape(name)}\b")
-        if not any(
-            word.search(line)
-            for other, src in lines.items()
-            for i, line in enumerate(src, 1)
-            if not (other == rel and first <= i <= last)
-        ):
-            unnamed.append(f"{rel}:{first} {name}")
+            if not any(
+                not (other == rel and first <= line <= node.end_lineno)
+                for other, line in names.get(node.name, [])
+            ):
+                unnamed.append(f"{rel}:{first} {node.name}")
     assert not unnamed, (
         "engine functions only tests name (move them into the tests, or "
         "delete them): " + ", ".join(unnamed)

