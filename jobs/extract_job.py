@@ -55,7 +55,7 @@ import sys
 import time
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -84,6 +84,24 @@ def _counters(obs) -> dict:
     returns n_spans 0 and does not raise), but its sums and max are
     null; those read as 0."""
     return {k: v or 0 for k, v in obs.get.items()}
+
+
+def extracted(spark: SparkSession, path: str) -> DataFrame:
+    """The ``extract`` pipeline's spans. Extraction runs inside each
+    nested row and adds no exchange, so the input's partitioning is the
+    job's parallelism: a nested table goes through ``spread_scan``,
+    raw documents are hash-partitioned before their spans are derived."""
+    from pero_ocr_spark import corpus
+    from pero_ocr_spark.operators import extract, shuffle_width, spread_scan
+
+    nested = spark.read.parquet(path)
+    if "spans" in nested.columns:
+        nested = spread_scan(nested)
+    else:  # raw documents: derive spans
+        nested = corpus.spans_of(
+            nested.repartition(shuffle_width(spark), "doc_id")
+        )
+    return extract.extract_spans(nested)
 
 
 def _run_icetable(spark, args, sharded, t0) -> int:
@@ -154,21 +172,13 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = ap.parse_args(argv)
 
-    from pero_ocr_spark.operators import extract, sampling, telemetry
+    from pero_ocr_spark.operators import sampling, telemetry
 
     spark = _spark(f"pero_ocr_spark_{args.pipeline}")
     t0 = time.perf_counter()
 
     if args.pipeline == "extract":
-        from pero_ocr_spark import corpus
-        from pero_ocr_spark.operators import shuffle_width
-
-        nested = spark.read.parquet(args.input)
-        if "spans" not in nested.columns:  # raw documents: derive spans
-            nested = corpus.spans_of(
-                nested.repartition(shuffle_width(spark), "doc_id")
-            )
-        spans = extract.extract_spans(nested)
+        spans = extracted(spark, args.input)
     elif args.pipeline == "ingest":
         from pero_ocr_spark.operators import html
 

@@ -108,13 +108,13 @@ def spans_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sandbox corpus is derived deterministically from the driver's
     parquet.
 
-    The up-front ``repartition(doc_id)`` does double duty: (1) it
-    spreads span synthesis across all cores even when the source
-    parquet has a single row group (the sandbox files are KB-sized);
-    (2) it establishes hash(doc_id) output partitioning that the
-    downstream reading-order window reuses, so the whole extraction
-    pipeline has exactly ONE shuffle — of the small pre-explosion
-    rows, not the exploded spans.
+    The up-front ``repartition(doc_id)`` spreads span synthesis and
+    extraction across all cores even when the source parquet has a
+    single row group (the sandbox files are KB-sized). Extraction
+    orders each document inside its row and adds no exchange, so this
+    is the pipeline's ONE shuffle — of the small pre-explosion rows —
+    and its hash(doc_id) partitioning survives to per-doc consumers
+    (``extract.render_training_text``'s groupBy reuses it).
     """
     docs = load_documents(spark, sf_dir)
     return spans_of(docs.repartition(shuffle_width(spark), "doc_id"))

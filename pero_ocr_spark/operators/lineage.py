@@ -115,9 +115,13 @@ def run_extraction_with_lineage(
         subset = pending if not truncated else pending.filter(
             F.col("bucket").isin([int(b) for b in todo])
         )
+        # extraction adds no exchange: hash-partition the documents so
+        # span synthesis and extraction spread across every core
+        docs_todo = subset.drop("bucket").repartition(
+            shuffle_width(spark), "doc_id"
+        )
         spans = with_bucket(
-            extract.extract_spans(corpus.spans_of(subset.drop("bucket"))),
-            n_buckets,
+            extract.extract_spans(corpus.spans_of(docs_todo)), n_buckets
         )
         # cluster rows by bucket before the partitioned write: without
         # this every shuffle partition emits a file into every bucket

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pero_ocr_spark.operators.extract import BOILERPLATE_KINDS, BOILERPLATE_WORDS
+from pero_ocr_spark.operators.extract import BOILERPLATE_WORDS
 
 
 def doc_multiplier(doc_id: int) -> int:
@@ -44,17 +44,15 @@ def synth_spans(doc_id: int, text: str) -> list[dict]:
 
 
 def extract_doc(spans: list[dict]) -> list[dict]:
-    """classify → strip → reading order, for one document."""
-    kept = []
-    for s in spans:
-        kind = s["kind"]
-        if kind in BOILERPLATE_KINDS or (
-            kind == "text" and s["text"] in BOILERPLATE_WORDS
-        ):
-            continue
-        if kind == "text" and s["text"] == "":
-            continue
-        kept.append(s)
+    """classify → strip → reading order, for one document: media spans
+    and non-empty, non-stop-word text spans survive; every other kind
+    is boilerplate."""
+    kept = [
+        s
+        for s in spans
+        if s["kind"] == "media"
+        or (s["kind"] == "text" and s["text"] not in ("", *BOILERPLATE_WORDS))
+    ]
     kept.sort(key=lambda s: s["offset"])
     return [
         {"kind": s["kind"], "text": s["text"], "media_ref": s["media_ref"], "ord": i}

@@ -257,7 +257,7 @@ GROUP BY doc_id
 def q_training_render_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serialization step between extraction and the tokenizer: text
     # spans verbatim, media spans as a sentinel, reading order kept;
-    # reuses the flagship plan's doc_id exchange (zero extra shuffles)
+    # reuses the documents' doc_id exchange (zero extra shuffles)
     from pero_ocr_spark import corpus
     from pero_ocr_spark.operators import extract
 

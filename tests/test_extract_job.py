@@ -281,3 +281,17 @@ def test_icetable_counter_errors_propagate(
              _few_docs(spark, sf_dir, tmp_path), "--output",
              str(tmp_path / "ice"), "--shards", "4", "--sink", "icetable"]
         )
+
+
+def test_nested_input_extraction_spreads_one_row_group(spark, sf_dir, tmp_path):
+    """Extraction adds no exchange, so a one-row-group nested table
+    must be spread before it, or the whole job runs in one task."""
+    from pero_ocr_spark import corpus
+    from pero_ocr_spark.operators import shuffle_width
+
+    nested = str(tmp_path / "nested")
+    corpus.spans_table(spark, sf_dir).coalesce(1).write.parquet(nested)
+    assert spark.read.parquet(nested).rdd.getNumPartitions() == 1
+    got = _job().extracted(spark, nested)
+    assert got.rdd.getNumPartitions() >= shuffle_width(spark) // 2
+    assert got.count() > 0
