@@ -13,19 +13,11 @@ Usage (cluster):
 Pipelines:
 
   * ``extract`` — nested (doc_id, spans) table → classified, stripped,
-    reading-ordered span rows, written as parquet partitioned by an
-    LCG shard (decorrelated from id structure) with shard-granularity
-    crash-resume. Resume is manifest-based, NOT directory-presence
-    based: a shard counts as done only when a row for it exists in the
-    ``_shards_done`` manifest, which is appended strictly AFTER the
-    data job commits (the operators/lineage.py pattern). Shards
-    without a manifest row are (re)written with dynamic partition
-    OVERWRITE, so partially-populated shard dirs left by a crash —
-    possible with committer algorithm v2 or S3 direct-write
-    committers, whose task commits publish files immediately — are
-    replaced, never silently skipped and never double-appended. The
-    underscore prefix keeps the manifest invisible to plain
-    ``spark.read.parquet(output)`` consumers.
+    reading-ordered span rows, written by ``lineage.write_shards`` as
+    parquet partitioned by an LCG shard with shard-granularity
+    crash-resume: a shard is done only when the ``_shards_done``
+    manifest holds its row, appended after the data job commits;
+    shards without one are rewritten with dynamic partition overwrite.
     With ``--sink icetable`` the spans commit into the from-scratch
     snapshot table (sources/icetable.py) instead: one APPEND commit
     per run whose snapshot ``properties`` carry the shard list, so
@@ -54,7 +46,6 @@ import json
 import sys
 import time
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -75,17 +66,6 @@ def _spark(app: str) -> SparkSession:
     )
 
 
-_COUNTERS = ("n_spans", "n_text", "n_media", "n_chars", "max_ord")
-
-
-def _counters(obs) -> dict:
-    """The write's extraction counters. A write of zero rows still
-    reports (Spark 4.1, probed with every pending shard empty: obs.get
-    returns n_spans 0 and does not raise), but its sums and max are
-    null; those read as 0."""
-    return {k: v or 0 for k, v in obs.get.items()}
-
-
 def extracted(spark: SparkSession, path: str) -> DataFrame:
     """The ``extract`` pipeline's spans. Extraction runs inside each
     nested row and adds no exchange, so the input's partitioning is the
@@ -104,7 +84,7 @@ def extracted(spark: SparkSession, path: str) -> DataFrame:
     return extract.extract_spans(nested)
 
 
-def _run_icetable(spark, args, sharded, t0) -> int:
+def _run_icetable(spark, args, spans, t0) -> int:
     """Span emission into the snapshot table (the production analog of
     the north rule's Iceberg output): one APPEND commit per run, with
     the shard list recorded in the snapshot's ``properties`` so shard
@@ -114,7 +94,7 @@ def _run_icetable(spark, args, sharded, t0) -> int:
     marker + data (shards skipped); no side manifest can ever
     disagree with the table, under ANY committer.
     """
-    from pero_ocr_spark.operators import telemetry
+    from pero_ocr_spark.operators import sampling, telemetry
     from pero_ocr_spark.sources.icetable import IceTable
 
     table = IceTable(args.output)
@@ -122,8 +102,11 @@ def _run_icetable(spark, args, sharded, t0) -> int:
     for snap in table.history():
         done.update(int(s) for s in snap["properties"].get("shards", []))
     todo = sorted(set(range(args.shards)) - done)
+    obs = None
     if todo:
-        batch = sharded.filter(F.col("shard").isin([int(s) for s in todo]))
+        batch = spans.withColumn(
+            "shard", sampling._residue(args.shards).cast("int")
+        ).filter(F.col("shard").isin(todo))
         # one task (→ one data file) per pending shard; the commit
         # records per-file doc_id min/max for pruned reads
         observed, obs = telemetry.observe_extraction(
@@ -134,10 +117,9 @@ def _run_icetable(spark, args, sharded, t0) -> int:
             "append",
             properties={"pipeline": args.pipeline, "shards": todo},
         )
-        m = _counters(obs)
     else:
         version = table.current_version()
-        m = dict.fromkeys(_COUNTERS, 0)
+    m = telemetry.extraction_counters(obs)
     wall = time.perf_counter() - t0
     m.update(
         pipeline=args.pipeline,
@@ -172,7 +154,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = ap.parse_args(argv)
 
-    from pero_ocr_spark.operators import sampling, telemetry
+    from pero_ocr_spark.operators import lineage
 
     spark = _spark(f"pero_ocr_spark_{args.pipeline}")
     t0 = time.perf_counter()
@@ -201,68 +183,18 @@ def main(argv: list[str] | None = None) -> int:
             recs.select("doc_id", F.col("body").alias("html"))
         )
 
-    sharded = spans.withColumn(
-        "shard", sampling._residue(args.shards).cast("int")
-    )
     if args.sink == "icetable":
-        return _run_icetable(spark, args, sharded, t0)
-    # shard-granularity resume: done = has a manifest row (written only
-    # after a data-job commit), NOT "shard dir exists" — partial dirs
-    # from a crashed run are rewritten below, not skipped
-    manifest = f"{args.output}/_shards_done"
-    try:
-        manifest_df = spark.read.parquet(manifest)
-    except AnalysisException as e:
-        # only a missing manifest means "first run"; an unreadable one
-        # must not silently rewrite every shard
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
-        done = []
-    else:
-        done = [
-            r.shard for r in manifest_df.select("shard").distinct().collect()
-        ]
-    if done:
-        sharded = sharded.filter(~F.col("shard").isin(done))
-    observed, obs = telemetry.observe_extraction(sharded)
-    (
-        # repartition("shard") clusters each shard into one task → one
-        # file per shard dir (not tasks × shards small files); dynamic
-        # overwrite replaces exactly the shards in the frame, making a
-        # shard re-run idempotent under ANY committer
-        observed.repartition("shard")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("shard")
-        .parquet(args.output)
-    )
-    # manifest append AFTER the data commit: a crash before this line
-    # leaves the shards unrecorded and the next run rewrites them. A
-    # shard whose residue class is empty still gets its row (it IS
-    # done) — enumerate the todo residues, don't derive from data.
-    todo = sorted(set(range(args.shards)) - set(int(s) for s in done))
-    if todo:
-        spark.createDataFrame(
-            [(int(s),) for s in todo], "shard int"
-        ).coalesce(1).write.mode("append").parquet(manifest)
+        return _run_icetable(spark, args, spans, t0)
+    m = lineage.write_shards(spans, args.output, args.shards)
+    skipped = m.pop("resumed_shards_skipped")
     wall = time.perf_counter() - t0
-    if todo:
-        m = _counters(obs)
-    else:
-        # fully resumed: every shard already carried a manifest row, so
-        # the (empty) write may run ZERO tasks — e.g. when the input
-        # plan was substituted with a cached InMemoryRelation whose
-        # batches all prune — and an Observation with no completed task
-        # never produces its metrics row (obs.get raises). Nothing was
-        # written; the metrics are zeros by definition.
-        m = dict.fromkeys(_COUNTERS, 0)
     m.update(
         pipeline=args.pipeline,
         output=args.output,
         shards=args.shards,
         wall_sec=round(wall, 2),
         spans_per_sec=round(m["n_spans"] / wall, 1),
-        resumed_shards_skipped=len(done),
+        resumed_shards_skipped=skipped,
     )
     print(json.dumps(m))
     return 0

@@ -35,7 +35,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pero_ocr_spark.functions import kernels
-from pero_ocr_spark.operators import grouped_map_in_pandas, shuffle_width
+from pero_ocr_spark.operators import (
+    flat_map_in_pandas,
+    grouped_map_in_pandas,
+    shuffle_width,
+)
 
 # Fixed charset: lowercase + digits + blank (last, per
 # decoders.py:31-33's "blank must be last" contract).
@@ -221,20 +225,27 @@ def decode_greedy(logits_df: DataFrame) -> DataFrame:
     return logits_df.mapInPandas(run, schema=_DECODE_SCHEMA)
 
 
-# per-worker beam-decode memo. Keys are a sha1 DIGEST of the logits
+# Per-worker decode memos are keyed on a sha1 DIGEST of the logits
 # byte payloads (collision risk negligible), not the payloads — at the
 # 100k-entry bound raw keys pinned hundreds of MB per long-lived python
-# worker. dict preserves insertion order, so popitem(last=False)-style
-# FIFO eviction (next(iter())) bounds the set without the old
-# all-or-nothing clear() that threw away the whole working set.
+# worker. dict preserves insertion order, so evicting next(iter()) is
+# FIFO, bounding the memo without an all-or-nothing clear() that throws
+# away the whole working set.
 _BEAM_MEMO: dict[tuple, tuple] = {}
 _BEAM_MEMO_MAX = 100_000
 
 
-def _beam_memo_put(key: tuple, val: tuple) -> None:
-    if len(_BEAM_MEMO) >= _BEAM_MEMO_MAX:
-        _BEAM_MEMO.pop(next(iter(_BEAM_MEMO)))
-    _BEAM_MEMO[key] = val
+def _logits_digest(data, indices, indptr) -> bytes:
+    h = hashlib.sha1()
+    for a in (data, indices, indptr):
+        h.update(np.asarray(a).tobytes())
+    return h.digest()
+
+
+def _memo_put(memo: dict, key: tuple, val: tuple) -> None:
+    if len(memo) >= _BEAM_MEMO_MAX:
+        memo.pop(next(iter(memo)))
+    memo[key] = val
 
 
 def decode_beam(
@@ -245,56 +256,35 @@ def decode_beam(
     """Prefix-beam-search decode with the reference's confidence-gated
     skip (``page_parser.py:96-156``): lines whose greedy confidence
     clears the gate keep the greedy transcript; only uncertain lines
-    pay for beam search. Expressed as a per-batch branch inside the
-    UDF (cheap vectorized gate, expensive kernel only on the residue).
+    pay for beam search.
+
+    Line contents follow a skewed vocabulary, so each distinct logits
+    matrix decodes once per long-lived worker (``_BEAM_MEMO``).
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts, confs, scores = [], [], []
-            for t, c, data, indices, indptr in zip(
-                pdf["t"], pdf["c"], pdf["data"], pdf["indices"], pdf["indptr"]
-            ):
-                # per-worker memo keyed on a DIGEST of the logits
-                # bytes: line contents follow a skewed vocabulary, so
-                # each distinct logits matrix decodes once per
-                # long-lived worker, without the memo pinning the raw
-                # payloads in memory
-                h = hashlib.sha1()
-                h.update(np.asarray(data).tobytes())
-                h.update(np.asarray(indices).tobytes())
-                h.update(np.asarray(indptr).tobytes())
-                key = (h.digest(), int(t), int(c), beam_size, confidence_gate)
-                hit = _BEAM_MEMO.get(key)
-                if hit is None:
-                    dense = kernels.sparse_to_dense(
-                        data, indices, indptr, int(t), int(c)
-                    )
-                    conf = kernels.line_confidence(dense)
-                    if confidence_gate is not None and conf > confidence_gate:
-                        text, score = kernels.greedy_decode(dense, CHARSET)
-                    else:
-                        hyps, _ = kernels.ctc_beam_search(
-                            dense, CHARSET, beam_size=beam_size
-                        )
-                        text, score = hyps[0][0], hyps[0][1]
-                    hit = (text, conf, score)
-                    _beam_memo_put(key, hit)
-                text, conf, score = hit
-                texts.append(text)
-                confs.append(conf)
-                scores.append(score)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "line_id": pdf["line_id"],
-                    "transcription": texts,
-                    "confidence": confs,
-                    "score": scores,
-                }
-            )
+    def per_row(doc_id, line_id, t, c, data, indices, indptr):
+        key = (
+            _logits_digest(data, indices, indptr),
+            int(t), int(c), beam_size, confidence_gate,
+        )
+        hit = _BEAM_MEMO.get(key)
+        if hit is None:
+            dense = kernels.sparse_to_dense(data, indices, indptr, int(t), int(c))
+            conf = kernels.line_confidence(dense)
+            if confidence_gate is not None and conf > confidence_gate:
+                text, score = kernels.greedy_decode(dense, CHARSET)
+            else:
+                hyps, _ = kernels.ctc_beam_search(dense, CHARSET, beam_size=beam_size)
+                text, score = hyps[0][0], hyps[0][1]
+            hit = (text, conf, score)
+            _memo_put(_BEAM_MEMO, key, hit)
+        return [(doc_id, line_id, *hit)]
 
-    return logits_df.mapInPandas(run, schema=_DECODE_SCHEMA)
+    return flat_map_in_pandas(
+        logits_df.select("doc_id", "line_id", "t", "c", "data", "indices", "indptr"),
+        per_row,
+        _DECODE_SCHEMA,
+    )
 
 
 def decode_beam_lm_carry(
@@ -355,11 +345,7 @@ def decode_beam_lm_carry(
         for t, c, data, indices, indptr in zip(
             pdf["t"], pdf["c"], pdf["data"], pdf["indices"], pdf["indptr"]
         ):
-            h = hashlib.sha1()
-            h.update(np.asarray(data).tobytes())
-            h.update(np.asarray(indices).tobytes())
-            h.update(np.asarray(indptr).tobytes())
-            key = (h.digest(), int(t), int(c), state)
+            key = (_logits_digest(data, indices, indptr), int(t), int(c), state)
             hit = memo.get(key)
             if hit is None:
                 dense = kernels.sparse_to_dense(
@@ -378,9 +364,7 @@ def decode_beam_lm_carry(
                     hyps[0][1] + lm_scale * hyps[0][2],
                     new_state,
                 )
-                if len(memo) >= _BEAM_MEMO_MAX:
-                    memo.pop(next(iter(memo)))  # FIFO evict, not clear
-                memo[key] = hit
+                _memo_put(memo, key, hit)
             texts.append(hit[0])
             scores.append(hit[1])
             state = hit[2]

@@ -1,22 +1,23 @@
-"""Checkpointed per-partition lineage + metrics, and resume-after-failure.
+"""Resumable shard writes, and the weight-aware repartitioner.
 
-The Spark-native generalization of the reference's ``--skip-processed``
+``write_shards`` is the engine's one resumable writer: the
+Spark-native generalization of the reference's ``--skip-processed``
 resume (``user_scripts/parse_folder.py:73-102,314-323``, which rescans
 output folders and skips already-done page ids):
 
-  * output is written partitioned by a deterministic bucket
-    (``doc_id % n_buckets``);
-  * a ``_lineage`` manifest table records, per bucket: status, doc /
-    span / char counts, wall-clock seconds and derived throughput
-    (the metrics analog of ``PageDecoder.decoding_summary()``,
-    ``document_ocr/page_parser.py:147-156``);
-  * resume = anti-join pending buckets against the manifest — only
-    unfinished buckets are recomputed, completed output is never
-    rewritten (append mode + bucket partition dirs give idempotence).
+  * output is parquet partitioned by an LCG shard of ``doc_id``
+    (``sampling._residue``, decorrelated from id structure);
+  * a shard is done only when the ``_shards_done`` manifest holds a row
+    for it, appended strictly AFTER the data job commits — never
+    because its directory exists;
+  * pending shards are written with dynamic partition OVERWRITE, so a
+    shard left partial by a crash (committer algorithm v2 and S3
+    direct-write committers publish task files immediately) is
+    replaced, never skipped and never appended twice.
 
-At 10^12 docs the manifest is tiny (one row per bucket), the anti-join
-broadcasts it, and a failed cluster run restarts with work
-proportional to the unfinished remainder only.
+The manifest is one row per shard; the underscore prefix hides it from
+plain ``spark.read.parquet(out_dir)`` consumers. Run-level counters
+ride the data write through ``telemetry.observe_extraction``.
 
 Also here: the weight-aware repartitioner used before expensive UDF
 stages — the table-level analog of width-sorted batch packing
@@ -27,153 +28,67 @@ partitions by cumulative weight (span count / byte size), so one
 
 from __future__ import annotations
 
-import time
-
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pero_ocr_spark.operators import shuffle_width
-
-LINEAGE_SCHEMA = (
-    "bucket long, status string, n_docs long, n_spans long, n_chars long, "
-    "elapsed_sec double, spans_per_sec double"
-)
+from pero_ocr_spark.operators import sampling, shuffle_width, telemetry
 
 
-def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
-    return df.withColumn("bucket", (F.col("doc_id") % n_buckets).cast("long"))
-
-
-def completed_buckets(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Buckets marked done in the manifest (empty frame if no manifest).
-
-    Existence is probed through the Hadoop FileSystem API (scheme-aware:
-    file://, hdfs://, s3a://) instead of a try/except around the read —
-    a failed read action logs an analyzer stack trace and trips any
-    registered observation listeners; a metadata probe is silent."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(f"{out_dir}/_lineage")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return spark.createDataFrame([], "bucket long")
+def _done_shards(spark: SparkSession, manifest: str) -> list[int]:
+    """Shards the manifest records as done. A missing manifest, and a
+    manifest directory holding no committed file (a kill mid-append
+    leaves only ``_temporary/``), both mean none; any other failure
+    (a corrupt part file) raises — read as "none done" it would
+    rewrite every committed shard."""
     try:
-        m = spark.read.parquet(f"{out_dir}/_lineage")
+        rows = spark.read.parquet(manifest).select("shard").distinct().collect()
     except AnalysisException as e:
-        # dir exists but holds no committed parquet (a kill mid-append
-        # leaves only _temporary/): treat as no manifest — resume
-        # restarts from scratch rather than failing forever. Anything
-        # else (a corrupt part file) raises: read as "no manifest" it
-        # would re-append every done bucket's spans.
-        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
             raise
-        return spark.createDataFrame([], "bucket long")
-    return m.filter(F.col("status") == "done").select("bucket").distinct()
+        return []
+    return sorted(int(r.shard) for r in rows)
 
 
-def run_extraction_with_lineage(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    n_buckets: int = 16,
-    fail_after_buckets: int | None = None,
-) -> DataFrame:
-    """Run the extraction pipeline bucket-partitioned with lineage;
-    on re-invocation, only buckets absent from the manifest run.
+def write_shards(spans: DataFrame, out_dir: str, n_shards: int) -> dict:
+    """Write extracted ``spans`` to ``out_dir`` as ``shard=k/`` parquet
+    dirs, resuming at shard granularity: only shards without a manifest
+    row are (re)written, then their rows are appended to
+    ``out_dir/_shards_done``. A crash before that append leaves the
+    shards unrecorded, and the next call rewrites them in place.
 
-    ``fail_after_buckets`` injects a crash for resume tests: only the
-    first k pending buckets are processed before raising.
+    Returns the write's ``telemetry.observe_extraction`` counters (zeros
+    when nothing was pending) and ``resumed_shards_skipped``.
     """
-    from pero_ocr_spark import corpus
-    from pero_ocr_spark.operators import extract
-
-    docs = with_bucket(corpus.load_documents(spark, sf_dir), n_buckets)
-    done = completed_buckets(spark, out_dir)
-    pending = docs.join(done, "bucket", "left_anti")
-
-    # ONE Spark job writes every pending bucket (partitionBy routes
-    # rows into per-bucket dirs), then ONE aggregate builds the bulk
-    # manifest append — k pending buckets cost 2 jobs total, not 2k
-    # serial jobs (at 10^4 buckets the per-bucket loop was 10^4
-    # sequential driver round trips). elapsed_sec is the shared write
-    # wall-clock (job-level; per-bucket attribution would need
-    # task-metrics listeners), spans_per_sec the bucket's share of it.
-    pending_buckets = sorted(
-        r["bucket"] for r in pending.select("bucket").distinct().collect()
-    )
-    truncated = (
-        fail_after_buckets is not None
-        and fail_after_buckets < len(pending_buckets)
-    )
-    todo = (
-        pending_buckets[:fail_after_buckets]
-        if fail_after_buckets is not None
-        else pending_buckets
-    )
+    spark = spans.sparkSession
+    manifest = f"{out_dir}/_shards_done"
+    done = _done_shards(spark, manifest)
+    todo = sorted(set(range(n_shards)) - set(done))
+    obs = None
     if todo:
-        t0 = time.perf_counter()
-        subset = pending if not truncated else pending.filter(
-            F.col("bucket").isin([int(b) for b in todo])
+        sharded = spans.withColumn("shard", sampling._residue(n_shards).cast("int"))
+        if done:
+            sharded = sharded.filter(~F.col("shard").isin(done))
+        observed, obs = telemetry.observe_extraction(sharded)
+        (
+            # repartition("shard") clusters each shard into one task →
+            # one file per shard dir (not tasks × shards small files);
+            # dynamic overwrite replaces exactly the shards in the frame
+            observed.repartition("shard")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("shard")
+            .parquet(out_dir)
         )
-        # extraction adds no exchange: hash-partition the documents so
-        # span synthesis and extraction spread across every core
-        docs_todo = subset.drop("bucket").repartition(
-            shuffle_width(spark), "doc_id"
-        )
-        spans = with_bucket(
-            extract.extract_spans(corpus.spans_of(docs_todo)), n_buckets
-        )
-        # cluster rows by bucket before the partitioned write: without
-        # this every shuffle partition emits a file into every bucket
-        # dir (tasks × buckets small files per run — a files explosion
-        # at 10^4 buckets); clustered, each bucket gets ONE file
-        spans.repartition("bucket").write.mode("append").partitionBy(
-            "bucket"
-        ).parquet(f"{out_dir}/spans")
-        elapsed = time.perf_counter() - t0
-        try:
-            stats = (
-                spark.read.parquet(f"{out_dir}/spans")
-                .filter(F.col("bucket").isin([int(b) for b in todo]))
-                .groupBy("bucket")
-                .agg(
-                    F.approx_count_distinct("doc_id").alias("n_docs"),
-                    F.count("*").alias("n_spans"),
-                    F.sum(F.length("text")).alias("n_chars"),
-                )
-                .collect()
-            )
-        except AnalysisException as e:
-            # zero rows written overall → no parquet files to infer from
-            if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
-                raise
-            stats = []
-        by_bucket = {int(r["bucket"]): r for r in stats}
-        # every TODO bucket gets a manifest row — a bucket whose docs
-        # produce zero spans writes no partition dir and so has no
-        # stats row, but it IS done (otherwise resume re-runs it forever)
-        manifest_rows = [
-            (
-                int(b),
-                "done",
-                int(r["n_docs"]) if r is not None else 0,
-                int(r["n_spans"]) if r is not None else 0,
-                int(r["n_chars"] or 0) if r is not None else 0,
-                round(elapsed, 3),
-                round((r["n_spans"] if r is not None else 0) / elapsed, 1),
-            )
-            for b in todo
-            for r in (by_bucket.get(int(b)),)
-        ]
-        spark.createDataFrame(manifest_rows, LINEAGE_SCHEMA).write.mode(
-            "append"
-        ).parquet(f"{out_dir}/_lineage")
-
-    if truncated:
-        raise RuntimeError(
-            f"injected failure after {fail_after_buckets} buckets (resume test)"
-        )
-    return spark.read.parquet(f"{out_dir}/spans")
+        # every pending residue is done now, those with no spans too —
+        # enumerate them, don't derive them from the data
+        spark.createDataFrame(
+            [(s,) for s in todo], "shard int"
+        ).coalesce(1).write.mode("append").parquet(manifest)
+    return {
+        **telemetry.extraction_counters(obs),
+        "resumed_shards_skipped": len(done),
+    }
 
 
 _SALT_CACHE: dict[int, list[int]] = {}

@@ -1,8 +1,7 @@
 """Stage telemetry (A4): the Spark-native analog of the reference's
 decoding summaries and time logs (``page_parser.py:147-156``,
 ``decoding/decoding_itf.py:107-136``) — ``df.observe`` metrics that
-ride the existing action instead of separate count jobs, plus a
-throughput helper used by the lineage manifest.
+ride the existing action instead of separate count jobs.
 """
 
 from __future__ import annotations
@@ -28,4 +27,14 @@ def observe_extraction(
         F.max("ord").alias("max_ord"),
     )
     return out, obs
+
+
+def extraction_counters(obs: Observation | None) -> dict[str, int]:
+    """``observe_extraction``'s counters as ints. Over zero rows the
+    count observes 0 and the sums and max null (Spark 4.1: ``obs.get``
+    does not raise); those read as 0. ``None``, for an action that was
+    never run because there was nothing to write, reads as all zeros."""
+    got = obs.get if obs is not None else {}
+    names = ("n_spans", "n_text", "n_media", "n_chars", "max_ord")
+    return {k: int(got.get(k) or 0) for k in names}
 

@@ -869,19 +869,8 @@ def q_telemetry_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the noop sink materializes every row (the real pipeline's write);
     # the metrics ride that action — zero extra jobs
     observed.write.format("noop").mode("overwrite").save()
-    m = obs.get
-    # sums/max observe as NULL over zero rows; the oracle yields 0/NULL
-    # for the same input — normalize to zeros
     return spark.createDataFrame(
-        [
-            (
-                int(m["n_spans"] or 0),
-                int(m["n_text"] or 0),
-                int(m["n_media"] or 0),
-                int(m["n_chars"] or 0),
-                int(m["max_ord"] or 0),
-            )
-        ],
+        [tuple(telemetry.extraction_counters(obs).values())],
         "n_spans long, n_text long, n_media long, n_chars long, max_ord long",
     )
 
@@ -953,9 +942,10 @@ def q_line_crop_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# §2.8 — checkpointed lineage + resume as a driver query: crash after 5
-# buckets (injected), re-invoke, verify the resumed manifest covers every
-# bucket exactly once and its counters equal the closed-form totals.
+# §2.8 — checkpointed lineage + resume as a driver query: write the
+# extracted spans shard by shard, simulate the crash that lands the data
+# commit but not the manifest append (manifest gone, one shard's files
+# lost), write again, and check the table holds every span exactly once.
 # ---------------------------------------------------------------------------
 
 
@@ -970,22 +960,26 @@ FROM extracted
 """,
 )
 def q_lineage_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import glob
+    import shutil
+
     from pero_ocr_spark.operators import lineage
 
-    # fresh-emptied fixed path: resume must start from no manifest
+    # fresh-emptied fixed path: the first write starts from no manifest
     out = _scratch("lineage")
-    try:
-        lineage.run_extraction_with_lineage(
-            spark, sf_dir, out, n_buckets=16, fail_after_buckets=5
+    spans = extract.extract_spans(corpus.spans_table(spark, sf_dir))
+    lineage.write_shards(spans, out, n_shards=16)
+    shutil.rmtree(f"{out}/_shards_done")
+    shutil.rmtree(sorted(glob.glob(f"{out}/shard=*"))[0])
+    lineage.write_shards(spans, out, n_shards=16)
+    manifest = spark.read.parquet(f"{out}/_shards_done").agg(
+        F.count("*").cast("long").alias("n_buckets")
+    )
+    return manifest.crossJoin(
+        spark.read.parquet(out).agg(
+            F.count("*").cast("long").alias("n_spans"),
+            F.sum(F.length("text")).cast("long").alias("n_chars"),
         )
-    except RuntimeError:
-        pass  # injected crash: 5 buckets committed, manifest persisted
-    lineage.run_extraction_with_lineage(spark, sf_dir, out, n_buckets=16)
-    manifest = spark.read.parquet(f"{out}/_lineage")
-    return manifest.agg(
-        F.countDistinct("bucket").cast("long").alias("n_buckets"),
-        F.sum("n_spans").cast("long").alias("n_spans"),
-        F.sum("n_chars").cast("long").alias("n_chars"),
     )
 
 

@@ -103,9 +103,30 @@ def test_resume_rewrites_unmanifested_partial_shards(spark, sf_dir, tmp_path, ca
     assert spark.read.parquet(str(out)).count() == n
 
 
+def test_uncommitted_manifest_resumes_from_scratch(
+    spark, sf_dir, tmp_path, capsys
+):
+    """A kill during the manifest append leaves ``_shards_done`` holding
+    only ``_temporary/``: nothing is done, and the job runs every shard
+    instead of failing on every later run."""
+    mod = _job()
+    args = ["--pipeline", "extract", "--input", f"{sf_dir}/documents.parquet",
+            "--shards", "4"]
+    clean, out = tmp_path / "clean", tmp_path / "spans"
+    assert mod.main(args + ["--output", str(clean)]) == 0
+    (out / "_shards_done" / "_temporary" / "0").mkdir(parents=True)
+    assert mod.main(args + ["--output", str(out)]) == 0
+    m = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert m["resumed_shards_skipped"] == 0
+    n = spark.read.parquet(str(clean)).count()
+    assert spark.read.parquet(str(out)).count() == m["n_spans"] == n
+    assert spark.read.parquet(str(out / "_shards_done")).count() == 4
+
+
 def test_corrupt_manifest_raises_instead_of_rewriting(spark, sf_dir, tmp_path, capsys):
-    """Only a MISSING manifest means "first run": an unreadable one
-    must fail the job, not rewrite every committed shard."""
+    """Only a missing or uncommitted manifest means "first run": an
+    unreadable one must fail the job, not rewrite every committed
+    shard."""
     import pytest
     from py4j.protocol import Py4JJavaError
 

@@ -21,6 +21,11 @@
   holds for each top-level function and class of the engine, which
   program code must name in code (a call, an attribute, an import),
   not only in a docstring or comment.
+- Data is never written in append mode: a resumable write overwrites
+  its pending shards dynamically, and only ``lineage.write_shards``'s
+  manifest, written after the data commit, is appended. An append of
+  data duplicates it when a crash lands between the data and the
+  manifest write.
 - Arrays are sorted with ``sort_array``, a native sort, not
   ``array_sort``, whose comparator (the default one too) is a lambda
   evaluated interpreted on every comparison. The two differ only in
@@ -150,10 +155,6 @@ ARROW_MAP_OWNERS = {
     ("pero_ocr_spark/operators/ctc.py", "decode_greedy"): (
         1,
         "batch-vectorized kernel: one padded tensor per batch",
-    ),
-    ("pero_ocr_spark/operators/ctc.py", "decode_beam"): (
-        1,
-        "CTC decoder, kept in the batch framing the other decoders share",
     ),
     ("pero_ocr_spark/operators/ctc.py", "recognize_lines"): (
         1,
@@ -351,6 +352,51 @@ def test_every_engine_function_is_named_by_program_code():
     assert not unnamed, (
         "engine functions only tests name (move them into the tests, or "
         "delete them): " + ", ".join(unnamed)
+    )
+
+
+# (file, enclosing function): (append-mode writes it keeps, reason).
+APPEND_OWNERS = {
+    ("pero_ocr_spark/operators/lineage.py", "write_shards"): (
+        1,
+        "the _shards_done manifest, appended after the data commit",
+    ),
+}
+
+
+def _append_writes(path: Path):
+    """(enclosing top-level function, line) of every ``.mode("append")``
+    call and every call passing ``mode="append"``."""
+    for top in ast.parse(path.read_text(), filename=str(path)).body:
+        fn = top.name if isinstance(top, ast.FunctionDef) else None
+        for node in ast.walk(top):
+            if not isinstance(node, ast.Call):
+                continue
+            args = list(node.args) if (
+                isinstance(node.func, ast.Attribute) and node.func.attr == "mode"
+            ) else []
+            args += [k.value for k in node.keywords if k.arg == "mode"]
+            if any(
+                isinstance(a, ast.Constant) and a.value == "append" for a in args
+            ):
+                yield fn, node.lineno
+
+
+def test_data_writes_never_append():
+    uses: dict[tuple, list[int]] = {}
+    for p in _engine_files():
+        for fn, line in _append_writes(p):
+            uses.setdefault((_rel(p), fn), []).append(line)
+    wrong = [
+        f"{path}:{sorted(uses.get(key, []))} ({fn or 'module level'})"
+        for key in sorted(set(uses) | set(APPEND_OWNERS), key=str)
+        for path, fn in [key]
+        if len(uses.get(key, [])) != APPEND_OWNERS.get(key, (0,))[0]
+    ]
+    assert not wrong, (
+        "write data with dynamic partition overwrite "
+        "(lineage.write_shards), and keep APPEND_OWNERS exact: "
+        + ", ".join(wrong)
     )
 
 
