@@ -54,6 +54,64 @@ def resample_baseline(baseline: np.ndarray, num_points: int = 10) -> np.ndarray:
 
 # ------------------------------------------------- merge lines (L11)
 
+def _merge_roots(
+    xlo: np.ndarray,
+    xhi: np.ndarray,
+    ymid: np.ndarray,
+    asc: np.ndarray,
+    desc: np.ndarray,
+) -> np.ndarray:
+    """One pass of the merge predicate: each line's union-find root
+    (the lowest index of its component) over lines given by x extent,
+    mean baseline y and asc/desc heights."""
+    n = len(xlo)
+    parent = list(range(n))
+
+    def find(i):
+        while parent[i] != i:
+            parent[i] = parent[parent[i]]
+            i = parent[i]
+        return i
+
+    hsum = asc + desc
+    # ---- candidate pairs by interval sweep, not O(n²) outer products.
+    # The predicate requires vertical overlap (h_overlap > 0.7·min_h >
+    # 0), i.e. the [y-asc, y+desc] intervals intersect — so sort by
+    # interval start and pair each line only with the lines whose start
+    # falls before its end. On row-structured pages that is O(n·band)
+    # with band = lines per text row; the old outer-product path
+    # allocated six n×n float64 matrices, ~1 GB per matrix for the
+    # 11k-line groups a 64×-skewed corpus doc produces (the round-3
+    # "17.8 s unexplained" — it was quadratic allocation on skew, not
+    # suite noise). Worst case (all lines one row) degrades to the same
+    # O(n²) pair count but never materializes an n×n matrix.
+    ylo = ymid - asc
+    yhi = ymid + desc
+    order = np.argsort(ylo, kind="stable")
+    lo_s = ylo[order]
+    bound = np.searchsorted(lo_s, yhi[order], side="left")
+    cnt = np.maximum(bound - np.arange(n) - 1, 0)
+    total = int(cnt.sum())
+    ii_s = np.repeat(np.arange(n), cnt)
+    offsets = np.concatenate(([0], np.cumsum(cnt)[:-1]))
+    jj_s = np.arange(total) - offsets[ii_s] + ii_s + 1
+    ii, jj = order[ii_s], order[jj_s]
+    # same predicate as the reference's merge candidates, evaluated 1-D
+    min_h = np.minimum(hsum[ii], hsum[jj])
+    h_overlap = np.minimum(yhi[ii], yhi[jj]) - np.maximum(ylo[ii], ylo[jj])
+    contained = ((xlo[ii] > xlo[jj]) & (xhi[ii] < xhi[jj])) | (
+        (xlo[jj] > xlo[ii]) & (xhi[jj] < xhi[ii])
+    )
+    gap = np.maximum(xlo[ii] - xhi[jj], xlo[jj] - xhi[ii])
+    ok = (h_overlap > 0.7 * min_h) & ~contained & (gap < 2 * min_h)
+    ii, jj = ii[ok], jj[ok]
+    for i, j in zip(ii.tolist(), jj.tolist()):
+        ri, rj = find(i), find(j)
+        if ri != rj:
+            parent[max(ri, rj)] = min(ri, rj)
+    return np.fromiter((find(i) for i in range(n)), dtype=np.int64, count=n)
+
+
 def merge_lines_straight(
     x0: np.ndarray,
     x1: np.ndarray,
@@ -88,56 +146,11 @@ def merge_lines_straight(
             desc.copy(),
         )
 
-    parent = list(range(n))
-
-    def find(i):
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
-
     # extents via min/max like the general kernel (b[:,0].min/max), so
     # reversed segments (x0 > x1) evaluate the same predicate
     xlo = np.minimum(x0, x1)
     xhi = np.maximum(x0, x1)
-    hsum = asc + desc
-    # ---- candidate pairs by interval sweep, not O(n²) outer products.
-    # The predicate requires vertical overlap (h_overlap > 0.7·min_h >
-    # 0), i.e. the [y-asc, y+desc] intervals intersect — so sort by
-    # interval start and pair each line only with the lines whose start
-    # falls before its end. On row-structured pages that is O(n·band)
-    # with band = lines per text row; the old outer-product path
-    # allocated six n×n float64 matrices, ~1 GB per matrix for the
-    # 11k-line groups a 64×-skewed corpus doc produces (the round-3
-    # "17.8 s unexplained" — it was quadratic allocation on skew, not
-    # suite noise). Worst case (all lines one row) degrades to the same
-    # O(n²) pair count but never materializes an n×n matrix.
-    ylo = y - asc
-    yhi = y + desc
-    order = np.argsort(ylo, kind="stable")
-    lo_s = ylo[order]
-    bound = np.searchsorted(lo_s, yhi[order], side="left")
-    cnt = np.maximum(bound - np.arange(n) - 1, 0)
-    total = int(cnt.sum())
-    ii_s = np.repeat(np.arange(n), cnt)
-    offsets = np.concatenate(([0], np.cumsum(cnt)[:-1]))
-    jj_s = np.arange(total) - offsets[ii_s] + ii_s + 1
-    ii, jj = order[ii_s], order[jj_s]
-    # same predicate as the reference's merge candidates, evaluated 1-D
-    min_h = np.minimum(hsum[ii], hsum[jj])
-    h_overlap = np.minimum(yhi[ii], yhi[jj]) - np.maximum(ylo[ii], ylo[jj])
-    contained = ((xlo[ii] > xlo[jj]) & (xhi[ii] < xhi[jj])) | (
-        (xlo[jj] > xlo[ii]) & (xhi[jj] < xhi[ii])
-    )
-    gap = np.maximum(xlo[ii] - xhi[jj], xlo[jj] - xhi[ii])
-    ok = (h_overlap > 0.7 * min_h) & ~contained & (gap < 2 * min_h)
-    ii, jj = ii[ok], jj[ok]
-    for i, j in zip(ii.tolist(), jj.tolist()):
-        ri, rj = find(i), find(j)
-        if ri != rj:
-            parent[max(ri, rj)] = min(ri, rj)
-
-    roots = np.fromiter((find(i) for i in range(n)), dtype=np.int64, count=n)
+    roots = _merge_roots(xlo, xhi, y, asc, desc)
     uniq, inverse, counts = np.unique(
         roots, return_inverse=True, return_counts=True
     )
@@ -159,6 +172,7 @@ def merge_lines_straight(
         # original first-point x as the order key
         oy[single] = y[uniq[single]]
         okey[single] = x0[uniq[single]]
+    curves = {}
     for c in np.flatnonzero(~single):
         members = np.flatnonzero(inverse == c)
         # same point construction as the general kernel: member points
@@ -169,13 +183,60 @@ def merge_lines_straight(
         pts[1::2, 0] = x1[members]
         pts[1::2, 1] = y[members]
         pts = pts[np.argsort(pts[:, 0], kind="stable")]
-        rb = resample_baseline(pts)
+        rb = curves[c] = resample_baseline(pts)
         oy[c] = rb[0, 1]
         ox0[c] = rb[:, 0].min()
         ox1[c] = rb[:, 0].max()
         okey[c] = rb[0, 0]
     order = np.lexsort((okey, oy))
-    return ox0[order], ox1[order], oy[order], oasc[order], odesc[order]
+    if k == n:
+        return ox0[order], ox1[order], oy[order], oasc[order], odesc[order]
+    # a merged baseline is a refit curve whose mean y is not its
+    # members' y, so it can come into overlap with a line the first
+    # pass left apart: repeat passes over the curves to the fixpoint
+    bls = [
+        curves[c] if c in curves
+        else np.array([[x0[uniq[c]], y[uniq[c]]], [x1[uniq[c]], y[uniq[c]]]])
+        for c in order.tolist()
+    ]
+    return _merge_curves(bls, oasc[order], odesc[order])
+
+
+def _merge_curves(
+    bls: list[np.ndarray], asc: np.ndarray, desc: np.ndarray
+) -> tuple[np.ndarray, ...]:
+    """The passes of ``merge_lines_straight`` after the first one
+    merged: the general kernel's point-list passes over (y, x)-ordered
+    baselines, repeated until a pass merges nothing."""
+    while True:
+        xlo = np.array([b[:, 0].min() for b in bls])
+        xhi = np.array([b[:, 0].max() for b in bls])
+        ymean = np.array([b[:, 1].mean() for b in bls])
+        uniq, inverse = np.unique(
+            _merge_roots(xlo, xhi, ymean, asc, desc), return_inverse=True
+        )
+        k = len(uniq)
+        if k == len(bls):
+            return xlo, xhi, np.array([b[0, 1] for b in bls]), asc, desc
+        out = []
+        for c in range(k):
+            members = np.flatnonzero(inverse == c)
+            if len(members) == 1:
+                out.append(bls[members[0]])
+                continue
+            pts = np.concatenate([bls[m] for m in members])
+            out.append(
+                resample_baseline(pts[np.argsort(pts[:, 0], kind="stable")])
+            )
+        oasc = np.zeros(k)
+        odesc = np.zeros(k)
+        np.maximum.at(oasc, inverse, asc)
+        np.maximum.at(odesc, inverse, desc)
+        order = np.lexsort(
+            ([b[0, 0] for b in out], [b[0, 1] for b in out])
+        )
+        bls = [out[i] for i in order.tolist()]
+        asc, desc = oasc[order], odesc[order]
 
 
 # ---------------------------------------------- polygon ops (J1 exact)

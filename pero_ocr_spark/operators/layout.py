@@ -197,7 +197,7 @@ def _group_bounds(dcol: np.ndarray, rcol: np.ndarray):
 
 def merge_lines_stage(lines: DataFrame) -> DataFrame:
     """L11: merge horizontally adjacent baselines per (doc, region) —
-    union-find closure per group.
+    union-find closure per group, repeated to the fixpoint.
 
     Group mechanics: the kernel is sub-millisecond per group, so
     per-group Arrow batches (applyInPandas: one JVM↔python round trip

@@ -33,9 +33,22 @@ def baseline_to_textline(baseline: np.ndarray, asc: float, desc: float) -> np.nd
 def merge_lines(
     baselines: list[np.ndarray], heights: list[tuple[float, float]]
 ) -> tuple[list[np.ndarray], list[tuple[float, float]]]:
-    """Union-find closure of the merge predicate (the fixpoint of the
-    reference's iterated merge), deterministic output order by
-    (first-point y, x)."""
+    """The fixpoint of the reference's iterated merge, deterministic
+    output order by (first-point y, x). A merged baseline is a refit
+    curve whose mean y differs from its members', so it can overlap a
+    line the pass before left apart: passes repeat until one merges
+    nothing."""
+    while True:
+        n = len(baselines)
+        baselines, heights = _merge_pass(baselines, heights)
+        if len(baselines) == n:
+            return baselines, heights
+
+
+def _merge_pass(
+    baselines: list[np.ndarray], heights: list[tuple[float, float]]
+) -> tuple[list[np.ndarray], list[tuple[float, float]]]:
+    """One pass: union-find closure of the merge predicate."""
     n = len(baselines)
     parent = list(range(n))
 

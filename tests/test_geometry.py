@@ -131,6 +131,21 @@ class TestMergeLines:
         merged_b, _ = merge_lines(bs, [(10, 4)] * 3)
         assert len(merged_b) == 1
 
+    def test_refit_curve_merges_on_later_pass(self):
+        # the lines at y=327 and y=331 merge into a refit curve whose
+        # mean y overlaps the y=336 line enough to merge on a second
+        # pass; one pass alone left two lines
+        raw = [(0.0, 336.0), (1.0, 327.0), (1.0, 331.0)]
+        bs = [np.array([[x, y], [x + 10.0, y]]) for x, y in raw]
+        merged_b, merged_h = merge_lines(bs, [(10.0, 4.0)] * 3)
+        assert len(merged_b) == 1
+        x0, x1, y, asc, desc = G.merge_lines_straight(
+            np.array([x for x, _ in raw]), np.array([x + 10.0 for x, _ in raw]),
+            np.array([y for _, y in raw]), np.full(3, 10.0), np.full(3, 4.0),
+        )
+        b = merged_b[0]
+        assert (x0[0], x1[0], y[0]) == (b[:, 0].min(), b[:, 0].max(), b[0, 1])
+
     def test_deterministic_order_same_y(self):
         b1 = np.array([[200.0, 100.0], [240.0, 100.0]])
         b2 = np.array([[0.0, 100.0], [40.0, 100.0]])
