@@ -94,7 +94,7 @@ def _run_icetable(spark, args, spans, t0) -> int:
     marker + data (shards skipped); no side manifest can ever
     disagree with the table, under ANY committer.
     """
-    from pero_ocr_spark.operators import sampling, telemetry
+    from pero_ocr_spark.operators import lineage, telemetry
     from pero_ocr_spark.sources.icetable import IceTable
 
     table = IceTable(args.output)
@@ -104,9 +104,9 @@ def _run_icetable(spark, args, spans, t0) -> int:
     todo = sorted(set(range(args.shards)) - done)
     obs = None
     if todo:
-        batch = spans.withColumn(
-            "shard", sampling._residue(args.shards).cast("int")
-        ).filter(F.col("shard").isin(todo))
+        batch = lineage.with_shard(spans, args.shards).filter(
+            F.col("shard").isin(todo)
+        )
         # one task (→ one data file) per pending shard; the commit
         # records per-file doc_id min/max for pruned reads
         observed, obs = telemetry.observe_extraction(

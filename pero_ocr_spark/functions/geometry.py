@@ -150,64 +150,50 @@ def merge_lines_straight(
     # reversed segments (x0 > x1) evaluate the same predicate
     xlo = np.minimum(x0, x1)
     xhi = np.maximum(x0, x1)
-    roots = _merge_roots(xlo, xhi, y, asc, desc)
-    uniq, inverse, counts = np.unique(
-        roots, return_inverse=True, return_counts=True
+    uniq, inverse = np.unique(
+        _merge_roots(xlo, xhi, y, asc, desc), return_inverse=True
     )
-    k = len(uniq)
-    ox0 = np.full(k, np.inf)
-    ox1 = np.full(k, -np.inf)
-    oy = np.empty(k)
-    oasc = np.zeros(k)
-    odesc = np.zeros(k)
-    okey = np.empty(k)  # sort key = first POINT's x (b[0,0]), not min
-    np.minimum.at(ox0, inverse, xlo)
-    np.maximum.at(ox1, inverse, xhi)
+    if len(uniq) == n:  # nothing merges: order the flat arrays
+        order = np.lexsort((x0, y))
+        return xlo[order], xhi[order], y[order], asc[order], desc[order]
+    bls = [np.array([[a, v], [b, v]]) for a, b, v in zip(x0, x1, y)]
+    return _merge_curves(*_assemble(bls, asc, desc, inverse, len(uniq)))
+
+
+def _assemble(
+    bls: list[np.ndarray],
+    asc: np.ndarray,
+    desc: np.ndarray,
+    inverse: np.ndarray,
+    k: int,
+) -> tuple[list[np.ndarray], np.ndarray, np.ndarray]:
+    """Merge each of the ``k`` components (``inverse`` maps lines to
+    them) like the general kernel: member points in index order,
+    stable sort by x, polyfit through resample_baseline, max heights;
+    components ordered by their first point's (y, x)."""
+    out = []
+    for c in range(k):
+        members = np.flatnonzero(inverse == c)
+        if len(members) == 1:
+            out.append(bls[members[0]])
+            continue
+        pts = np.concatenate([bls[m] for m in members])
+        out.append(resample_baseline(pts[np.argsort(pts[:, 0], kind="stable")]))
+    oasc = np.full(k, -np.inf)
+    odesc = np.full(k, -np.inf)
     np.maximum.at(oasc, inverse, asc)
     np.maximum.at(odesc, inverse, desc)
-    single = counts == 1
-    if single.any():
-        # union always parents max→min, so a component's root IS its
-        # lowest member index — a singleton keeps its own y and its
-        # original first-point x as the order key
-        oy[single] = y[uniq[single]]
-        okey[single] = x0[uniq[single]]
-    curves = {}
-    for c in np.flatnonzero(~single):
-        members = np.flatnonzero(inverse == c)
-        # same point construction as the general kernel: member points
-        # in index order, stable sort by x, deg-2 polyfit, y at min x
-        pts = np.empty((2 * len(members), 2))
-        pts[0::2, 0] = x0[members]
-        pts[0::2, 1] = y[members]
-        pts[1::2, 0] = x1[members]
-        pts[1::2, 1] = y[members]
-        pts = pts[np.argsort(pts[:, 0], kind="stable")]
-        rb = curves[c] = resample_baseline(pts)
-        oy[c] = rb[0, 1]
-        ox0[c] = rb[:, 0].min()
-        ox1[c] = rb[:, 0].max()
-        okey[c] = rb[0, 0]
-    order = np.lexsort((okey, oy))
-    if k == n:
-        return ox0[order], ox1[order], oy[order], oasc[order], odesc[order]
-    # a merged baseline is a refit curve whose mean y is not its
-    # members' y, so it can come into overlap with a line the first
-    # pass left apart: repeat passes over the curves to the fixpoint
-    bls = [
-        curves[c] if c in curves
-        else np.array([[x0[uniq[c]], y[uniq[c]]], [x1[uniq[c]], y[uniq[c]]]])
-        for c in order.tolist()
-    ]
-    return _merge_curves(bls, oasc[order], odesc[order])
+    order = np.lexsort(([b[0, 0] for b in out], [b[0, 1] for b in out]))
+    return [out[i] for i in order.tolist()], oasc[order], odesc[order]
 
 
 def _merge_curves(
     bls: list[np.ndarray], asc: np.ndarray, desc: np.ndarray
 ) -> tuple[np.ndarray, ...]:
-    """The passes of ``merge_lines_straight`` after the first one
-    merged: the general kernel's point-list passes over (y, x)-ordered
-    baselines, repeated until a pass merges nothing."""
+    """The passes after the first one merged. A merged baseline is a
+    refit curve whose mean y is not its members' y, so it can come into
+    overlap with a line the pass before left apart: passes over the
+    (y, x)-ordered curves repeat until one merges nothing."""
     while True:
         xlo = np.array([b[:, 0].min() for b in bls])
         xhi = np.array([b[:, 0].max() for b in bls])
@@ -215,28 +201,9 @@ def _merge_curves(
         uniq, inverse = np.unique(
             _merge_roots(xlo, xhi, ymean, asc, desc), return_inverse=True
         )
-        k = len(uniq)
-        if k == len(bls):
+        if len(uniq) == len(bls):
             return xlo, xhi, np.array([b[0, 1] for b in bls]), asc, desc
-        out = []
-        for c in range(k):
-            members = np.flatnonzero(inverse == c)
-            if len(members) == 1:
-                out.append(bls[members[0]])
-                continue
-            pts = np.concatenate([bls[m] for m in members])
-            out.append(
-                resample_baseline(pts[np.argsort(pts[:, 0], kind="stable")])
-            )
-        oasc = np.zeros(k)
-        odesc = np.zeros(k)
-        np.maximum.at(oasc, inverse, asc)
-        np.maximum.at(odesc, inverse, desc)
-        order = np.lexsort(
-            ([b[0, 0] for b in out], [b[0, 1] for b in out])
-        )
-        bls = [out[i] for i in order.tolist()]
-        asc, desc = oasc[order], odesc[order]
+        bls, asc, desc = _assemble(bls, asc, desc, inverse, len(uniq))
 
 
 # ---------------------------------------------- polygon ops (J1 exact)

@@ -15,8 +15,9 @@ output folders and skips already-done page ids):
     direct-write committers publish task files immediately) is
     replaced, never skipped and never appended twice.
 
-The manifest is one row per shard; the underscore prefix hides it from
-plain ``spark.read.parquet(out_dir)`` consumers. Run-level counters
+The manifest is one row per shard, carrying the shard count it was
+written for (a rerun with another count raises); the underscore prefix
+hides it from plain ``spark.read.parquet(out_dir)`` consumers. Run-level counters
 ride the data write through ``telemetry.observe_extraction``.
 
 Also here: the weight-aware repartitioner used before expensive UDF
@@ -35,18 +36,38 @@ from pyspark.sql import functions as F
 from pero_ocr_spark.operators import sampling, shuffle_width, telemetry
 
 
-def _done_shards(spark: SparkSession, manifest: str) -> list[int]:
+def with_shard(spans: DataFrame, n_shards: int) -> DataFrame:
+    """``spans`` plus the ``shard`` column both resumable sinks (this
+    writer and the extract job's icetable sink) partition and resume
+    by: an LCG residue of ``doc_id`` in [0, n_shards)."""
+    return spans.withColumn("shard", sampling._residue(n_shards).cast("int"))
+
+
+def _done_shards(spark: SparkSession, manifest: str, n_shards: int) -> list[int]:
     """Shards the manifest records as done. A missing manifest, and a
     manifest directory holding no committed file (a kill mid-append
     leaves only ``_temporary/``), both mean none; any other failure
     (a corrupt part file) raises — read as "none done" it would
-    rewrite every committed shard."""
+    rewrite every committed shard. So does a manifest written for
+    another shard count: its residues name other doc sets, and
+    resuming from them would write spans a second time."""
     try:
-        rows = spark.read.parquet(manifest).select("shard").distinct().collect()
+        rows = (
+            spark.read.parquet(manifest)
+            .select("shard", "n_shards")
+            .distinct()
+            .collect()
+        )
     except AnalysisException as e:
         if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
             raise
         return []
+    counts = sorted({int(r.n_shards) for r in rows} - {n_shards})
+    if counts:
+        raise ValueError(
+            f"{manifest} records shards of {counts} shards; this write "
+            f"asks for {n_shards} — write to a new directory"
+        )
     return sorted(int(r.shard) for r in rows)
 
 
@@ -62,11 +83,11 @@ def write_shards(spans: DataFrame, out_dir: str, n_shards: int) -> dict:
     """
     spark = spans.sparkSession
     manifest = f"{out_dir}/_shards_done"
-    done = _done_shards(spark, manifest)
+    done = _done_shards(spark, manifest, n_shards)
     todo = sorted(set(range(n_shards)) - set(done))
     obs = None
     if todo:
-        sharded = spans.withColumn("shard", sampling._residue(n_shards).cast("int"))
+        sharded = with_shard(spans, n_shards)
         if done:
             sharded = sharded.filter(~F.col("shard").isin(done))
         observed, obs = telemetry.observe_extraction(sharded)
@@ -83,7 +104,7 @@ def write_shards(spans: DataFrame, out_dir: str, n_shards: int) -> dict:
         # every pending residue is done now, those with no spans too —
         # enumerate them, don't derive them from the data
         spark.createDataFrame(
-            [(s,) for s in todo], "shard int"
+            [(s, n_shards) for s in todo], "shard int, n_shards int"
         ).coalesce(1).write.mode("append").parquet(manifest)
     return {
         **telemetry.extraction_counters(obs),

@@ -943,9 +943,10 @@ def q_line_crop_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # §2.8 — checkpointed lineage + resume as a driver query: write the
-# extracted spans shard by shard, simulate the crash that lands the data
-# commit but not the manifest append (manifest gone, one shard's files
-# lost), write again, and check the table holds every span exactly once.
+# extracted spans shard by shard, simulate a resumed run that crashed
+# after its data commit but before its manifest append (shards 0 and 1
+# written but unrecorded, shard 0's files lost), write again, and check
+# the table holds every span exactly once.
 # ---------------------------------------------------------------------------
 
 
@@ -960,19 +961,24 @@ FROM extracted
 """,
 )
 def q_lineage_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
     import shutil
 
     from pero_ocr_spark.operators import lineage
 
     # fresh-emptied fixed path: the first write starts from no manifest
     out = _scratch("lineage")
+    done = f"{out}/_shards_done"
     spans = extract.extract_spans(corpus.spans_table(spark, sf_dir))
     lineage.write_shards(spans, out, n_shards=16)
-    shutil.rmtree(f"{out}/_shards_done")
-    shutil.rmtree(sorted(glob.glob(f"{out}/shard=*"))[0])
+    # the second write skips the 14 recorded shards, restores shard 0
+    # and overwrites shard 1 in place
+    kept = spark.read.parquet(done).filter(F.col("shard") >= 2)
+    rows, schema = kept.collect(), kept.schema
+    shutil.rmtree(done)
+    spark.createDataFrame(rows, schema).write.parquet(done)
+    shutil.rmtree(f"{out}/shard=0")
     lineage.write_shards(spans, out, n_shards=16)
-    manifest = spark.read.parquet(f"{out}/_shards_done").agg(
+    manifest = spark.read.parquet(done).agg(
         F.count("*").cast("long").alias("n_buckets")
     )
     return manifest.crossJoin(

@@ -1,12 +1,15 @@
 """The resumable shard writer and the weight-aware repartitioner.
 
-Crash/resume, rerun, corrupt- and uncommitted-manifest behaviour of
-``lineage.write_shards`` is exercised through its job entry point in
-``tests/test_extract_job.py``.
+Full-rewrite resume, rerun, corrupt- and uncommitted-manifest behaviour
+of ``lineage.write_shards`` is also exercised through its job entry
+point in ``tests/test_extract_job.py``.
 """
 
 from __future__ import annotations
 
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
 
 from pero_ocr_spark import corpus
@@ -57,4 +60,54 @@ def test_zero_span_bucket_is_marked_done(spark, tmp_path):
         "n_spans": 0, "n_text": 0, "n_media": 0, "n_chars": 0, "max_ord": 0,
         "resumed_shards_skipped": 4,
     }
+    assert sorted(p.relative_to(out) for p in out.rglob("*")) == files
+
+
+def _files(shard_dir):
+    return {p.name: p.stat().st_mtime_ns for p in shard_dir.glob("*.parquet")}
+
+
+def test_crash_then_resume_produces_exact_full_output(spark, sf_dir, tmp_path):
+    """A resumed run that dies after its data commit but before its
+    manifest append: shards 0 and 1 are recorded, 2 and 3 are not (and
+    their files are lost). The rerun skips the recorded shards without
+    touching their files and leaves every span exactly once."""
+    spans = extract.extract_spans(corpus.spans_table(spark, sf_dir))
+    out = tmp_path / "spans"
+    lineage.write_shards(spans, str(out), n_shards=4)
+    done = out / "_shards_done"
+    shutil.rmtree(done)
+    spark.createDataFrame([(0, 4), (1, 4)], "shard int, n_shards int").write.parquet(
+        str(done)
+    )
+    shutil.rmtree(out / "shard=2")
+    shutil.rmtree(out / "shard=3")
+    kept = {s: _files(out / f"shard={s}") for s in (0, 1)}
+    assert all(kept.values())
+
+    second = lineage.write_shards(spans, str(out), n_shards=4)
+    assert second["resumed_shards_skipped"] == 2
+    # a static overwrite would have replaced the skipped shards' files
+    assert {s: _files(out / f"shard={s}") for s in (0, 1)} == kept
+    back = spark.read.parquet(str(out)).select(*spans.columns)
+    assert back.count() == spans.count()
+    assert back.exceptAll(spans).isEmpty() and spans.exceptAll(back).isEmpty()
+    redone = lineage.with_shard(spans, 4).filter(F.col("shard") >= 2)
+    assert second["n_spans"] == redone.count() > 0
+    manifest = spark.read.parquet(str(done))
+    assert sorted(r.shard for r in manifest.collect()) == [0, 1, 2, 3]
+
+
+def test_rerun_with_another_shard_count_raises(spark, tmp_path):
+    """Residues of one shard count name other documents under another:
+    resuming a 4-shard output as 8 shards would write spans twice."""
+    docs = spark.createDataFrame(
+        [(i, "alpha beta gamma delta") for i in range(1, 9)], ["doc_id", "text"]
+    )
+    spans = extract.extract_spans(corpus.spans_of(docs))
+    out = tmp_path / "spans"
+    lineage.write_shards(spans, str(out), n_shards=4)
+    files = sorted(p.relative_to(out) for p in out.rglob("*"))
+    with pytest.raises(ValueError, match="write to a new directory"):
+        lineage.write_shards(spans, str(out), n_shards=8)
     assert sorted(p.relative_to(out) for p in out.rglob("*")) == files
