@@ -22,12 +22,16 @@ the nondeterminism designed out:
 
 The scalar general-case kernels these replace (multi-point
 ``merge_lines``, ``point_in_polygon``, the gap-based XY-cut) live in
-``tests/_geometry_ref.py`` as the references the tests check against.
+``tests/_geometry_ref.py`` as the references the tests check against,
+and the per-component loop form of ``merge_lines_straight`` in
+``tests/_kernel_ref.py``.
 """
 
 from __future__ import annotations
 
 import numpy as np
+from numpy.linalg import _umath_linalg
+from numpy.linalg import linalg as _linalg
 
 
 # ------------------------------------------------ textline polygon (L14)
@@ -54,6 +58,38 @@ def resample_baseline(baseline: np.ndarray, num_points: int = 10) -> np.ndarray:
 
 # ------------------------------------------------- merge lines (L11)
 
+def union_find_roots(
+    forest: np.ndarray, a: np.ndarray, b: np.ndarray
+) -> np.ndarray:
+    """Each item's root after joining the trees of ``forest`` (each
+    item's parent, at a lower or equal index) along the pairs
+    ``(a[i], b[i])``: the lowest index of its component, since a union
+    hangs the higher root under the lower one."""
+    parent = _forest_roots(forest).tolist()
+
+    def find(i):
+        while parent[i] != i:
+            parent[i] = parent[parent[i]]
+            i = parent[i]
+        return i
+
+    for i, j in zip(a.tolist(), b.tolist()):
+        ri, rj = find(i), find(j)
+        if ri != rj:
+            parent[max(ri, rj)] = min(ri, rj)
+    return _forest_roots(np.asarray(parent, dtype=np.int64))
+
+
+def _forest_roots(parent: np.ndarray) -> np.ndarray:
+    """Each item's root in a forest of parent pointers, by pointer
+    jumping: every pass halves every chain."""
+    while True:
+        up = parent[parent]
+        if np.array_equal(up, parent):
+            return parent
+        parent = up
+
+
 def _merge_roots(
     xlo: np.ndarray,
     xhi: np.ndarray,
@@ -65,14 +101,6 @@ def _merge_roots(
     (the lowest index of its component) over lines given by x extent,
     mean baseline y and asc/desc heights."""
     n = len(xlo)
-    parent = list(range(n))
-
-    def find(i):
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
-
     hsum = asc + desc
     # ---- candidate pairs by interval sweep, not O(n²) outer products.
     # The predicate requires vertical overlap (h_overlap > 0.7·min_h >
@@ -104,12 +132,7 @@ def _merge_roots(
     )
     gap = np.maximum(xlo[ii] - xhi[jj], xlo[jj] - xhi[ii])
     ok = (h_overlap > 0.7 * min_h) & ~contained & (gap < 2 * min_h)
-    ii, jj = ii[ok], jj[ok]
-    for i, j in zip(ii.tolist(), jj.tolist()):
-        ri, rj = find(i), find(j)
-        if ri != rj:
-            parent[max(ri, rj)] = min(ri, rj)
-    return np.fromiter((find(i) for i in range(n)), dtype=np.int64, count=n)
+    return union_find_roots(np.arange(n), ii[ok], jj[ok])
 
 
 def merge_lines_straight(
@@ -120,13 +143,18 @@ def merge_lines_straight(
     desc: np.ndarray,
 ) -> tuple[np.ndarray, ...]:
     """Array-based ``merge_lines`` (tests/_geometry_ref.py) for
-    straight 2-point horizontal baselines ([[x0, y], [x1, y]]): identical components, values and
-    output order, but the per-line Python object churn (one np.array
-    per baseline + list-of-tuples heights) is replaced by five flat
-    input arrays and five flat output arrays — the shape Arrow hands a
-    pandas group to begin with. Merged components reproduce the
-    general kernel bit-for-bit (same concat order, same stable x sort,
-    same deg-2 polyfit through resample_baseline).
+    straight 2-point horizontal baselines ([[x0, y], [x1, y]]):
+    identical components, values and output order, computed in
+    whole-array passes over five flat input arrays — the shape Arrow
+    hands a pandas group to begin with.
+
+    Every curve's points live in one flat (x, y) pair of arrays with a
+    point count per curve. A merged component gathers its members'
+    points in index order and sorts them stably by x (one ``lexsort``
+    for all components), then is refit through the deg-2
+    ``resample_baseline`` arithmetic in stacks of equal point count
+    (``_resample_stack``), so every value is bit-for-bit the general
+    kernel's.
 
     Returns (x0, x1, y, asc, desc) arrays ordered by (y, x0) —
     the general kernel's deterministic output order."""
@@ -156,54 +184,144 @@ def merge_lines_straight(
     if len(uniq) == n:  # nothing merges: order the flat arrays
         order = np.lexsort((x0, y))
         return xlo[order], xhi[order], y[order], asc[order], desc[order]
-    bls = [np.array([[a, v], [b, v]]) for a, b, v in zip(x0, x1, y)]
-    return _merge_curves(*_assemble(bls, asc, desc, inverse, len(uniq)))
+    px = np.column_stack((x0, x1)).ravel()
+    py = np.repeat(y, 2)
+    counts = np.full(n, 2)
+    return _merge_curves(
+        *_assemble(px, py, counts, asc, desc, inverse, len(uniq))
+    )
+
+
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """``concatenate([arange(s, s + l) for s, l in zip(starts, lens)])``."""
+    ends = np.cumsum(lens)
+    return np.arange(ends[-1] if len(ends) else 0) + np.repeat(
+        starts - (ends - lens), lens
+    )
+
+
+def _resample_stack(
+    bx: np.ndarray, by: np.ndarray, num_points: int = 10
+) -> tuple[np.ndarray, np.ndarray]:
+    """``resample_baseline`` of K baselines of m >= 4 points each (the
+    rows of ``bx``/``by``), as passes over (K, m, ·) stacks. Each step
+    is ``np.polyfit`` / ``np.linspace`` / ``np.polyval``'s own
+    arithmetic, so each row is bit-for-bit one ``resample_baseline``
+    call: the vander columns, their scaling, the same LAPACK
+    least-squares gufunc ``np.linalg.lstsq`` dispatches to (stacked,
+    with polyfit's ``rcond = m·eps``), and linspace's per-row choice
+    between its zero-step and its step formula. Stacks must hold ONE
+    point count: the column-scale sums and ``rcond`` depend on m."""
+    k, m = bx.shape
+    vertical = np.abs(bx[:, 0] - bx[:, -1]) < np.abs(by[:, 0] - by[:, -1])
+    u = np.where(vertical[:, None], by, bx)
+    v = np.where(vertical[:, None], bx, by)
+    lhs = np.empty((k, m, 3))
+    lhs[:, :, 0] = u * u
+    lhs[:, :, 1] = u
+    lhs[:, :, 2] = 1.0
+    scale = np.sqrt((lhs * lhs).sum(axis=1))
+    lhs /= scale[:, None, :]
+    # np.linalg.lstsq's gufunc for more rows (m >= 4) than columns (3)
+    coef = _umath_linalg.lstsq_n(
+        lhs,
+        v[:, :, None],
+        m * np.finfo(np.float64).eps,
+        signature="ddd->ddid",
+        extobj=_linalg.get_linalg_error_extobj(_linalg._raise_linalgerror_lstsq),
+    )[0][:, :, 0] / scale
+    start, stop = u[:, 0], u[:, -1]
+    delta = stop - start
+    div = num_points - 1
+    step = delta / div
+    ar = np.arange(num_points, dtype=np.float64)
+    xs = np.where(
+        (step == 0)[:, None], ar / div * delta[:, None], ar * step[:, None]
+    )
+    xs += start[:, None]
+    xs[:, -1] = stop
+    ys = np.zeros_like(xs)
+    for j in range(3):
+        ys = ys * xs + coef[:, j, None]
+    return np.where(vertical[:, None], ys, xs), np.where(vertical[:, None], xs, ys)
 
 
 def _assemble(
-    bls: list[np.ndarray],
+    px: np.ndarray,
+    py: np.ndarray,
+    counts: np.ndarray,
     asc: np.ndarray,
     desc: np.ndarray,
     inverse: np.ndarray,
     k: int,
-) -> tuple[list[np.ndarray], np.ndarray, np.ndarray]:
-    """Merge each of the ``k`` components (``inverse`` maps lines to
+) -> tuple[np.ndarray, ...]:
+    """Merge each of the ``k`` components (``inverse`` maps curves to
     them) like the general kernel: member points in index order,
     stable sort by x, polyfit through resample_baseline, max heights;
-    components ordered by their first point's (y, x)."""
-    out = []
-    for c in range(k):
-        members = np.flatnonzero(inverse == c)
-        if len(members) == 1:
-            out.append(bls[members[0]])
-            continue
-        pts = np.concatenate([bls[m] for m in members])
-        out.append(resample_baseline(pts[np.argsort(pts[:, 0], kind="stable")]))
-    oasc = np.full(k, -np.inf)
-    odesc = np.full(k, -np.inf)
-    np.maximum.at(oasc, inverse, asc)
-    np.maximum.at(odesc, inverse, desc)
-    order = np.lexsort(([b[0, 0] for b in out], [b[0, 1] for b in out]))
-    return [out[i] for i in order.tolist()], oasc[order], odesc[order]
+    a single-member component keeps its curve as it is. Components
+    come out ordered by their first point's (y, x), as flat points
+    plus per-curve counts and heights."""
+    starts = np.cumsum(counts) - counts
+    corder = np.argsort(inverse, kind="stable")
+    members = np.bincount(inverse, minlength=k)
+    comp = np.repeat(inverse[corder], counts[corder])
+    pidx = _ranges(starts[corder], counts[corder])
+    gx, gy = px[pidx], py[pidx]
+    multi = members > 1
+    o = np.lexsort((np.where(multi[comp], gx, 0.0), comp))
+    gx, gy = gx[o], gy[o]
+    npts = np.bincount(comp, minlength=k)
+    pstart = np.cumsum(npts) - npts
+    ocounts = np.where(multi, 10, npts)
+    ostart = np.cumsum(ocounts) - ocounts
+    ox = np.empty(int(ocounts.sum()))
+    oy = np.empty_like(ox)
+    single = np.flatnonzero(~multi)
+    src = _ranges(pstart[single], npts[single])
+    dst = _ranges(ostart[single], npts[single])
+    ox[dst], oy[dst] = gx[src], gy[src]
+    for m in np.unique(npts[multi]).tolist():
+        cs = np.flatnonzero(multi & (npts == m))
+        src = pstart[cs][:, None] + np.arange(m)
+        dst = ostart[cs][:, None] + np.arange(10)
+        ox[dst], oy[dst] = _resample_stack(gx[src], gy[src])
+    first = np.cumsum(members) - members
+    oasc = np.maximum.reduceat(asc[corder], first)
+    odesc = np.maximum.reduceat(desc[corder], first)
+    order = np.lexsort((ox[ostart], oy[ostart]))
+    sel = _ranges(ostart[order], ocounts[order])
+    return ox[sel], oy[sel], ocounts[order], oasc[order], odesc[order]
 
 
 def _merge_curves(
-    bls: list[np.ndarray], asc: np.ndarray, desc: np.ndarray
+    px: np.ndarray,
+    py: np.ndarray,
+    counts: np.ndarray,
+    asc: np.ndarray,
+    desc: np.ndarray,
 ) -> tuple[np.ndarray, ...]:
     """The passes after the first one merged. A merged baseline is a
     refit curve whose mean y is not its members' y, so it can come into
     overlap with a line the pass before left apart: passes over the
-    (y, x)-ordered curves repeat until one merges nothing."""
+    (y, x)-ordered curves repeat until one merges nothing. Curve
+    extents are ``reduceat``s over the flat points; mean y is taken
+    per point-count stack, the same per-row sum as ``b[:, 1].mean()``."""
     while True:
-        xlo = np.array([b[:, 0].min() for b in bls])
-        xhi = np.array([b[:, 0].max() for b in bls])
-        ymean = np.array([b[:, 1].mean() for b in bls])
+        starts = np.cumsum(counts) - counts
+        xlo = np.minimum.reduceat(px, starts)
+        xhi = np.maximum.reduceat(px, starts)
+        ymean = np.empty(len(counts))
+        for m in np.unique(counts).tolist():
+            cs = np.flatnonzero(counts == m)
+            ymean[cs] = py[starts[cs][:, None] + np.arange(m)].mean(axis=1)
         uniq, inverse = np.unique(
             _merge_roots(xlo, xhi, ymean, asc, desc), return_inverse=True
         )
-        if len(uniq) == len(bls):
-            return xlo, xhi, np.array([b[0, 1] for b in bls]), asc, desc
-        bls, asc, desc = _assemble(bls, asc, desc, inverse, len(uniq))
+        if len(uniq) == len(counts):
+            return xlo, xhi, py[starts], asc, desc
+        px, py, counts, asc, desc = _assemble(
+            px, py, counts, asc, desc, inverse, len(uniq)
+        )
 
 
 # ---------------------------------------------- polygon ops (J1 exact)

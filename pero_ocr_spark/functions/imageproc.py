@@ -6,13 +6,20 @@ cv2/scipy/skimage dependencies:
 
   * adaptive mean threshold  -> integral-image box mean compare
     (cv2.adaptiveThreshold ADAPTIVE_THRESH_MEAN_C semantics);
-  * connected components     -> two-pass run-based union-find
-    (ndimage.label, 4-connectivity);
+  * connected components     -> run-based union-find over the
+    mask's horizontal runs (ndimage.label, 4- or 8-connectivity);
   * find_peaks               -> local maxima with plateau midpoints +
     greedy min-distance selection (scipy.signal.find_peaks semantics
     for the prominence=0 case used by the reference);
   * polygon clip             -> segment/polygon intersection from
     page_utils.
+
+Each kernel is a few whole-array passes — over a mask's runs, a
+profile's runs of equal values, a region's candidate baselines — with
+Python loops left only where the work is inherently sequential and
+small (union-find over the pairs where components meet, greedy peak
+thinning). ``tests/_kernel_ref.py`` keeps the per-item loops they
+replaced; ``tests/test_kernel_parity.py`` pins them equal bit for bit.
 
 Everything here runs inside Arrow batches on the executors; no Spark
 imports.
@@ -22,6 +29,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from pero_ocr_spark.functions import geometry as G
 from pero_ocr_spark.functions import page_utils as U
 
 
@@ -98,59 +106,52 @@ def rolling_max(a: np.ndarray, win: int, axis: int = 0) -> np.ndarray:
     )
 
 
-def _union_find_runs(mask: np.ndarray, slack: int):
-    """Shared single pass of the run-based union-find labeler: yields
-    (all_runs, find) where all_runs = [(y, start, end_excl, label)]
-    and find() resolves a run label to its component root. slack=1
-    gives 8-connectivity (diagonal run adjacency), 0 gives 4."""
+def _run_labels(mask: np.ndarray, slack: int):
+    """The run-based connected-component scan shared by the labelers:
+    (run_y, run_start, run_end_excl, run_label, n) over the mask's
+    horizontal runs in raster order, labels 1..n numbered by each
+    component's first run (ndimage.label's numbering). slack=1 joins
+    diagonally touching runs (8-connectivity), 0 does not (4).
+
+    Whole-array passes: a padded false column on each side makes every
+    run open and close inside its own row, so one flat edge scan finds
+    all runs; the runs of the row above that overlap a run are one
+    contiguous slice of that row, found for every run at once with two
+    ``searchsorted``s over (row, column) keys; one union-find over the
+    overlapping pairs gives each run's component (a run's first
+    overlap is its parent in a forest; only the further overlaps, where
+    components meet, go through the union-find loop)."""
     h, w = mask.shape
-    parent: list[int] = [0]
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    # run extraction vectorized over the WHOLE mask at once: a padded
-    # false column on each side guarantees every run opens and closes
-    # inside its own row, so one flat edge scan finds all runs — the
-    # old per-row loop paid a numpy call per pixel row even when the
-    # row was empty (most rows of a text page are)
     padded = np.zeros((h, w + 2), dtype=bool)
     padded[:, 1:-1] = mask
-    flat = padded.ravel()
-    edges = np.flatnonzero(flat[1:] != flat[:-1]) + 1
-    if len(edges) == 0:
-        return [], find
-    W = w + 2
-    run_y = (edges[::2] // W).tolist()
-    run_s = (edges[::2] % W - 1).tolist()
-    run_e = (edges[1::2] - edges[::2] + (edges[::2] % W) - 1).tolist()
-
-    all_runs: list[tuple[int, int, int, int]] = []
-    prev_runs: list[tuple[int, int, int]] = []
-    runs: list[tuple[int, int, int]] = []
-    prev_y = -2
-    for y, s, e in zip(run_y, run_s, run_e):
-        if y != prev_y:
-            prev_runs = runs if y == prev_y + 1 else []
-            runs = []
-            prev_y = y
-        lab = 0
-        for ps, pe, pl in prev_runs:
-            if ps < e + slack and s < pe + slack:  # column overlap
-                root = find(pl)
-                if lab == 0:
-                    lab = root
-                elif root != lab:
-                    parent[root] = find(lab)
-        if lab == 0:
-            parent.append(len(parent))
-            lab = len(parent) - 1
-        runs.append((s, e, lab))
-        all_runs.append((y, s, e, lab))
-    return all_runs, find
+    edges = np.flatnonzero(padded.ravel()[1:] != padded.ravel()[:-1]) + 1
+    opens, closes = edges[::2], edges[1::2]
+    run_y = opens // (w + 2)
+    run_s = opens - run_y * (w + 2) - 1
+    run_e = closes - run_y * (w + 2) - 1
+    # run (y', s', e') of row y' = y - 1 overlaps run (y, s, e) iff
+    # s' < e + slack and s < e' + slack; keys order runs by (row, col)
+    # with every row's columns (shifted by 2, slack included) inside
+    # its own key span
+    span = w + 8
+    key_s = run_y * span + run_s + 2
+    key_e = run_y * span + run_e + 2
+    above = (run_y - 1) * span + 2
+    lo = np.searchsorted(key_e, above + run_s - slack, side="right")
+    hi = np.searchsorted(key_s, above + run_e + slack, side="left")
+    # each run hangs under the first run above that it touches; the
+    # further runs above that it touches join their trees
+    runs = np.arange(len(run_y))
+    more = np.maximum(hi - lo - 1, 0)
+    roots = G.union_find_roots(
+        np.where(hi > lo, lo, runs),
+        np.arange(int(more.sum())) + np.repeat(lo + 1 - (np.cumsum(more) - more), more),
+        np.repeat(runs, more),
+    )
+    # a root is its component's lowest run index, i.e. its first run
+    # in raster order: rank the roots for the 1..n numbering
+    firsts, run_lab = np.unique(roots, return_inverse=True)
+    return run_y, run_s, run_e, run_lab + 1, len(firsts)
 
 
 def label_components(
@@ -158,71 +159,76 @@ def label_components(
 ) -> tuple[np.ndarray, int]:
     """Connected-component labeling (ndimage.label semantics) over the
     shared run scan. connectivity 4 (cross) or 8 (full 3x3 structure).
-    Returns (labels, n_components); labels are 1..n, background 0."""
-    all_runs, find = _union_find_runs(mask, 1 if connectivity == 8 else 0)
-    labels = np.zeros(mask.shape, dtype=np.int32)
-    roots: dict[int, int] = {}
-    for y, s, e, lab in all_runs:
-        r = find(lab)
-        if r not in roots:
-            roots[r] = len(roots) + 1
-        labels[y, s:e] = roots[r]
-    return labels, len(roots)
+    Returns (labels, n_components); labels are 1..n, numbered in
+    raster order of each component's first pixel, background 0."""
+    h, w = mask.shape
+    run_y, run_s, run_e, lab, n = _run_labels(mask, 1 if connectivity == 8 else 0)
+    # +label at each run's first pixel, -label past its last, summed
+    # along the flat padded rows (a run closes in its row's pad column
+    # at the latest)
+    steps = np.zeros(h * (w + 2), dtype=np.int64)
+    base = run_y * (w + 2) + 1
+    steps[base + run_s] = lab
+    steps[base + run_e] = -lab
+    filled = np.cumsum(steps).reshape(h, w + 2)[:, 1:-1]
+    return filled.astype(np.int32), n
 
 
 def component_bboxes(
     mask: np.ndarray, min_pixels: int = 0, connectivity: int = 4
 ) -> list[dict]:
     """Per-component inclusive bbox + pixel count WITHOUT building the
-    label image: aggregate over the shared run scan (a page has ~100s
-    of runs vs ~10⁶ pixels)."""
-    all_runs, find = _union_find_runs(mask, 1 if connectivity == 8 else 0)
-    agg: dict[int, list[int]] = {}
-    for y, s, e, lab in all_runs:
-        r = find(lab)
-        box = agg.get(r)
-        if box is None:
-            agg[r] = [s, y, e - 1, y, e - s]
-        else:
-            box[0] = min(box[0], s)
-            box[2] = max(box[2], e - 1)
-            box[3] = y
-            box[4] += e - s
-    out = [
-        {"rx0": b[0], "ry0": b[1], "rx1": b[2], "ry1": b[3], "n_pixels": b[4]}
-        for b in agg.values()
-        if b[4] >= min_pixels
+    label image: per-label reductions over the shared run scan (a page
+    has ~100s of runs vs ~10⁶ pixels). Ordered by (rx0, ry0), ties in
+    label order."""
+    run_y, run_s, run_e, lab, n = _run_labels(mask, 1 if connectivity == 8 else 0)
+    if n == 0:
+        return []
+    order = np.argsort(lab, kind="stable")
+    first = np.searchsorted(lab[order], np.arange(1, n + 1))
+    rx0 = np.minimum.reduceat(run_s[order], first)
+    rx1 = np.maximum.reduceat(run_e[order], first) - 1
+    ry0 = run_y[order][first]
+    ry1 = np.maximum.reduceat(run_y[order], first)
+    npix = np.add.reduceat((run_e - run_s)[order], first)
+    keep = np.flatnonzero(npix >= min_pixels)
+    keep = keep[np.lexsort((ry0[keep], rx0[keep]))]
+    return [
+        {"rx0": a, "ry0": b, "rx1": c, "ry1": d, "n_pixels": e}
+        for a, b, c, d, e in zip(
+            *(v[keep].tolist() for v in (rx0, ry0, rx1, ry1, npix))
+        )
     ]
-    out.sort(key=lambda r: (r["rx0"], r["ry0"]))
-    return out
 
 
 def find_peaks(x: np.ndarray, distance: int = 1) -> np.ndarray:
     """Indices of local maxima (plateau midpoint), then greedy
     min-distance thinning by descending height — the
-    scipy.signal.find_peaks subset the reference uses."""
+    scipy.signal.find_peaks subset the reference uses.
+
+    A peak is a maximal run of equal values, not touching either end,
+    whose left neighbour is lower and right neighbour is lower; the
+    runs are found with one change-point scan. Only the thinning, over
+    the few peaks found, is a loop."""
     x = np.asarray(x, dtype=np.float64)
     n = len(x)
-    peaks = []
-    i = 1
-    while i < n - 1:
-        if x[i] > x[i - 1]:
-            j = i
-            while j < n - 1 and x[j + 1] == x[j]:
-                j += 1
-            if j < n - 1 and x[j + 1] < x[j]:
-                peaks.append((i + j) // 2)
-                i = j + 1
-                continue
-        i += 1
+    starts = np.flatnonzero(np.concatenate(([True], ~(x[1:] == x[:-1]))))
+    ends = np.append(starts[1:], n) - 1
+    inner = (starts >= 1) & (ends <= n - 2)
+    s, e = starts[inner], ends[inner]
+    top = (x[s] > x[s - 1]) & (x[e + 1] < x[e])
+    peaks = (s[top] + e[top]) // 2
     if distance <= 1 or len(peaks) < 2:
-        return np.asarray(peaks, dtype=np.int64)
-    order = sorted(peaks, key=lambda p: -x[p])
-    keep: list[int] = []
-    for p in order:
-        if all(abs(p - q) >= distance for q in keep):
-            keep.append(p)
-    return np.asarray(sorted(keep), dtype=np.int64)
+        return peaks.astype(np.int64)
+    # highest first; a kept peak blocks every index closer than
+    # ``distance`` to it
+    blocked = np.zeros(n, dtype=bool)
+    keep = np.zeros(n, dtype=bool)
+    for p in peaks[np.argsort(-x[peaks], kind="stable")].tolist():
+        if not blocked[p]:
+            keep[p] = True
+            blocked[max(p - distance + 1, 0) : p + distance] = True
+    return np.flatnonzero(keep)
 
 
 def autocorr_period(proj: np.ndarray) -> float:
@@ -486,19 +492,9 @@ def detect_lines_in_region(
     coords, heights = [up, down].
     """
     if downsample > 1:
-        baselines, heights = detect_lines_in_region(
-            img[::downsample, ::downsample],
-            np.asarray(region, dtype=np.float64) / downsample,
-            adaptive_threshold,
-            block_size,
-            minimum_length,
-            downsample=1,
-            probe_offset=max(1, probe_offset // downsample),
-        )
-        return (
-            [bl * downsample for bl in baselines],
-            [[h[0] * downsample, h[1] * downsample] for h in heights],
-        )
+        img = img[::downsample, ::downsample]
+        region = np.asarray(region, dtype=np.float64) / downsample
+        probe_offset = max(1, probe_offset // downsample)
     region = np.asarray(region)
     x1 = int(np.clip(region[:, 0].min(), 0, img.shape[1]))
     x2 = int(np.clip(region[:, 0].max(), 0, img.shape[1]))
@@ -511,62 +507,78 @@ def detect_lines_in_region(
     ink = adaptive_threshold_mask(
         img[y1:y2, x1:x2], block=block_size, c=adaptive_threshold
     )
-    labeled, _ = label_components(ink)
-    # per-(row, label) presence table for the height scans: one pass
-    # over the ink pixels, O(1) membership per stride step after
-    ys_nz, xs_nz = np.nonzero(labeled)
-    row_has = np.zeros((labeled.shape[0], int(labeled.max()) + 1), dtype=bool)
-    row_has[ys_nz, labeled[ys_nz, xs_nz]] = True
+    run_y, _, _, run_lab, n_lab = _run_labels(ink, 0)
+    # a component's rows are one interval, [top, bottom] (label 0,
+    # the background, has none)
+    top = np.full(n_lab + 1, column_height)
+    bottom = np.full(n_lab + 1, -1)
+    np.minimum.at(top, run_lab, run_y)
+    np.maximum.at(bottom, run_lab, run_y)
     proj = ink.sum(axis=1).astype(np.float64)
     period = autocorr_period(proj)
     target = -np.diff(proj)
     target[target < 0] = 0
 
-    baseline_coords = find_peaks(target, distance=int(round(0.85 * period)))
+    # candidate baselines, bottom-up: the order in which they claim
+    # their components
+    bc = find_peaks(target, distance=int(round(0.85 * period)))[::-1]
+    # the reference probes 10 rows above the baseline for the
+    # component (simple_baseline_engine.py:69); at a reduced working
+    # resolution the offset scales with it
+    probe = np.maximum(bc - probe_offset, 0)[:, None]
+    objs = (top <= probe) & (probe <= bottom)
+    # a baseline is kept only when none of its components was claimed
+    # by a baseline below it (probe rows with no ink claim nothing)
+    claimed = np.zeros_like(objs)
+    claimed[1:] = np.logical_or.accumulate(objs, axis=0)[:-1]
+    valid = objs.any(axis=1) & ~(objs & claimed).any(axis=1)
+    if x2 - x1 < minimum_length:
+        valid[:] = False
+    bc, objs = bc[valid], objs[valid]
+    if len(bc) == 0:
+        return [], []
 
-    baselines: list[np.ndarray] = []
-    heights: list[list[int]] = []
-    used: set[int] = set()
-    for bc in baseline_coords[::-1]:
-        bc = int(bc)
-        # the reference probes 10 rows above the baseline for the
-        # component (simple_baseline_engine.py:69); at a reduced
-        # working resolution the offset scales with it
-        probe_row = max(bc - probe_offset, 0)
-        objs = np.unique(labeled[probe_row, :])
-        objs = objs[objs > 0]
-        if len(objs) == 0:
-            continue
-        valid = not any(int(o) in used for o in objs)
-        used.update(int(o) for o in objs)
+    # cover[k, r]: row r holds one of baseline k's components
+    k, lab = np.nonzero(objs)
+    width = column_height + 1
+    edges = np.bincount(k * width + top[lab], minlength=len(bc) * width) - np.bincount(
+        k * width + bottom[lab] + 1, minlength=len(bc) * width
+    )
+    cover = edges.reshape(len(bc), width).cumsum(axis=1)[:, :-1] > 0
+    up = _scan_heights(cover, bc, -3, 0)
+    down = _scan_heights(cover, bc, 3, column_height)
 
-        # row_has[r, l] ⇔ label l has a pixel in row r (precomputed
-        # once per region below); each stride-3 step is then O(1)
-        # instead of an isin over the full pixel row — the scans were
-        # ~half the detector's wall time
-        objs_in_row = row_has[:, objs].any(axis=1)
-        yb1 = bc
-        for yb1 in range(bc, 0, -3):
-            if not objs_in_row[yb1]:
-                break
-        yb2 = bc
-        for yb2 in range(bc, column_height, 3):
-            if not objs_in_row[yb2]:
-                break
+    # clip every full-width baseline segment to the region polygon
+    yb = (y1 + bc).astype(np.float64)
+    p0 = np.column_stack((np.full(len(bc), float(x1)), yb))
+    p1 = np.column_stack((np.full(len(bc), float(x2)), yb))
+    hit, pts = U.segment_intersections(p0, p1, region.astype(np.float64))
+    keep = hit.sum(axis=1) >= 2
+    hx = pts[:, :, 0]
+    left = np.where(hit, hx, np.inf).min(axis=1)[keep]
+    right = np.where(hit, hx, -np.inf).max(axis=1)[keep]
+    yb = yb[keep]
+    baselines = np.stack(
+        (np.column_stack((left, yb)), np.column_stack((right, yb))), axis=1
+    )
+    heights = np.column_stack((up, down))[keep]
+    return list(baselines * downsample), (heights * downsample).tolist()
 
-        if x2 - x1 < minimum_length:
-            valid = False
-        if not valid:
-            continue
-        # clip the full-width baseline segment to the region polygon
-        p0 = (float(x1), float(y1 + bc))
-        p1 = (float(x2), float(y1 + bc))
-        hits = U._segment_intersections(p0, p1, region.astype(np.float64))
-        if len(hits) < 2:
-            continue
-        xs = sorted(h[0] for h in hits)
-        baselines.append(
-            np.asarray([[xs[0], y1 + bc], [xs[-1], y1 + bc]], dtype=np.float64)
-        )
-        heights.append([bc - yb1, yb2 - bc])
-    return baselines, heights
+
+def _scan_heights(
+    cover: np.ndarray, bc: np.ndarray, step: int, end: int
+) -> np.ndarray:
+    """Per baseline k, the stride-|step| walk from row bc[k] toward
+    ``end`` (exclusive) that stops at the first row r where
+    ``cover[k, r]`` is false, else at the walk's last row; returns
+    |stop - bc[k]| (0 for an empty walk). The reference's per-line
+    component height scan (simple_baseline_engine.py:71-80)."""
+    k = np.arange(len(bc))[:, None]
+    n_steps = (np.abs(end - bc) + abs(step) - 1) // abs(step)
+    rows = bc[:, None] + step * np.arange(max(int(n_steps.max()), 1))
+    inside = np.arange(rows.shape[1]) < n_steps[:, None]
+    stop = inside & ~cover[k, np.clip(rows, 0, cover.shape[1] - 1)]
+    last = np.where(
+        stop.any(axis=1), stop.argmax(axis=1), np.maximum(n_steps - 1, 0)
+    )
+    return np.abs(rows[k[:, 0], last] - bc)

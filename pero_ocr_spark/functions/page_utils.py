@@ -71,26 +71,30 @@ def parse_heights_custom(custom_str: str) -> list[float] | None:
     return None
 
 
-def _segment_intersections(p0, p1, polygon) -> list[np.ndarray]:
-    """Intersection points of segment p0-p1 with each polygon edge
-    (closed ring), plain parametric numpy — the shapely-free core of
-    guess_height_at_point (core/layout.py:193-218)."""
-    out = []
+def segment_intersections(
+    p0: np.ndarray, p1: np.ndarray, polygon: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Intersections of S segments ``p0[s]``-``p1[s]`` ((S, 2) arrays)
+    with each edge of a closed polygon ring, plain parametric numpy in
+    one (S, edges) pass — the shapely-free core of
+    guess_height_at_point (core/layout.py:193-218) and of the line
+    detector's baseline clip. Returns ``(hit, points)``: ``hit[s, i]``
+    when segment s meets edge i (edges parallel to it within 1e-12
+    never do), ``points[s, i]`` the intersection point."""
     poly = np.asarray(polygon, dtype=np.float64)
-    d = np.asarray(p1, dtype=np.float64) - np.asarray(p0, dtype=np.float64)
-    for i in range(len(poly)):
-        a = poly[i]
-        b = poly[(i + 1) % len(poly)]
-        e = b - a
-        denom = d[0] * e[1] - d[1] * e[0]
-        if abs(denom) < 1e-12:
-            continue
-        diff = a - np.asarray(p0, dtype=np.float64)
-        t = (diff[0] * e[1] - diff[1] * e[0]) / denom
-        u = (diff[0] * d[1] - diff[1] * d[0]) / denom
-        if 0.0 <= t <= 1.0 and 0.0 <= u <= 1.0:
-            out.append(np.asarray(p0) + t * d)
-    return out
+    p0 = np.asarray(p0, dtype=np.float64)
+    d = np.asarray(p1, dtype=np.float64) - p0
+    e = np.roll(poly, -1, axis=0) - poly
+    dx, dy = d[:, 0, None], d[:, 1, None]
+    denom = dx * e[:, 1] - dy * e[:, 0]
+    diff_x = poly[:, 0] - p0[:, 0, None]
+    diff_y = poly[:, 1] - p0[:, 1, None]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        t = (diff_x * e[:, 1] - diff_y * e[:, 0]) / denom
+        u = (diff_x * dy - diff_y * dx) / denom
+        points = np.stack((p0[:, 0, None] + t * dx, p0[:, 1, None] + t * dy), axis=-1)
+    hit = (np.abs(denom) >= 1e-12) & (t >= 0.0) & (t <= 1.0) & (u >= 0.0) & (u <= 1.0)
+    return hit, points
 
 
 def guess_height_at_point(baseline, polygon, point) -> tuple[float, float] | None:
@@ -104,10 +108,13 @@ def guess_height_at_point(baseline, polygon, point) -> tuple[float, float] | Non
     if not np.any(direction):
         return None
     p = np.asarray(point, dtype=np.float64)
-    hits = _segment_intersections(p - direction * 10, p + direction * 10, polygon)
+    hit, points = segment_intersections(
+        (p - direction * 10)[None], (p + direction * 10)[None], polygon
+    )
+    hits = points[0][hit[0]]
     if len(hits) < 2:
         return None
-    hits = sorted(hits, key=lambda q: q[1])
+    hits = hits[np.argsort(hits[:, 1], kind="stable")]
     above, below = hits[0], hits[-1]
     return (
         float(np.hypot(*(p - above))),

@@ -150,15 +150,25 @@ _DECODE_SCHEMA = (
 )
 
 
-def _decode_batch_greedy(pdf: pd.DataFrame) -> tuple[list, list, list]:
-    """Vectorized greedy decode of one Arrow batch: reconstruct all
-    lines into a single (N, Tmax, C) padded tensor, argmax/normalize
-    once, then do only the string joins per line. ~10x over a per-line
-    kernel loop — padding is the price, bounded by the length-packed
-    partitioning (pack_by_length keeps similar T per batch)."""
+# the non-blank symbols as ASCII codes: a batch's decoded ids become
+# ONE string, which each line's text is a slice of
+_SYMBOL_CODES = np.frombuffer("".join(CHARSET[:-1]).encode("ascii"), dtype=np.uint8)
+
+
+def _decode_batch_greedy(pdf: pd.DataFrame) -> tuple[list, np.ndarray, np.ndarray]:
+    """Vectorized greedy decode of one Arrow batch: scatter all lines'
+    csc logits into a single (N, Tmax, C) padded tensor, argmax and
+    normalize once, then collapse runs, drop blanks and take each
+    line's worst best-run confidence on flat masks — per line only the
+    text slice remains. Padding is bounded by the length-packed
+    partitioning (pack_by_length keeps similar T per batch).
+
+    Returns (texts, confidences, scores). A score's float32 sum keeps
+    the summation order of a length-T sum by summing lines of equal T
+    together (numpy's pairwise sum depends on the length)."""
     n = len(pdf)
     blank = len(CHARSET) - 1
-    ts = pdf["t"].to_numpy()
+    ts = pdf["t"].to_numpy().astype(np.int64)
     tmax = int(ts.max()) if n else 0
     c = int(pdf["c"].iloc[0])
     # float32 throughout: the logsumexp over (N, Tmax, C) is memory-
@@ -166,39 +176,48 @@ def _decode_batch_greedy(pdf: pd.DataFrame) -> tuple[list, list, list]:
     # nearly doubles multi-core throughput. Confidence precision loss
     # (~1e-7) is far below the 1e-6 reporting granularity.
     tensor = np.full((n, tmax, c), -80.0, dtype=np.float32)
-    for k, (t, data, indices, indptr) in enumerate(
-        zip(ts, pdf["data"], pdf["indices"], pdf["indptr"])
-    ):
-        dense = kernels.sparse_to_dense(data, indices, indptr, int(t), c)
-        tensor[k, : int(t)] = dense.astype(np.float32, copy=False)
+    # csc: line k's column j holds data[indptr[j]:indptr[j+1]] at the
+    # frames indices[indptr[j]:indptr[j+1]]
+    per_col = np.diff(np.concatenate(pdf["indptr"].to_list()).reshape(n, c + 1))
+    tensor[
+        np.repeat(np.arange(n), per_col.sum(axis=1)),
+        np.concatenate(pdf["indices"].to_list()),
+        np.repeat(np.tile(np.arange(c), n), per_col.ravel()),
+    ] = np.concatenate(pdf["data"].to_list())
     # pad frames emit blank with certainty → they collapse away and
     # don't affect run confidences (prob 1 runs)
-    tensor[:, :, blank] = np.where(
-        np.arange(tmax)[None, :] < ts[:, None], tensor[:, :, blank], 0.0
-    )
+    frame = np.arange(tmax)[None, :] < ts[:, None]
+    tensor[:, :, blank] = np.where(frame, tensor[:, :, blank], 0.0)
     lp = tensor - np.logaddexp.reduce(tensor, axis=2, keepdims=True)
     ids = np.argmax(lp, axis=2)
     best = np.take_along_axis(lp, ids[:, :, None], axis=2)[:, :, 0]
 
-    texts, confs, scores = [], [], []
-    frame_mask = np.arange(tmax)[None, :] < ts[:, None]
-    for k in range(n):
-        row_ids = ids[k]
-        keep = np.ones(tmax, dtype=bool)
-        keep[1:] = row_ids[1:] != row_ids[:-1]
-        collapsed = row_ids[keep & frame_mask[k]]
-        texts.append("".join(CHARSET[i] for i in collapsed if i != blank))
-        # worst best-run probability over real frames
-        rb = np.exp(best[k])
-        starts = np.flatnonzero(
-            np.concatenate(([True], row_ids[1:] != row_ids[:-1]))
-        )
-        run_max = np.maximum.reduceat(np.where(frame_mask[k], rb, -1.0), starts)
-        real_runs = run_max[run_max >= 0]
-        confs.append(float(real_runs.min()) if len(real_runs) else 1.0)
-        m = best[k][frame_mask[k]]
-        mx = float(m.max())
-        scores.append(mx + float(np.log(np.sum(np.exp(m - mx)))))
+    # a run of equal ids starts at each line's first frame and at each
+    # change of id; a line's text is its runs' ids over real frames,
+    # blanks dropped
+    start = np.ones((n, tmax), dtype=bool)
+    start[:, 1:] = ids[:, 1:] != ids[:, :-1]
+    emit = start & frame & (ids != blank)
+    chars = _SYMBOL_CODES[ids[emit]].tobytes().decode("ascii")
+    ends = np.cumsum(emit.sum(axis=1)).tolist()
+    texts = [chars[a:b] for a, b in zip([0] + ends[:-1], ends)]
+    # worst best-run probability over real frames (runs never span
+    # two lines: each line's first frame starts one)
+    runs = np.flatnonzero(start)
+    run_max = np.maximum.reduceat(np.where(frame, np.exp(best), -1.0).ravel(), runs)
+    worst = np.minimum.reduceat(
+        np.where(run_max >= 0, run_max, np.inf),
+        np.searchsorted(runs // tmax, np.arange(n)),
+    )
+    confs = np.where(np.isinf(worst), 1.0, worst.astype(np.float64))
+    scores = np.empty(n)
+    for t in np.unique(ts).tolist():
+        k = np.flatnonzero(ts == t)
+        m = best[k, :t]
+        mx = m.max(axis=1)
+        scores[k] = mx.astype(np.float64) + np.log(
+            np.exp(m - mx[:, None]).sum(axis=1)
+        ).astype(np.float64)
     return texts, confs, scores
 
 

@@ -37,76 +37,64 @@ def lines_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pure Catalyst expressions (no UDF) — columns:
     doc_id, region_id, line_id, x0, x1, y, asc, desc.
+
+    Written as SQL expression strings: every Column-API call is one
+    py4j round trip (~1,000 per build, and the ocr queries build this
+    table four times), while one ``selectExpr`` parses its strings in
+    the JVM. The optimized plan is the Column-API form's
+    (tests/test_layout_spark.py pins it): the structs are ``struct(...
+    AS name)``, which analyzes like ``F.struct`` where ``named_struct``
+    would not, and the heights are ``D``-suffixed double literals (a
+    bare ``10.0`` is a decimal in SQL).
     """
     from pero_ocr_spark import corpus
 
-    spans = corpus.extracted_spans(spark, sf_dir)
-    t = spans.filter(F.col("kind") == "text").select(
-        "doc_id",
-        "ord",
-        (F.col("ord") % 2).alias("col"),
-        (F.col("ord") / 2).cast("long").alias("row"),
-        (F.length("text") * 8).alias("w"),
-    )
-    base = t.select(
-        "doc_id",
-        F.concat(F.lit("r"), F.col("col")).alias("region_id"),
-        F.concat(F.lit("l"), F.col("ord")).alias("line_id"),
-        "ord",
-        (F.col("col") * PAGE_COL_W + 10).cast("double").alias("x0"),
-        (F.col("col") * PAGE_COL_W + 10 + F.col("w")).cast("double").alias("x1"),
-        (F.col("row") * ROW_H + 20).cast("double").alias("y"),
-        F.lit(ASC).alias("asc"),
-        F.lit(DESC).alias("desc"),
+    base = (
+        corpus.extracted_spans(spark, sf_dir)
+        .filter("kind = 'text'")
+        .selectExpr(
+            "doc_id",
+            "ord",
+            "ord % 2 AS col",
+            "CAST(ord / 2 AS BIGINT) AS row",
+            "length(text) * 8 AS w",
+        )
+        .selectExpr(
+            "doc_id",
+            "concat('r', col) AS region_id",
+            "concat('l', ord) AS line_id",
+            "ord",
+            f"CAST(col * {PAGE_COL_W} + 10 AS DOUBLE) AS x0",
+            f"CAST(col * {PAGE_COL_W} + 10 + w AS DOUBLE) AS x1",
+            f"CAST(row * {ROW_H} + 20 AS DOUBLE) AS y",
+            f"{ASC}D AS asc",
+            f"{DESC}D AS desc",
+        )
     )
     # single explode instead of a 3-way union: one scan, and no Union
     # node claiming its children's hash partitioning (a union of
     # same-partitioned branches concatenates partitions, so a
     # downstream agg that trusts the claim would merge per-branch
     # partials incorrectly — observed on the broadcast side of the
-    # assign join)
-    mid = (F.col("x0") + F.col("x1")) / 2
-    # the width guard keeps split halves non-degenerate: a 1-2 char
+    # assign join).
+    # The width guard keeps split halves non-degenerate: a 1-2 char
     # line (w <= 20) split around mid±5 would produce x1 < x0 halves
-    # that render no ink and break every image-query oracle
-    seg = F.when(
-        (F.col("ord") % 5 == 4) & (F.col("x1") - F.col("x0") > 20),
-        F.array(
-            F.struct(
-                F.concat(F.col("line_id"), F.lit("a")).alias("line_id"),
-                F.col("x0").alias("x0"),
-                (mid - 5).alias("x1"),
-            ),
-            F.struct(
-                F.concat(F.col("line_id"), F.lit("b")).alias("line_id"),
-                (mid + 5).alias("x0"),
-                F.col("x1").alias("x1"),
-            ),
-        ),
-    ).otherwise(
-        F.array(
-            F.struct(
-                F.col("line_id").alias("line_id"),
-                F.col("x0").alias("x0"),
-                F.col("x1").alias("x1"),
-            )
-        )
-    )
-    return base.select(
+    # that render no ink and break every image-query oracle.
+    seg = """CASE WHEN ord % 5 = 4 AND x1 - x0 > 20 THEN array(
+        struct(concat(line_id, 'a') AS line_id, x0 AS x0,
+               (x0 + x1) / 2 - 5 AS x1),
+        struct(concat(line_id, 'b') AS line_id,
+               (x0 + x1) / 2 + 5 AS x0, x1 AS x1))
+      ELSE array(struct(line_id AS line_id, x0 AS x0, x1 AS x1)) END"""
+    return base.selectExpr(
+        "doc_id", "region_id", "ord", "y", "asc", "desc", f"explode({seg}) AS seg"
+    ).selectExpr(
         "doc_id",
         "region_id",
+        "seg.line_id AS line_id",
         "ord",
-        "y",
-        "asc",
-        "desc",
-        F.explode(seg).alias("seg"),
-    ).select(
-        "doc_id",
-        "region_id",
-        F.col("seg.line_id").alias("line_id"),
-        "ord",
-        F.col("seg.x0").alias("x0"),
-        F.col("seg.x1").alias("x1"),
+        "seg.x0 AS x0",
+        "seg.x1 AS x1",
         "y",
         "asc",
         "desc",

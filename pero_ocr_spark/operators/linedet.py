@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pero_ocr_spark.functions import imageproc
 from pero_ocr_spark.operators import (
     flat_map_in_pandas,
+    grouped_batches_in_pandas,
     grouped_map_in_pandas,
     shuffle_width,
 )
@@ -270,39 +271,65 @@ def render_detect_lines(
     its own lines (min/max x, y extent ± pad), and run the
     projection-profile detector per region — one Arrow stage, one row
     per detected baseline in page coords with [up, down] heights."""
+    return grouped_batches_in_pandas(
+        lines,
+        "doc_id",
+        lambda pdf: _detect_pages(pdf, downsample, pad),
+        schema=DETECT_DDL,
+    )
 
-    cols = ["doc_id", "region_id", "bx0", "bx1", "y", "height_up", "height_down"]
 
-    def per_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-        doc_id = int(pdf["doc_id"].iloc[0])
-        img = _render_lines_raster(pdf, int(pdf["y"].max()) + 40)
-        rows = []
-        for rid, g in pdf.groupby("region_id", sort=False):
-            rx0, rx1 = float(g["x0"].min()), float(g["x1"].max())
-            ry0, ry1 = float(g["y"].min()) - pad, float(g["y"].max()) + pad
-            poly = np.asarray(
-                [[rx0, ry0], [rx1, ry0], [rx1, ry1], [rx0, ry1]],
-                dtype=np.float64,
-            )
-            baselines, heights = imageproc.detect_lines_in_region(
-                img, poly, downsample=downsample
-            )
-            for bl, ht in zip(baselines, heights):
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "region_id": rid,
-                        "bx0": float(bl[0][0]),
-                        "bx1": float(bl[1][0]),
-                        "y": float(bl[0][1]),
-                        "height_up": float(ht[0]),
-                        "height_down": float(ht[1]),
-                    }
-                )
-        return pd.DataFrame(rows, columns=cols)
-
-    return grouped_map_in_pandas(
-        lines, "doc_id", per_doc, schema=DETECT_DDL)
+def _detect_pages(pdf: pd.DataFrame, downsample: int, pad: int) -> pd.DataFrame:
+    """``render_detect_lines`` over one batch of whole pages: pages and
+    their regions are slices of flat arrays (a page is one run of the
+    doc-sorted batch; one stable sort makes each region a run, in
+    first-appearance order), region bboxes are ``reduceat``s, and the
+    output frame is built once from arrays."""
+    doc = pdf["doc_id"].to_numpy()
+    x0, x1, y = (pdf[c].to_numpy() for c in ("x0", "x1", "y"))
+    page = np.cumsum(np.r_[0, doc[1:] != doc[:-1]])
+    pstart = np.flatnonzero(np.r_[True, page[1:] != page[:-1]])
+    # a row with a null region is rendered but belongs to no region
+    rcode, rnames = pd.factorize(pdf["region_id"])
+    key = np.where(rcode < 0, -1, page * len(rnames) + rcode)
+    order = np.argsort(pd.factorize(key)[0], kind="stable")
+    order = order[rcode[order] >= 0]
+    k = key[order]
+    first = np.flatnonzero(np.r_[True, k[1:] != k[:-1]][: len(k)])
+    rx0 = np.minimum.reduceat(x0[order], first)
+    rx1 = np.maximum.reduceat(x1[order], first)
+    ry0 = np.minimum.reduceat(y[order], first) - pad
+    ry1 = np.maximum.reduceat(y[order], first) + pad
+    rpage = page[order][first]
+    rname = rnames[rcode[order][first]]
+    drawn, img = -1, None
+    found, boxes, heights = [], [], []
+    for r, p in enumerate(rpage.tolist()):
+        if p != drawn:
+            s, e = pstart[p], (pstart[p + 1] if p + 1 < len(pstart) else len(doc))
+            img = _render_lines_raster(pdf.iloc[s:e], int(y[s:e].max()) + 40)
+            drawn = p
+        poly = np.asarray(
+            [[rx0[r], ry0[r]], [rx1[r], ry0[r]], [rx1[r], ry1[r]], [rx0[r], ry1[r]]],
+            dtype=np.float64,
+        )
+        bls, hts = imageproc.detect_lines_in_region(img, poly, downsample=downsample)
+        found.append(len(bls))
+        boxes += bls
+        heights += hts
+    box = np.asarray(boxes, dtype=np.float64).reshape(-1, 4)
+    ht = np.asarray(heights, dtype=np.float64).reshape(-1, 2)
+    return pd.DataFrame(
+        {
+            "doc_id": np.repeat(doc[pstart[rpage]], found),
+            "region_id": np.repeat(rname, found),
+            "bx0": box[:, 0],
+            "bx1": box[:, 2],
+            "y": box[:, 1],
+            "height_up": ht[:, 0],
+            "height_down": ht[:, 1],
+        }
+    )
 
 
 def render_crop_lines(

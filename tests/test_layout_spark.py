@@ -2,9 +2,88 @@
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from pero_ocr_spark.operators import layout
+
+
+def _lines_table_columns(spark, sf_dir):
+    """``layout.lines_table`` as it was written with the Column API,
+    one py4j call per expression node: the reference its SQL-string
+    form must plan and compute exactly like."""
+    from pero_ocr_spark import corpus
+
+    spans = corpus.extracted_spans(spark, sf_dir)
+    t = spans.filter(F.col("kind") == "text").select(
+        "doc_id",
+        "ord",
+        (F.col("ord") % 2).alias("col"),
+        (F.col("ord") / 2).cast("long").alias("row"),
+        (F.length("text") * 8).alias("w"),
+    )
+    base = t.select(
+        "doc_id",
+        F.concat(F.lit("r"), F.col("col")).alias("region_id"),
+        F.concat(F.lit("l"), F.col("ord")).alias("line_id"),
+        "ord",
+        (F.col("col") * layout.PAGE_COL_W + 10).cast("double").alias("x0"),
+        (F.col("col") * layout.PAGE_COL_W + 10 + F.col("w")).cast("double").alias("x1"),
+        (F.col("row") * layout.ROW_H + 20).cast("double").alias("y"),
+        F.lit(layout.ASC).alias("asc"),
+        F.lit(layout.DESC).alias("desc"),
+    )
+    mid = (F.col("x0") + F.col("x1")) / 2
+    seg = F.when(
+        (F.col("ord") % 5 == 4) & (F.col("x1") - F.col("x0") > 20),
+        F.array(
+            F.struct(
+                F.concat(F.col("line_id"), F.lit("a")).alias("line_id"),
+                F.col("x0").alias("x0"),
+                (mid - 5).alias("x1"),
+            ),
+            F.struct(
+                F.concat(F.col("line_id"), F.lit("b")).alias("line_id"),
+                (mid + 5).alias("x0"),
+                F.col("x1").alias("x1"),
+            ),
+        ),
+    ).otherwise(
+        F.array(
+            F.struct(
+                F.col("line_id").alias("line_id"),
+                F.col("x0").alias("x0"),
+                F.col("x1").alias("x1"),
+            )
+        )
+    )
+    return base.select(
+        "doc_id", "region_id", "ord", "y", "asc", "desc", F.explode(seg).alias("seg")
+    ).select(
+        "doc_id",
+        "region_id",
+        F.col("seg.line_id").alias("line_id"),
+        "ord",
+        F.col("seg.x0").alias("x0"),
+        F.col("seg.x1").alias("x1"),
+        "y",
+        "asc",
+        "desc",
+    )
+
+
+def _optimized_plan(df) -> str:
+    return re.sub(r"#\d+L?", "#", df._jdf.queryExecution().optimizedPlan().toString())
+
+
+def test_lines_table_plans_and_computes_like_the_column_api(spark, sf_dir):
+    got = layout.lines_table(spark, sf_dir)
+    want = _lines_table_columns(spark, sf_dir)
+    assert got.schema == want.schema
+    assert _optimized_plan(got) == _optimized_plan(want)
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
 
 
 def test_lines_table_halves(spark, sf_dir):
