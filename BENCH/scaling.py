@@ -9,10 +9,11 @@ per-core compute dominates fixed costs.
 Two jobs are measured:
 
   * **extract** — the full extraction pipeline over the nested spans
-    input (explode → classify → strip → reading-order window). This is
-    the faithful production shape: the window exchange ships every
-    span row, exactly like reading an Iceberg (doc_id, spans) table at
-    10^12 docs. JVM/codegen end-to-end.
+    input (filter → classify → strip → in-row reading order: one
+    ``sort_array`` + ``posexplode`` per document row). This is the
+    faithful production shape: one nested row per document, exactly
+    like reading an Iceberg (doc_id, spans) table at 10^12 docs, and
+    no span row crosses an exchange. JVM/codegen end-to-end.
   * **recognize** — the fused recognition fast path (logit synthesis +
     batched greedy CTC decode inside one Arrow stage). This job is
     numpy-kernel-bound; on a single SMT machine its parallel ceiling
@@ -297,9 +298,9 @@ visible, not hidden.
 
 ## Job 1 — extraction pipeline (JVM end-to-end; the production shape)
 
-explode → classify → strip → reading-order window over the nested
-spans input; the window exchange ships every span row, exactly like
-scanning a nested Iceberg table. {x["spans"]:,} output spans.
+filter → classify → strip → in-row reading order (``sort_array`` +
+``posexplode`` per document row) over the nested spans input; no span
+row crosses an exchange, exactly like scanning a nested Iceberg table. {x["spans"]:,} output spans.
 
 | parallelism | sec | spans/sec |
 |---|---|---|

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from pero_ocr_spark.functions import geometry as G
+
 
 def penalty_along(
     baseline: np.ndarray,
@@ -82,7 +84,8 @@ def cluster_lines(
 ) -> np.ndarray:
     """Labels (0..k-1) of the line-adjacency connected components
     (cnn_layout_engine.py:330-372): candidates from tot-height-dilated
-    bboxes, adjacency = pair penalty < threshold, union-find CC."""
+    bboxes, adjacency = pair penalty < threshold, connected components
+    by ``geometry.union_find_roots``."""
     n = len(baselines)
     if n == 0:
         return np.zeros(0, dtype=np.int64)
@@ -94,14 +97,6 @@ def cluster_lines(
         hi = np.array([b[:, 0].max(), b[:, 1].max() + h[1]])
         mins[i] = lo - tot
         maxs[i] = hi + tot
-
-    parent = list(range(n))
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
 
     disjoint = np.logical_and(
         np.logical_or(
@@ -122,25 +117,19 @@ def cluster_lines(
     grow = np.array([0.75 * (h[0] + h[1]) for h in heights])
     tl_min = mins + (np.array([[h[0] + h[1]] for h in heights])) - grow[:, None]
     tl_max = maxs - (np.array([[h[0] + h[1]] for h in heights])) + grow[:, None]
-    for i, j in zip(*cand.nonzero()):
-        if not (
-            tl_min[i, 0] < tl_max[j, 0]
-            and tl_min[j, 0] < tl_max[i, 0]
-            and tl_min[i, 1] < tl_max[j, 1]
-            and tl_min[j, 1] < tl_max[i, 1]
-        ):
-            continue
-        if pair_penalty(
+    linked = [
+        (i, j)
+        for i, j in zip(*cand.nonzero())
+        if tl_min[i, 0] < tl_max[j, 0]
+        and tl_min[j, 0] < tl_max[i, 0]
+        and tl_min[i, 1] < tl_max[j, 1]
+        and tl_min[j, 1] < tl_max[i, 1]
+        and pair_penalty(
             baselines[i], heights[i], baselines[j], heights[j], sep_map
-        ) < threshold:
-            ri, rj = find(int(i)), find(int(j))
-            if ri != rj:
-                parent[ri] = rj
-    roots: dict[int, int] = {}
-    out = np.zeros(n, dtype=np.int64)
-    for i in range(n):
-        r = find(i)
-        if r not in roots:
-            roots[r] = len(roots)
-        out[i] = roots[r]
-    return out
+        ) < threshold
+    ]
+    a, b = np.array(linked, dtype=np.int64).reshape(-1, 2).T
+    # a component's root is its lowest index, so the sorted roots
+    # number the components in order of first appearance
+    roots = G.union_find_roots(np.arange(n), a, b)
+    return np.unique(roots, return_inverse=True)[1]

@@ -74,9 +74,12 @@ def materialize(df: DataFrame) -> DataFrame:
 
 
 def grouped_batches_in_pandas(df: DataFrame, key, per_batch, schema):
-    """Per-group Arrow stage with batch-level framing: ``per_batch`` is
-    called with sorted pandas frames (0-based index) that hold only
-    WHOLE groups of ``key``, and returns one output frame per call.
+    """Per-group Arrow stage with batch-level framing:
+    ``per_batch(pdf, bounds)`` is called with sorted pandas frames
+    (0-based index) that hold only WHOLE groups of ``key``, and returns
+    one output frame per call. ``bounds`` holds the row offset where
+    each group starts, plus ``len(pdf)``: group ``i`` is the rows
+    ``bounds[i]:bounds[i + 1]``.
 
     The grouped-map form ships every group as its OWN Arrow batch and
     IPC round-trip, so a stage over ~5000 one-document groups pays
@@ -85,22 +88,31 @@ def grouped_batches_in_pandas(df: DataFrame, key, per_batch, schema):
     hash-partitioned on the key (``shuffle_width`` partitions), sorted
     within partitions so each group is one contiguous run, and shipped
     in default-size (~10k-row) batches; the trailing run of each batch
-    — which may continue in the next — is carried forward. Key
-    equality is null-aware (a null key is a group of its own, as in
-    ``groupBy``), and the carry is linear: the frames of one open run
-    are appended per batch and concatenated once when the run closes,
-    even when a skewed group spans many Arrow batches.
+    — which may continue in the next — is carried forward. One scan of
+    the key columns finds the group starts, the carried run's
+    continuation included. Key equality is null-aware (a null key is a
+    group of its own, as in ``groupBy``), and the carry is linear: the
+    frames of one open run are appended per batch and concatenated once
+    when the run closes, even when a skewed group spans many Arrow
+    batches.
     """
     import numpy as np
     import pandas as pd
 
     keys = list(key) if isinstance(key, (list, tuple)) else [key]
 
-    def _eq(col: "np.ndarray", v) -> "np.ndarray":
-        # NaN == NaN is False: a null run must not break at every row
-        if pd.isna(v):
-            return pd.isna(col)
-        return col == v
+    def _starts(pdf: "pd.DataFrame", last) -> "np.ndarray":
+        # row i starts a group when a key differs from row i - 1's (row
+        # 0's from the carried run's last row ``last``, if any); NaN !=
+        # NaN, so nulls compare by their null masks
+        new = np.zeros(len(pdf), dtype=bool)
+        new[0] = last is None
+        for k in keys:
+            col = pdf[k].to_numpy()
+            prev = np.concatenate((col[:1] if last is None else last[k], col[:-1]))
+            na, pna = pd.isna(col), pd.isna(prev)
+            new |= np.where(na | pna, na != pna, col != prev)
+        return new
 
     def _whole(pieces: list) -> "pd.DataFrame":
         if len(pieces) > 1:
@@ -114,25 +126,24 @@ def grouped_batches_in_pandas(df: DataFrame, key, per_batch, schema):
         for pdf in batches:
             if not len(pdf):
                 continue
-            if parts:
-                cont = np.ones(len(pdf), dtype=bool)
-                for k in keys:
-                    cont &= _eq(pdf[k].to_numpy(), parts[-1][k].iloc[-1])
-                if cont.all():
-                    parts.append(pdf)  # run still open
-                    continue
-            run = np.ones(len(pdf), dtype=bool)
-            for k in keys:
-                col = pdf[k].to_numpy()
-                run &= _eq(col, col[len(col) - 1])
-            cut = len(pdf) - int(run[::-1].cumprod().sum())
+            last = {k: parts[-1][k].to_numpy()[-1:] for k in keys} if parts else None
+            starts = np.flatnonzero(_starts(pdf, last))
+            if not len(starts):
+                parts.append(pdf)  # run still open
+                continue
+            cut = int(starts[-1])
+            carried = sum(len(p) for p in parts)
             # closed run (carried parts + this batch's head) + body
+            bounds = np.concatenate(
+                ([0] if parts else [], starts[:-1] + carried, [carried + cut])
+            ).astype(np.int64)
             pieces = [p for p in (*parts, pdf.iloc[:cut]) if len(p)]
             parts = [pdf.iloc[cut:]]
             if pieces:
-                yield per_batch(_whole(pieces))
+                yield per_batch(_whole(pieces), bounds)
         if parts:
-            yield per_batch(_whole(parts))
+            frame = _whole(parts)
+            yield per_batch(frame, np.array([0, len(frame)], dtype=np.int64))
 
     return (
         df.repartition(shuffle_width(df.sparkSession), *keys)
@@ -147,23 +158,24 @@ def grouped_map_in_pandas(df: DataFrame, key, per_group, schema):
 
     Semantics match applyInPandas: ``per_group`` is called exactly
     once per distinct key with all of that key's rows, as a frame with
-    a fresh ``RangeIndex``. Row order WITHIN a group is not guaranteed
-    by either form; group functions must not depend on it (none here
-    do — they sort internally or compute order-independent outputs).
+    a fresh ``RangeIndex``. Each group is a slice of the batch, not a
+    copy: ``per_group`` must not write into its frame (none here do).
+    Row order WITHIN a group is not guaranteed by either form; group
+    functions must not depend on it (none here do — they sort
+    internally or compute order-independent outputs).
     """
     import pandas as pd
 
-    keys = list(key) if isinstance(key, (list, tuple)) else [key]
-
-    def per_batch(pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def per_batch(pdf: "pd.DataFrame", bounds) -> "pd.DataFrame":
         outs = []
-        for _, g in pdf.groupby(keys, sort=False, dropna=False):
-            g.index = pd.RangeIndex(len(g))  # groupby yields new frames
+        for s, e in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
+            g = pdf.iloc[s:e]
+            g.index = pd.RangeIndex(e - s)
             outs.append(per_group(g))
         # one output Arrow batch per input batch, not per group
         return outs[0] if len(outs) == 1 else pd.concat(outs, ignore_index=True)
 
-    return grouped_batches_in_pandas(df, keys, per_batch, schema)
+    return grouped_batches_in_pandas(df, key, per_batch, schema)
 
 
 def flat_map_in_pandas(df: DataFrame, per_row, schema):

@@ -155,6 +155,22 @@ _DECODE_SCHEMA = (
 _SYMBOL_CODES = np.frombuffer("".join(CHARSET[:-1]).encode("ascii"), dtype=np.uint8)
 
 
+def _collapse_greedy(ids: np.ndarray, frame: np.ndarray) -> tuple[np.ndarray, list]:
+    """The greedy CTC collapse of padded (N, Tmax) best-path ids, with
+    ``frame`` masking each line's real frames: a run of equal ids
+    starts at each line's first frame and at each change of id; a
+    line's text is its runs' ids over real frames, blanks dropped —
+    all lines' symbols decode as ONE string that each text is a slice
+    of. Pad frames only follow real ones, so they cannot merge into a
+    real run. Returns (run starts, texts)."""
+    start = np.ones(ids.shape, dtype=bool)
+    start[:, 1:] = ids[:, 1:] != ids[:, :-1]
+    emit = start & frame & (ids != len(CHARSET) - 1)
+    chars = _SYMBOL_CODES[ids[emit]].tobytes().decode("ascii")
+    ends = np.cumsum(emit.sum(axis=1)).tolist()
+    return start, [chars[a:b] for a, b in zip([0] + ends[:-1], ends)]
+
+
 def _decode_batch_greedy(pdf: pd.DataFrame) -> tuple[list, np.ndarray, np.ndarray]:
     """Vectorized greedy decode of one Arrow batch: scatter all lines'
     csc logits into a single (N, Tmax, C) padded tensor, argmax and
@@ -192,15 +208,7 @@ def _decode_batch_greedy(pdf: pd.DataFrame) -> tuple[list, np.ndarray, np.ndarra
     ids = np.argmax(lp, axis=2)
     best = np.take_along_axis(lp, ids[:, :, None], axis=2)[:, :, 0]
 
-    # a run of equal ids starts at each line's first frame and at each
-    # change of id; a line's text is its runs' ids over real frames,
-    # blanks dropped
-    start = np.ones((n, tmax), dtype=bool)
-    start[:, 1:] = ids[:, 1:] != ids[:, :-1]
-    emit = start & frame & (ids != blank)
-    chars = _SYMBOL_CODES[ids[emit]].tobytes().decode("ascii")
-    ends = np.cumsum(emit.sum(axis=1)).tolist()
-    texts = [chars[a:b] for a, b in zip([0] + ends[:-1], ends)]
+    start, texts = _collapse_greedy(ids, frame)
     # worst best-run probability over real frames (runs never span
     # two lines: each line's first frame starts one)
     runs = np.flatnonzero(start)
@@ -221,6 +229,21 @@ def _decode_batch_greedy(pdf: pd.DataFrame) -> tuple[list, np.ndarray, np.ndarra
     return texts, confs, scores
 
 
+def _decoded_frame(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One batch of logits rows greedy-decoded into ``_DECODE_SCHEMA``
+    columns."""
+    texts, confs, scores = _decode_batch_greedy(pdf)
+    return pd.DataFrame(
+        {
+            "doc_id": pdf["doc_id"],
+            "line_id": pdf["line_id"],
+            "transcription": texts,
+            "confidence": confs,
+            "score": scores,
+        }
+    )
+
+
 def decode_greedy(logits_df: DataFrame) -> DataFrame:
     """Greedy CTC decode + worst-best-run confidence, Arrow-batched and
     batch-vectorized (R3/R7): one padded tensor per batch, no per-line
@@ -230,16 +253,7 @@ def decode_greedy(logits_df: DataFrame) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            texts, confs, scores = _decode_batch_greedy(pdf)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "line_id": pdf["line_id"],
-                    "transcription": texts,
-                    "confidence": confs,
-                    "score": scores,
-                }
-            )
+            yield _decoded_frame(pdf)
 
     return logits_df.mapInPandas(run, schema=_DECODE_SCHEMA)
 
@@ -323,9 +337,9 @@ def decode_beam_lm_carry(
     wrapper. None falls back to the uniform NGramLM stand-in.
 
     This is the one operator that cannot parallelize WITHIN a document:
-    ``applyInPandas`` groups by doc_id and scans lines in reading
-    order inside the group. Parallelism across documents is unaffected
-    (docs ≫ cores at any realistic scale).
+    ``grouped_map_in_pandas`` groups by doc_id and scans lines in
+    reading order inside the group. Parallelism across documents is
+    unaffected (docs ≫ cores at any realistic scale).
     """
     bc = (
         logits_df.sparkSession.sparkContext.broadcast(lm_counts)
@@ -336,8 +350,8 @@ def decode_beam_lm_carry(
     lm_cache: dict[str, object] = {}
 
     def _lm():
-        # one LM per task (applyInPandas calls per_doc once per GROUP;
-        # the closure persists across groups within a task)
+        # one LM per task (per_doc runs once per GROUP; the closure
+        # persists across groups within a task)
         if "lm" not in lm_cache:
             if bc is not None:
                 from pero_ocr_spark.functions.lm import FileNGramLM
@@ -479,16 +493,7 @@ def recognize_lines(lines: DataFrame, backend: str = "synth") -> DataFrame:
                 continue
             if model_bytes is not None:
                 pdf = _ort_frame_pass(pdf, model_bytes)
-            texts, confs, scores = _decode_batch_greedy(pdf)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "line_id": pdf["line_id"],
-                    "transcription": texts,
-                    "confidence": confs,
-                    "score": scores,
-                }
-            )
+            yield _decoded_frame(pdf)
 
     return packed.mapInPandas(run, schema=_DECODE_SCHEMA)
 
@@ -500,10 +505,9 @@ def _greedy_texts_batch(
     texts only (no confidences; argmax is softmax-invariant, so no
     normalization either). Processes ``slice_size`` matrices per
     tensor to bound padding memory. Pad frames are masked out of the
-    collapse and cannot merge with real frames (they only follow
-    them), so the blank column needs no touching."""
+    collapse (``_collapse_greedy``), so the blank column needs no
+    touching."""
     texts: list[str] = []
-    blank = len(CHARSET) - 1
     for s in range(0, len(denses), slice_size):
         chunk = denses[s : s + slice_size]
         ts = np.array([d.shape[0] for d in chunk])
@@ -513,13 +517,7 @@ def _greedy_texts_batch(
         for k, d in enumerate(chunk):
             tensor[k, : d.shape[0]] = d
         ids = np.argmax(tensor, axis=2)
-        frame_idx = np.arange(tmax)
-        for k in range(len(chunk)):
-            row = ids[k]
-            keep = np.ones(tmax, dtype=bool)
-            keep[1:] = row[1:] != row[:-1]
-            collapsed = row[keep & (frame_idx < ts[k])]
-            texts.append("".join(CHARSET[i] for i in collapsed if i != blank))
+        texts += _collapse_greedy(ids, np.arange(tmax)[None, :] < ts[:, None])[1]
     return texts
 
 

@@ -371,29 +371,18 @@ def duplicate_clusters(pairs: DataFrame) -> DataFrame:
 
 
 def _clusters_driver_union_find(pairs: DataFrame) -> DataFrame:
-    """Small-graph CC path: path-compressed union-find on the driver,
-    root = minimum member (union always hangs the larger root under
-    the smaller), the same labeling as ``connected_components``."""
+    """Small-graph CC path: ``geometry.union_find_roots`` on the
+    driver over the ids' sorted ``np.unique`` indices, so each
+    component's root is its minimum member — the same labeling as
+    ``connected_components``."""
     from pyspark.sql import types as T
 
-    parent: dict = {}
+    from pero_ocr_spark.functions.geometry import union_find_roots
 
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:  # path compression
-            parent[x], x = r, parent[x]
-        return r
-
-    for row in pairs.collect():
-        a, b = row[0], row[1]
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
+    ends = np.array(pairs.collect()).reshape(-1, 2)
+    ids, idx = np.unique(ends, return_inverse=True)
+    idx = idx.reshape(-1, 2)
+    roots = union_find_roots(np.arange(len(ids)), idx[:, 0], idx[:, 1])
     id_type = pairs.schema["doc_a"].dataType
     out_schema = T.StructType(
         [
@@ -401,7 +390,7 @@ def _clusters_driver_union_find(pairs: DataFrame) -> DataFrame:
             T.StructField("cluster_id", id_type),
         ]
     )
-    rows = [(n, find(n)) for n in parent]
+    rows = list(zip(ids.tolist(), ids[roots].tolist()))
     return pairs.sparkSession.createDataFrame(rows, out_schema)
 
 
@@ -1020,6 +1009,8 @@ def _cdc_stream(docs: DataFrame, k: int, mask: int) -> DataFrame:
     def gen(batches):
         pows = np.ones(1, dtype=np.int64)  # 31^e mod p, e = 0..len-1
         for pdf in batches:
+            if not len(pdf):
+                continue
             need = max((len(t) for t in pdf["text"] if t), default=0) + 1
             while len(pows) < need:
                 # 31^(L+e) = 31^e · 31^L: each step at least doubles the
@@ -1028,24 +1019,16 @@ def _cdc_stream(docs: DataFrame, k: int, mask: int) -> DataFrame:
                 pows = np.concatenate(
                     (pows, pows[: need - len(pows)] * step % HASH_P)
                 )
-            ids, lens, hashes = [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                clen, chash = _cdc_doc_kernel(text, k, mask, pows)
-                ids.extend([did] * len(clen))
-                lens.append(clen)
-                hashes.append(chash)
-            # object dtype so EMPTY batches (input spread over more
-            # partitions than docs) still convert to the Arrow schema
+            lens, hashes = zip(
+                *(_cdc_doc_kernel(text, k, mask, pows) for text in pdf["text"])
+            )
             yield pd.DataFrame(
                 {
-                    "doc_id": pd.Series(ids, dtype="object"),
-                    "clen": pd.Series(
-                        np.concatenate(lens) if lens else [], dtype="object"
+                    "doc_id": np.repeat(
+                        pdf["doc_id"].to_numpy(), [len(c) for c in lens]
                     ),
-                    "chash": pd.Series(
-                        np.concatenate(hashes) if hashes else [],
-                        dtype="object",
-                    ),
+                    "clen": np.concatenate(lens),
+                    "chash": np.concatenate(hashes),
                 }
             )
 

@@ -3,8 +3,9 @@
 The Spark re-expression of the reference's per-page layout operators
 (SURVEY §2.2/2.3/2.5): textline polygon generation (L14), line merging
 (L11), spatial line↔region assignment (J1), and region reading order
-(O3 band sort / O4 XY-cut). Geometry kernels run vectorized per page
-group inside ``applyInPandas`` / ``mapInPandas``; the candidate
+(O3 band sort / O4 XY-cut). Geometry kernels run vectorized over
+sorted Arrow batches of whole page groups
+(``grouped_batches_in_pandas`` / ``grouped_map_in_pandas``); the candidate
 pruning that the reference does with an n×m bbox matrix per page
 (``layout_helpers.py:50-58``) is done at TABLE level as a bbox range
 join, so Catalyst/AQE own the join strategy.
@@ -171,18 +172,6 @@ def textline_polygons(lines: DataFrame) -> DataFrame:
     )
 
 
-def _group_bounds(dcol: np.ndarray, rcol: np.ndarray):
-    """(start, end) row slices of each (doc_id, region_id) run in a
-    batch sorted on those keys — a numpy change-point scan, so the
-    per-group stages slice flat arrays instead of paying a pandas
-    groupby frame per tiny group."""
-    change = np.empty(len(dcol), dtype=bool)
-    change[0] = True
-    change[1:] = (dcol[1:] != dcol[:-1]) | (rcol[1:] != rcol[:-1])
-    starts = np.flatnonzero(change)
-    return zip(starts, np.append(starts[1:], len(dcol)))
-
-
 def merge_lines_stage(lines: DataFrame) -> DataFrame:
     """L11: merge horizontally adjacent baselines per (doc, region) —
     union-find closure per group, repeated to the fixpoint.
@@ -192,12 +181,11 @@ def merge_lines_stage(lines: DataFrame) -> DataFrame:
     for EACH of the ~10k tiny groups) would dominate wall time.
     ``grouped_batches_in_pandas`` hands ``process`` big sorted batches
     of whole (doc, region) groups instead — ~300x fewer Arrow round
-    trips — and ``process`` walks the group boundaries itself."""
+    trips — with the group bounds of each batch."""
 
-    def process(pdf: pd.DataFrame) -> pd.DataFrame:
-        # array-in/array-out per group (``G.merge_lines_straight``),
-        # with group boundaries found by a numpy change-point scan over
-        # the SORTED batch — pandas groupby's per-group frame slicing
+    def process(pdf: pd.DataFrame, bounds: np.ndarray) -> pd.DataFrame:
+        # array-in/array-out per group (``G.merge_lines_straight``) over
+        # flat-array slices — pandas groupby's per-group frame slicing
         # was ~0.7 ms × 20k groups (≈2/3 of the stage's wall time);
         # flat-array slices are ~µs
         dcol = pdf["doc_id"].to_numpy()
@@ -209,7 +197,7 @@ def merge_lines_stage(lines: DataFrame) -> DataFrame:
         adesc = pdf["desc"].to_numpy()
         docs, rids, idxs = [], [], []
         outs: list[tuple[np.ndarray, ...]] = []
-        for s, e in _group_bounds(dcol, rcol):
+        for s, e in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
             m = G.merge_lines_straight(
                 ax0[s:e], ax1[s:e], ay[s:e], aasc[s:e], adesc[s:e]
             )
@@ -399,17 +387,16 @@ def postprocess_lines(
 
     Group mechanics mirror ``merge_lines_stage``:
     ``grouped_batches_in_pandas`` hands ``process`` big sorted batches
-    of whole (doc, region) groups, whose boundaries it finds with a
-    numpy change-point scan, so ~20k tiny groups never pay a per-group
-    Arrow round trip or pandas groupby slice. Region bounds come from
-    the group itself — no join."""
+    of whole (doc, region) groups with their group bounds, so ~20k tiny
+    groups never pay a per-group Arrow round trip or pandas groupby
+    slice. Region bounds come from the group itself — no join."""
     from pero_ocr_spark.functions import geometry as G2
 
     np_pts = int(num_points)
     if np_pts < 5:
         raise ValueError("x_p5 is the 5th resampled point; num_points must be >= 5")
 
-    def process(pdf: pd.DataFrame) -> pd.DataFrame:
+    def process(pdf: pd.DataFrame, bounds: np.ndarray) -> pd.DataFrame:
         dcol = pdf["doc_id"].to_numpy()
         rcol = pdf["region_id"].to_numpy()
         lid = pdf["line_id"].to_numpy()
@@ -419,7 +406,7 @@ def postprocess_lines(
         aasc = pdf["asc"].to_numpy()
         adesc = pdf["desc"].to_numpy()
         rows = []
-        for s, e in _group_bounds(dcol, rcol):
+        for s, e in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
             rx0 = float(ax0[s:e].min())
             rx1 = float(ax1[s:e].max())
             baselines = [
@@ -472,9 +459,10 @@ def retrace_regions(lines: DataFrame, concave: bool = True) -> DataFrame:
     polygon's interior shape is pinned by the geometry pytests.
 
     Scale shape: one hash shuffle on (doc_id, region_id), one
-    applyInPandas Arrow stage whose group size is bounded by
-    lines-per-region; explicit repartition pins parallelism against
-    AQE's small-exchange coalescing (the per-doc python-stage gotcha).
+    ``grouped_map_in_pandas`` Arrow stage whose group size is bounded
+    by lines-per-region; its numbered repartition pins parallelism
+    against AQE's small-exchange coalescing (the per-doc python-stage
+    gotcha).
     """
 
     def per_region(pdf: pd.DataFrame) -> pd.DataFrame:

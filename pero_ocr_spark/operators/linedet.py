@@ -274,21 +274,24 @@ def render_detect_lines(
     return grouped_batches_in_pandas(
         lines,
         "doc_id",
-        lambda pdf: _detect_pages(pdf, downsample, pad),
+        lambda pdf, bounds: _detect_pages(pdf, bounds, downsample, pad),
         schema=DETECT_DDL,
     )
 
 
-def _detect_pages(pdf: pd.DataFrame, downsample: int, pad: int) -> pd.DataFrame:
+def _detect_pages(
+    pdf: pd.DataFrame, bounds: np.ndarray, downsample: int, pad: int
+) -> pd.DataFrame:
     """``render_detect_lines`` over one batch of whole pages: pages and
-    their regions are slices of flat arrays (a page is one run of the
-    doc-sorted batch; one stable sort makes each region a run, in
-    first-appearance order), region bboxes are ``reduceat``s, and the
-    output frame is built once from arrays."""
+    their regions are slices of flat arrays (page ``p`` is the rows
+    ``bounds[p]:bounds[p + 1]`` of the doc-sorted batch; one stable
+    sort makes each region a run, in first-appearance order), region
+    bboxes are ``reduceat``s, and the output frame is built once from
+    arrays."""
     doc = pdf["doc_id"].to_numpy()
     x0, x1, y = (pdf[c].to_numpy() for c in ("x0", "x1", "y"))
-    page = np.cumsum(np.r_[0, doc[1:] != doc[:-1]])
-    pstart = np.flatnonzero(np.r_[True, page[1:] != page[:-1]])
+    pstart = bounds[:-1]
+    page = np.repeat(np.arange(len(pstart)), np.diff(bounds))
     # a row with a null region is rendered but belongs to no region
     rcode, rnames = pd.factorize(pdf["region_id"])
     key = np.where(rcode < 0, -1, page * len(rnames) + rcode)
@@ -306,7 +309,7 @@ def _detect_pages(pdf: pd.DataFrame, downsample: int, pad: int) -> pd.DataFrame:
     found, boxes, heights = [], [], []
     for r, p in enumerate(rpage.tolist()):
         if p != drawn:
-            s, e = pstart[p], (pstart[p + 1] if p + 1 < len(pstart) else len(doc))
+            s, e = bounds[p], bounds[p + 1]
             img = _render_lines_raster(pdf.iloc[s:e], int(y[s:e].max()) + 40)
             drawn = p
         poly = np.asarray(

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pero_ocr_spark.operators import materialize
+from pero_ocr_spark.operators import materialize, spread_scan
 
 N_PLANES = 8
 
@@ -47,18 +47,9 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Scan-parallelism guard for the corpus side (measured 6s
-    single-task vs <1s spread for the near-dup verify at sf0.1); the
-    shared implementation lives in ``operators.spread_scan``."""
-    from pero_ocr_spark.operators import spread_scan
-
-    return spread_scan(df)
-
-
 def with_norm(emb: DataFrame, col: str = "embedding") -> DataFrame:
     d = _to_double(F.col(col))
-    return _spread(emb).withColumn("nrm", F.sqrt(_dot(d, d)))
+    return spread_scan(emb).withColumn("nrm", F.sqrt(_dot(d, d)))
 
 
 def cosine_col(ea: Column, na: Column, eb: Column, nb: Column, decimals: int = 6) -> Column:
@@ -332,7 +323,7 @@ def kmeans_assign(
     # (argmin, means join, init collect) and the interpreted array cast
     # dominates re-reads (classic k-means "cache the points")
     base = materialize(
-        _spread(emb.select(id_col, _to_double(F.col("embedding")).alias("e")))
+        spread_scan(emb.select(id_col, _to_double(F.col("embedding")).alias("e")))
     )
     # round init centroids ENGINE-side: SQL round is half-away-from-zero
     # in both Spark and DuckDB, while Python's round is half-even — a
@@ -640,7 +631,7 @@ def top_component(
     # power step, final projection) — persist the parsed doubles once
     # so the parquet read + array cast don't repeat per iteration
     base = materialize(
-        _spread(emb.select(id_col, _to_double(F.col("embedding")).alias("d")))
+        spread_scan(emb.select(id_col, _to_double(F.col("embedding")).alias("d")))
     )
     n_dims = len(base.select("d").first()["d"])
     v = [1.0] * n_dims
@@ -842,7 +833,7 @@ def pq_topk(
     # base feeds three consumers (the dim probe, the query collect, the
     # subspace explode) — checkpoint so the array cast parses once
     base = materialize(
-        _spread(emb.select(id_col, _to_double(F.col("embedding")).alias("e")))
+        spread_scan(emb.select(id_col, _to_double(F.col("embedding")).alias("e")))
     )
     dims = len(base.select("e").first()["e"])
     if dims % m:

@@ -74,7 +74,7 @@ def q_ctc_decode_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# R6 — stateful cross-line LM-carry decode (applyInPandas ordered scan).
+# R6 — stateful cross-line LM-carry decode (ordered scan per doc_id group).
 # On the near-one-hot synthetic logits the LM cannot flip the argmax, so
 # the decode oracle still applies (transcription equality).
 # ---------------------------------------------------------------------------

@@ -16,9 +16,10 @@ This module speaks the reference's actual interchange formats:
     exporter with force-aligned per-word boxes and confidences
     (``core/layout.py:400-597``) so the pair round-trips.
 
-All four are Arrow-batched per-document kernels (mapInPandas /
-applyInPandas on doc_id): one XML string per page row in/out, no
-shuffle beyond the export's groupBy. At 10^12 docs the XML table
+All four are Arrow-batched per-document kernels
+(``flat_map_in_pandas`` / ``grouped_map_in_pandas`` on doc_id): one XML
+string per page row in/out, no shuffle beyond the export's doc_id
+repartition. At 10^12 docs the XML table
 partitions like any other string column; parse cost is data-parallel.
 Timestamps are injected constants so exports are byte-deterministic
 (the reference stamps datetime.now(), layout.py:337-339).

@@ -27,10 +27,10 @@ accessibility marked-content ``/Figure <</ActualText (ref)>> BDC … EMC``
 so the media reference survives the round trip the way a real tagged
 PDF carries replacement text.
 
-Scale shape: the writer is a per-document ``applyInPandas`` stage
-(pinned explicit repartition on doc_id — AQE's small-partition coalesce
-would serialize it, the same hazard as the XML exporters), one shuffle
-total; the parser is a stateless ``mapInPandas`` over (doc_id, pdf)
+Scale shape: the writer is a per-document ``grouped_batches_in_pandas``
+stage (its numbered repartition on doc_id keeps AQE's small-partition
+coalesce from serializing it, the same hazard as the XML exporters),
+one shuffle total; the parser is a stateless ``mapInPandas`` over (doc_id, pdf)
 rows, zero shuffles. PDF size is linear in span count; a 64×-skewed doc
 produces a ~130-page PDF, bounded per row.
 """
@@ -315,11 +315,16 @@ def render_pdfs(extracted: DataFrame) -> DataFrame:
     (doc_id, kind, text, media_ref, ord) → (doc_id, pdf, n_pages,
     n_bytes). ``grouped_batches_in_pandas`` hands ``render`` whole
     documents even when an Arrow batch boundary splits one, so each
-    PDF sees its complete span set."""
+    PDF sees its complete span set. A null ``doc_id`` renders no PDF."""
 
-    def render(pdf: pd.DataFrame) -> pd.DataFrame:
+    def render(pdf: pd.DataFrame, bounds) -> pd.DataFrame:
         rows = []
-        for doc_id, grp in pdf.groupby("doc_id", sort=False):
+        doc_ids = pdf["doc_id"].to_numpy()
+        for s, e in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
+            doc_id = doc_ids[s]
+            if pd.isna(doc_id):
+                continue
+            grp = pdf.iloc[s:e]
             spans = list(zip(
                 grp["ord"].astype(int), grp["kind"], grp["text"],
                 grp["media_ref"],

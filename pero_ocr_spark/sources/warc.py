@@ -18,8 +18,8 @@ sequence parses intact (tested). A naive ``split(b"WARC/1.0")``
 corrupts such records — the kind of bug that appears once per billion
 pages, i.e. several thousand times at corpus scale.
 
-Scale shape: shard synthesis is a carry-free ``applyInPandas`` per
-shard group (pinned repartition); parsing is a stateless
+Scale shape: shard synthesis is a carry-free ``grouped_map_in_pandas``
+stage per shard group (numbered repartition); parsing is a stateless
 ``mapInPandas`` over (shard_id, warc) rows — shards are independent,
 so the stage scales with shard count and no record ever crosses a
 task boundary (WARC's design property).

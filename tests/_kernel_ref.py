@@ -12,7 +12,9 @@ passes, kept as the references the bit-identity tests
   * ``segment_intersections`` — one segment at a time
     (``page_utils.segment_intersections``);
   * ``decode_batch_greedy`` — one dense matrix and one collapse per
-    line (``ctc._decode_batch_greedy``).
+    line (``ctc._decode_batch_greedy``);
+  * ``greedy_texts_batch`` — one collapse per line over each padded
+    slice (``ctc._greedy_texts_batch``).
 """
 
 from __future__ import annotations
@@ -450,3 +452,26 @@ def detect_page(pdf: pd.DataFrame, downsample: int, pad: int) -> pd.DataFrame:
                 }
             )
     return pd.DataFrame(rows, columns=COLS)
+
+
+def greedy_texts_batch(denses: list, slice_size: int = 2048) -> list:
+    """``ctc._greedy_texts_batch`` with a per-line collapse loop."""
+    texts: list[str] = []
+    blank = len(ctc.CHARSET) - 1
+    for s in range(0, len(denses), slice_size):
+        chunk = denses[s : s + slice_size]
+        ts = np.array([d.shape[0] for d in chunk])
+        tmax = int(ts.max())
+        c = chunk[0].shape[1]
+        tensor = np.full((len(chunk), tmax, c), -80.0, dtype=np.float32)
+        for k, d in enumerate(chunk):
+            tensor[k, : d.shape[0]] = d
+        ids = np.argmax(tensor, axis=2)
+        frame_idx = np.arange(tmax)
+        for k in range(len(chunk)):
+            row = ids[k]
+            keep = np.ones(tmax, dtype=bool)
+            keep[1:] = row[1:] != row[:-1]
+            collapsed = row[keep & (frame_idx < ts[k])]
+            texts.append("".join(ctc.CHARSET[i] for i in collapsed if i != blank))
+    return texts

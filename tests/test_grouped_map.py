@@ -1,7 +1,8 @@
 """r6 guard: operators.grouped_map_in_pandas must stay semantically
 equal to the groupBy(key).applyInPandas form it replaces — including
 null group keys, groups spanning Arrow batch boundaries, and
-composite keys. Also pins operators.flat_map_in_pandas: zero, one or
+composite keys — and the group bounds grouped_batches_in_pandas hands
+its per-batch function must be pandas groupby's. Also pins operators.flat_map_in_pandas: zero, one or
 many output rows per input row, in input order, with empty batches
 and nulls converting to every column type."""
 
@@ -9,7 +10,11 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from pero_ocr_spark.operators import flat_map_in_pandas, grouped_map_in_pandas
+from pero_ocr_spark.operators import (
+    flat_map_in_pandas,
+    grouped_batches_in_pandas,
+    grouped_map_in_pandas,
+)
 
 
 def _make_summarize():
@@ -123,6 +128,62 @@ class TestGroupedMapInPandas:
             spark.conf.set(
                 "spark.sql.execution.arrow.maxRecordsPerBatch", old
             )
+
+
+class TestGroupedBatchBounds:
+    @pytest.mark.parametrize("key", ["doc_id", ["doc_id", "region_id"]])
+    def test_bounds_are_groupby_boundaries(self, spark, key):
+        # null keys in both columns, and one group (5, "z") spread over
+        # several 40-row Arrow batches
+        import random
+
+        random.seed(16)
+        rows = [
+            (random.choice([1, 2, 3, None]), random.choice(["a", "b", None]), i)
+            for i in range(600)
+        ] + [(5, "z", i) for i in range(300)]
+        df = spark.createDataFrame(rows, "doc_id long, region_id string, v long")
+        keys = key if isinstance(key, list) else [key]
+
+        def per_batch(pdf: pd.DataFrame, bounds) -> pd.DataFrame:
+            sizes = pdf.groupby(keys, sort=False, dropna=False).size()
+            ok = np.array_equal(bounds, np.r_[0, np.cumsum(sizes.to_numpy())])
+            first = pdf.iloc[bounds[:-1]]
+            return pd.DataFrame(
+                {
+                    "doc_id": first["doc_id"].to_numpy(),
+                    "region_id": first["region_id"].to_numpy(),
+                    "n": np.diff(bounds),
+                    "ok": ok,
+                }
+            )
+
+        old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "40")
+        try:
+            got = grouped_batches_in_pandas(
+                df, key, per_batch,
+                "doc_id long, region_id string, n long, ok boolean",
+            ).collect()
+        finally:
+            spark.conf.set(
+                "spark.sql.execution.arrow.maxRecordsPerBatch", old
+            )
+        assert got and all(r.ok for r in got)
+        # each group comes once and whole: the bounds split no group
+        # across two calls, the carried one included
+        nk = lambda g: (  # noqa: E731 — None-safe sort key
+            tuple((x is None, 0 if x is None else x) for x in g[0]), g[1]
+        )
+        assert sorted(
+            ((tuple(r[k] for k in keys), r.n) for r in got), key=nk
+        ) == sorted(
+            (
+                (tuple(r[k] for k in keys), r["count"])
+                for r in df.groupBy(*keys).count().collect()
+            ),
+            key=nk,
+        )
 
 
 class TestFlatMapInPandas:

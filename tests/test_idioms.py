@@ -26,6 +26,9 @@
   manifest, written after the data commit, is appended. An append of
   data duplicates it when a crash lands between the data and the
   manifest write.
+- Connected components are labeled by one union-find,
+  ``geometry.union_find_roots``: no other engine function defines a
+  ``find``.
 - Arrays are sorted with ``sort_array``, a native sort, not
   ``array_sort``, whose comparator (the default one too) is a lambda
   evaluated interpreted on every comparison. The two differ only in
@@ -448,4 +451,25 @@ def test_arrays_are_sorted_natively():
     assert not wrong, (
         "sort arrays whose elements cannot be null with sort_array, and "
         "keep ARRAY_SORT_OWNERS exact: " + ", ".join(wrong)
+    )
+
+
+# (file, enclosing top-level function) of the one union-find ``find``
+UNION_FIND_OWNER = ("pero_ocr_spark/functions/geometry.py", "union_find_roots")
+
+
+def test_one_union_find():
+    stray = [
+        f"{_rel(p)}:{node.lineno} ({top.name})"
+        for p in _engine_files()
+        for top in ast.parse(p.read_text(), filename=str(p)).body
+        if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        for node in ast.walk(top)
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.name == "find"
+        and (_rel(p), top.name) != UNION_FIND_OWNER
+    ]
+    assert not stray, (
+        "label connected components with geometry.union_find_roots: "
+        + ", ".join(stray)
     )

@@ -230,7 +230,8 @@ def test_detect_batch_equals_per_doc_stage():
     pages = [ref.detect_page(g.reset_index(drop=True), 2, 15)
              for _, g in batch.groupby("doc_id", sort=False)]
     want = pd.concat([p for p in pages if len(p)], ignore_index=True)
-    got = linedet._detect_pages(batch, 2, 15)
+    sizes = batch.groupby("doc_id", sort=False).size().to_numpy()
+    got = linedet._detect_pages(batch, np.r_[0, np.cumsum(sizes)], 2, 15)
     assert len(want) > 100
     pd.testing.assert_frame_equal(got, want, check_exact=True)
 
@@ -300,3 +301,26 @@ def test_greedy_decode_synth_lines():
     got = ctc._decode_batch_greedy(pdf)
     assert list(got[0]) == want[0] == [t.replace(" ", "") for t in texts]
     assert _same_floats(got[1], want[1]) and _same_floats(got[2], want[2])
+
+
+def test_greedy_texts_batch_equals_per_line_collapse():
+    # synth, all-blank and random-normal logits; slices of 1-59 rows
+    rng = np.random.default_rng(16)
+    c = len(ctc.CHARSET)
+    for _ in range(60):
+        denses = []
+        for t in rng.integers(0, 40, int(rng.integers(1, 80))).tolist():
+            kind = rng.integers(0, 3)
+            if kind == 0:
+                d = np.full((t, c), -80.0)
+                d[np.arange(t), rng.integers(0, c, t)] = 0.0
+            elif kind == 1:
+                d = np.full((t, c), -80.0)
+                d[:, c - 1] = 0.0
+            else:
+                d = rng.normal(size=(t, c))
+            denses.append(d)
+        size = int(rng.integers(1, 60))
+        assert ctc._greedy_texts_batch(denses, size) == ref.greedy_texts_batch(
+            denses, size
+        )
